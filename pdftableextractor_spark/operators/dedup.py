@@ -24,8 +24,8 @@ Operators:
 
 Scale notes (100 TB): every signature is computed scan-side with no shuffle;
 the only shuffles are the band-bucket join (keys are uniform md5 values →
-no planted skew; AQE skew-join as backstop) and the final pair dedup. The
-pairwise verify runs only on band-collision candidates, never all-pairs.
+no planted skew; AQE skew-join as backstop) and the candidate-pair spread
+of the verify, which runs only on band-collision candidates, never all-pairs.
 Blocking keys bound the quadratic term for the exact-pair variants.
 """
 
@@ -168,42 +168,50 @@ def minhash_signatures(
     h0 = grams.select(
         "doc_id", (word_hash_col(F.col("s")) % MINHASH_P).alias("h0")
     )
+    # one SQL string per hash: each Column operator makes several py4j
+    # round trips (call-site capture), and building these from operators
+    # dominated the construction time of every minhash query
     aggs = [
-        F.min((F.lit(a) * F.col("h0") + F.lit(b)) % MINHASH_P).alias(f"m{i}")
+        F.expr(f"min(({a} * h0 + {b}) % {MINHASH_P})").alias(f"m{i}")
         for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
     ]
+    ms = ", ".join(f"m{i}" for i in range(num_hashes))
     return (
         h0.groupBy("doc_id")
         .agg(*aggs)
-        .select(
-            "doc_id",
-            F.array(*[F.col(f"m{i}") for i in range(num_hashes)]).alias("sig"),
-        )
+        .select("doc_id", F.expr(f"array({ms})").alias("sig"))
     )
+
+
+def _tokens(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, __tk) — the tokenize_col tokens with empty tokens dropped."""
+    return docs.select(
+        "doc_id",
+        F.array_remove(tokenize_col(F.col(text_col)), "").alias("__tk"),
+    )
+
+
+def _gram_structs(tk, n: int):
+    """The n-grams of token array ``tk`` (n >= 2) as structs of n tokens:
+    n shifted slices zipped together, all codegen — constructing gram
+    arrays with higher-order-function lambdas is interpreted and was the
+    measured bottleneck of the signature scan. Tokens hold no whitespace,
+    so a gram struct and its " "-joined string determine each other."""
+    m = F.greatest(F.size(tk) - (n - 1), F.lit(0))
+    return F.arrays_zip(*[F.slice(tk, i + 1, m) for i in range(n)])
 
 
 def exploded_shingles(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     """(doc_id, s) — one row per n-gram occurrence (dups kept; min-hash over
-    a multiset equals min-hash over the set). Built from n shifted array
-    slices zipped and exploded once (the ``_ngram_span_frame`` shape):
-    everything stays in codegen — constructing gram arrays with
-    higher-order-function lambdas is interpreted and was the measured
-    bottleneck of the signature scan — and, unlike the posexplode + lead
-    window this replaces (round-7), it needs NO exchange: the former window
-    shuffled one row per TOKEN corpus-wide before any gram existed, the
-    single biggest shuffle in every n>=2 signature/verify plan."""
-    toks = docs.select(
-        "doc_id",
-        F.array_remove(tokenize_col(F.col(text_col)), "").alias("__tk"),
-    )
+    a multiset equals min-hash over the set), exploded once from
+    ``_gram_structs``. Unlike a posexplode + lead window it needs NO
+    exchange: the window shuffled one row per TOKEN corpus-wide before any
+    gram existed."""
+    toks = _tokens(docs, text_col)
     if n == 1:
         return toks.select("doc_id", F.explode("__tk").alias("s"))
-    m = F.greatest(F.size("__tk") - (n - 1), F.lit(0))
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("__tk"), i + 1, m) for i in range(n)]
-    )
     return toks.select(
-        "doc_id", F.explode(zipped).alias("__gs")
+        "doc_id", F.explode(_gram_structs(F.col("__tk"), n)).alias("__gs")
     ).select(
         "doc_id",
         F.concat_ws(
@@ -223,9 +231,8 @@ def minhash_near_dups(
     """MinHash-LSH near-duplicate pairs: band-bucket join → exact Jaccard
     verify → (doc_a, doc_b, jaccard). Only band-collision candidates are
     verified; the band join is the lone shuffle."""
-    # the band self-join references the signature lineage on BOTH sides and
-    # the verify references the candidate lineage three more times — the
-    # corpus signature pass would otherwise run twice (round-7; sigs are
+    # both band self-join sides read the signature lineage — the corpus
+    # signature pass would otherwise run twice (round-7; sigs are
     # num_hashes ints per doc, the cheapest thing in the pipeline to hold)
     sigs = minhash_signatures(docs, text_col, n, num_hashes).localCheckpoint(
         eager=True
@@ -245,7 +252,6 @@ def minhash_near_dups(
         a.join(b, ["band_idx", "band_hash"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
-        .distinct()
     )
     return verify_jaccard_pairs(cand, docs, text_col, n, threshold)
 
@@ -256,7 +262,8 @@ def band_rows_from_sigs(
     band_rows: int = BAND_ROWS,
 ) -> DataFrame:
     """(doc_id, band_idx, band_hash) — slim band rows from a signature
-    table; never carries shingle arrays through the bucket join. Cheap JVM
+    table, keeping any other column of ``sigs`` beside doc_id (a side tag);
+    never carries shingle arrays through the bucket join. Cheap JVM
     expression work, so bands are recomputed from stored sigs rather than
     persisted (num_hashes values per doc beat n_bands md5 strings)."""
     n_bands = num_hashes // band_rows
@@ -277,24 +284,18 @@ def band_rows_from_sigs(
             )
         )
     )
+    # SQL strings for the same reason as minhash_signatures' aggregates;
+    # US goes in as a '\uXXXX' escape
+    sep = f"'\\u{ord(US):04x}'"
+    band_md5s = ", ".join(
+        f"md5(concat_ws({sep}, "
+        + ", ".join(f"sig[{b * band_rows + r}]" for r in range(band_rows))
+        + "))"
+        for b in range(n_bands)
+    )
     return sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            US,
-                            *[
-                                F.col("sig")[b * band_rows + r]
-                                for r in range(band_rows)
-                            ],
-                        )
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
+        *[c for c in sigs.columns if c != "sig"],
+        F.expr(f"posexplode(array({band_md5s}))").alias("band_idx", "band_hash"),
     )
 
 
@@ -305,44 +306,37 @@ def verify_jaccard_pairs(
     n: int = 1,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact-Jaccard verify of candidate (doc_a, doc_b) pairs — the
-    shingle-set aggregation is semi-join pruned to band-collision
-    participants, never the whole corpus."""
-    # one explode, not a two-sided union: a union would duplicate the whole
-    # candidate lineage (band join included) once per side. The candidate
-    # frame is still referenced three times (ids + both pair joins) and the
-    # shingle-set frame twice — localCheckpoint both so the band join and
-    # the candidate-bounded shingle aggregation run once, not 3×/2×
-    # (round-7; both frames are candidate-bounded, never corpus-sized)
-    cand = cand.localCheckpoint(eager=True)
-    ids = (
-        cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))
+    """Exact-Jaccard verify of candidate (doc_a, doc_b) pairs (a pair may
+    repeat). Each doc's shingle set (the exploded_shingles grams, distinct)
+    is built row-locally from its text — no aggregation — and the inner
+    joins keep only docs that appear in some candidate pair. The pairs are
+    hash-spread over ``defaultParallelism`` partitions (one per core)
+    first: the candidate frame is small, so AQE would otherwise coalesce it
+    into one task that runs every array_intersect."""
+    tk = F.col("__tk")
+    grams = tk if n == 1 else _gram_structs(tk, n)
+    sh = _tokens(docs, text_col).select("doc_id", F.array_distinct(grams))
+    pairs = (
+        cand.repartition(
+            cand.sparkSession.sparkContext.defaultParallelism, "doc_a", "doc_b"
+        )
         .distinct()
-    )
-    sh = (
-        exploded_shingles(docs, text_col, n)
-        .join(ids, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_set("s").alias("shingles"))
-        .localCheckpoint(eager=True)
-    )
-    pairs = cand.join(
-        sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")),
-        "doc_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.select(
+        .join(sh.toDF("doc_a", "sh_a"), "doc_a")
+        .join(sh.toDF("doc_b", "sh_b"), "doc_b")
+        .select(
             "doc_a",
             "doc_b",
-            F.round(inter / union, 6).alias("jaccard"),
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("__i"),
+            (F.size("sh_a") + F.size("sh_b")).alias("__n"),
         )
-        .filter(F.col("jaccard") >= threshold)
     )
+    # the one-element explode keeps the threshold filter above it: pushed
+    # into the join condition, the filter would run array_intersect twice
+    # more per pair
+    jaccard = F.round(F.col("__i") / (F.col("__n") - F.col("__i")), 6)
+    return pairs.select(
+        "doc_a", "doc_b", F.explode(F.array(jaccard)).alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def simhash_signatures(
@@ -386,10 +380,12 @@ def simhash_near_dups(
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming. Blocking on the
     top ``block_bits`` bits bounds the join (at 100 TB the block prefix is
-    the shuffle key; rotate prefixes for full recall — here one rotation)."""
-    # both sides of the block self-join read the signature lineage (the
-    # tokenize + 60-vote scan); checkpoint the slim sig rows so it runs
-    # once (round-7 — the minhash_near_dups pattern)
+    the shuffle key; rotate prefixes for full recall — here one rotation).
+
+    EAGER: the call runs the signature scan (tokenize + 60 votes) once and
+    pins the (doc_id, simhash) rows with ``localCheckpoint``, as both join
+    sides read them. The pinned blocks live only on executors, lineage
+    cut: losing an executor fails the query instead of recomputing it."""
     sigs = simhash_signatures(docs, text_col).localCheckpoint(eager=True)
     blocked = sigs.withColumn(
         "block", F.shiftright(F.col("simhash"), SIMHASH_BITS - block_bits)
@@ -478,17 +474,18 @@ def hamming_near_dup_pairs(
     is only meaningful between real hashes — and (b) pseudo-pseudo at
     hamming == 0 — byte-identical payloads still dedup exactly, but a
     pseudo-hash can never claim NEAR-similarity, and real/pseudo never
-    mix (they live in different hash spaces)."""
+    mix (they live in different hash spaces).
+
+    EAGER: the call materializes ``sigs`` once (for the perceptual callers,
+    decoding every media payload) and pins it with ``localCheckpoint``, as
+    both join sides read it; an already-materialized ``sigs`` is copied
+    again. The pinned blocks live only on executors, lineage cut: losing
+    an executor fails the query instead of recomputing it."""
     if bits % n_bands:
         raise ValueError(f"n_bands={n_bands} must divide bits={bits}")
     band_bits = bits // n_bands
     cols = [id_col, hash_col] + ([real_col] if real_col else [])
-    # the band self-join references the signature lineage on BOTH sides and
-    # exchange reuse never fires across them — for the perceptual callers
-    # that lineage DECODES every media payload in an Arrow kernel, the
-    # dominant cost, so it must run once. The checkpointed frame is slim:
-    # one (id, bigint hash[, bool]) row per item (round-7; the
-    # containment_pairs FAULT-TOLERANCE TRADE note applies)
+    # slim: one (id, bigint hash[, bool]) row per item
     sigs = sigs.localCheckpoint(eager=True)
     bands = sigs.select(
         *cols,
@@ -935,12 +932,16 @@ def minhash_near_dups_incremental(
 
     - With ``old_sigs`` from the signature store, the historical corpus is
       never re-tokenized or re-signatured — per batch, signature work is
-      O(new batch), not O(corpus).
-    - The band join probes (old + new) bands with the NEW side only, so
-      old-old collisions never become candidates: candidate volume is
-      O(new-batch collisions), not O(corpus collisions).
-    - The exact-Jaccard verify touches old TEXT only for the (few) old docs
-      that band-collide with the batch (semi-join pruned, as always).
+      O(new batch), not O(corpus). Callers that also store the batch's
+      signatures pass them as ``new_sigs``.
+    - Standing and batch signatures are tagged ``is_new`` and banded once;
+      the band rows join their own ``is_new`` side, so old-old collisions
+      never become candidates: candidate volume is O(new-batch
+      collisions), not O(corpus collisions).
+    - The exact-Jaccard verify (verify_jaccard_pairs) joins in old text
+      only for the old docs that band-collide with the batch.
+
+    One lazy query: building it starts no Spark job, and it pins nothing.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b; new-new pairs
     appear once. A standing pipeline then drops cluster losers among the
@@ -949,36 +950,28 @@ def minhash_near_dups_incremental(
     """
     if old_sigs is None:
         old_sigs = minhash_signatures(old_docs, text_col, n, num_hashes)
-    # callers that also persist the batch's signatures pass them in
-    # (pre-materialized) so the batch is tokenized+signatured exactly once;
-    # when computed here, checkpoint them — bands_all AND bands_new both
-    # reference this lineage, so the batch signature pass would run twice
-    # (round-7; O(new batch) rows of num_hashes ints)
-    sigs_new = (
-        new_sigs
-        if new_sigs is not None
-        else minhash_signatures(
-            new_docs, text_col, n, num_hashes
-        ).localCheckpoint(eager=True)
-    )
-    # a doc_id re-sent in the batch REPLACES its standing entry: without
-    # this anti-join the union corpus would merge the old and new shingle
-    # sets under one doc_id (collect_set over both versions), corrupting
-    # every jaccard involving that doc, while the old-vs-new self pair is
-    # invisible (da != db never fires for equal ids)
+    if new_sigs is None:
+        new_sigs = minhash_signatures(new_docs, text_col, n, num_hashes)
+    # a doc_id re-sent in the batch REPLACES its standing entry: otherwise
+    # the verify would join both texts under one doc_id, while the
+    # old-vs-new self pair is invisible (da != db never fires)
     new_ids = new_docs.select("doc_id")
     old_sigs = old_sigs.join(new_ids, "doc_id", "left_anti")
     old_docs = old_docs.join(new_ids, "doc_id", "left_anti")
-    bands_all = band_rows_from_sigs(
-        old_sigs.unionByName(sigs_new), num_hashes, band_rows
+    bands = band_rows_from_sigs(
+        old_sigs.select("doc_id", "sig", F.lit(False).alias("is_new"))
+        .unionByName(
+            new_sigs.select("doc_id", "sig", F.lit(True).alias("is_new"))
+        ),
+        num_hashes,
+        band_rows,
     )
-    bands_new = band_rows_from_sigs(sigs_new, num_hashes, band_rows)
-    # NOTE(round-7): band-join salting measured and REVERTED here too —
+    # NOTE(round-7): band-join salting measured and REVERTED here —
     # interleaved A/B 6.76 vs 8.68 s (see the minhash_near_dups note)
     cand = (
-        bands_all.select(F.col("doc_id").alias("da"), "band_idx", "band_hash")
+        bands.select(F.col("doc_id").alias("da"), "band_idx", "band_hash")
         .join(
-            bands_new.select(
+            bands.filter("is_new").select(
                 F.col("doc_id").alias("db"), "band_idx", "band_hash"
             ),
             ["band_idx", "band_hash"],
@@ -988,7 +981,6 @@ def minhash_near_dups_incremental(
             F.least("da", "db").alias("doc_a"),
             F.greatest("da", "db").alias("doc_b"),
         )
-        .distinct()
     )
     corpus = old_docs.select("doc_id", text_col).unionByName(
         new_docs.select("doc_id", text_col)

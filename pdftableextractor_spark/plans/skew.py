@@ -45,11 +45,31 @@ def spread_underparallel_scan(df: DataFrame, *cols: str) -> DataFrame:
     40%; cheap codegen scans LOSE — the shuffle costs more than the serial
     scan). The deterministic key set keeps retries exact (never rand()).
 
-    Call on SCAN-SHAPED frames only (scan + narrow projections/filters):
-    the partition probe goes through ``df.rdd``, and on a frame with
-    upstream shuffles that finalizes the AQE plan — executing its query
-    stages eagerly, outside the job that will consume them."""
-    spark = df.sparkSession
-    if df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism:
+    Runs no Spark job. The partition count is read from the physical plan
+    of scan-shaped frames only (scans + narrow projections/filters, no
+    exchange or subquery): there it is the scan's split count. A frame
+    with an upstream exchange is returned unchanged — its partitions are
+    not the scan's, and counting them would execute its upstream stages."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if _has_exchange(plan):
+        return df
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if plan.execute().getNumPartitions() >= parallelism:
         return df
     return salted_repartition(df, *cols)
+
+
+def _has_exchange(plan) -> bool:
+    """Whether a physical plan (py4j SparkPlan) contains an exchange or a
+    subquery; an adaptive plan root means it has one of them."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if "Exchange" in name or name == "AdaptiveSparkPlan":
+            return True
+        if node.subqueries().nonEmpty():
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False

@@ -811,10 +811,46 @@ def test_incremental_dedup_with_signature_store(spark, tmp_path):
     assert recompute == got
 
 
+def test_incremental_dedup_resent_doc_replaces_old_text(spark, tmp_path):
+    """A doc_id re-sent in the batch with new text is never paired with
+    itself and its old text is neither verified nor merged into the new
+    one — on both the recompute and the signature-store paths."""
+    from pdftableextractor_spark.operators.dedup import (
+        minhash_near_dups_incremental,
+        read_signature_store,
+        write_signature_store,
+    )
+
+    old = spark.createDataFrame(
+        [
+            ("o1", "alpha beta gamma delta epsilon zeta"),
+            ("x", "one two three four five six seven"),
+        ],
+        ["doc_id", "text"],
+    )
+    new = spark.createDataFrame(
+        [
+            ("x", "alpha beta gamma delta epsilon zeta"),  # x re-sent
+            ("n1", "one two three four five six seven"),  # x's OLD text
+        ],
+        ["doc_id", "text"],
+    )
+    store = str(tmp_path / "sigs")
+    write_signature_store(old, store)
+    for old_sigs in (None, read_signature_store(spark, store)):
+        got = sorted(
+            tuple(r)
+            for r in minhash_near_dups_incremental(new, old, old_sigs).collect()
+        )
+        # a merged {old, new} shingle set for x would give jaccard 6/13
+        assert got == [("o1", "x", 1.0)]
+
+
 def test_incremental_equals_batch_restricted(spark):
     """minhash_near_dups_incremental(new, old) must equal the full batch
     operator over old ∪ new restricted to pairs involving a new doc — same
-    bands, same verify, so EXACT equality (jaccard included)."""
+    bands, same verify, so EXACT equality (jaccard included), for word
+    (n=1) and 3-gram shingles."""
     from pdftableextractor_spark.operators.dedup import (
         minhash_near_dups,
         minhash_near_dups_incremental,
@@ -830,18 +866,21 @@ def test_incremental_equals_batch_restricted(spark):
     new, old = docs.filter(is_new), docs.filter(~is_new)
     new_ids = {r["doc_id"] for r in new.select("doc_id").collect()}
 
-    inc = sorted(
-        tuple(r)
-        for r in minhash_near_dups_incremental(
-            new, old, n=1, threshold=0.5
-        ).collect()
-    )
-    full = sorted(
-        tuple(r)
-        for r in minhash_near_dups(docs, n=1, threshold=0.5).collect()
-        if r["doc_a"] in new_ids or r["doc_b"] in new_ids
-    )
-    assert inc == full and len(inc) > 0
+    for n, threshold in ((1, 0.5), (3, 0.1)):
+        inc = sorted(
+            tuple(r)
+            for r in minhash_near_dups_incremental(
+                new, old, n=n, threshold=threshold
+            ).collect()
+        )
+        full = sorted(
+            tuple(r)
+            for r in minhash_near_dups(
+                docs, n=n, threshold=threshold
+            ).collect()
+            if r["doc_a"] in new_ids or r["doc_b"] in new_ids
+        )
+        assert inc == full and len(inc) > 0, n
 
 
 def test_connected_components_empty_pairs(spark):

@@ -252,3 +252,61 @@ def test_round4_operators_plan_shapes(spark):
     p = phys(fuzzy_decontaminate(corp, bench, n=3, threshold=0.5))
     assert p.count("BroadcastHashJoin") >= 2, "bench side must broadcast"
     assert "Window" not in p and "CartesianProduct" not in p
+
+
+def _jobs_started(spark, build):
+    """(result of ``build()``, number of Spark jobs it started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construction-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_incremental_dedup_is_one_lazy_query(spark):
+    """Building minhash_near_dups_incremental starts no Spark job, and its
+    physical plan reads no pinned (checkpointed) frame."""
+    from pdftableextractor_spark.operators.dedup import (
+        minhash_near_dups_incremental,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
+        "doc_id", F.col("doc_id").cast("string")
+    )
+    is_new = F.col("doc_id").cast("bigint") % 5 == 0
+    pairs, jobs = _jobs_started(
+        spark,
+        lambda: minhash_near_dups_incremental(
+            docs.filter(is_new), docs.filter(~is_new), n=1, num_hashes=16
+        ),
+    )
+    assert jobs == 0
+    phys = _plan(pairs).split("== Physical Plan ==")[1]
+    assert "Scan ExistingRDD" not in phys
+
+
+def test_spread_underparallel_scan_runs_no_job(spark):
+    """The partition probe reads the plan: a shuffled frame comes back
+    unchanged and a single-file scan is spread, neither starting a job."""
+    from pdftableextractor_spark.plans.skew import spread_underparallel_scan
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    shuffled = docs.groupBy("source").count()
+    out, jobs = _jobs_started(
+        spark, lambda: spread_underparallel_scan(shuffled, "source")
+    )
+    assert out is shuffled and jobs == 0
+
+    assert spark.sparkContext.defaultParallelism > 1
+    out, jobs = _jobs_started(
+        spark, lambda: spread_underparallel_scan(docs, "doc_id")
+    )
+    assert jobs == 0
+    assert "REPARTITION_BY_NUM" in _plan(out)
