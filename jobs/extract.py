@@ -33,11 +33,11 @@ def main() -> None:
         "--salt",
         choices=("auto", "on", "off"),
         default="auto",
-        help="salted repartition after the explode: 'on' forces it, 'off' "
-        "never, 'auto' enables it only when the input layout would starve "
-        "the cluster (fewer files than half the cores — the one-fat-file "
-        "case where the scan stage otherwise serializes; measured 5x there, "
-        "but a net loss on well-laid-out many-file input)",
+        help="repartition whole documents on doc_id before extraction: "
+        "'on' forces it, 'off' never, 'auto' enables it only when the input "
+        "layout would starve the cluster (fewer files than half the cores, "
+        "the one-fat-file case where the single scan task otherwise does "
+        "all the work; a well-laid-out many-file input needs no shuffle)",
     )
     args = p.parse_args()
 
@@ -65,8 +65,10 @@ def main() -> None:
     else:
         salt = args.salt == "on"
     # observation metrics ride the write job itself (SURVEY §4 "cost
-    # accounting as cross-cutting concern" → accumulators): per-kind span
-    # counts with NO second scan of the output
+    # accounting as cross-cutting concern" → accumulators): input documents
+    # and per-kind span counts with NO second scan of input or output
+    docs_obs = Observation("documents")
+    docs = docs.observe(docs_obs, F.count(F.lit(1)).alias("docs"))
     obs = Observation("extract")
     out = extract_spans(docs, salt=salt).observe(
         obs,
@@ -79,8 +81,7 @@ def main() -> None:
     write_table(out, args.output, mode="overwrite")
     wall = time.time() - t0
     m = obs.get
-
-    n_docs = read_path(spark, inp).count()
+    n_docs = docs_obs.get["docs"]
     print(
         json.dumps(
             {

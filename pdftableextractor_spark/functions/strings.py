@@ -45,6 +45,28 @@ def normalize_text_col(col: Column) -> Column:
     return F.when(c.rlike(STANDALONE_NUM_RE), F.lit("")).otherwise(c)
 
 
+def sql_lit(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes, control
+    characters as \\uXXXX)."""
+    body = s.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + "".join(
+        c if c.isprintable() else f"\\u{ord(c):04x}" for c in body
+    ) + "'"
+
+
+def normalize_text_spark_sql(expr: str) -> str:
+    """``normalize_text_col`` as Spark SQL text over the SQL expression
+    ``expr`` (for ``selectExpr`` / lambda bodies)."""
+    c = expr
+    for pat in (SUPERSCRIPT_RE, PAREN_NUM_RE, BRACKET_NUM_RE, STARS_RE):
+        c = f"regexp_replace({c}, {sql_lit(pat)}, '')"
+    c = f"trim(regexp_replace({c}, {sql_lit(WS_RE)}, ' '))"
+    # blank a standalone number without evaluating c twice (lambda bodies
+    # get no common-subexpression elimination): the lookahead is the
+    # rlike(STANDALONE_NUM_RE) test, and (?s).* then replaces the whole line
+    return f"regexp_replace({c}, {sql_lit(f'(?s)(?={STANDALONE_NUM_RE}).*')}, '')"
+
+
 def normalize_text_sql(expr: str) -> str:
     """Same normalization as DuckDB SQL (for oracle_sql parity checks)."""
     c = f"regexp_replace({expr}, '{SUPERSCRIPT_RE}', '', 'g')"
@@ -93,6 +115,19 @@ def is_footnote_col(col: Column) -> Column:
     return has_marker & has_content & kw
 
 
+def is_footnote_spark_sql(expr: str) -> str:
+    """``is_footnote_col`` as Spark SQL text. The keywords (plain words)
+    and the section reference are one alternation: a line contains a
+    keyword exactly when the alternation finds it."""
+    line = f"trim({expr})"
+    marker = f"regexp_extract({line}, {sql_lit(FOOTNOTE_MARKER_RE)}, 0)"
+    kw = "|".join(FOOTNOTE_KEYWORDS + (SECTION_REF_RE,))
+    return (
+        f"({marker} != '' AND length({line}) > length({marker}) + 5"
+        f" AND lower({line}) RLIKE {sql_lit(kw)})"
+    )
+
+
 def footnote_marker_col(col: Column) -> Column:
     """The matched marker text ('' when not a footnote-style line)."""
     return F.regexp_extract(F.trim(col), FOOTNOTE_MARKER_RE, 0)
@@ -126,6 +161,16 @@ def is_boilerplate_col(col: Column) -> Column:
         (n_pipes >= F.lit(BOILER_PIPE_MIN))
         | line.startswith("©")
         | line.rlike(BOILER_NAV_RE)
+    )
+
+
+def is_boilerplate_spark_sql(expr: str) -> str:
+    """``is_boilerplate_col`` as Spark SQL text."""
+    line = f"trim({expr})"
+    return (
+        f"(length({line}) - length(replace({line}, '|', ''))"
+        f" >= {BOILER_PIPE_MIN} OR startswith({line}, '©')"
+        f" OR {line} RLIKE {sql_lit(BOILER_NAV_RE)})"
     )
 
 

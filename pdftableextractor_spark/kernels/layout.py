@@ -9,10 +9,11 @@ Replaces the reference's Textract block parsing (textract_processor.py:
 - row/column grid reconstruction via x-interval merging
 - dense grid emission row-major with '' fill — textract_processor.py:285-297
 
-The kernel is invoked via ``mapInPandas`` over exploded ``kind='pdf'`` spans
-(one row = one serialized page), so parallelism is at *page* granularity —
-a 500-page document costs 500 independent units of work, which is the skew
-story: no single task ever owns a whole heavy document.
+``layout_page`` handles one serialized page. Two wrappers call it:
+``layout_pages``, the scalar Arrow UDF ``extract_spans`` calls once per
+document on all its pages, and ``pdf_layout_kernel``, the ``mapInPandas``
+kernel over exploded ``kind='pdf'`` spans (one row = one page) that
+``extract_frames`` uses.
 
 Frozen constants (the corpus generator and golden fixtures depend on them):
   LINE_EPS      new text line when top gap > 0.01 (page fraction)
@@ -36,6 +37,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from pdftableextractor_spark.types import RS, US
 
@@ -253,6 +256,39 @@ def layout_page(payload: str) -> list[tuple[str, str]]:
                 k += 1
         i = j
     return out
+
+
+PAGES_OUT_TYPE = ArrayType(
+    ArrayType(
+        StructType(
+            [StructField("kind", StringType()), StructField("text", StringType())]
+        )
+    )
+)
+
+
+def layout_pages(docs: pa.Array) -> pa.Array:
+    """Scalar Arrow kernel: per document, a list of page payloads (null
+    for non-pdf spans) → per page, the ``layout_page`` lines as
+    (kind, text) structs (``PAGES_OUT_TYPE``). A null document stays null.
+    Builds the nested output from flat offsets, without pandas."""
+    doc_offs, page_offs, kinds, texts, nulls = [0], [0], [], [], []
+    for pages in docs.to_pylist():
+        nulls.append(pages is None)
+        for payload in pages or ():
+            for kind, text in layout_page(payload):
+                kinds.append(kind)
+                texts.append(text)
+            page_offs.append(len(kinds))
+        doc_offs.append(len(page_offs) - 1)
+    lines = pa.StructArray.from_arrays(
+        [pa.array(kinds, pa.string()), pa.array(texts, pa.string())],
+        names=["kind", "text"],
+    )
+    pages = pa.ListArray.from_arrays(pa.array(page_offs, pa.int32()), lines)
+    return pa.ListArray.from_arrays(
+        pa.array(doc_offs, pa.int32()), pages, mask=pa.array(nulls)
+    )
 
 
 def pdf_layout_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

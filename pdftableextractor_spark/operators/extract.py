@@ -1,35 +1,32 @@
 """The flagship extraction pipeline: interleaved documents → ordered spans.
 
-Pipeline (one job, ONE shuffle):
+``extract_spans`` (one scan, no exchange, one Python node):
 
     documents(doc_id, spans)
-      → posexplode(spans)                       [narrow]
-      → per-kind branches                       [narrow, all JVM-side except
-                                                 the pdf layout kernel]
+      → per span, inside the document's row (staged ``transform``s):
           text   : normalize → drop boiler/footnote/empty
           boiler : dropped
           media  : pass through untouched
-          table  : serialized grid → dense row-major cells (pure SQL
-                   higher-order functions; textract_processor.py:252-301
-                   semantics: max-extent + '' fill)
+          table  : serialized grid → dense row-major cells
+                   (textract_processor.py:252-301 semantics: max-extent +
+                   '' fill)
           kv     : 'key\\x1fvalue' → 'key: value', empty keys dropped
                    (textract_processor.py:319-344)
-          pdf    : mapInPandas layout kernel → raw text lines + table cells,
-                   then text lines rejoin the shared normalize/filter path
-      → unionByName                             [narrow]
-      → row_number() over (doc_id ORDER BY offset, sub_idx) - 1 AS order
-                                                [THE shuffle: hash by doc_id]
+          pdf    : layout-kernel lines (one Arrow UDF call per document),
+                   text lines through the same normalize/filter rule
+      → sort_array by (offset, sub_idx, array position)
+      → posexplode_outer → order                [narrow]
 
 Scale notes (100 TB design):
-- All heavy per-span work happens *before* the shuffle at span/page
-  granularity, so a 500-page document is 500 parallel units, not one task —
-  the skew case is solved structurally, not just by AQE (which stays on as a
-  backstop for the final window's skewed doc groups).
-- Every branch filter/projection is expressed declaratively → Catalyst pushes
-  `spans IS NOT NULL`-style predicates into the scan and prunes to the two
-  read columns.
-- The only Python in the plan is the Arrow-batched pdf layout kernel; the
-  text/table/kv branches are whole-stage-codegen expressions.
+- A document's spans all live in one input row, so the sequence needs no
+  shuffle: the scan stage writes the output. The unit of parallelism is
+  the document; ``salt=True`` spreads whole documents when the input has
+  fewer splits than cores.
+- The only Python is the Arrow-batched pdf layout kernel, evaluated in the
+  scan stage. The other kinds are built-in SQL expressions.
+
+``extract_frames`` / ``stage_frames`` build the structuring-stage frames
+from exploded spans (one row per span) with per-kind branches and windows.
 """
 
 from __future__ import annotations
@@ -38,13 +35,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdftableextractor_spark.functions.strings import (
+    WS_RE,
     footnote_marker_col,
     is_boilerplate_col,
+    is_boilerplate_spark_sql,
     is_footnote_col,
+    is_footnote_spark_sql,
     normalize_text_col,
+    normalize_text_spark_sql,
+    sql_lit,
 )
 from pdftableextractor_spark.kernels.layout import (
     KERNEL_OUT_SCHEMA,
+    PAGES_OUT_TYPE,
+    layout_pages,
     pdf_layout_kernel,
 )
 from pdftableextractor_spark.types import US
@@ -176,8 +180,8 @@ def _table_branch(spans: DataFrame) -> DataFrame:
     """Serialized grids → dense row-major cells with (row_idx, col_idx).
 
     Pure higher-order SQL functions, span-local (no shuffle). Used by
-    ``extract_frames``; ``extract_spans`` inlines the same _cells/_grid
-    builders into its single-pass CASE plan."""
+    ``extract_frames``; ``extract_spans`` builds the same semantics as SQL
+    text over each document's span array."""
     spans.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     parsed = spans.select(
         "doc_id", "offset", _cells_col(F.col("text")).alias("cells")
@@ -240,13 +244,6 @@ def _pdf_expanded(spans: DataFrame) -> DataFrame:
     )
 
 
-def _pdf_branch(spans: DataFrame) -> DataFrame:
-    """Layout-kernel expansion + the shared text filters, in ONE pass (a
-    union of two filters over the kernel output would run the Python kernel
-    twice)."""
-    return _pdf_filtered(_pdf_expanded(spans))
-
-
 def _pdf_filtered(expanded: DataFrame) -> DataFrame:
     """The normalize/keep projection over raw kernel output."""
     staged = expanded.select(
@@ -273,36 +270,58 @@ def _pdf_filtered(expanded: DataFrame) -> DataFrame:
     ).select("doc_id", "offset", "sub_idx", "kind", "text", "media_ref")
 
 
-EMIT_T = "array<struct<sub_idx:int,kind:string,text:string,media_ref:string>>"
+# an output row; the tuple (offset, sub_idx, pos) leads, so sort_array
+# orders rows like the oracle's stable (offset, sub_idx) sort
+ROW_T = (
+    "struct<offset:int,sub_idx:int,pos:int,kind:string,text:string,"
+    "media_ref:string>"
+)
+
+_layout_udf = F.arrow_udf(layout_pages, PAGES_OUT_TYPE)
 
 
-def _emit(sub, kind, text, media):
-    return F.struct(
-        sub.cast("int").alias("sub_idx"),
-        kind.alias("kind"),
-        text.alias("text"),
-        media.alias("media_ref"),
+def _line_sql(v: str) -> str:
+    """A raw content line → its normalized text, or NULL when it is
+    boilerplate or a footnote (the ``_text_branch`` rule, as SQL text)."""
+    return (
+        f"IF({is_boilerplate_spark_sql(v)} OR {is_footnote_spark_sql(v)},"
+        f" NULL, {normalize_text_spark_sql(v)})"
     )
+
+
+def _ws_sql(v: str) -> str:
+    """``_ws_norm`` as SQL text: whitespace runs → one space, trimmed."""
+    return f"trim(regexp_replace({v}, {sql_lit(WS_RE)}, ' '))"
+
+
+def _rows_sql(kind: str, text: str, media: str = "''", over: str = "") -> str:
+    """The output rows (``ROW_T``) of span ``x``: one row with sub_idx 0,
+    or, with ``over`` = '<array>, (<elem>, k)', one row per element with
+    sub_idx k. ``kind``/``text``/``media`` are SQL expressions."""
+    sub = "k" if over else "0"
+    row = (
+        f"named_struct('offset', x.offset, 'sub_idx', {sub}, 'pos', x.pos,"
+        f" 'kind', {kind}, 'text', {text}, 'media_ref', {media})"
+    )
+    return f"transform({over} -> {row})" if over else f"array({row})"
 
 
 def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
     """documents(doc_id, spans) → spans_out(doc_id, order, kind, text,
     media_ref), the driver-checked span sequence (FIXTURES.md §2).
 
-    Single-pass design: one scan handles every span kind except 'pdf' via a
-    per-kind CASE that emits an array of output structs (a per-branch union
-    would scan the input once per kind — 6x the IO at the 100 TB design
-    point). The pdf layout kernel is the one extra scan (mapInPandas can't
-    share a projection with relational branches).
+    All of a document's spans live in its row, so every step runs inside
+    that row: one scan, no exchange, and one Arrow Python node (the pdf
+    layout kernel, called once per document on its page payloads). The
+    per-kind rules are staged ``transform`` projections over the span
+    array; ``sort_array`` orders the emitted rows by (offset, sub_idx,
+    array position) and ``posexplode_outer`` numbers them. The expressions
+    are SQL text: building them from Column operators costs several py4j
+    round trips per operator.
 
-    ``salt=True`` inserts the explicit salted repartition after the explode
-    (plans/skew.py): heavy documents and fat input splits spread across the
-    cluster before any kernel work. Measured: on a single-fat-file input it
-    is a 5x win (the scan stage otherwise serializes); on a well-laid-out
-    many-file input it costs one extra all-to-all of raw span text and
-    *hurts* scaling efficiency (0.86 -> 0.58 at 4-vs-16 cores). Default off;
-    turn on for skewed layouts (few giant files, multi-hundred-page docs
-    concentrated in few splits).
+    ``salt=True`` hash-repartitions whole documents on ``doc_id`` first
+    (plans/skew.py), for inputs with fewer splits than cores (one fat
+    file); a document is never split, so its rows stay in one task.
     """
     from pdftableextractor_spark.plans.skew import salted_repartition
 
@@ -313,120 +332,85 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
     # sets it; this covers foreign sessions. If your session needs EXCEPTION
     # semantics elsewhere, run extraction in its own session.
     documents.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-
-    s = explode_spans(documents)
+    docs = documents.select("doc_id", "spans")
     if salt:
-        s = salted_repartition(s, "doc_id", "offset")
-
-    # --- stage 1: parse table cells (null for other kinds) ---------------
-    st1 = s.filter(F.col("kind") != "pdf").select(
+        docs = salted_repartition(docs, "doc_id")
+    sep, tag = sql_lit(US), sql_lit(CELL_TAG_RE)
+    span = (
+        "'offset', x.offset, 'kind', x.kind, 'text', x.text,"
+        " 'media_ref', x.media_ref"
+    )
+    # span structs with their array position; table payloads parsed into
+    # (r, c, txt) cells, malformed or out-of-bound tags dropped
+    sp = docs.selectExpr(
         "doc_id",
-        "offset",
-        "kind",
-        "text",
-        "media_ref",
-        F.when(F.col("kind") == "table", _cells_col(F.col("text"))).alias(
-            "cells"
-        ),
+        "transform(filter(spans, s -> s IS NOT NULL), (x, i) -> named_struct("
+        f"{span}, 'pos', i, 'cells', IF(x.kind = 'table', filter(transform("
+        f"split(x.text, {sep}), t -> named_struct("
+        f"'r', try_cast(regexp_extract(t, {tag}, 1) AS INT),"
+        f" 'c', try_cast(regexp_extract(t, {tag}, 2) AS INT),"
+        f" 'txt', regexp_replace(t, {tag}, ''))),"
+        f" z -> z.r < {GRID_MAX} AND z.c < {GRID_MAX}), NULL))) AS sp",
     )
-
-    # --- stage 2: grid extent + cell map (separate Project: 'cells' is
-    # referenced three times and must not be inlined) ----------------------
-    st2 = st1.select(
-        "doc_id", "offset", "kind", "text", "media_ref", *_grid_extent_cols()
-    )
-
-    # --- stage 3: dense row-major grid ------------------------------------
-    st3 = st2.select(
-        "doc_id", "offset", "kind", "text", "media_ref", _dense_grid_col()
-    )
-
-    # --- stage 4: normalized text + kv parts -------------------------------
-    kv_parts = F.split(F.col("text"), US, 2)
-    st4 = st3.select(
+    # per document: one layout-kernel call on its pdf payloads. Per span:
+    # the grid extent and (r, c) → text map, in their own stage so the
+    # cells are parsed once although three expressions read them
+    staged = sp.select(
         "doc_id",
-        "offset",
-        "kind",
-        "media_ref",
-        "grid",
-        normalize_text_col(F.col("text")).alias("norm"),
-        (
-            ~is_boilerplate_col(F.col("text"))
-            & ~is_footnote_col(F.col("text"))
-        ).alias("keep_text"),
-        F.trim(F.get(kv_parts, 0)).alias("kv_k"),
-        F.trim(F.coalesce(F.get(kv_parts, 1), F.lit(""))).alias("kv_v"),
+        _layout_udf(
+            F.expr(
+                "IF(exists(sp, x -> x.kind = 'pdf'),"
+                " transform(sp, x -> IF(x.kind = 'pdf', x.text, NULL)), NULL)"
+            )
+        ).alias("pages"),
+        F.expr(
+            f"transform(sp, x -> named_struct({span}, 'pos', x.pos,"
+            " 'h', array_max(transform(x.cells, z -> z.r)) + 1,"
+            " 'w', array_max(transform(x.cells, z -> z.c)) + 1,"
+            " 'm', map_from_entries(transform(x.cells, z -> struct("
+            f"z.r * {GRID_MAX} + z.c, z.txt)))))"
+        ).alias("sp"),
+    )
+    # dense row-major grid with '' fill (textract_processor.py:271-297);
+    # a table whose area exceeds GRID_AREA_MAX is dropped whole as hostile,
+    # and the guard runs before the sequence is built
+    grid = (
+        f"IF(x.h * x.w <= {GRID_AREA_MAX}, flatten(transform("
+        "sequence(0, x.h - 1), r -> transform(sequence(0, x.w - 1),"
+        f" c -> coalesce(try_element_at(x.m, r * {GRID_MAX} + c), '')))), NULL)"
     )
 
-    # --- stage 5: per-kind emission ----------------------------------------
-    empty = F.array().cast(EMIT_T)
-    emits = (
-        F.when(
-            F.col("kind") == "text",
-            F.when(
-                F.col("keep_text") & (F.col("norm") != ""),
-                F.array(
-                    _emit(F.lit(0), F.lit("text"), F.col("norm"), F.lit(""))
-                ),
-            ).otherwise(empty),
-        )
-        .when(
-            F.col("kind") == "media",
-            F.array(
-                _emit(F.lit(0), F.lit("media"), F.lit(""), F.col("media_ref"))
-            ),
-        )
-        .when(
-            F.col("kind") == "table",
-            F.coalesce(
-                F.transform(
-                    "grid",
-                    lambda cell, i: _emit(
-                        i, F.lit("table_cell"), _ws_norm(cell), F.lit("")
-                    ),
-                ),
-                empty,
-            ),
-        )
-        .when(
-            F.col("kind") == "kv",
-            F.when(
-                F.col("kv_k") != "",
-                F.array(
-                    _emit(
-                        F.lit(0),
-                        F.lit("kv"),
-                        F.concat_ws(": ", F.col("kv_k"), F.col("kv_v")),
-                        F.lit(""),
-                    )
-                ),
-            ).otherwise(empty),
-        )
-        .otherwise(empty)  # 'boiler' and unknown kinds
+    # 'key: value'; an empty key makes the concat NULL, dropping the row
+    kv = f"split(x.text, {sep}, 2)"
+    kv_text = (
+        f"concat(nullif(trim(get({kv}, 0)), ''), ': ',"
+        f" trim(coalesce(get({kv}, 1), '')))"
     )
-    rows = (
-        st4.select("doc_id", "offset", emits.alias("emits"))
-        .select("doc_id", "offset", F.explode_outer("emits").alias("e"))
-        .filter(F.col("e").isNotNull())
-        .select(
-            "doc_id",
-            "offset",
-            F.col("e.sub_idx").alias("sub_idx"),
-            F.col("e.kind").alias("kind"),
-            F.col("e.text").alias("text"),
-            F.col("e.media_ref").alias("media_ref"),
-        )
-    )
-
-    pdf = _pdf_branch(s.filter(F.col("kind") == "pdf"))
-    unioned = rows.unionByName(pdf)
-    w = Window.partitionBy("doc_id").orderBy("offset", "sub_idx")
-    return unioned.select(
+    pdf_text = f"IF(l.kind = 'text', {_line_sql('l.text')}, {_ws_sql('l.text')})"
+    branches = {
+        "text": _rows_sql("'text'", _line_sql("x.text")),
+        "media": _rows_sql("'media'", "''", "x.media_ref"),
+        "kv": _rows_sql("'kv'", kv_text),
+        "table": _rows_sql("'table_cell'", _ws_sql("v"), over=f"{grid}, (v, k)"),
+        "pdf": _rows_sql("l.kind", pdf_text, over="pages[i], (l, k)"),
+    }
+    emits = " ".join(f"WHEN '{k}' THEN {v}" for k, v in branches.items())
+    # drop rows with a NULL text (dropped lines, empty kv keys) and text
+    # rows normalized to ''
+    rows = staged.selectExpr(
         "doc_id",
-        (F.row_number().over(w) - 1).cast("int").alias("order"),
-        "kind",
-        "text",
-        "media_ref",
+        "sort_array(filter(flatten(transform(sp, (x, i) -> coalesce(CASE"
+        f" x.kind {emits} END, CAST(array() AS array<{ROW_T}>)))),"
+        " e -> e.text IS NOT NULL AND"
+        " (e.kind != 'text' OR e.text != ''))) AS rows",
+    )
+    return (
+        rows.selectExpr("doc_id", "posexplode_outer(rows) AS (`order`, e)")
+        .filter("e IS NOT NULL")
+        .selectExpr(
+            "doc_id", "`order`", "e.kind AS kind", "e.text AS text",
+            "e.media_ref AS media_ref",
+        )
     )
 
 

@@ -1,16 +1,16 @@
 """Skew breaking: explicit salted repartition (SURVEY.md §4.1).
 
-A multi-hundred-page document (or a single fat parquet row group) must never
-become one task. ``salted_repartition`` hash-partitions exploded spans on
-(doc_id, offset): the offset acts as a deterministic salt, so one heavy
-document spreads over many partitions while the doc-level reassembly window
-later regroups it. This costs one shuffle of the raw spans — cheap relative
-to the per-span kernel work it parallelizes, and the *only* way a
-1000-executor cluster keeps its tail tasks short when doc sizes are
-heavy-tailed (BASELINE.json north_star).
+A fat parquet row group, or a single-file input, must never become one
+task. ``salted_repartition`` hash-partitions a frame on the given columns.
+``extract_spans(salt=True)`` uses it on whole documents (``doc_id``): a
+document's rows are all produced inside its own row, so the salt spreads
+documents over the cluster and never splits one. This costs one shuffle of
+the raw documents, paid only for layouts with fewer splits than cores
+(``jobs/extract.py --salt auto``); a single heavy document stays one task's
+work.
 
-AQE (enabled in session.py) remains the backstop for residual skew in the
-reassembly window and the LSH band joins.
+AQE (enabled in session.py) remains the backstop for residual skew in
+later shuffles and the LSH band joins.
 """
 
 from __future__ import annotations

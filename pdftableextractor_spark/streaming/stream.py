@@ -6,7 +6,7 @@ documents finish. The Spark-native equivalent is a file/Iceberg streaming
 source over the documents table with ``foreachBatch``: each micro-batch of
 newly-arrived documents runs the SAME batch extraction operator and appends
 its span sequences — per-document output is identical to the batch path
-(the ordering window is per-doc, and a document arrives whole in one batch).
+(ordering is per document, and a document arrives whole in one batch).
 
 ``Trigger.AvailableNow`` gives catch-up/backfill semantics. foreachBatch is
 at-least-once (a crash between the sink write and the checkpoint commit

@@ -7,15 +7,13 @@ The input shape is mandated by BASELINE.json:input_hint — an Iceberg
               spans array<struct<kind string, text string,
                                  media_ref string, offset int>>)
 
-HARD INPUT CONTRACT: ``spans.offset`` is the span's unique position within
-its document — (doc_id, offset) identifies a span. Everything downstream
-keys on it: the output ordering window sorts by (offset, sub_idx), the pdf
-layout kernel emits lines keyed by (doc_id, offset), and the pure-Python
-oracle sorts the same way. Duplicate offsets in one document are malformed
-input: the rows still flow, but their relative order is not defined (two
-pdf pages sharing an offset cannot be distinguished by ANY key the data
-model carries). Producers must assign offsets 0..n-1 (or any per-doc-unique
-ints); both corpus generators do.
+INPUT CONTRACT: ``spans.offset`` is the span's position within its
+document. ``extract_spans`` orders output rows by (offset, sub_idx, array
+position), exactly like the pure-Python oracle's stable sort, so duplicate
+offsets are still ordered deterministically. ``extract_frames`` numbers
+lines with windows over (offset, sub_idx), which leave duplicate offsets
+unordered there. Producers should assign offsets 0..n-1 (or any
+per-doc-unique ints); both corpus generators do.
 
 ``spans.kind`` values in the synthetic corpus (FIXTURES.md §1):
   'text'   — a content line (may carry superscripts / footnote markers)

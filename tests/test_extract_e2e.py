@@ -74,6 +74,51 @@ def test_partitioning_invariance(spark, documents_df):
     assert a == b
 
 
+def test_output_matches_spans_out_schema(spark, documents_df):
+    from pdftableextractor_spark.types import SPANS_OUT_SCHEMA
+
+    got = extract_spans(documents_df).schema
+    assert [(f.name, f.dataType) for f in got] == [
+        (f.name, f.dataType) for f in SPANS_OUT_SCHEMA
+    ]
+
+
+def test_shared_offset_follows_oracle_order(spark):
+    """A pdf page, a text span and a media span at one offset: rows
+    interleave by (offset, sub-row, array position), like the oracle's
+    stable sort, at any partitioning."""
+    from pdftableextractor_spark.types import RS, US
+
+    page = RS.join(
+        US.join([w, top, "0.1", "0.1", "0.02"])
+        for w, top in (("Alpha", "0.1"), ("Beta", "0.2"), ("Gamma", "0.3"))
+    )
+    spans = [
+        ("pdf", page, "", 1),
+        ("text", "Shared offset line.", "", 1),
+        ("text", "First line.", "", 0),
+        ("media", "", "m-9", 1),
+    ]
+    rows = [("d1", spans), ("d2", spans[::-1])]
+    sdf = spark.createDataFrame(
+        rows,
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    keys = ("kind", "text", "media_ref", "offset")
+    exp = [
+        (r["doc_id"], r["order"], r["kind"], r["text"], r["media_ref"])
+        for r in oracle.extract_corpus(
+            [{"doc_id": d, "spans": [dict(zip(keys, s)) for s in sp]} for d, sp in rows]
+        )
+    ]
+    assert [r[3] for r in exp[:6]] == [
+        "First line.", "Alpha", "Shared offset line.", "", "Beta", "Gamma"
+    ]
+    for n in (1, 16):
+        assert _collect_sorted(extract_spans(sdf.repartition(n))) == sorted(exp)
+
+
 def test_media_passthrough(spark, corpus_docs, documents_df):
     got = extract_spans(documents_df).filter("kind = 'media'")
     exp_media = [

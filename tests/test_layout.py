@@ -138,3 +138,28 @@ def test_kernel_matches_oracle_on_generated_pages():
                 n_pages += 1
                 assert layout_page(s["text"]) == oracle._pdf_lines(s["text"])
     assert n_pages > 10  # generator actually produced pdf pages
+
+
+def test_layout_pages_nests_layout_page_per_document():
+    """The per-document Arrow kernel returns layout_page's lines per page,
+    keeps a null document null and an empty or null page empty."""
+    import pyarrow as pa
+
+    from pdftableextractor_spark.kernels.layout import layout_pages
+
+    pages = [
+        s["text"]
+        for d in corpus.gen_documents(20, seed=7)
+        for s in d["spans"]
+        if s["kind"] == "pdf"
+    ][:3]
+    docs = [pages, None, [None, "", pages[0]], []]
+    got = layout_pages(pa.array(docs, pa.list_(pa.string()))).to_pylist()
+    exp = [
+        None if doc is None else [
+            [{"kind": k, "text": t} for k, t in layout_page(p)] for p in doc
+        ]
+        for doc in docs
+    ]
+    assert got == exp
+    assert got[2][:2] == [[], []] and got[0][0]

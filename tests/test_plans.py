@@ -83,17 +83,33 @@ def test_pack_shards_single_group_exchange(spark):
     assert "BroadcastHashJoin" in phys
 
 
+def _assert_extract_plan_shape(docs, scans):
+    """Unsalted: no exchange, no window and one Arrow Python node over
+    ``scans`` parquet scans. Salted: one doc_id hash exchange on top."""
+    for salt in (False, True):
+        phys = _plan(extract_spans(docs, salt=salt)).split(
+            "== Physical Plan =="
+        )[1]
+        exchanges = phys.count("Exchange")
+        if salt:
+            assert exchanges == 1, phys
+            assert phys.count("Exchange hashpartitioning(doc_id") == 1, phys
+        else:
+            assert exchanges == 0, phys
+        assert "Window" not in phys
+        assert phys.count("ArrowEvalPython") == 1, phys
+        assert "MapInPandas" not in phys and "BatchEvalPython" not in phys
+        assert phys.count("FileScan parquet") == scans
+
+
 def test_extract_reads_two_scans_one_shuffle(spark):
     docs = spark.createDataFrame(
         [("d1", [("text", "Hello world.", "", 0)])],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    plan = _plan(extract_spans(docs))
-    # budget: ONE shuffle (the per-doc ordering window); the pdf branch and
-    # the relational branch each contribute one source scan
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, f"extraction shuffle budget exceeded: {n_exchanges}"
+    # every span kind is handled inside its document's row
+    _assert_extract_plan_shape(docs, scans=0)
 
 
 def test_extract_scan_budget_on_parquet(spark, tmp_path):
@@ -101,8 +117,20 @@ def test_extract_scan_budget_on_parquet(spark, tmp_path):
 
     p = str(tmp_path / "c.parquet")
     corpus.write_corpus_parquet(p, 5, seed=3)
-    plan = _plan(extract_spans(spark.read.parquet(p)))
-    assert plan.count("FileScan parquet") == 2  # relational pass + pdf pass
+    _assert_extract_plan_shape(spark.read.parquet(p), scans=1)
+
+
+def test_extract_construction_starts_no_job(spark, tmp_path):
+    """Building extract_spans over parquet, salted or not, starts no
+    Spark job."""
+    from pdftableextractor_spark import corpus
+
+    p = str(tmp_path / "c.parquet")
+    corpus.write_corpus_parquet(p, 5, seed=3)
+    docs = spark.read.parquet(p)
+    for salt in (False, True):
+        _, jobs = _jobs_started(spark, lambda: extract_spans(docs, salt=salt))
+        assert jobs == 0, f"salt={salt}: {jobs} jobs"
 
 
 def test_documents_filter_pushdown(spark):

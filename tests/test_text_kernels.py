@@ -3,6 +3,8 @@ with the independent pure-Python oracle on tricky lines (FIXTURES.md §3)."""
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pdftableextractor_spark import oracle
@@ -77,3 +79,73 @@ def test_normalize_semantics():
     assert oracle.normalize("abc¹²³ def(1) g[2] h***") == "abc def g h"
     assert oracle.normalize("42") == ""
     assert oracle.normalize("  a   b\t c ") == "a b c"
+
+
+def _golden_lines() -> list[str]:
+    """LINES plus every text/boiler span of the frozen golden fixture."""
+    import json
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "golden_spans.json")
+    with open(path) as f:
+        docs = json.load(f)["documents"]
+    return LINES + [
+        s["text"]
+        for d in docs
+        for s in d["spans"]
+        if s["kind"] in ("text", "boiler")
+    ]
+
+
+# Java-regex corners: '$' also matches before a final line terminator
+# (U+0085, U+2028), so these pin Column/SQL-text agreement, not the oracle
+CORNERS = [
+    None, "12\u2028", "12\u0085", "home\u0085", " 7 ", "(3)", "12\n",
+    "a|b|c", "© x", " home", "1. see page 4 now", "Note: x",
+    "* refers to x here", "[1] Source: a b c d", "x¹²y (12) [3] ** z",
+]
+
+
+def _assert_sql_twins_match(spark, lines):
+    from pdftableextractor_spark.functions.strings import (
+        is_boilerplate_spark_sql,
+        is_footnote_spark_sql,
+        normalize_text_spark_sql,
+    )
+
+    df = spark.createDataFrame([(l,) for l in lines], "text string")
+    pairs = [
+        (normalize_text_col, normalize_text_spark_sql),
+        (is_footnote_col, is_footnote_spark_sql),
+        (is_boilerplate_col, is_boilerplate_spark_sql),
+    ]
+    cols = []
+    for i, (col_fn, sql_fn) in enumerate(pairs):
+        cols += [
+            col_fn(F.col("text")).alias(f"c{i}"),
+            F.expr(sql_fn("text")).alias(f"s{i}"),
+        ]
+    for r in df.select("text", *cols).collect():
+        for i in range(len(pairs)):
+            assert r[f"c{i}"] == r[f"s{i}"], (i, r["text"])
+
+
+def test_sql_text_twins_match_column_builders(spark):
+    """The Spark-SQL-text builders agree with the Column builders on the
+    golden lines and the regex corners."""
+    _assert_sql_twins_match(spark, _golden_lines() + CORNERS)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    lines=st.lists(
+        st.text(
+            alphabet=st.characters(blacklist_categories=("Cs",)), max_size=40
+        )
+        | st.sampled_from(LINES + CORNERS[1:]).map(lambda l: "  " + l + "¹"),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_sql_text_twins_match_on_fuzzed_strings(spark, lines):
+    _assert_sql_twins_match(spark, lines)
