@@ -249,7 +249,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ----- extraction-operator analogs (SURVEY.md §2) -----
     q["q01_normalize_lines"] = lambda s, d: _docs_str(s, d).select(
-        "doc_id", normalize_text_col(F.col("text")).alias("norm_text")
+        "doc_id", normalize_text_col("text").alias("norm_text")
     )
 
     q["q02_substantial_filter"] = lambda s, d: (
@@ -262,8 +262,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _docs_str(s, d)
         return docs.select(
             "doc_id",
-            is_footnote_col(F.col("text")).alias("is_footnote"),
-            has_footnote_refs_col(F.col("text")).alias("has_refs"),
+            is_footnote_col("text").alias("is_footnote"),
+            has_footnote_refs_col("text").alias("has_refs"),
         )
 
     q["q03_footnote_flags"] = q03

@@ -1,10 +1,13 @@
 """Canonical scalar text functions — the single source of truth for the
 normalization / footnote / boilerplate semantics.
 
-Everything here is a *built-in Spark SQL expression builder* (JVM-side,
-whole-stage-codegen friendly — never a Python UDF). The regex constants are
-module-level so the pure-Python test oracle and the DuckDB oracle SQL can
-reuse the exact same patterns.
+Each rule is written once, as Spark SQL text over a SQL expression
+(``*_spark_sql``), built from the module-level regex constants. The
+``*_col`` builders wrap that text in ``F.expr`` for a named column, and
+``selectExpr`` / lambda bodies embed it directly; either way the rule runs
+as built-in JVM expressions, never a Python UDF. The pure-Python test
+oracle and the DuckDB oracle SQL (``normalize_text_sql``) reuse the same
+regex constants.
 
 Semantics are frozen from the reference (cited per function); where the
 reference has two divergent helper copies (SURVEY.md §7.3.5) the
@@ -32,19 +35,6 @@ WS_RE = r"\s+"
 STANDALONE_NUM_RE = r"^\d+$"
 
 
-def normalize_text_col(col: Column) -> Column:
-    """Superscript/footnote-marker strip + whitespace collapse.
-
-    Mirrors ``_remove_superscript_numbers`` (textract_processor.py:162-184).
-    """
-    c = F.regexp_replace(col, SUPERSCRIPT_RE, "")
-    c = F.regexp_replace(c, PAREN_NUM_RE, "")
-    c = F.regexp_replace(c, BRACKET_NUM_RE, "")
-    c = F.regexp_replace(c, STARS_RE, "")
-    c = F.trim(F.regexp_replace(c, WS_RE, " "))
-    return F.when(c.rlike(STANDALONE_NUM_RE), F.lit("")).otherwise(c)
-
-
 def sql_lit(s: str) -> str:
     """``s`` as a Spark SQL string literal (backslash escapes, control
     characters as \\uXXXX)."""
@@ -55,16 +45,25 @@ def sql_lit(s: str) -> str:
 
 
 def normalize_text_spark_sql(expr: str) -> str:
-    """``normalize_text_col`` as Spark SQL text over the SQL expression
-    ``expr`` (for ``selectExpr`` / lambda bodies)."""
+    """Superscript/footnote-marker strip + whitespace collapse, as Spark SQL
+    text over the SQL expression ``expr``.
+
+    Mirrors ``_remove_superscript_numbers`` (textract_processor.py:162-184).
+    """
     c = expr
     for pat in (SUPERSCRIPT_RE, PAREN_NUM_RE, BRACKET_NUM_RE, STARS_RE):
         c = f"regexp_replace({c}, {sql_lit(pat)}, '')"
     c = f"trim(regexp_replace({c}, {sql_lit(WS_RE)}, ' '))"
     # blank a standalone number without evaluating c twice (lambda bodies
     # get no common-subexpression elimination): the lookahead is the
-    # rlike(STANDALONE_NUM_RE) test, and (?s).* then replaces the whole line
+    # STANDALONE_NUM_RE test, and (?s).* then replaces the whole line
     return f"regexp_replace({c}, {sql_lit(f'(?s)(?={STANDALONE_NUM_RE}).*')}, '')"
+
+
+def normalize_text_col(col: str) -> Column:
+    """``normalize_text_spark_sql`` over the column (or SQL expression)
+    ``col``."""
+    return F.expr(normalize_text_spark_sql(col))
 
 
 def normalize_text_sql(expr: str) -> str:
@@ -101,26 +100,18 @@ FOOTNOTE_KEYWORDS = (
 SECTION_REF_RE = r"\b(?:page|section|chapter|exhibit|appendix)\s+\d+"
 
 
-def is_footnote_col(col: Column) -> Column:
-    """Boolean footnote predicate over a raw (unnormalized) line."""
-    line = F.trim(col)
-    marker = F.regexp_extract(line, FOOTNOTE_MARKER_RE, 0)
-    has_marker = marker != F.lit("")
-    has_content = F.length(line) > F.length(marker) + F.lit(5)
-    low = F.lower(line)
-    kw = F.lit(False)
-    for k in FOOTNOTE_KEYWORDS:
-        kw = kw | low.contains(k)
-    kw = kw | low.rlike(SECTION_REF_RE)
-    return has_marker & has_content & kw
+def footnote_marker_spark_sql(expr: str) -> str:
+    """The matched marker text ('' when not a footnote-style line)."""
+    return f"regexp_extract(trim({expr}), {sql_lit(FOOTNOTE_MARKER_RE)}, 0)"
 
 
 def is_footnote_spark_sql(expr: str) -> str:
-    """``is_footnote_col`` as Spark SQL text. The keywords (plain words)
-    and the section reference are one alternation: a line contains a
-    keyword exactly when the alternation finds it."""
+    """Boolean footnote predicate over a raw (unnormalized) line, as Spark
+    SQL text. The keywords (plain words) and the section reference are one
+    alternation: a line contains a keyword exactly when the alternation
+    finds it."""
     line = f"trim({expr})"
-    marker = f"regexp_extract({line}, {sql_lit(FOOTNOTE_MARKER_RE)}, 0)"
+    marker = footnote_marker_spark_sql(expr)
     kw = "|".join(FOOTNOTE_KEYWORDS + (SECTION_REF_RE,))
     return (
         f"({marker} != '' AND length({line}) > length({marker}) + 5"
@@ -128,17 +119,20 @@ def is_footnote_spark_sql(expr: str) -> str:
     )
 
 
-def footnote_marker_col(col: Column) -> Column:
-    """The matched marker text ('' when not a footnote-style line)."""
-    return F.regexp_extract(F.trim(col), FOOTNOTE_MARKER_RE, 0)
+def is_footnote_col(col: str) -> Column:
+    return F.expr(is_footnote_spark_sql(col))
+
+
+def footnote_marker_col(col: str) -> Column:
+    return F.expr(footnote_marker_spark_sql(col))
 
 
 # inline footnote references (textract_processor.py:149)
 FOOTNOTE_REF_RE = r"[\(\[]\d+[\)\]]|\*+(\s|$)"
 
 
-def has_footnote_refs_col(col: Column) -> Column:
-    return F.trim(col).rlike(FOOTNOTE_REF_RE)
+def has_footnote_refs_col(col: str) -> Column:
+    return F.expr(f"trim({col}) RLIKE {sql_lit(FOOTNOTE_REF_RE)}")
 
 
 # --- boilerplate classification (north_star: HTML boilerplate strip) ------
@@ -154,24 +148,17 @@ BOILER_NAV_RE = (
 )
 
 
-def is_boilerplate_col(col: Column) -> Column:
-    line = F.trim(col)
-    n_pipes = F.length(line) - F.length(F.regexp_replace(line, r"\|", ""))
-    return (
-        (n_pipes >= F.lit(BOILER_PIPE_MIN))
-        | line.startswith("©")
-        | line.rlike(BOILER_NAV_RE)
-    )
-
-
 def is_boilerplate_spark_sql(expr: str) -> str:
-    """``is_boilerplate_col`` as Spark SQL text."""
     line = f"trim({expr})"
     return (
         f"(length({line}) - length(replace({line}, '|', ''))"
         f" >= {BOILER_PIPE_MIN} OR startswith({line}, '©')"
         f" OR {line} RLIKE {sql_lit(BOILER_NAV_RE)})"
     )
+
+
+def is_boilerplate_col(col: str) -> Column:
+    return F.expr(is_boilerplate_spark_sql(col))
 
 
 # --- misc scalar helpers (SURVEY.md §2.7) ----------------------------------

@@ -9,11 +9,12 @@ Replaces the reference's Textract block parsing (textract_processor.py:
 - row/column grid reconstruction via x-interval merging
 - dense grid emission row-major with '' fill — textract_processor.py:285-297
 
-``layout_page`` handles one serialized page. Two wrappers call it:
-``layout_pages``, the scalar Arrow UDF ``extract_spans`` calls once per
-document on all its pages, and ``pdf_layout_kernel``, the ``mapInPandas``
-kernel over exploded ``kind='pdf'`` spans (one row = one page) that
-``extract_frames`` uses.
+``layout_page`` handles one serialized page. ``layout_pages`` is the
+scalar Arrow UDF the extraction operators call: once per document on all
+its pages in ``extract_spans``, once per pdf span in ``extract_frames``.
+``pdf_layout_kernel`` is a ``mapInPandas``-shaped wrapper over exploded
+``kind='pdf'`` span rows (one row = one page); no operator calls it, and
+perfbench's single-threaded kernel probe still does.
 
 Frozen constants (the corpus generator and golden fixtures depend on them):
   LINE_EPS      new text line when top gap > 0.01 (page fraction)
@@ -48,12 +49,6 @@ COL_MERGE_EPS = 0.02
 MIN_TABLE_ROWS = 2
 RULE_MIN_W = 0.3
 RULE_MAX_H = 0.004
-
-KERNEL_OUT_SCHEMA = (
-    "doc_id string, offset int, sub_idx int, kind string, "
-    "text string, media_ref string"
-)
-
 
 def parse_boxes(payload: str) -> list[tuple[str, float, float, float, float]]:
     """'word\\x1ftop\\x1fleft\\x1fwidth\\x1fheight' records joined by \\x1e."""

@@ -26,7 +26,8 @@ Scale notes (100 TB design):
   scan stage. The other kinds are built-in SQL expressions.
 
 ``extract_frames`` / ``stage_frames`` build the structuring-stage frames
-from exploded spans (one row per span) with per-kind branches and windows.
+from exploded spans (one row per span): the same per-kind SQL rules and
+the same layout kernel, one row at a time, numbered by windows.
 """
 
 from __future__ import annotations
@@ -37,20 +38,13 @@ from pyspark.sql import functions as F
 from pdftableextractor_spark.functions.strings import (
     WS_RE,
     footnote_marker_col,
-    is_boilerplate_col,
     is_boilerplate_spark_sql,
     is_footnote_col,
     is_footnote_spark_sql,
-    normalize_text_col,
     normalize_text_spark_sql,
     sql_lit,
 )
-from pdftableextractor_spark.kernels.layout import (
-    KERNEL_OUT_SCHEMA,
-    PAGES_OUT_TYPE,
-    layout_pages,
-    pdf_layout_kernel,
-)
+from pdftableextractor_spark.kernels.layout import PAGES_OUT_TYPE, layout_pages
 from pdftableextractor_spark.types import US
 
 CELL_TAG_RE = r"^r(\d+)c(\d+):"
@@ -89,187 +83,6 @@ def explode_spans(documents: DataFrame) -> DataFrame:
     )
 
 
-def _text_branch(spans: DataFrame) -> DataFrame:
-    """Shared normalize/filter path for content lines (kind='text' spans and
-    raw lines emitted by the pdf layout kernel)."""
-    return (
-        spans.filter(~is_boilerplate_col(F.col("text")))
-        .filter(~is_footnote_col(F.col("text")))
-        .withColumn("text", normalize_text_col(F.col("text")))
-        .filter(F.col("text") != "")
-        .select(
-            "doc_id",
-            "offset",
-            "sub_idx",
-            F.lit("text").alias("kind"),
-            "text",
-            F.lit("").alias("media_ref"),
-        )
-    )
-
-
-def _cells_col(text_col):
-    """Parse a serialized 'r{r}c{c}:text' payload into an array of
-    (r, c, txt) structs, dropping malformed tokens (null-safe under ANSI)."""
-    return F.filter(
-        F.transform(
-            F.split(text_col, US),
-            lambda t: F.struct(
-                F.regexp_extract(t, CELL_TAG_RE, 1).try_cast("int").alias("r"),
-                F.regexp_extract(t, CELL_TAG_RE, 2).try_cast("int").alias("c"),
-                F.regexp_replace(t, CELL_TAG_RE, "").alias("txt"),
-            ),
-        ),
-        lambda x: x["r"].isNotNull()
-        & x["c"].isNotNull()
-        & (x["r"] < GRID_MAX)
-        & (x["c"] < GRID_MAX),
-    )
-
-
-def _grid_extent_cols():
-    """max_r / max_c / (r:c → text) map over a 'cells' column. Kept as a
-    separate projection stage so the thrice-referenced 'cells' expression is
-    never inlined (duplicate keys take the LAST value — set mapKeyDedupPolicy
-    LAST_WIN before use, textract_processor.py:287 semantics)."""
-    return [
-        F.array_max(F.transform("cells", lambda x: x["r"])).alias("max_r"),
-        F.array_max(F.transform("cells", lambda x: x["c"])).alias("max_c"),
-        F.map_from_entries(
-            F.transform(
-                "cells",
-                lambda x: F.struct(
-                    F.concat_ws(":", x["r"], x["c"]).alias("k"),
-                    x["txt"].alias("v"),
-                ),
-            )
-        ).alias("m"),
-    ]
-
-
-def _dense_grid_col():
-    """Dense row-major grid with '' fill from (max_r, max_c, m) columns —
-    the reference's grid reconstruction (textract_processor.py:271-297).
-    Tables whose dense area exceeds GRID_AREA_MAX densify to an EMPTY grid
-    (dropped whole as hostile) — the when-guard is evaluated BEFORE the
-    flatten/sequence expression, so the multi-GB array is never built."""
-    area = (F.col("max_r") + 1).cast("bigint") * (F.col("max_c") + 1)
-    return F.when(
-        area > GRID_AREA_MAX, F.array().cast("array<string>")
-    ).otherwise(
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.col("max_r")),
-                lambda r: F.transform(
-                    F.sequence(F.lit(0), F.col("max_c")),
-                    lambda c: F.coalesce(
-                        F.try_element_at(F.col("m"), F.concat_ws(":", r, c)),
-                        F.lit(""),
-                    ),
-                ),
-            )
-        )
-    ).alias("grid")
-
-
-def _ws_norm(col):
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
-def _table_branch(spans: DataFrame) -> DataFrame:
-    """Serialized grids → dense row-major cells with (row_idx, col_idx).
-
-    Pure higher-order SQL functions, span-local (no shuffle). Used by
-    ``extract_frames``; ``extract_spans`` builds the same semantics as SQL
-    text over each document's span array."""
-    spans.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    parsed = spans.select(
-        "doc_id", "offset", _cells_col(F.col("text")).alias("cells")
-    ).filter(F.size("cells") > 0)
-    grid = parsed.select("doc_id", "offset", *_grid_extent_cols())
-    dense = grid.select("doc_id", "offset", "max_c", _dense_grid_col())
-    # posexplode_outer on purpose: plain posexplode makes Catalyst push its
-    # implicit `size(grid) > 0` predicate below the repartition Exchange with
-    # the WHOLE dense-grid expression inlined into the filter — the cell map
-    # is then rebuilt per grid cell per row (observed 20x slowdown). The
-    # outer variant generates no such predicate; null cells are filtered
-    # right after instead.
-    return dense.select(
-        "doc_id",
-        "offset",
-        "max_c",
-        F.posexplode_outer("grid").alias("sub_idx", "cell"),
-    ).filter(F.col("cell").isNotNull()).select(
-        "doc_id",
-        "offset",
-        F.col("sub_idx").cast("int").alias("sub_idx"),
-        F.floor(F.col("sub_idx") / (F.col("max_c") + 1))
-        .cast("int")
-        .alias("row_idx"),
-        (F.col("sub_idx") % (F.col("max_c") + 1)).cast("int").alias("col_idx"),
-        F.lit("table_cell").alias("kind"),
-        _ws_norm(F.col("cell")).alias("text"),
-        F.lit("").alias("media_ref"),
-    )
-
-
-def _kv_branch(spans: DataFrame) -> DataFrame:
-    parts = F.split(F.col("text"), US, 2)
-    return (
-        spans.select(
-            "doc_id",
-            "offset",
-            F.trim(F.get(parts, 0)).alias("k"),
-            F.trim(F.coalesce(F.get(parts, 1), F.lit(""))).alias("v"),
-        )
-        .filter(F.col("k") != "")
-        .select(
-            "doc_id",
-            "offset",
-            F.lit(0).cast("int").alias("sub_idx"),
-            F.lit("kv").alias("kind"),
-            F.concat_ws(": ", F.col("k"), F.col("v")).alias("text"),
-            F.lit("").alias("media_ref"),
-        )
-    )
-
-
-def _pdf_expanded(spans: DataFrame) -> DataFrame:
-    """Raw layout-kernel output (doc_id, offset, sub_idx, kind, text,
-    media_ref) — text lines UNFILTERED and UNNORMALIZED. Shared by the
-    extraction branch (which normalizes + filters) and the footnote frame
-    (which classifies the raw line, textract_processor.py:98-160 semantics)."""
-    return spans.select("doc_id", "offset", "text").mapInPandas(
-        pdf_layout_kernel, schema=KERNEL_OUT_SCHEMA
-    )
-
-
-def _pdf_filtered(expanded: DataFrame) -> DataFrame:
-    """The normalize/keep projection over raw kernel output."""
-    staged = expanded.select(
-        "doc_id",
-        "offset",
-        "sub_idx",
-        "kind",
-        "media_ref",
-        F.when(
-            F.col("kind") == "text", normalize_text_col(F.col("text"))
-        )
-        .otherwise(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-        .alias("text"),
-        (
-            (F.col("kind") != "text")
-            | (
-                ~is_boilerplate_col(F.col("text"))
-                & ~is_footnote_col(F.col("text"))
-            )
-        ).alias("keep"),
-    )
-    return staged.filter(
-        F.col("keep") & ((F.col("kind") != "text") | (F.col("text") != ""))
-    ).select("doc_id", "offset", "sub_idx", "kind", "text", "media_ref")
-
-
 # an output row; the tuple (offset, sub_idx, pos) leads, so sort_array
 # orders rows like the oracle's stable (offset, sub_idx) sort
 ROW_T = (
@@ -279,10 +92,14 @@ ROW_T = (
 
 _layout_udf = F.arrow_udf(layout_pages, PAGES_OUT_TYPE)
 
+# The per-kind rules, each written once as SQL text over a SQL expression.
+# ``extract_spans`` applies them inside lambdas over a document's span
+# array; the ``extract_frames`` branches apply them to one row per span.
+
 
 def _line_sql(v: str) -> str:
     """A raw content line → its normalized text, or NULL when it is
-    boilerplate or a footnote (the ``_text_branch`` rule, as SQL text)."""
+    boilerplate or a footnote."""
     return (
         f"IF({is_boilerplate_spark_sql(v)} OR {is_footnote_spark_sql(v)},"
         f" NULL, {normalize_text_spark_sql(v)})"
@@ -290,8 +107,148 @@ def _line_sql(v: str) -> str:
 
 
 def _ws_sql(v: str) -> str:
-    """``_ws_norm`` as SQL text: whitespace runs → one space, trimmed."""
+    """Whitespace runs → one space, trimmed."""
     return f"trim(regexp_replace({v}, {sql_lit(WS_RE)}, ' '))"
+
+
+def _pdf_line_sql(kind: str, text: str) -> str:
+    """A layout-kernel line → its output text: text lines through the
+    ``_line_sql`` rule, table cells whitespace-normalized."""
+    return f"IF({kind} = 'text', {_line_sql(text)}, {_ws_sql(text)})"
+
+
+def _keep_sql(kind: str, text: str) -> str:
+    """Whether an output row survives: dropped lines and empty kv keys
+    have a NULL text, and text rows normalized to '' are dropped."""
+    return f"{text} IS NOT NULL AND ({kind} != 'text' OR {text} != '')"
+
+
+def _kv_sql(text: str) -> str:
+    """'key\\x1fvalue' → 'key: value'; an empty key gives NULL."""
+    kv = f"split({text}, {sql_lit(US)}, 2)"
+    return (
+        f"concat(nullif(trim(get({kv}, 0)), ''), ': ',"
+        f" trim(coalesce(get({kv}, 1), '')))"
+    )
+
+
+def _cells_sql(text: str) -> str:
+    """A serialized 'r{r}c{c}:text' table payload → array of (r, c, txt)
+    cells; malformed or out-of-bound tags are dropped (null-safe under
+    ANSI)."""
+    tag = sql_lit(CELL_TAG_RE)
+    return (
+        f"filter(transform(split({text}, {sql_lit(US)}), t -> named_struct("
+        f"'r', try_cast(regexp_extract(t, {tag}, 1) AS INT),"
+        f" 'c', try_cast(regexp_extract(t, {tag}, 2) AS INT),"
+        f" 'txt', regexp_replace(t, {tag}, ''))),"
+        f" z -> z.r < {GRID_MAX} AND z.c < {GRID_MAX})"
+    )
+
+
+def _extent_sql(cells: str) -> dict[str, str]:
+    """Grid height ``h``, width ``w`` and the (r, c) → text map ``m`` of a
+    cells array. Evaluate them in a projection of their own, so the cells
+    are parsed once although three expressions read them. Duplicate (r, c)
+    cells take the LAST value under mapKeyDedupPolicy LAST_WIN, like the
+    reference's table_structure[row][col] assignment
+    (textract_processor.py:287)."""
+    return {
+        "h": f"array_max(transform({cells}, z -> z.r)) + 1",
+        "w": f"array_max(transform({cells}, z -> z.c)) + 1",
+        "m": (
+            f"map_from_entries(transform({cells}, z -> struct("
+            f"z.r * {GRID_MAX} + z.c, z.txt)))"
+        ),
+    }
+
+
+def _grid_sql(h: str, w: str, m: str) -> str:
+    """Dense row-major grid with '' fill (textract_processor.py:271-297).
+    A table whose area exceeds GRID_AREA_MAX is dropped whole as hostile
+    (NULL), and the guard runs before the sequence is built; a table with
+    no cells has a NULL extent and is NULL too."""
+    return (
+        f"IF({h} * {w} <= {GRID_AREA_MAX}, flatten(transform("
+        f"sequence(0, {h} - 1), r -> transform(sequence(0, {w} - 1),"
+        f" c -> coalesce(try_element_at({m}, r * {GRID_MAX} + c), '')))), NULL)"
+    )
+
+
+def _text_branch(spans: DataFrame) -> DataFrame:
+    """Content lines (kind='text' spans and raw layout-kernel lines) →
+    normalized text rows, boilerplate/footnote/empty lines dropped."""
+    return spans.selectExpr(
+        "doc_id", "offset", "sub_idx", "'text' AS kind",
+        f"{_line_sql('text')} AS text", "'' AS media_ref",
+    ).filter(_keep_sql("kind", "text"))
+
+
+def _table_branch(spans: DataFrame) -> DataFrame:
+    """Serialized grids → dense row-major cells with (row_idx, col_idx),
+    span-local (no shuffle)."""
+    spans.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    ext = _extent_sql("cells")
+    grid = (
+        spans.selectExpr("doc_id", "offset", f"{_cells_sql('text')} AS cells")
+        .selectExpr("doc_id", "offset", *(f"{v} AS {k}" for k, v in ext.items()))
+        .selectExpr("doc_id", "offset", "w", f"{_grid_sql('h', 'w', 'm')} AS grid")
+    )
+    # posexplode_outer on purpose: plain posexplode makes Catalyst push its
+    # implicit `size(grid) > 0` predicate below the repartition Exchange with
+    # the WHOLE dense-grid expression inlined into the filter — the cell map
+    # is then rebuilt per grid cell per row (observed 20x slowdown). The
+    # outer variant generates no such predicate; null cells are filtered
+    # right after instead.
+    return (
+        grid.selectExpr(
+            "doc_id", "offset", "w", "posexplode_outer(grid) AS (sub_idx, cell)"
+        )
+        .filter("cell IS NOT NULL")
+        .selectExpr(
+            "doc_id", "offset", "sub_idx",
+            "CAST(sub_idx div w AS INT) AS row_idx",
+            "CAST(sub_idx % w AS INT) AS col_idx",
+            "'table_cell' AS kind", f"{_ws_sql('cell')} AS text",
+            "'' AS media_ref",
+        )
+    )
+
+
+def _kv_branch(spans: DataFrame) -> DataFrame:
+    return spans.selectExpr(
+        "doc_id", "offset", "0 AS sub_idx", "'kv' AS kind",
+        f"{_kv_sql('text')} AS text", "'' AS media_ref",
+    ).filter("text IS NOT NULL")
+
+
+def _pdf_expanded(spans: DataFrame) -> DataFrame:
+    """Raw layout-kernel output (doc_id, offset int, sub_idx int, kind,
+    text, media_ref) — text lines UNFILTERED and UNNORMALIZED. Shared by the
+    extraction branch (which normalizes + filters) and the footnote frame
+    (which classifies the raw line, textract_processor.py:98-160 semantics).
+    One ``layout_pages`` call per pdf span."""
+    return (
+        spans.select(
+            "doc_id",
+            F.col("offset").cast("int").alias("offset"),
+            _layout_udf(F.array("text")).alias("pages"),
+        )
+        .selectExpr("doc_id", "offset", "posexplode_outer(pages[0]) AS (sub_idx, l)")
+        .filter("l IS NOT NULL")
+        .selectExpr(
+            "doc_id", "offset", "sub_idx", "l.kind AS kind", "l.text AS text",
+            "'' AS media_ref",
+        )
+    )
+
+
+def _pdf_filtered(expanded: DataFrame) -> DataFrame:
+    """The normalize/keep projection over raw kernel output."""
+    return expanded.selectExpr(
+        "doc_id", "offset", "sub_idx", "kind",
+        f"{_pdf_line_sql('kind', 'text')} AS text", "media_ref",
+    ).filter(_keep_sql("kind", "text"))
 
 
 def _rows_sql(kind: str, text: str, media: str = "''", over: str = "") -> str:
@@ -325,8 +282,7 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
     """
     from pdftableextractor_spark.plans.skew import salted_repartition
 
-    # duplicate (r,c) cells take the LAST value, like the reference's
-    # table_structure[row][col] assignment (textract_processor.py:287).
+    # duplicate (r,c) cells take the LAST value (_extent_sql).
     # NOTE: this mutates the SESSION conf (map-key policy is evaluated at
     # execution, so it cannot be scoped to this plan). build_session already
     # sets it; this covers foreign sessions. If your session needs EXCEPTION
@@ -335,26 +291,21 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
     docs = documents.select("doc_id", "spans")
     if salt:
         docs = salted_repartition(docs, "doc_id")
-    sep, tag = sql_lit(US), sql_lit(CELL_TAG_RE)
     span = (
         "'offset', x.offset, 'kind', x.kind, 'text', x.text,"
         " 'media_ref', x.media_ref"
     )
     # span structs with their array position; table payloads parsed into
-    # (r, c, txt) cells, malformed or out-of-bound tags dropped
+    # cells
     sp = docs.selectExpr(
         "doc_id",
         "transform(filter(spans, s -> s IS NOT NULL), (x, i) -> named_struct("
-        f"{span}, 'pos', i, 'cells', IF(x.kind = 'table', filter(transform("
-        f"split(x.text, {sep}), t -> named_struct("
-        f"'r', try_cast(regexp_extract(t, {tag}, 1) AS INT),"
-        f" 'c', try_cast(regexp_extract(t, {tag}, 2) AS INT),"
-        f" 'txt', regexp_replace(t, {tag}, ''))),"
-        f" z -> z.r < {GRID_MAX} AND z.c < {GRID_MAX}), NULL))) AS sp",
+        f"{span}, 'pos', i, 'cells',"
+        f" IF(x.kind = 'table', {_cells_sql('x.text')}, NULL))) AS sp",
     )
     # per document: one layout-kernel call on its pdf payloads. Per span:
-    # the grid extent and (r, c) → text map, in their own stage so the
-    # cells are parsed once although three expressions read them
+    # the grid extent and cell map, in their own stage (_extent_sql)
+    ext = ", ".join(f"'{k}', {v}" for k, v in _extent_sql("x.cells").items())
     staged = sp.select(
         "doc_id",
         _layout_udf(
@@ -364,45 +315,25 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
             )
         ).alias("pages"),
         F.expr(
-            f"transform(sp, x -> named_struct({span}, 'pos', x.pos,"
-            " 'h', array_max(transform(x.cells, z -> z.r)) + 1,"
-            " 'w', array_max(transform(x.cells, z -> z.c)) + 1,"
-            " 'm', map_from_entries(transform(x.cells, z -> struct("
-            f"z.r * {GRID_MAX} + z.c, z.txt)))))"
+            f"transform(sp, x -> named_struct({span}, 'pos', x.pos, {ext}))"
         ).alias("sp"),
     )
-    # dense row-major grid with '' fill (textract_processor.py:271-297);
-    # a table whose area exceeds GRID_AREA_MAX is dropped whole as hostile,
-    # and the guard runs before the sequence is built
-    grid = (
-        f"IF(x.h * x.w <= {GRID_AREA_MAX}, flatten(transform("
-        "sequence(0, x.h - 1), r -> transform(sequence(0, x.w - 1),"
-        f" c -> coalesce(try_element_at(x.m, r * {GRID_MAX} + c), '')))), NULL)"
-    )
-
-    # 'key: value'; an empty key makes the concat NULL, dropping the row
-    kv = f"split(x.text, {sep}, 2)"
-    kv_text = (
-        f"concat(nullif(trim(get({kv}, 0)), ''), ': ',"
-        f" trim(coalesce(get({kv}, 1), '')))"
-    )
-    pdf_text = f"IF(l.kind = 'text', {_line_sql('l.text')}, {_ws_sql('l.text')})"
+    grid = _grid_sql("x.h", "x.w", "x.m")
     branches = {
         "text": _rows_sql("'text'", _line_sql("x.text")),
         "media": _rows_sql("'media'", "''", "x.media_ref"),
-        "kv": _rows_sql("'kv'", kv_text),
+        "kv": _rows_sql("'kv'", _kv_sql("x.text")),
         "table": _rows_sql("'table_cell'", _ws_sql("v"), over=f"{grid}, (v, k)"),
-        "pdf": _rows_sql("l.kind", pdf_text, over="pages[i], (l, k)"),
+        "pdf": _rows_sql(
+            "l.kind", _pdf_line_sql("l.kind", "l.text"), over="pages[i], (l, k)"
+        ),
     }
     emits = " ".join(f"WHEN '{k}' THEN {v}" for k, v in branches.items())
-    # drop rows with a NULL text (dropped lines, empty kv keys) and text
-    # rows normalized to ''
     rows = staged.selectExpr(
         "doc_id",
         "sort_array(filter(flatten(transform(sp, (x, i) -> coalesce(CASE"
         f" x.kind {emits} END, CAST(array() AS array<{ROW_T}>)))),"
-        " e -> e.text IS NOT NULL AND"
-        " (e.kind != 'text' OR e.text != ''))) AS rows",
+        f" e -> {_keep_sql('e.kind', 'e.text')})) AS rows",
     )
     return (
         rows.selectExpr("doc_id", "posexplode_outer(rows) AS (`order`, e)")
@@ -493,11 +424,11 @@ def _frames_from(s: DataFrame, pdf_raw: DataFrame) -> dict[str, DataFrame]:
             (F.row_number().over(w) - 1).cast("int").alias("line_no"),
             F.trim("text").alias("content"),
         )
-        .filter(is_footnote_col(F.col("content")))
+        .filter(is_footnote_col("content"))
         .select(
             "doc_id",
             "line_no",
-            footnote_marker_col(F.col("content")).alias("marker"),
+            footnote_marker_col("content").alias("marker"),
             "content",
         )
     )

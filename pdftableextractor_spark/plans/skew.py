@@ -21,9 +21,10 @@ from pyspark.sql import DataFrame
 def salted_repartition(
     df: DataFrame, *cols: str, num_partitions: int | None = None
 ) -> DataFrame:
-    """Hash-repartition on ``cols`` (include a fine-grained column like
-    ``offset`` as the salt). ``num_partitions`` defaults to
-    spark.sql.shuffle.partitions."""
+    """Hash-repartition on ``cols`` into ``num_partitions`` partitions
+    (default spark.sql.shuffle.partitions). Rows with equal ``cols`` stay
+    together, so pick the coarsest key that must not be split (``doc_id``
+    for extraction)."""
     if num_partitions is None:
         num_partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions")

@@ -146,6 +146,45 @@ def test_footnote_frame_matches_oracle_on_fuzzed_docs(spark, docs):
         assert sorted(got.get(d["doc_id"], [])) == sorted(exp), d["doc_id"]
 
 
+@settings(max_examples=15, deadline=None)
+@given(docs=st.lists(documents(ties=False), min_size=1, max_size=4))
+def test_frames_match_extract_spans_on_fuzzed_docs(spark, docs):
+    """``extract_frames`` (one row per span) and ``extract_spans`` (one row
+    per document) give the same lines, kvs and table cells, in order.
+    Offsets stay unique, so both orders are (offset, sub-row). pdf cells
+    are only in ``extract_spans``, so cells are compared on pdf-free
+    documents."""
+    from pdftableextractor_spark.operators.extract import extract_frames
+
+    for i, d in enumerate(docs):
+        d["doc_id"] = f"fuzz-{i}"
+    sdf = spark.createDataFrame(
+        [(d["doc_id"], [tuple(s.values()) for s in d["spans"]]) for d in docs],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    spans = {}
+    for r in sorted(extract_spans(sdf).collect(), key=lambda r: r["order"]):
+        spans.setdefault((r["doc_id"], r["kind"]), []).append(r["text"])
+    frames = extract_frames(sdf)
+
+    def texts(name, *key):
+        got = {}
+        for r in sorted(frames[name].collect(), key=lambda r: [r[k] for k in key]):
+            got.setdefault(r["doc_id"], []).append(r["text"])
+        return got
+
+    lines = texts("lines", "line_no")
+    kvs = texts("kvs", "offset")
+    cells = texts("cells", "offset", "row_idx", "col_idx")
+    for d in docs:
+        i = d["doc_id"]
+        assert lines.get(i, []) == spans.get((i, "text"), []), i
+        assert kvs.get(i, []) == spans.get((i, "kv"), []), i
+        if all(s["kind"] != "pdf" for s in d["spans"]):
+            assert cells.get(i, []) == spans.get((i, "table_cell"), []), i
+
+
 @settings(max_examples=12, deadline=None)
 @given(
     edges=st.lists(

