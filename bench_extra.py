@@ -3,12 +3,13 @@
 NOT part of the frozen measurement contract (bench.py is the driver's
 artifact). This file exists so the optimization round can:
 
-  * dump `.explain("formatted")` for every bench query  → plans/r07/
+  * dump `.explain("formatted")` for every bench query  → _artifacts/plans/
+    (git-ignored; dumps are regenerated, not committed)
   * time any subset of queries in isolation with the noop sink, with
     host-calibration brackets, without paying the full 27-query sweep
 
 Usage:
-    python bench_extra.py --plans [--out plans/r07 --suffix _before]
+    python bench_extra.py --plans [--out _artifacts/plans --suffix _before]
     python bench_extra.py --time extract_synth dup_clusters --runs 3
     python bench_extra.py --time-all --runs 2
 """
@@ -180,7 +181,7 @@ def build_dfs(spark, sf_dir: str, synth_path: str) -> dict:
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--plans", action="store_true")
-    p.add_argument("--out", default="plans/r07")
+    p.add_argument("--out", default="_artifacts/plans")
     p.add_argument("--suffix", default="_before")
     p.add_argument("--time", nargs="*", default=None)
     p.add_argument("--time-all", action="store_true")

@@ -29,6 +29,11 @@ import argparse
 import json
 import time
 
+# the five sources of the row contract, in reference order
+SOURCES = (
+    "table", "key_value", "text_fact", "document_footnotes", "document_text",
+)
+
 
 def main() -> None:
     p = argparse.ArgumentParser()
@@ -37,25 +42,13 @@ def main() -> None:
     p.add_argument("--gen-docs", type=int, default=None)
     p.add_argument("--master", default=None)
     p.add_argument("--seed", type=int, default=42)
-    p.add_argument(
-        "--stage",
-        action="store_true",
-        help="materialize extraction frames to parquet once before "
-        "structuring (wins when the upstream is expensive: pdf-kernel-heavy "
-        "corpora or remote scans; measured SLOWER on this synthetic mix — "
-        "63.9s vs 36.2s at 2000 docs — because the relational branches are "
-        "cheap codegen and the parquet round-trip costs more than the "
-        "recompute)",
-    )
     args = p.parse_args()
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from pdftableextractor_spark.corpus import write_corpus_parquet
-    from pdftableextractor_spark.operators.extract import (
-        extract_frames,
-        stage_frames,
-    )
+    from pdftableextractor_spark.operators.extract import extract_frames
     from pdftableextractor_spark.operators.structure import (
         unified_data_points,
     )
@@ -70,14 +63,7 @@ def main() -> None:
 
     t0 = time.time()
     docs = read_path(spark, inp)
-    # --stage extracts once and reads the four frames back from parquet;
-    # the default lazy path re-runs scan+explode+kernel per frame consumer
-    # (6x fan-out) — cheaper HERE because those stages are codegen-fast,
-    # but the wrong trade when the upstream scan/kernel dominates
-    if args.stage:
-        frames = stage_frames(docs, args.output.rstrip("/") + ".__stage__")
-    else:
-        frames = extract_frames(docs)
+    frames = extract_frames(docs)
     # commentary salting pays only on heavy-tailed corpora (quadratic
     # per-doc pair work concentrates in a few giant docs); detect the tail
     # from span counts — one narrow scan — and leave it off for uniform
@@ -87,21 +73,25 @@ def main() -> None:
         F.expr("percentile_approx(n, 0.5)").alias("md"),
     ).collect()[0]
     salt = 8 if stats["mx"] > 20 * max(stats["md"] or 1, 1) else 1
-    unified = unified_data_points(frames, commentary_salt=salt)
+    # the summary counts ride the write (one Observation): no job re-reads
+    # the output
+    obs = Observation("structure")
+    unified = unified_data_points(frames, commentary_salt=salt).observe(
+        obs,
+        F.count(F.lit(1)).alias("points"),
+        F.count("score").alias("with_commentary"),
+        *[F.count(F.when(F.col("source") == s, 1)).alias(s) for s in SOURCES],
+    )
     write_table(unified, args.output, mode="overwrite")
     wall = time.time() - t0
 
-    pts = read_path(spark, args.output)
-    by_src = {
-        r["source"]: r["n"]
-        for r in pts.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
+    m = obs.get
     print(
         json.dumps(
             {
-                "points": pts.count(),
-                "by_source": by_src,
-                "with_commentary": pts.filter(F.col("score").isNotNull()).count(),
+                "points": m["points"],
+                "by_source": {s: m[s] for s in SOURCES},
+                "with_commentary": m["with_commentary"],
                 "sec": round(wall, 3),
             }
         )

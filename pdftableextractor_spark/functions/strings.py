@@ -123,10 +123,6 @@ def is_footnote_col(col: str) -> Column:
     return F.expr(is_footnote_spark_sql(col))
 
 
-def footnote_marker_col(col: str) -> Column:
-    return F.expr(footnote_marker_spark_sql(col))
-
-
 # inline footnote references (textract_processor.py:149)
 FOOTNOTE_REF_RE = r"[\(\[]\d+[\)\]]|\*+(\s|$)"
 

@@ -11,7 +11,7 @@ Replaces the reference's Textract block parsing (textract_processor.py:
 
 ``layout_page`` handles one serialized page. ``layout_pages`` is the
 scalar Arrow UDF the extraction operators call: once per document on all
-its pages in ``extract_spans``, once per pdf span in ``extract_frames``.
+its pages, in ``extract_spans`` and ``extract_frames``.
 ``pdf_layout_kernel`` is a ``mapInPandas``-shaped wrapper over exploded
 ``kind='pdf'`` span rows (one row = one page); no operator calls it, and
 perfbench's single-threaded kernel probe still does.

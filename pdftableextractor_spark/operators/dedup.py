@@ -668,32 +668,6 @@ def ngram_decontaminate(
     return docs.join(contaminated, "doc_id", "left_anti")
 
 
-def cosine_col(a, b):
-    """Cosine similarity of two array<float/double> columns, JVM-side.
-
-    NOTE: higher-order-function lambdas are interpreted per element — fine
-    for one-off small arrays, wrong for embedding-scale scans. Hot paths
-    (similarity search, embedding_near_dups) use the Arrow-batched numpy
-    kernels in kernels/vectors.py instead; this stays for expression
-    contexts where a Python UDF can't go."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    nb = F.sqrt(
-        F.aggregate(
-            b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    return dot / (na * nb)
-
-
 def embedding_near_dups(
     embeddings: DataFrame,
     block_col: str = "label",

@@ -66,11 +66,6 @@ def write_csv(df: DataFrame, path: str, map_col: str | None = "data") -> None:
     )
 
 
-def write_json(df: DataFrame, path: str, map_col: str | None = "data") -> None:
-    out = key_union_pivot(df, map_col) if map_col else df
-    out.write.mode("overwrite").json(path)
-
-
 # --- P9: recursive nested flatten (static/script.js:668-783) ----------------
 
 

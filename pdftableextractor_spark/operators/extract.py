@@ -25,21 +25,21 @@ Scale notes (100 TB design):
 - The only Python is the Arrow-batched pdf layout kernel, evaluated in the
   scan stage. The other kinds are built-in SQL expressions.
 
-``extract_frames`` / ``stage_frames`` build the structuring-stage frames
-from exploded spans (one row per span): the same per-kind SQL rules and
-the same layout kernel, one row at a time, numbered by windows.
+``extract_frames`` builds the structuring-stage frames (lines, cells,
+kvs, footnotes) from the same per-document stages (``_staged``): one
+sorted array of frame rows per document, pinned once, and four
+projections of it — no window and no exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdftableextractor_spark.functions.strings import (
     WS_RE,
-    footnote_marker_col,
+    footnote_marker_spark_sql,
     is_boilerplate_spark_sql,
-    is_footnote_col,
     is_footnote_spark_sql,
     normalize_text_spark_sql,
     sql_lit,
@@ -90,11 +90,17 @@ ROW_T = (
     "media_ref:string>"
 )
 
+# a frame row (extract_frames): a tag, the output text and the raw line
+FRAME_T = (
+    "struct<offset:int,sub_idx:int,pos:int,tag:string,text:string,raw:string,"
+    "row_idx:int,col_idx:int>"
+)
+
 _layout_udf = F.arrow_udf(layout_pages, PAGES_OUT_TYPE)
 
 # The per-kind rules, each written once as SQL text over a SQL expression.
-# ``extract_spans`` applies them inside lambdas over a document's span
-# array; the ``extract_frames`` branches apply them to one row per span.
+# ``extract_spans`` and ``extract_frames`` apply them inside lambdas over a
+# document's span array.
 
 
 def _line_sql(v: str) -> str:
@@ -175,92 +181,70 @@ def _grid_sql(h: str, w: str, m: str) -> str:
     )
 
 
-def _text_branch(spans: DataFrame) -> DataFrame:
-    """Content lines (kind='text' spans and raw layout-kernel lines) →
-    normalized text rows, boilerplate/footnote/empty lines dropped."""
-    return spans.selectExpr(
-        "doc_id", "offset", "sub_idx", "'text' AS kind",
-        f"{_line_sql('text')} AS text", "'' AS media_ref",
-    ).filter(_keep_sql("kind", "text"))
-
-
-def _table_branch(spans: DataFrame) -> DataFrame:
-    """Serialized grids → dense row-major cells with (row_idx, col_idx),
-    span-local (no shuffle)."""
-    spans.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    ext = _extent_sql("cells")
-    grid = (
-        spans.selectExpr("doc_id", "offset", f"{_cells_sql('text')} AS cells")
-        .selectExpr("doc_id", "offset", *(f"{v} AS {k}" for k, v in ext.items()))
-        .selectExpr("doc_id", "offset", "w", f"{_grid_sql('h', 'w', 'm')} AS grid")
-    )
-    # posexplode_outer on purpose: plain posexplode makes Catalyst push its
-    # implicit `size(grid) > 0` predicate below the repartition Exchange with
-    # the WHOLE dense-grid expression inlined into the filter — the cell map
-    # is then rebuilt per grid cell per row (observed 20x slowdown). The
-    # outer variant generates no such predicate; null cells are filtered
-    # right after instead.
-    return (
-        grid.selectExpr(
-            "doc_id", "offset", "w", "posexplode_outer(grid) AS (sub_idx, cell)"
-        )
-        .filter("cell IS NOT NULL")
-        .selectExpr(
-            "doc_id", "offset", "sub_idx",
-            "CAST(sub_idx div w AS INT) AS row_idx",
-            "CAST(sub_idx % w AS INT) AS col_idx",
-            "'table_cell' AS kind", f"{_ws_sql('cell')} AS text",
-            "'' AS media_ref",
-        )
-    )
-
-
-def _kv_branch(spans: DataFrame) -> DataFrame:
-    return spans.selectExpr(
-        "doc_id", "offset", "0 AS sub_idx", "'kv' AS kind",
-        f"{_kv_sql('text')} AS text", "'' AS media_ref",
-    ).filter("text IS NOT NULL")
-
-
-def _pdf_expanded(spans: DataFrame) -> DataFrame:
-    """Raw layout-kernel output (doc_id, offset int, sub_idx int, kind,
-    text, media_ref) — text lines UNFILTERED and UNNORMALIZED. Shared by the
-    extraction branch (which normalizes + filters) and the footnote frame
-    (which classifies the raw line, textract_processor.py:98-160 semantics).
-    One ``layout_pages`` call per pdf span."""
-    return (
-        spans.select(
-            "doc_id",
-            F.col("offset").cast("int").alias("offset"),
-            _layout_udf(F.array("text")).alias("pages"),
-        )
-        .selectExpr("doc_id", "offset", "posexplode_outer(pages[0]) AS (sub_idx, l)")
-        .filter("l IS NOT NULL")
-        .selectExpr(
-            "doc_id", "offset", "sub_idx", "l.kind AS kind", "l.text AS text",
-            "'' AS media_ref",
-        )
-    )
-
-
-def _pdf_filtered(expanded: DataFrame) -> DataFrame:
-    """The normalize/keep projection over raw kernel output."""
-    return expanded.selectExpr(
-        "doc_id", "offset", "sub_idx", "kind",
-        f"{_pdf_line_sql('kind', 'text')} AS text", "media_ref",
-    ).filter(_keep_sql("kind", "text"))
-
-
-def _rows_sql(kind: str, text: str, media: str = "''", over: str = "") -> str:
-    """The output rows (``ROW_T``) of span ``x``: one row with sub_idx 0,
-    or, with ``over`` = '<array>, (<elem>, k)', one row per element with
-    sub_idx k. ``kind``/``text``/``media`` are SQL expressions."""
+def _rows_sql(over: str = "", **fields: str) -> str:
+    """The rows of span ``x``: one row with sub_idx 0, or, with ``over`` =
+    '<array>, (<elem>, k)', one row per element with sub_idx k. A row is
+    (offset, sub_idx, pos) and then ``fields``, name → SQL expression."""
     sub = "k" if over else "0"
+    cols = "".join(f", '{k}', {v}" for k, v in fields.items())
     row = (
-        f"named_struct('offset', x.offset, 'sub_idx', {sub}, 'pos', x.pos,"
-        f" 'kind', {kind}, 'text', {text}, 'media_ref', {media})"
+        f"named_struct('offset', x.offset, 'sub_idx', {sub}, 'pos', x.pos{cols})"
     )
     return f"transform({over} -> {row})" if over else f"array({row})"
+
+
+def _doc_rows_sql(branches: dict[str, str], row_t: str, keep: str) -> str:
+    """A document's rows: ``branches`` maps a span kind to the rows of span
+    ``x`` (other kinds emit none). Rows failing ``keep`` (over ``e``) are
+    dropped; the rest are sorted by (offset, sub_idx, array position)."""
+    emits = " ".join(f"WHEN '{k}' THEN {v}" for k, v in branches.items())
+    return (
+        "sort_array(filter(flatten(transform(sp, (x, i) -> coalesce(CASE"
+        f" x.kind {emits} END, CAST(array() AS array<{row_t}>)))),"
+        f" e -> {keep}))"
+    )
+
+
+def _staged(docs: DataFrame) -> DataFrame:
+    """docs(doc_id, spans) → (doc_id, pages, sp), the stages both
+    extractions share. ``sp`` holds each non-null span (offset, kind, text,
+    media_ref) with its array position ``pos`` and, for a table, its grid
+    extent ``h``/``w`` and cell map ``m`` (_extent_sql). ``pages`` is the
+    layout-kernel output of the document's pdf spans, by array position:
+    one Arrow UDF call per document."""
+    # duplicate (r,c) cells take the LAST value (_extent_sql).
+    # NOTE: this mutates the SESSION conf (map-key policy is evaluated at
+    # execution, so it cannot be scoped to this plan). build_session already
+    # sets it; this covers foreign sessions. If your session needs EXCEPTION
+    # semantics elsewhere, run extraction in its own session.
+    docs.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    # the offset is an int (types.py) even when the input's is not
+    span = (
+        "'offset', CAST(x.offset AS INT), 'kind', x.kind, 'text', x.text,"
+        " 'media_ref', x.media_ref"
+    )
+    # span structs with their array position; table payloads parsed into
+    # cells
+    sp = docs.selectExpr(
+        "doc_id",
+        "transform(filter(spans, s -> s IS NOT NULL), (x, i) -> named_struct("
+        f"{span}, 'pos', i, 'cells',"
+        f" IF(x.kind = 'table', {_cells_sql('x.text')}, NULL))) AS sp",
+    )
+    # the grid extent and cell map in their own stage (_extent_sql)
+    ext = ", ".join(f"'{k}', {v}" for k, v in _extent_sql("x.cells").items())
+    return sp.select(
+        "doc_id",
+        _layout_udf(
+            F.expr(
+                "IF(exists(sp, x -> x.kind = 'pdf'),"
+                " transform(sp, x -> IF(x.kind = 'pdf', x.text, NULL)), NULL)"
+            )
+        ).alias("pages"),
+        F.expr(
+            f"transform(sp, x -> named_struct({span}, 'pos', x.pos, {ext}))"
+        ).alias("sp"),
+    )
 
 
 def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
@@ -282,58 +266,26 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
     """
     from pdftableextractor_spark.plans.skew import salted_repartition
 
-    # duplicate (r,c) cells take the LAST value (_extent_sql).
-    # NOTE: this mutates the SESSION conf (map-key policy is evaluated at
-    # execution, so it cannot be scoped to this plan). build_session already
-    # sets it; this covers foreign sessions. If your session needs EXCEPTION
-    # semantics elsewhere, run extraction in its own session.
-    documents.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     docs = documents.select("doc_id", "spans")
     if salt:
         docs = salted_repartition(docs, "doc_id")
-    span = (
-        "'offset', x.offset, 'kind', x.kind, 'text', x.text,"
-        " 'media_ref', x.media_ref"
-    )
-    # span structs with their array position; table payloads parsed into
-    # cells
-    sp = docs.selectExpr(
-        "doc_id",
-        "transform(filter(spans, s -> s IS NOT NULL), (x, i) -> named_struct("
-        f"{span}, 'pos', i, 'cells',"
-        f" IF(x.kind = 'table', {_cells_sql('x.text')}, NULL))) AS sp",
-    )
-    # per document: one layout-kernel call on its pdf payloads. Per span:
-    # the grid extent and cell map, in their own stage (_extent_sql)
-    ext = ", ".join(f"'{k}', {v}" for k, v in _extent_sql("x.cells").items())
-    staged = sp.select(
-        "doc_id",
-        _layout_udf(
-            F.expr(
-                "IF(exists(sp, x -> x.kind = 'pdf'),"
-                " transform(sp, x -> IF(x.kind = 'pdf', x.text, NULL)), NULL)"
-            )
-        ).alias("pages"),
-        F.expr(
-            f"transform(sp, x -> named_struct({span}, 'pos', x.pos, {ext}))"
-        ).alias("sp"),
-    )
     grid = _grid_sql("x.h", "x.w", "x.m")
+    no_media = {"media_ref": "''"}
     branches = {
-        "text": _rows_sql("'text'", _line_sql("x.text")),
-        "media": _rows_sql("'media'", "''", "x.media_ref"),
-        "kv": _rows_sql("'kv'", _kv_sql("x.text")),
-        "table": _rows_sql("'table_cell'", _ws_sql("v"), over=f"{grid}, (v, k)"),
+        "text": _rows_sql(kind="'text'", text=_line_sql("x.text"), **no_media),
+        "media": _rows_sql(kind="'media'", text="''", media_ref="x.media_ref"),
+        "kv": _rows_sql(kind="'kv'", text=_kv_sql("x.text"), **no_media),
+        "table": _rows_sql(
+            f"{grid}, (v, k)", kind="'table_cell'", text=_ws_sql("v"), **no_media
+        ),
         "pdf": _rows_sql(
-            "l.kind", _pdf_line_sql("l.kind", "l.text"), over="pages[i], (l, k)"
+            "pages[i], (l, k)", kind="l.kind",
+            text=_pdf_line_sql("l.kind", "l.text"), **no_media,
         ),
     }
-    emits = " ".join(f"WHEN '{k}' THEN {v}" for k, v in branches.items())
-    rows = staged.selectExpr(
+    rows = _staged(docs).selectExpr(
         "doc_id",
-        "sort_array(filter(flatten(transform(sp, (x, i) -> coalesce(CASE"
-        f" x.kind {emits} END, CAST(array() AS array<{ROW_T}>)))),"
-        f" e -> {_keep_sql('e.kind', 'e.text')})) AS rows",
+        f"{_doc_rows_sql(branches, ROW_T, _keep_sql('e.kind', 'e.text'))} AS rows",
     )
     return (
         rows.selectExpr("doc_id", "posexplode_outer(rows) AS (`order`, e)")
@@ -346,7 +298,7 @@ def extract_spans(documents: DataFrame, salt: bool = False) -> DataFrame:
 
 
 def extract_frames(documents: DataFrame) -> dict[str, DataFrame]:
-    """Structuring-stage inputs: the extraction's intermediate frames.
+    """Structuring-stage inputs, built from the ``extract_spans`` stages.
 
     Returns
       lines: (doc_id, line_no, text)   — normalized content lines in reading
@@ -363,108 +315,67 @@ def extract_frames(documents: DataFrame) -> dict[str, DataFrame]:
              so line_no matches the reference's footnote `line_number` even
              though those lines never reach the filtered `lines` frame.
 
-    Materialization (round-7): consumers reference the frames SIX times in
-    one plan (cells, kvs, lines ×3, footnotes) and exchange reuse never
-    fires across the differently-pruned subtrees — the unified-points plan
-    ran the scan+explode 7× and the pdf layout kernel 7× (36 parquet scans,
-    plans/r07/unified_points_before.txt). The exploded spans and the raw
-    kernel output are localCheckpointed here (the containment_pairs
-    pattern: blocks released by the ContextCleaner, not pinned; see the
-    FAULT-TOLERANCE TRADE note there), so extraction runs once per call no
-    matter how many frames the consumer wires together. ``stage_frames``
-    remains the cross-job parquet variant.
+    Each document's frame rows (``FRAME_T``) are one array, sorted like
+    ``extract_spans`` by (offset, sub_idx, array position). A row is
+    tagged 'line' (a text span or a pdf text line), 'cell' (a table-span
+    cell) or 'kv', and carries its output text and its raw line; pdf
+    cells are dropped before the pin, since no frame reads them. The four
+    frames are projections of that array: no window, no exchange, and the
+    layout kernel runs once per document. ``offset`` is an int.
+
+    EAGER: the call runs one Spark job, which pins the frame-row arrays
+    with ``localCheckpoint``. Consumers reference the frames up to six
+    times in one plan (cells, kvs, lines ×3, footnotes), and exchange reuse
+    does not fire across the differently-pruned subtrees, so without the
+    pin every reference would re-run the scan and the layout kernel. The
+    trade: the pinned blocks live only on the executors (released by the
+    ContextCleaner) and the lineage is cut, so losing an executor fails the
+    queries that read them instead of recomputing its blocks.
     """
-    s = explode_spans(documents).localCheckpoint(eager=True)
-    pdf_raw = _pdf_expanded(
-        s.filter(F.col("kind") == "pdf")
-    ).localCheckpoint(eager=True)
-    return _frames_from(s, pdf_raw)
-
-
-def _frames_from(s: DataFrame, pdf_raw: DataFrame) -> dict[str, DataFrame]:
-    """Frames from an exploded-span frame + raw pdf-kernel output — split
-    out so ``stage_frames`` can persist the two expensive inputs and build
-    every frame from ONE extraction pass."""
-    zero = F.lit(0).cast("int").alias("sub_idx")
-    text = _text_branch(
-        s.filter(F.col("kind") == "text").select("doc_id", "offset", zero, "text")
+    cell = {"row_idx": "NULL", "col_idx": "NULL"}
+    grid = _grid_sql("x.h", "x.w", "x.m")
+    branches = {
+        "text": _rows_sql(
+            tag="'line'", text=_line_sql("x.text"), raw="x.text", **cell
+        ),
+        "kv": _rows_sql(tag="'kv'", text=_kv_sql("x.text"), raw="NULL", **cell),
+        "table": _rows_sql(
+            f"{grid}, (v, k)", tag="'cell'", text=_ws_sql("v"), raw="NULL",
+            row_idx="CAST(k div x.w AS INT)", col_idx="k % x.w",
+        ),
+        "pdf": _rows_sql(
+            "pages[i], (l, k)", tag="IF(l.kind = 'text', 'line', 'pdf_cell')",
+            text=_pdf_line_sql("l.kind", "l.text"), raw="l.text", **cell,
+        ),
+    }
+    rows_sql = _doc_rows_sql(branches, FRAME_T, "e.tag != 'pdf_cell'")
+    rows = (
+        _staged(documents.select("doc_id", "spans"))
+        .selectExpr("doc_id", f"{rows_sql} AS rows")
+        .localCheckpoint(eager=True)
     )
-    pdf_text = _pdf_filtered(pdf_raw).filter(F.col("kind") == "text")
-    w = Window.partitionBy("doc_id").orderBy("offset", "sub_idx")
-    lines = (
-        text.unionByName(pdf_text)
-        .select(
+    lines = rows.selectExpr(
+        "doc_id",
+        "posexplode(filter(rows, e -> e.tag = 'line' AND e.text != ''))"
+        " AS (line_no, e)",
+    ).selectExpr("doc_id", "line_no", "e.text AS text")
+    footnotes = (
+        rows.selectExpr(
             "doc_id",
-            (F.row_number().over(w) - 1).cast("int").alias("line_no"),
-            "text",
+            "posexplode(filter(rows, e -> e.tag = 'line')) AS (line_no, e)",
+        )
+        .selectExpr("doc_id", "line_no", "trim(e.raw) AS content")
+        .filter(is_footnote_spark_sql("content"))
+        .selectExpr(
+            "doc_id", "line_no",
+            f"{footnote_marker_spark_sql('content')} AS marker", "content",
         )
     )
-    cells = _table_branch(s.filter(F.col("kind") == "table")).select(
+    flat = rows.selectExpr("doc_id", "inline(rows)")
+    cells = flat.filter("tag = 'cell'").select(
         "doc_id", "offset", "row_idx", "col_idx", "text"
     )
-    kvs = _kv_branch(s.filter(F.col("kind") == "kv")).select(
+    kvs = flat.filter("tag = 'kv' AND text IS NOT NULL").select(
         "doc_id", "offset", "text"
     )
-
-    # raw candidate lines = text spans + pdf-kernel text lines, PRE-filter:
-    # footnotes are dropped by _text_branch, so classification must happen on
-    # this frame. Numbering covers every raw line (blank or not) to mirror
-    # the reference's enumerate index.
-    raw = (
-        s.filter(F.col("kind") == "text")
-        .select("doc_id", "offset", zero, "text")
-        .unionByName(
-            pdf_raw.filter(F.col("kind") == "text")
-            .select("doc_id", "offset", "sub_idx", "text")
-        )
-    )
-    footnotes = (
-        raw.select(
-            "doc_id",
-            (F.row_number().over(w) - 1).cast("int").alias("line_no"),
-            F.trim("text").alias("content"),
-        )
-        .filter(is_footnote_col("content"))
-        .select(
-            "doc_id",
-            "line_no",
-            footnote_marker_col("content").alias("marker"),
-            "content",
-        )
-    )
     return {"lines": lines, "cells": cells, "kvs": kvs, "footnotes": footnotes}
-
-
-def stage_frames(documents: DataFrame, stage_dir: str) -> dict[str, DataFrame]:
-    """Extraction frames materialized ONCE to ``stage_dir`` parquet.
-
-    ``extract_frames`` returns lazy lineages — a consumer like the unified
-    structuring job references the frames six times (cells, kvs, lines ×3,
-    footnotes), and each action re-runs the scan + explode + pdf kernel. At
-    the 100 TB design point that is 6× the most expensive stage. Staging
-    runs extraction once (the exploded spans and raw kernel output are
-    persisted spill-to-disk for the duration of the four frame writes,
-    then released) and returns parquet-backed frames; downstream shuffles
-    then start from columnar storage, and the staged frames double as
-    resume points.
-    """
-    from pyspark import StorageLevel
-
-    s = explode_spans(documents).persist(StorageLevel.MEMORY_AND_DISK)
-    pdf_raw = _pdf_expanded(s.filter(F.col("kind") == "pdf")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    frames = _frames_from(s, pdf_raw)
-    spark = documents.sparkSession
-    from pdftableextractor_spark.sources.tables import read_path, write_table
-
-    out: dict[str, DataFrame] = {}
-    try:
-        for name, df in frames.items():
-            path = f"{stage_dir.rstrip('/')}/{name}"
-            write_table(df, path, mode="overwrite")
-            out[name] = read_path(spark, path)
-    finally:
-        s.unpersist()
-        pdf_raw.unpersist()
-    return out

@@ -66,15 +66,3 @@ def read_documents(
 ) -> DataFrame:
     """The interleaved documents corpus (doc_id, spans)."""
     return read_path(spark, path, fmt)
-
-
-def read_pdf_binaries(spark: SparkSession, path: str) -> DataFrame:
-    """Raw PDF ingestion (S1/S2 analog): binaryFile source → (path, content).
-    Downstream, a parser kernel turns content bytes into word-box pages; in
-    this sandbox the corpus generator plays that role."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.pdf")
-        .load(path)
-        .select("path", "length", "content")
-    )

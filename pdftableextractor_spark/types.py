@@ -8,12 +8,11 @@ The input shape is mandated by BASELINE.json:input_hint — an Iceberg
                                  media_ref string, offset int>>)
 
 INPUT CONTRACT: ``spans.offset`` is the span's position within its
-document. ``extract_spans`` orders output rows by (offset, sub_idx, array
-position), exactly like the pure-Python oracle's stable sort, so duplicate
-offsets are still ordered deterministically. ``extract_frames`` numbers
-lines with windows over (offset, sub_idx), which leave duplicate offsets
-unordered there. Producers should assign offsets 0..n-1 (or any
-per-doc-unique ints); both corpus generators do.
+document. ``extract_spans`` and ``extract_frames`` order rows by (offset,
+sub_idx, array position), exactly like the pure-Python oracle's stable
+sort, so duplicate offsets are still ordered deterministically. Producers
+should assign offsets 0..n-1 (or any per-doc-unique ints); both corpus
+generators do.
 
 ``spans.kind`` values in the synthetic corpus (FIXTURES.md §1):
   'text'   — a content line (may carry superscripts / footnote markers)
@@ -43,7 +42,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -71,18 +69,6 @@ DOCUMENTS_SCHEMA = StructType(
     ]
 )
 
-# intermediate: one row per exploded span with an expansion sub-index
-EXPLODED_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("offset", IntegerType()),
-        StructField("sub_idx", IntegerType()),
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-    ]
-)
-
 SPANS_OUT_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
@@ -90,21 +76,6 @@ SPANS_OUT_SCHEMA = StructType(
         StructField("kind", StringType()),
         StructField("text", StringType()),
         StructField("media_ref", StringType()),
-    ]
-)
-
-# word-box frame used inside the layout kernel (FIXTURES.md §3); exists as a
-# Spark schema only for unit-testing the kernel — in the pipeline these boxes
-# live purely inside pandas batches.
-WORD_BOX_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("page", IntegerType()),
-        StructField("word", StringType()),
-        StructField("top", FloatType()),
-        StructField("left", FloatType()),
-        StructField("width", FloatType()),
-        StructField("height", FloatType()),
     ]
 )
 
@@ -122,5 +93,3 @@ METRICS_SCHEMA = StructType(
         StructField("wall_ms", LongType()),
     ]
 )
-
-OUTPUT_KINDS = ("text", "media", "table_cell", "kv")

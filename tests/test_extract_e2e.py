@@ -198,20 +198,3 @@ def test_hostile_grid_area_is_bounded(spark):
     # the hostile table contributed NOTHING; only the text span survives
     assert got == [(0, "text", "still here.")]
 
-
-def test_stage_frames_equals_lazy_frames(spark, tmp_path):
-    """stage_frames materializes extraction once; every frame must be
-    byte-identical to the lazy extract_frames lineage."""
-    from pdftableextractor_spark.corpus import gen_documents
-    from pdftableextractor_spark.operators.extract import (
-        extract_frames,
-        stage_frames,
-    )
-
-    sdf = spark.createDataFrame(gen_documents(25, seed=7))
-    lazy = extract_frames(sdf)
-    staged = stage_frames(sdf, str(tmp_path / "stage"))
-    for name in ("lines", "cells", "kvs", "footnotes"):
-        a = sorted(tuple(r) for r in lazy[name].collect())
-        b = sorted(tuple(r) for r in staged[name].collect())
-        assert a == b, name

@@ -133,6 +133,27 @@ def test_extract_construction_starts_no_job(spark, tmp_path):
         assert jobs == 0, f"salt={salt}: {jobs} jobs"
 
 
+def test_extract_frames_pins_once(spark, tmp_path):
+    """extract_frames over parquet starts the jobs of exactly one pin, and
+    every frame is a projection of it: one pinned scan (Scan ExistingRDD),
+    no window, no exchange and no Python node."""
+    from pdftableextractor_spark import corpus
+    from pdftableextractor_spark.operators.extract import extract_frames
+
+    p = str(tmp_path / "c.parquet")
+    corpus.write_corpus_parquet(p, 5, seed=3)
+    docs = spark.read.parquet(p)
+    _, pin_jobs = _jobs_started(spark, lambda: docs.localCheckpoint(eager=True))
+    frames, jobs = _jobs_started(spark, lambda: extract_frames(docs))
+    assert pin_jobs >= 1 and jobs == pin_jobs, (jobs, pin_jobs)
+    for name, df in frames.items():
+        phys = _plan(df).split("== Physical Plan ==")[1]
+        assert phys.count("Scan ExistingRDD") == 1, (name, phys)
+        for node in ("Window", "Exchange", "ArrowEvalPython", "MapInPandas",
+                     "BatchEvalPython"):
+            assert node not in phys, (name, node, phys)
+
+
 def test_documents_filter_pushdown(spark):
     plan = _plan(em.queries()["q02_substantial_filter"](spark, SF))
     scan = [l for l in plan.split("\n") if "FileScan parquet" in l][-1]
