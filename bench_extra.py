@@ -8,7 +8,12 @@ artifact). This file exists so the optimization round can:
   * time any subset of queries in isolation with the noop sink, with
     host-calibration brackets, without paying the full 27-query sweep
 
+  * run every driver query against its DuckDB oracle (the driver's
+    correctness gate) on the sf0.01 tables beside the bench tables, or on
+    the tables directory given; exits 1 on any mismatch
+
 Usage:
+    python bench_extra.py --oracle [SF_DIR]
     python bench_extra.py --plans [--out _artifacts/plans --suffix _before]
     python bench_extra.py --time extract_synth dup_clusters --runs 3
     python bench_extra.py --time-all --runs 2
@@ -19,6 +24,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import sys
 import time
 
 from bench import _materialize, _synth_corpus_path, host_calibration
@@ -178,6 +184,30 @@ def build_dfs(spark, sf_dir: str, synth_path: str) -> dict:
     }
 
 
+def run_oracle(sf_dir: str, cpus: str) -> int:
+    """Check every queries() entry against its oracle_sql() twin on
+    ``sf_dir``; prints one PASS/FAIL line per query and a total, and
+    returns the number of failures."""
+    import __spark_entry__ as entry
+    from pdftableextractor_spark import oracle_gate
+    from pdftableextractor_spark.session import build_session
+
+    spark = build_session(app_name="bench-extra-oracle", master=f"local[{cpus}]")
+    con = oracle_gate.duckdb_views(sf_dir)
+    oracles, queries = entry.oracle_sql(), entry.queries()
+    bad = 0
+    for name in sorted(oracles):
+        try:
+            n = oracle_gate.check(queries[name](spark, sf_dir), con, oracles[name])
+            print(f"PASS {name} ({n} rows)", flush=True)
+        except Exception as e:  # noqa: BLE001
+            bad += 1
+            print(f"FAIL {name}: {str(e)[:200]}", flush=True)
+    print(f"done: {len(oracles) - bad}/{len(oracles)} green")
+    spark.stop()
+    return bad
+
+
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--plans", action="store_true")
@@ -188,10 +218,17 @@ def main() -> None:
     p.add_argument("--runs", type=int, default=2)
     p.add_argument("--only", nargs="*", default=None,
                    help="restrict --plans to these query names")
+    p.add_argument("--oracle", nargs="?", const="sf0.01", default=None,
+                   metavar="SF_DIR",
+                   help="check every query against its oracle on these "
+                   "tables (a name resolves beside the bench tables)")
     args = p.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if args.oracle:
+        oracle_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), args.oracle)
+        sys.exit(1 if run_oracle(oracle_dir, cpus) else 0)
     sf_name = sf_dir.rstrip("/").split("/")[-1]
     n_synth = {"sf0.001": 100, "sf0.01": 400, "sf0.1": 5000}.get(sf_name, 5000)
     synth_path = _synth_corpus_path(n_synth, seed=42)

@@ -32,7 +32,10 @@ PAREN_NUM_RE = r"\(\d+\)"
 BRACKET_NUM_RE = r"\[\d+\]"
 STARS_RE = r"\*+"
 WS_RE = r"\s+"
-STANDALONE_NUM_RE = r"^\d+$"
+# the anchors below end in \z, not $: Java's $ also matches before a final
+# line terminator (U+0085, U+2028, U+2029), which the oracle's fullmatch
+# and DuckDB's RE2 $ do not
+STANDALONE_NUM_RE = r"^\d+\z"
 
 
 def sql_lit(s: str) -> str:
@@ -140,7 +143,7 @@ def has_footnote_refs_col(col: str) -> Column:
 BOILER_PIPE_MIN = 2
 BOILER_NAV_RE = (
     r"(?i)^(?:home|about|contact|privacy policy|terms of service"
-    r"|skip to content)$"
+    r"|skip to content)\z"
 )
 
 

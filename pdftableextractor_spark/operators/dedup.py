@@ -22,6 +22,17 @@ Operators:
                          persisted signature store (write/read_signature_store)
   embedding_near_dups    cosine near-dup pairs within a blocking key
 
+The near-dup operators share one shape — signature → bucket self-join →
+verify → pairs — and two private skeletons hold it:
+  _self_join             pairs a < b of slim (id, bucket keys, carried
+                         columns) rows sharing a bucket; both sides read
+                         ONE exchange, so the signature lineage runs once
+                         without a pin
+  _verified              computes a pair's measure once, then filters on
+                         it above a one-element explode
+The key-set containment paths (video frames, binary chunks) and
+containment_pairs share one size-attach / integer-threshold / round6 tail.
+
 Scale notes (100 TB): every signature is computed scan-side with no shuffle;
 the only shuffles are the band-bucket join (keys are uniform md5 values →
 no planted skew; AQE skew-join as backstop) and the candidate-pair spread
@@ -39,6 +50,7 @@ from pdftableextractor_spark.types import US
 NUM_HASHES = 64
 BAND_ROWS = 4  # 16 bands x 4 rows
 SIMHASH_BITS = 60  # 15 hex chars of md5 → avoids sign issues in bigint
+SIMHASH_BLOCK_BITS = 12  # simhash_near_dups' blocking prefix
 
 # pair-space salt for the quadratic BLOCK-pair join (ngram_jaccard_pairs):
 # one side keyed by pmod(xxhash64(id), salt), the other replicated over the
@@ -113,6 +125,133 @@ def shingles_from_tokens_col(w, n: int):
 def word_hash_col(col):
     """Portable 60-bit word hash: conv(substr(md5(w),1,15), 16, 10)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
+
+
+# --- the near-dup skeleton ---------------------------------------------------
+
+
+def _self_join(
+    rows: DataFrame, id_col: str, keys: list[str], a: str, b: str
+) -> DataFrame:
+    """Pairs of ``rows`` that agree on every column of ``keys``, once per
+    shared bucket: (a, b, then c_a, c_b for every other column c of
+    ``rows``) with a < b. ``rows`` should be slim: (id, bucket keys,
+    carried columns).
+
+    Both sides read ONE exchange of ``rows``, so the signature lineage
+    under it (a decode kernel, a signature aggregation) runs once with no
+    pin. The shuffle_merge hint is what makes sure of it: a small input
+    would otherwise plan a static broadcast join, whose build and stream
+    sides share nothing. The join keeps its own hash exchanges, which
+    AQE's skew-join split acts on."""
+    carry = [c for c in rows.columns if c != id_col and c not in keys]
+    l, r = rows.alias("__l"), rows.alias("__r")
+    return (
+        l.hint("shuffle_merge")
+        .join(r, [F.col(f"__l.{k}") == F.col(f"__r.{k}") for k in keys])
+        .filter(F.col(f"__l.{id_col}") < F.col(f"__r.{id_col}"))
+        .select(
+            F.col(f"__l.{id_col}").alias(a),
+            F.col(f"__r.{id_col}").alias(b),
+            *[
+                F.col(f"__{side}.{c}").alias(f"{c}_{t}")
+                for c in carry
+                for side, t in (("l", "a"), ("r", "b"))
+            ],
+        )
+    )
+
+
+def _verified(pairs: DataFrame, keep: list[str], measure, name: str, cond):
+    """``keep`` columns of ``pairs`` plus ``measure`` as ``name``, filtered
+    by ``cond``. The measure is computed once per pair: the one-element
+    explode keeps the filter above it, while a filter on a projected
+    measure is pushed into the join condition (or below a Python node)
+    and computes it again."""
+    return pairs.select(
+        *keep, F.explode(F.array(measure)).alias(name)
+    ).filter(cond)
+
+
+def _jaccard_verified(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard >= threshold) of (doc_a, doc_b, sh_a, sh_b)
+    shingle-set pairs; one array_intersect per pair."""
+    counts = pairs.select(
+        "doc_a",
+        "doc_b",
+        F.size(F.array_intersect("sh_a", "sh_b")).alias("__i"),
+        (F.size("sh_a") + F.size("sh_b")).alias("__n"),
+    )
+    jaccard = F.round(F.col("__i") / (F.col("__n") - F.col("__i")), 6)
+    return _verified(
+        counts, ["doc_a", "doc_b"], jaccard, "jaccard",
+        F.col("jaccard") >= threshold,
+    )
+
+
+def _contained(
+    pairs: DataFrame, sizes: DataFrame, name: str, measure, t_micro: int
+) -> DataFrame:
+    """The containment tail: (a, b, name, size_a, size_b, containment) of
+    the (a, b, ...) ``pairs`` whose shared count ``name`` is at least
+    ``t_micro``/10^6 of the smaller size. ``sizes`` is (id, size, ...);
+    each side's columns attach suffixed _a/_b, and ``measure`` computes
+    the shared count from them (once, through ``_verified``). The
+    threshold is pure integer (name·10^6 >= t_micro·min(size)) and the
+    emitted containment uses ``exact_ratio_round6``, so the DuckDB
+    oracles match bit for bit."""
+    a, b = pairs.columns[:2]
+
+    def side(t, id_name):
+        return sizes.toDF(id_name, *[f"{c}_{t}" for c in sizes.columns[1:]])
+
+    sized = pairs.join(side("a", a), a).join(side("b", b), b)
+    smaller = F.least("size_a", "size_b")
+    cond = F.col(name) * F.lit(1_000_000) >= F.lit(t_micro) * smaller
+    out = _verified(sized, [a, b, "size_a", "size_b"], measure, name, cond)
+    return out.select(
+        a,
+        b,
+        F.col(name).cast("bigint").alias(name),
+        F.col("size_a").cast("bigint").alias("size_a"),
+        F.col("size_b").cast("bigint").alias("size_b"),
+        exact_ratio_round6(F.col(name), smaller).alias("containment"),
+    )
+
+
+def _key_set_containment(
+    sigs: DataFrame,
+    key: str,
+    threshold: float,
+    max_df: int,
+    match: list[str] | None = None,
+) -> DataFrame:
+    """Containment pairs over key SETS: (asset_a, asset_b, shared, size_a,
+    size_b, containment) of the (asset_id, ``key``[, ``match``]) rows
+    ``sigs``, where shared counts the keys two assets have in common and
+    containment = shared / min(size). The path of video_near_dups (frame
+    hashes, ``match=["real"]``) and binary_near_dups (chunk hashes).
+
+    A key held by more than ``max_df`` distinct assets is dropped from
+    every set before the sizes are counted; that bounds the self-join's
+    per-key fan-out. Candidates form only through the self-join on
+    ``key`` (and ``match``). ``sigs`` is read by the df census and by the
+    capped join, so callers pass it pinned."""
+    t_micro = int(round(float(threshold) * 1_000_000))
+    keys = [key] + (match or [])
+    dfreq = sigs.groupBy(key).agg(F.count_distinct("asset_id").alias("__df"))
+    capped = (
+        sigs.join(dfreq, key)
+        .filter(F.col("__df") <= max_df)
+        .select("asset_id", *keys)
+    )
+    sizes = capped.groupBy("asset_id").agg(F.count(F.lit(1)).alias("size"))
+    shared = (
+        _self_join(capped, "asset_id", keys, "asset_a", "asset_b")
+        .groupBy("asset_a", "asset_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return _contained(shared, sizes, "shared", F.col("shared"), t_micro)
 
 
 # ---------------------------------------------------------------------------
@@ -230,28 +369,17 @@ def minhash_near_dups(
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs: band-bucket join → exact Jaccard
     verify → (doc_a, doc_b, jaccard). Only band-collision candidates are
-    verified; the band join is the lone shuffle."""
-    # both band self-join sides read the signature lineage — the corpus
-    # signature pass would otherwise run twice (round-7; sigs are
-    # num_hashes ints per doc, the cheapest thing in the pipeline to hold)
-    sigs = minhash_signatures(docs, text_col, n, num_hashes).localCheckpoint(
-        eager=True
+    verified; the band join is the lone shuffle, and both of its sides
+    read one exchange of the band rows, so the signature pass runs once."""
+    bands = band_rows_from_sigs(
+        minhash_signatures(docs, text_col, n, num_hashes), num_hashes, band_rows
     )
-    bands = band_rows_from_sigs(sigs, num_hashes, band_rows)
     # NOTE(round-7): a salted band join (the ngram_jaccard_pairs fix) was
     # measured here and REVERTED — unlike the block-pair join, band rows
     # are slim and the verify dominates, so the salt's extra exchange +
     # probe-side replication lost 50% (interleaved A/B 2.35 vs 3.6 s)
-    a = bands.select(
-        F.col("doc_id").alias("doc_a"), "band_idx", "band_hash"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("doc_b"), "band_idx", "band_hash"
-    )
-    cand = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
+    cand = _self_join(
+        bands, "doc_id", ["band_idx", "band_hash"], "doc_a", "doc_b"
     )
     return verify_jaccard_pairs(cand, docs, text_col, n, threshold)
 
@@ -323,20 +451,8 @@ def verify_jaccard_pairs(
         .distinct()
         .join(sh.toDF("doc_a", "sh_a"), "doc_a")
         .join(sh.toDF("doc_b", "sh_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("__i"),
-            (F.size("sh_a") + F.size("sh_b")).alias("__n"),
-        )
     )
-    # the one-element explode keeps the threshold filter above it: pushed
-    # into the join condition, the filter would run array_intersect twice
-    # more per pair
-    jaccard = F.round(F.col("__i") / (F.col("__n") - F.col("__i")), 6)
-    return pairs.select(
-        "doc_a", "doc_b", F.explode(F.array(jaccard)).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    return _jaccard_verified(pairs, threshold)
 
 
 def simhash_signatures(
@@ -376,32 +492,21 @@ def simhash_near_dups(
     docs: DataFrame,
     text_col: str = "text",
     max_hamming: int = 8,
-    block_bits: int = 12,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming. Blocking on the
-    top ``block_bits`` bits bounds the join (at 100 TB the block prefix is
-    the shuffle key; rotate prefixes for full recall — here one rotation).
-
-    EAGER: the call runs the signature scan (tokenize + 60 votes) once and
-    pins the (doc_id, simhash) rows with ``localCheckpoint``, as both join
-    sides read them. The pinned blocks live only on executors, lineage
-    cut: losing an executor fails the query instead of recomputing it."""
-    sigs = simhash_signatures(docs, text_col).localCheckpoint(eager=True)
-    blocked = sigs.withColumn(
-        "block", F.shiftright(F.col("simhash"), SIMHASH_BITS - block_bits)
-    )
-    a = blocked.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"), "block"
-    )
-    b = blocked.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"), "block"
+    top ``SIMHASH_BLOCK_BITS`` bits bounds the join (at 100 TB the block
+    prefix is the shuffle key; rotate prefixes for full recall — here one
+    rotation). Both join sides read one exchange of the (doc_id, simhash,
+    block) rows, so the signature scan (tokenize + 60 votes) runs once."""
+    blocked = simhash_signatures(docs, text_col).withColumn(
+        "block",
+        F.shiftright(F.col("simhash"), SIMHASH_BITS - SIMHASH_BLOCK_BITS),
     )
     return (
-        a.join(b, "block")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _self_join(blocked, "doc_id", ["block"], "doc_a", "doc_b")
         .withColumn(
             "hamming",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
@@ -476,17 +581,14 @@ def hamming_near_dup_pairs(
     pseudo-hash can never claim NEAR-similarity, and real/pseudo never
     mix (they live in different hash spaces).
 
-    EAGER: the call materializes ``sigs`` once (for the perceptual callers,
-    decoding every media payload) and pins it with ``localCheckpoint``, as
-    both join sides read it; an already-materialized ``sigs`` is copied
-    again. The pinned blocks live only on executors, lineage cut: losing
-    an executor fails the query instead of recomputing it."""
+    Both join sides read one exchange of the band rows, so ``sigs`` (for
+    the perceptual callers, the decode of every media payload) is computed
+    once, with no pin."""
     if bits % n_bands:
         raise ValueError(f"n_bands={n_bands} must divide bits={bits}")
     band_bits = bits // n_bands
     cols = [id_col, hash_col] + ([real_col] if real_col else [])
-    # slim: one (id, bigint hash[, bool]) row per item
-    sigs = sigs.localCheckpoint(eager=True)
+    # slim: one (id, bigint hash[, bool], band) row per item and band
     bands = sigs.select(
         *cols,
         F.explode(
@@ -503,40 +605,15 @@ def hamming_near_dup_pairs(
             )
         ).alias("bb"),
     ).select(*cols, F.col("bb.t").alias("t"), F.col("bb.band").alias("band"))
-    a = bands.select(
-        F.col(id_col).alias(a_col),
-        F.col(hash_col).alias("__ha"),
-        *([F.col(real_col).alias("__ra")] if real_col else []),
-        "t",
-        "band",
-    )
-    b = bands.select(
-        F.col(id_col).alias(b_col),
-        F.col(hash_col).alias("__hb"),
-        *([F.col(real_col).alias("__rb")] if real_col else []),
-        "t",
-        "band",
-    )
-    keep = [a_col, b_col, "__ha", "__hb"] + (
-        ["__ra", "__rb"] if real_col else []
-    )
-    cand = (
-        a.join(b, ["t", "band"])
-        .filter(F.col(a_col) < F.col(b_col))
-        .select(*keep)
-        .distinct()  # a pair may collide in several bands — verify once
-    )
+    # a pair may collide in several bands — verify once
+    cand = _self_join(bands, id_col, ["t", "band"], a_col, b_col).distinct()
     out = cand.withColumn(
-        "hamming", F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb")))
+        "hamming",
+        F.bit_count(F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))),
     ).filter(F.col("hamming") <= max_hamming)
     if real_col:
-        out = out.filter(
-            (F.col("__ra") & F.col("__rb"))
-            | (
-                (F.col("hamming") == 0)
-                & (F.col("__ra") == F.col("__rb"))
-            )
-        )
+        ra, rb = F.col(f"{real_col}_a"), F.col(f"{real_col}_b")
+        out = out.filter((ra & rb) | ((F.col("hamming") == 0) & (ra == rb)))
     return out.select(
         a_col, b_col, F.col("hamming").cast("int").alias("hamming")
     )
@@ -577,7 +654,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 1,
     threshold: float = 0.5,
-    salt: int = _PAIR_SALT,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard within a blocking key (the baseline the
     sketches approximate). Quadratic only within blocks.
@@ -590,12 +666,13 @@ def ngram_jaccard_pairs(
       * deterministic pair-space salting — side A keyed by
         pmod(xxhash64(doc_id), salt), side B replicated over the salt range
         (each unordered pair meets exactly once), so a block's pair work
-        spreads over ``salt`` tasks;
+        spreads over ``_PAIR_SALT`` tasks;
       * an explicit ``repartition(shuffle.partitions, block, __s)`` on side
         A — AQE never coalesces a user-specified repartition, so task count
         follows the session's shuffle-partition sizing (scale-adaptive:
         4×cores locally, the job conf on a cluster) instead of the byte
-        estimate that is wrong by the quadratic factor."""
+        estimate that is wrong by the quadratic factor.
+    The Jaccard of a pair is computed once, above the join."""
     npart = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sh = docs.select(
         F.col("doc_id"),
@@ -604,22 +681,14 @@ def ngram_jaccard_pairs(
     ).filter(F.size("sh") > 0)
     a = sh.select(
         F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"), "block",
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt)).alias("__s"),
+        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(_PAIR_SALT)).alias("__s"),
     ).repartition(npart, "block", "__s")
     b = sh.select(
         F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"), "block",
-        F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("__s"),
+        F.explode(F.sequence(F.lit(0), F.lit(_PAIR_SALT - 1))).alias("__s"),
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        a.join(b, ["block", "__s"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    pairs = a.join(b, ["block", "__s"]).filter(F.col("doc_a") < F.col("doc_b"))
+    return _jaccard_verified(pairs, threshold)
 
 
 def ngram_decontaminate(
@@ -676,28 +745,18 @@ def embedding_near_dups(
     """Embedding-cosine near-duplicate pairs within a blocking key (cluster
     id / LSH bucket at scale): (vec_a, vec_b, cos). The pair verify runs in
     the Arrow-batched pairwise kernel — one einsum per batch, not per-row
-    interpreted HOF math."""
+    interpreted HOF math — once per pair."""
     from pdftableextractor_spark.kernels.vectors import pairwise_cosine_udf
 
     e = embeddings.select(
         "vec_id", F.col(block_col).alias("block"), "embedding"
     )
-    a = e.select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a"), "block"
+    pairs = _self_join(e, "vec_id", ["block"], "vec_a", "vec_b")
+    cos = F.round(
+        pairwise_cosine_udf()(F.col("embedding_a"), F.col("embedding_b")), 6
     )
-    b = e.select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b"), "block"
-    )
-    pcos = pairwise_cosine_udf()
-    return (
-        a.join(b, "block")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(pcos(F.col("emb_a"), F.col("emb_b")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
+    return _verified(
+        pairs, ["vec_a", "vec_b"], cos, "cos", F.col("cos") >= threshold
     )
 
 
@@ -1154,40 +1213,11 @@ def containment_pairs(
     # row — true wherever the verify path was already viable.
     arr = sh.groupBy("doc_id").agg(
         F.collect_list("s").alias("arr")
-    ).join(sz, "doc_id").localCheckpoint(eager=True)
-    out = (
-        cand.join(
-            arr.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("arr").alias("arr_a"),
-                F.col("sz").alias("size_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            arr.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("arr").alias("arr_b"),
-                F.col("sz").alias("size_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
-        .filter(
-            F.col("inter") * F.lit(1_000_000)
-            >= F.lit(t_micro) * F.least("size_a", "size_b")
-        )
-    )
-    return out.select(
-        "doc_a",
-        "doc_b",
-        F.col("inter").cast("bigint").alias("inter"),
-        F.col("size_a").cast("bigint").alias("size_a"),
-        F.col("size_b").cast("bigint").alias("size_b"),
-        exact_ratio_round6(
-            F.col("inter"), F.least("size_a", "size_b")
-        ).alias("containment"),
-    )
+    ).join(sz, "doc_id").select(
+        "doc_id", F.col("sz").alias("size"), "arr"
+    ).localCheckpoint(eager=True)
+    inter = F.size(F.array_intersect("arr_a", "arr_b"))
+    return _contained(cand, arr, "inter", inter, t_micro)
 
 
 def exact_ratio_round6(numer, denom):
@@ -1195,7 +1225,7 @@ def exact_ratio_round6(numer, denom):
     q61/q63 decimal(38,0) pattern: double round(x, 6) disagrees between
     Spark and DuckDB on real ratios like 323/640, so the rounding is
     (2a·10^6 + d) div (2d), matching DuckDB HUGEINT HALF_UP bit-for-bit.
-    Shared by containment_pairs and the video frame-containment path."""
+    Shared by every containment path (``_contained``)."""
     d = denom.cast("decimal(38,0)")
     x6 = numer.cast("decimal(38,0)") * F.lit(2_000_000) + d
     c6 = (x6 - F.pmod(x6, F.lit(2) * d)) / (F.lit(2) * d)

@@ -1341,10 +1341,13 @@ def video_frame_hashes(
     )
 
 
+# STOP-FRAME cap of video_near_dups: frame hashes held by more videos drop
+MAX_FRAME_DF = 1000
+
+
 def video_near_dups(
     assets: DataFrame,
     threshold: float = 0.8,
-    max_frame_df: int = 1000,
     hash_every_ms: int | None = None,
     max_frames: int | None = None,
 ) -> DataFrame:
@@ -1358,26 +1361,26 @@ def video_near_dups(
     argument applied to frames).
 
     STOP-FRAME rule (the CCNet line-frequency idea applied to frames):
-    a frame hash occurring in more than ``max_frame_df`` videos is
+    a frame hash occurring in more than ``MAX_FRAME_DF`` videos is
     excluded from EVERY signature set before sizes are counted — solid
     black/white frames, fades, and test cards hash to a handful of
     values (a uniform frame dhashes to the constant 0), and without the
     cap (a) the equi-join fans out quadratically through those hot keys
     and (b) a one-frame solid-color video reaches containment 1.0
     against every video containing any uniform frame. With the cap the
-    join's per-key fan-out is bounded by max_frame_df and "shared only
+    join's per-key fan-out is bounded by MAX_FRAME_DF and "shared only
     stop-frames" pairs disappear. A video whose every frame is a
     stop-frame drops out of dedup entirely (no signature — it passes
     through whatever keep-list consumes the pairs); byte-identical
     undecodable payloads still pair exactly through their single pseudo
-    -hash row unless more than max_frame_df copies exist.
+    -hash row unless more than MAX_FRAME_DF copies exist.
 
-    Shape: one decode per payload in the Arrow kernel; a frame-hash
-    document-frequency aggregate; candidates form ONLY through the
-    (df-capped) equi-join on fhash; the threshold filter is pure-integer
-    and the emitted containment uses the shared exact-int rounding
-    (``dedup.exact_ratio_round6``). Pseudo-hash rows never join real
-    frame hashes (the real flag must match).
+    Shape: one decode per payload in the Arrow kernel, whose (asset_id,
+    fhash, real) rows are pinned (EAGER: the call runs the kernel once);
+    then the shared key-set containment path (``dedup._key_set_containment``):
+    a frame-hash document-frequency cap, candidates ONLY through the
+    equi-join on (fhash, real), a pure-integer threshold and exact-int
+    rounding. Pseudo-hash rows never join real frame hashes.
 
     SAMPLING KNOBS (``hash_every_ms``, ``max_frames``): real video runs
     hours at 24-60 fps — hashing every frame makes the signature kernel
@@ -1392,70 +1395,13 @@ def video_near_dups(
     frames hash alike, so scene overlap still intersects); hash every
     frame (the default) when exact clip detection matters more than
     kernel cost."""
-    from pdftableextractor_spark.operators.dedup import exact_ratio_round6
+    from pdftableextractor_spark.operators.dedup import _key_set_containment
 
-    t_micro = int(round(float(threshold) * 1_000_000))
     raw = video_frame_hashes(
         assets, hash_every_ms=hash_every_ms, max_frames=max_frames
-    )
-    dfreq = raw.groupBy("fhash").agg(
-        F.count_distinct("asset_id").alias("__df")
-    )
-    sigs = (
-        raw.join(dfreq, "fhash")
-        .filter(F.col("__df") <= max_frame_df)
-        .select("asset_id", "fhash", "real")
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-        # dedup.containment_pairs (shared by every localCheckpoint here)
-        .localCheckpoint(eager=True)
-    )
-    sizes = sigs.groupBy("asset_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sigs.select(
-        F.col("asset_id").alias("asset_a"), "fhash",
-        F.col("real").alias("real_a"),
-    )
-    b = sigs.select(
-        F.col("asset_id").alias("asset_b"), "fhash",
-        F.col("real").alias("real_b"),
-    )
-    shared = (
-        a.join(b, "fhash")
-        .filter(
-            (F.col("asset_a") < F.col("asset_b"))
-            & (F.col("real_a") == F.col("real_b"))
-        )
-        .groupBy("asset_a", "asset_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    out = (
-        shared.join(
-            sizes.select(
-                F.col("asset_id").alias("asset_a"),
-                F.col("sz").alias("size_a"),
-            ),
-            "asset_a",
-        )
-        .join(
-            sizes.select(
-                F.col("asset_id").alias("asset_b"),
-                F.col("sz").alias("size_b"),
-            ),
-            "asset_b",
-        )
-        .filter(
-            F.col("shared") * F.lit(1_000_000)
-            >= F.lit(t_micro) * F.least("size_a", "size_b")
-        )
-    )
-    return out.select(
-        "asset_a",
-        "asset_b",
-        F.col("shared").cast("bigint").alias("shared"),
-        F.col("size_a").cast("bigint").alias("size_a"),
-        F.col("size_b").cast("bigint").alias("size_b"),
-        exact_ratio_round6(
-            F.col("shared"), F.least("size_a", "size_b")
-        ).alias("containment"),
+    ).localCheckpoint(eager=True)
+    return _key_set_containment(
+        raw, "fhash", threshold, MAX_FRAME_DF, match=["real"]
     )
 
 
@@ -1613,14 +1559,16 @@ def binary_near_dups(
     stop-frame rule, one modality over).
 
     Shape at 100 TB: the chunk kernel is O(bytes) vectorized numpy per
-    payload; candidates form ONLY through the df-capped equi-join on
-    chash (never all-pairs); the threshold filter is pure-integer with
-    the shared exact-int rounding. Thresholds: 0 < threshold <= 1."""
-    from pdftableextractor_spark.operators.dedup import exact_ratio_round6
+    payload, and its distinct (asset_id, chash) rows are pinned (EAGER:
+    the call runs the kernel once); candidates form ONLY through the
+    df-capped equi-join on chash (never all-pairs) of the shared key-set
+    containment path (``dedup._key_set_containment``); the threshold
+    filter is pure-integer with the shared exact-int rounding.
+    Thresholds: 0 < threshold <= 1."""
+    from pdftableextractor_spark.operators.dedup import _key_set_containment
 
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    t_micro = int(round(float(threshold) * 1_000_000))
     sigs = (
         cdc_chunk_hashes(
             assets, avg_bits=avg_bits, min_size=min_size, max_size=max_size
@@ -1632,53 +1580,4 @@ def binary_near_dups(
         # the production avg_bits, the cheapest frame here to hold)
         .localCheckpoint(eager=True)
     )
-    dfreq = sigs.groupBy("chash").agg(
-        F.count(F.lit(1)).alias("__df")
-    )
-    sigs = (
-        sigs.join(dfreq, "chash")
-        .filter(F.col("__df") <= max_chunk_df)
-        .select("asset_id", "chash")
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-        # dedup.containment_pairs (shared by every localCheckpoint here)
-        .localCheckpoint(eager=True)
-    )
-    sizes = sigs.groupBy("asset_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sigs.select(F.col("asset_id").alias("asset_a"), "chash")
-    b = sigs.select(F.col("asset_id").alias("asset_b"), "chash")
-    shared = (
-        a.join(b, "chash")
-        .filter(F.col("asset_a") < F.col("asset_b"))
-        .groupBy("asset_a", "asset_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    out = (
-        shared.join(
-            sizes.select(
-                F.col("asset_id").alias("asset_a"),
-                F.col("sz").alias("size_a"),
-            ),
-            "asset_a",
-        )
-        .join(
-            sizes.select(
-                F.col("asset_id").alias("asset_b"),
-                F.col("sz").alias("size_b"),
-            ),
-            "asset_b",
-        )
-        .filter(
-            F.col("shared") * F.lit(1_000_000)
-            >= F.lit(t_micro) * F.least("size_a", "size_b")
-        )
-    )
-    return out.select(
-        "asset_a",
-        "asset_b",
-        F.col("shared").cast("bigint").alias("shared"),
-        F.col("size_a").cast("bigint").alias("size_a"),
-        F.col("size_b").cast("bigint").alias("size_b"),
-        exact_ratio_round6(
-            F.col("shared"), F.least("size_a", "size_b")
-        ).alias("containment"),
-    )
+    return _key_set_containment(sigs, "chash", threshold, max_chunk_df)

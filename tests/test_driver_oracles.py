@@ -4,53 +4,17 @@ and order-insensitive values (the driver does the same at sf0.01)."""
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from pdftableextractor_spark import oracle_gate
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="module")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float):
-                if math.isnan(v):
-                    v = "nan"
-                else:
-                    v = f"{v:.9g}"
-            elif isinstance(v, bool):
-                v = str(v)
-            elif v is None:
-                v = "NULL"
-            else:
-                v = str(v)
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort()
-    return out
+    return oracle_gate.duckdb_views(SF_DIR)
 
 
 ORACLES = entrymod.oracle_sql()
@@ -64,23 +28,7 @@ def test_all_oracle_keys_have_queries():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, ddb, name):
-    sdf = QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
-
-    res = ddb.execute(ORACLES[name])
-    dcols = [c[0] for c in res.description]
-    drows = res.fetchall()
-
-    assert sorted(scols) == sorted(dcols), f"{name}: column names differ"
-    assert len(srows) == len(drows), (
-        f"{name}: rowcount spark={len(srows)} duckdb={len(drows)}"
-    )
-    a = _canon(srows, scols)
-    b = _canon(drows, dcols)
-    if a != b:
-        diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-        raise AssertionError(f"{name}: value mismatch, first diffs: {diff}")
+    oracle_gate.check(QUERIES[name](spark, SF_DIR), ddb, ORACLES[name])
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

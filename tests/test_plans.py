@@ -359,3 +359,116 @@ def test_spread_underparallel_scan_runs_no_job(spark):
     )
     assert jobs == 0
     assert "REPARTITION_BY_NUM" in _plan(out)
+
+
+def _final_plan(df) -> str:
+    """The executed (AQE final) physical plan of ``df``, after running it."""
+    assert df.collect(), "empty results let AQE drop the plan"
+    return df._jdf.queryExecution().executedPlan().toString().split(
+        "== Initial Plan =="
+    )[0]
+
+
+def _near_dup_inputs(spark, tmp_path):
+    """Small parquet inputs: documents, embeddings and an assets table
+    whose byte-identical payloads pair in every media kind."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
+        "doc_id", F.col("doc_id").cast("string")
+    )
+    p = str(tmp_path / "assets.parquet")
+    spark.createDataFrame(
+        [
+            (f"{kind}-{i}", kind, bytearray(payload))
+            for kind in ("image", "audio", "video")
+            for i, payload in enumerate((b"same bytes", b"same bytes", b"other"))
+        ],
+        "asset_id string, kind string, payload binary",
+    ).write.parquet(p)
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    return docs, spark.read.parquet(p), emb
+
+
+def test_near_dup_signatures_run_once_without_pins(spark, tmp_path):
+    """Building each bucket-join near-dup operator starts no job, and on a
+    small parquet input both join sides read one exchange of the bucket
+    rows (a ReusedExchange), so the signature stage runs once: one
+    decode kernel for image/audio, one cosine kernel for embeddings."""
+    from pdftableextractor_spark.operators.dedup import (
+        embedding_near_dups,
+        minhash_near_dups,
+        simhash_near_dups,
+        simhash_near_dups_multiband,
+    )
+    from pdftableextractor_spark.operators.multimodal import (
+        audio_near_dups,
+        image_near_dups,
+    )
+
+    docs, assets, emb = _near_dup_inputs(spark, tmp_path)
+    cases = {
+        # name: (build, bucket key, kernel node that must appear once)
+        "minhash": (lambda: minhash_near_dups(docs, n=3), "band_idx", None),
+        "simhash": (lambda: simhash_near_dups(docs), "block", None),
+        "multiband": (lambda: simhash_near_dups_multiband(docs), "t", None),
+        "image": (lambda: image_near_dups(assets), "t", "MapInPandas"),
+        "audio": (lambda: audio_near_dups(assets), "t", "MapInPandas"),
+        "embedding": (
+            lambda: embedding_near_dups(emb, threshold=0.35), "block",
+            "ArrowEvalPython",
+        ),
+    }
+    for name, (build, key, kernel) in cases.items():
+        df, jobs = _jobs_started(spark, build)
+        assert jobs == 0, (name, jobs)
+        phys = _final_plan(df)
+        reused = [
+            l for l in phys.split("\n")
+            if "ReusedExchange" in l and f"hashpartitioning({key}#" in l
+        ]
+        assert len(reused) == 1, (name, phys)
+        assert "Scan ExistingRDD" not in phys, (name, phys)
+        if kernel:
+            assert phys.count(kernel) == 1, (name, phys)
+
+
+def test_key_set_containment_pins_the_kernel_once(spark, tmp_path, monkeypatch):
+    """video_near_dups and binary_near_dups start only the jobs of one
+    eager pin, and the pinned plan runs the signature kernel once."""
+    from pdftableextractor_spark.operators.multimodal import (
+        binary_near_dups,
+        cdc_chunk_hashes,
+        video_frame_hashes,
+        video_near_dups,
+    )
+
+    _, assets, _ = _near_dup_inputs(spark, tmp_path)
+    cases = {
+        "video": (
+            lambda: video_near_dups(assets),
+            lambda: video_frame_hashes(assets),
+        ),
+        "binary": (
+            lambda: binary_near_dups(assets, avg_bits=6),
+            lambda: cdc_chunk_hashes(assets, avg_bits=6).distinct(),
+        ),
+    }
+    frame_cls = type(assets)
+    pinned = []
+    pin = frame_cls.localCheckpoint
+
+    def recording_pin(self, *args, **kwargs):
+        pinned.append(_plan(self).split("== Physical Plan ==")[1])
+        return pin(self, *args, **kwargs)
+
+    for name, (build, sigs) in cases.items():
+        _, pin_jobs = _jobs_started(
+            spark, lambda: sigs().localCheckpoint(eager=True)
+        )
+        pinned.clear()
+        monkeypatch.setattr(frame_cls, "localCheckpoint", recording_pin)
+        df, jobs = _jobs_started(spark, build)
+        monkeypatch.setattr(frame_cls, "localCheckpoint", pin)
+        assert pin_jobs >= 1 and jobs == pin_jobs, (name, jobs, pin_jobs)
+        assert len(pinned) == 1, (name, pinned)
+        assert pinned[0].count("MapInPandas") == 1, (name, pinned[0])
+        assert df.collect(), name

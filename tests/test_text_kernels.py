@@ -48,6 +48,11 @@ LINES = [
     "* refers to x here",
     "[1] Source: a b c d",
     "x¹²y (12) [3] ** z",
+    # a final line terminator: Java's $ would match before it
+    "12\u2028",
+    "12\u2029",
+    "home\u0085",
+    "About\u2028",
 ]
 
 
