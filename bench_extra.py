@@ -6,7 +6,10 @@ artifact). This file exists so the optimization round can:
   * dump `.explain("formatted")` for every bench query  → _artifacts/plans/
     (git-ignored; dumps are regenerated, not committed)
   * time any subset of queries in isolation with the noop sink, with
-    host-calibration brackets, without paying the full 27-query sweep
+    host-calibration brackets, without paying the full 27-query sweep or
+    any other entry's input set-up (an entry's first run pays its own:
+    BPE training for bpe_encode, the query-vector collect for ann_topk,
+    the one-file copy for extract_skew_salted; ``min`` is over the runs)
 
   * run every driver query against its DuckDB oracle (the driver's
     correctness gate) on the sf0.01 tables beside the bench tables, or on
@@ -26,6 +29,7 @@ import json
 import os
 import sys
 import time
+from functools import cache
 
 from bench import _materialize, _synth_corpus_path, host_calibration
 
@@ -73,7 +77,25 @@ def build_dfs(spark, sf_dir: str, synth_path: str) -> dict:
     docs_str = docs_flat.withColumn("doc_id", F.col("doc_id").cast("string"))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     synth = spark.read.parquet(synth_path)
-    bpe_merges = train_bpe(docs_str, n_merges=500)
+
+    # inputs that cost a job or a file copy are built on first use, once,
+    # by the entries that need them
+    @cache
+    def bpe_merges():
+        return train_bpe(docs_str, n_merges=500)
+
+    @cache
+    def qvec():
+        return emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
+
+    @cache
+    def skew_path():
+        path = synth_path + ".onefile"
+        if not os.path.exists(path):
+            import pyarrow.parquet as pq
+
+            pq.write_table(pq.read_table(synth_path), path)
+        return path
 
     def structure_points():
         frames = extract_frames(interleave_flat_documents(docs_flat))
@@ -130,20 +152,11 @@ def build_dfs(spark, sf_dir: str, synth_path: str) -> dict:
             general.select("doc_id", "source", "type", "field", "value", "page")
         )
 
-    qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-
-    skew_path = synth_path + ".onefile"
-    if not os.path.exists(skew_path):
-        import pyarrow.parquet as pq
-
-        tabs = pq.read_table(synth_path)
-        pq.write_table(tabs, skew_path)
-
     eq = entry.queries()
     return {
         "extract_synth": lambda: extract_spans(synth),
         "extract_skew_salted": lambda: extract_spans(
-            spark.read.parquet(skew_path), salt=True
+            spark.read.parquet(skew_path()), salt=True
         ),
         "extract_testdata": lambda: extract_spans(
             interleave_flat_documents(docs_flat)
@@ -153,7 +166,7 @@ def build_dfs(spark, sf_dir: str, synth_path: str) -> dict:
         "pricing_summary": lambda: eq["q13_pricing_summary"](spark, sf_dir),
         "minhash_pairs": lambda: minhash_near_dups(docs_str, n=3, threshold=0.5),
         "simhash": lambda: simhash_signatures(docs_str),
-        "ann_topk": lambda: cosine_topk(emb, qvec, k=10),
+        "ann_topk": lambda: cosine_topk(emb, qvec(), k=10),
         "token_stats": lambda: (
             token_count(docs_str)
             .join(quality_score(docs_str), "doc_id")
@@ -177,7 +190,7 @@ def build_dfs(spark, sf_dir: str, synth_path: str) -> dict:
             threshold=0.35, k=3, n_cells=16, iters=3,
         ),
         "cdc_dedup": lambda: eq["q71_cdc_dedup"](spark, sf_dir),
-        "bpe_encode": lambda: bpe_encode(docs_str, bpe_merges),
+        "bpe_encode": lambda: bpe_encode(docs_str, bpe_merges()),
         "html_extract": lambda: eq["q72_html_extract"](spark, sf_dir),
         "dsir_weights": lambda: eq["q73_dsir_weights"](spark, sf_dir),
         "sq8_topk": lambda: eq["q75_sq8_topk"](spark, sf_dir),

@@ -13,9 +13,7 @@ One pass over documents(doc_id, text, ...):
                           components (large-star/small-star); keep the min
                           doc_id of each duplicate CLUSTER (transitive
                           closure — the industry-standard semantics; pairs
-                          (a,c),(b,c) collapse to one survivor, not two).
-                          --near-dup-mode pair restores the old per-pair
-                          drop-the-higher rule
+                          (a,c),(b,c) collapse to one survivor, not two)
   2b. semantic dedup      SemDeDup over --semantic-dedup embeddings
                           (vec_id == numeric doc_id): kNN graph at
                           --semantic-threshold -> connected components ->
@@ -75,6 +73,12 @@ Writes <output>/clean (curated corpus with stats + shard_idx columns) and
 prints a one-line JSON funnel summary. The funnel is the canonical shape of
 an LLM training-data pipeline; every stage is a JVM-side operator from
 operators/dedup.py / textstats.py / sampling.py.
+
+The funnel is one lazy pass. A row-local stage (quality, language, PII,
+token counts, fingerprint) adds its columns with one projection; a gate
+is a condition on them. The frame is pinned only where one lineage feeds
+two branches, and each pin applies the gates pending since the last one,
+counting every gate's survivors with one Observation on the way.
 """
 
 from __future__ import annotations
@@ -146,13 +150,6 @@ def main() -> None:
         "path); 0 = probe every cell (exact)",
     )
     p.add_argument("--near-dup-threshold", type=float, default=0.5)
-    p.add_argument(
-        "--near-dup-mode",
-        choices=["cluster", "pair"],
-        default="cluster",
-        help="cluster = transitive-closure dedup (keep min of each "
-        "connected component); pair = drop doc_b of every pair",
-    )
     p.add_argument("--langs", default="en,und")
     p.add_argument("--max-rep", type=float, default=0.5)
     p.add_argument(
@@ -224,12 +221,12 @@ def main() -> None:
     if args.tokenize is not None and args.tokenize < 1:
         p.error("--tokenize must be >= 1")
 
+    from pyspark.sql import Observation, Window
     from pyspark.sql import functions as F
 
     from pdftableextractor_spark.operators.dedup import (
         connected_components,
         duplicate_ngram_spans,
-        exact_dedup,
         fuzzy_decontaminate,
         mask_duplicate_spans,
         minhash_near_dups,
@@ -237,18 +234,18 @@ def main() -> None:
     )
     from pdftableextractor_spark.operators.sampling import (
         pack_shards,
-        stratified_sample,
+        stratified_keep_col,
         temperature_mix,
     )
     from pdftableextractor_spark.operators.textstats import (
         bigram_transition_score,
         drop_bottom_percentile,
-        fingerprint,
-        lang_id,
-        quality_score,
-        redact_pii,
+        fingerprint_cols,
+        lang_id_cols,
+        quality_score_cols,
+        redact_pii_cols,
         repetition_stats,
-        token_count,
+        token_count_cols,
     )
     from pdftableextractor_spark.session import build_session
     from pdftableextractor_spark.sources.tables import read_path, write_table
@@ -260,7 +257,41 @@ def main() -> None:
     )
     n0 = docs.count()
 
-    n0h = None
+    # The funnel rule. A row-local stage adds columns with one projection,
+    # never a self-join. A gate is a (funnel name, condition) pair in
+    # ``stages``, pending until the next pin; a None condition counts the
+    # rows as they stand, so it may only lead. A frame is pinned only where
+    # one lineage feeds two branches, and the pin applies the pending
+    # gates. One Observation on the pinned frame counts each gate's
+    # survivors: the pin's materialization runs that lineage exactly once,
+    # so the counts are exact and cost no job. Nothing is observed where
+    # two branches read a frame, nor below pack_shards' range exchange,
+    # whose bounds sampling runs the lineage too.
+    observed = []
+
+    def passing(stages):
+        keep = F.lit(True)
+        for _, cond in stages:
+            if cond is not None:
+                keep = keep & cond
+        return keep
+
+    def pin(df, *stages):
+        """``df`` filtered by ``stages`` and pinned (eager localCheckpoint),
+        each stage's survivors counted on the way; helper columns
+        (``__*``) are dropped."""
+        counts = [
+            F.count(F.when(passing(stages[: i + 1]), 1)).alias(name)
+            for i, (name, _) in enumerate(stages)
+        ]
+        obs = Observation()
+        observed.append(obs)
+        pinned = (
+            df.observe(obs, *counts).filter(passing(stages)).localCheckpoint()
+        )
+        return pinned.drop(*[c for c in pinned.columns if c.startswith("__")])
+
+    stages = []
     if args.html_extract:
         from pdftableextractor_spark.operators.html import extract_main_text
 
@@ -270,42 +301,31 @@ def main() -> None:
         )
         # inner join: a doc whose every block classified boilerplate has
         # no main-content row and drops here (nothing left to train on)
-        docs = (
-            docs.drop("text")
-            .join(main, "doc_id")
-            .localCheckpoint()
-        )
-        n0h = docs.count()
+        docs = docs.drop("text").join(main, "doc_id")
+        stages.append(("after_html_extract", None))
 
-    reps = exact_dedup(docs).select("doc_id")
-    # localCheckpoint (NOT a bare persist) between stages: every stage joins
-    # docsN against f(docsN), so the LOGICAL PLAN doubles per stage even
-    # when the data is cached — by stage 6 the plan tree is ~40 MB of text
-    # and AQE's plan-change logging alone OOMs the driver (measured; with
-    # the decontaminate/shard stages it crossed the 1 GiB JVM string cap).
-    # localCheckpoint truncates the lineage to the cached blocks, keeping
-    # the plan O(stage) instead of O(2^stage); the count() right after
-    # materializes it. Trade: a lost executor kills the job instead of
-    # recomputing — acceptable inside one batch job, and the resume runner
-    # (plans/resume.py) is the cross-job recovery story.
-    docs1 = docs.join(reps, "doc_id", "left_semi").localCheckpoint()
-    n1 = docs1.count()
+    # exact dedup keeps the lowest doc_id per md5(text). Pinned: the
+    # near-dup stage reads it twice (signatures/verify, the anti-join)
+    first = F.row_number().over(
+        Window.partitionBy(F.md5("text")).orderBy("doc_id")
+    )
+    docs1 = pin(
+        docs.select("*", first.alias("__first")),
+        *stages,
+        ("after_exact_dedup", F.col("__first") == 1),
+    )
 
     pairs = minhash_near_dups(
         docs1, n=3, threshold=args.near_dup_threshold
     )
-    if args.near_dup_mode == "cluster":
-        losers = (
-            connected_components(pairs)
-            .filter(F.col("node") != F.col("component"))
-            .select(F.col("node").alias("doc_id"))
-        )
-    else:
-        losers = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    docs2 = docs1.join(losers, "doc_id", "left_anti").localCheckpoint()
-    n2 = docs2.count()
+    losers = (
+        connected_components(pairs)
+        .filter(F.col("node") != F.col("component"))
+        .select(F.col("node").alias("doc_id"))
+    )
+    docs2 = docs1.join(losers, "doc_id", "left_anti")
+    stages = [("after_near_dup", None)]
 
-    n2s = None
     if args.semantic_dedup:
         from pdftableextractor_spark.operators.dedup import semantic_dedup
 
@@ -335,69 +355,70 @@ def main() -> None:
             n_probe=args.semantic_probe or None,
         )
         # drop the non-representatives; docs with no embedding pass
-        # (absence-of-evidence, the funnel-wide convention)
+        # (absence-of-evidence, the funnel-wide convention). A flag and a
+        # gate, not an anti-join: the near-dup count is taken at the next
+        # pin, over every row
         sem_losers = sd.filter(~F.col("keep")).select(
-            F.col("vec_id").cast("string").alias("doc_id")
+            F.col("vec_id").cast("string").alias("doc_id"),
+            F.lit(True).alias("__sem_loser"),
         )
-        docs2 = docs2.join(
-            sem_losers, "doc_id", "left_anti"
-        ).localCheckpoint()
-        n2s = docs2.count()
+        docs2 = docs2.join(sem_losers, "doc_id", "left")
+        stages.append(
+            ("after_semantic_dedup", F.col("__sem_loser").isNull())
+        )
 
-    q = quality_score(docs2).select("doc_id", "quality")
-    docs3 = docs2.join(q, "doc_id").filter(
-        F.col("quality") >= args.min_quality
-    ).localCheckpoint()
-    n3 = docs3.count()
-
-    n3p = None
+    docs3 = docs2.select("*", quality_score_cols()["quality"])
+    stages.append(("after_quality", F.col("quality") >= args.min_quality))
     if args.quality_pct is not None:
         # relative gate on top of the absolute one: histogram threshold per
-        # source, broadcast back — the corpus is filtered, never shuffled
+        # source, broadcast back — the corpus is filtered, never shuffled.
+        # Pinned: the histogram and the filter read it
         docs3 = drop_bottom_percentile(
-            docs3, args.quality_pct, "quality", "source"
-        ).localCheckpoint()
-        n3p = docs3.count()
+            pin(docs3, *stages), args.quality_pct, "quality", "source"
+        )
+        stages = [("after_quality_pct", None)]
 
+    # per-doc stats joined 1:1, so the pending gates still count every row
     rep = repetition_stats(docs3.select("doc_id", "text")).select(
         "doc_id", "dup_sent_frac", "top_bigram_frac"
     )
-    docs3r = docs3.join(rep, "doc_id").filter(
-        (F.col("dup_sent_frac") <= args.max_rep)
-        & (F.col("top_bigram_frac") <= args.max_rep)
-    ).localCheckpoint()
-    n3r = docs3r.count()
-
     langs = [x.strip() for x in args.langs.split(",") if x.strip()]
-    lid = lang_id(docs3r.select("doc_id", "text")).select("doc_id", "lang_pred")
-    docs4 = docs3r.join(lid, "doc_id").filter(
-        F.col("lang_pred").isin(langs)
-    ).localCheckpoint()
-    n4 = docs4.count()
+    docs4 = docs3.join(rep, "doc_id").select(
+        "*", lang_id_cols()["lang_pred"]
+    )
+    stages += [
+        (
+            "after_repetition",
+            (F.col("dup_sent_frac") <= args.max_rep)
+            & (F.col("top_bigram_frac") <= args.max_rep),
+        ),
+        ("after_lang", F.col("lang_pred").isin(langs)),
+    ]
 
-    n4f = None
     if args.min_lm_score is not None:
+        # pinned: the LM trains on these survivors and is joined back
+        docs4 = pin(docs4, *stages)
         lm = bigram_transition_score(docs4.select("doc_id", "text")).select(
             "doc_id", "lm_score"
         )
         # LEFT join: docs too short to have a bigram get no score — they
         # pass (stage-5 principle: absence of evidence isn't exclusion)
-        docs4 = docs4.join(lm, "doc_id", "left").filter(
+        docs4 = docs4.join(lm, "doc_id", "left")
+        stages = [(
+            "after_lm_gate",
             (F.col("lm_score") >= args.min_lm_score)
-            | F.col("lm_score").isNull()
-        ).localCheckpoint()
-        n4f = docs4.count()
+            | F.col("lm_score").isNull(),
+        )]
 
-    scrubbed = docs4.join(
-        redact_pii(docs4.select("doc_id", "text")), "doc_id"
-    ).drop("text").withColumnRenamed("clean_text", "text")
+    scrubbed = (
+        docs4.select("*", *redact_pii_cols().values())
+        .drop("text")
+        .withColumnRenamed("clean_text", "text")
+    )
 
-    n4m = None
     if args.mask_span_n is not None:
-        # checkpoint first: the mask self-joins scrubbed against three
-        # derived branches, which would otherwise re-run the PII regex
-        # passes once per branch (the stage-lineage rule at the top)
-        scrubbed = scrubbed.localCheckpoint()
+        # pinned: the mask reads it three times
+        scrubbed = pin(scrubbed, *stages)
         masked = mask_duplicate_spans(
             scrubbed.select("doc_id", "text"),
             n=args.mask_span_n,
@@ -407,49 +428,48 @@ def main() -> None:
             scrubbed.join(masked, "doc_id")
             .drop("text")
             .withColumnRenamed("__masked", "text")
-            .filter(F.col("text") != "")
-            .localCheckpoint()
         )
-        n4m = scrubbed.count()
+        stages = [("after_span_mask", F.col("text") != "")]
 
-    n5 = n6 = None
     if args.benchmark:
         bench = read_path(spark, args.benchmark)
+        # pinned: its n-grams and the anti-join read it
+        scrubbed = pin(scrubbed, *stages)
         if args.fuzzy_decontam is not None:
             scrubbed = fuzzy_decontaminate(
                 scrubbed, bench, n=args.decontam_n,
                 threshold=args.fuzzy_decontam,
-            ).localCheckpoint()
+            )
         else:
             scrubbed = ngram_decontaminate(
                 scrubbed, bench, n=args.decontam_n
-            ).localCheckpoint()
-        n5 = scrubbed.count()
+            )
+        stages = [("after_decontaminate", None)]
     if args.mix:
         fracs = {
             k.strip(): float(v)
             for k, v in (kv.split("=") for kv in args.mix.split(","))
         }
-        scrubbed = stratified_sample(
-            scrubbed, fracs, default_fraction=1.0
-        ).localCheckpoint()
-        n6 = scrubbed.count()
-    n6t = None
+        stages.append(
+            ("after_mix", stratified_keep_col(fracs, default_fraction=1.0))
+        )
     if args.temp_mix:
         alpha, budget = (float(x) for x in args.temp_mix.split(":"))
         # a DIFFERENT seed than the --mix stage: both samplers filter on a
         # per-id hash uniform, and with the same seed the second stage
         # would be fully correlated with the first (composed keep rate
-        # min(f1, f2) instead of f1*f2 — the token budget silently doubles)
+        # min(f1, f2) instead of f1*f2 — the token budget silently doubles).
+        # Pinned: the per-source fractions and the sample read it
         scrubbed = temperature_mix(
-            scrubbed, alpha=alpha, budget_frac=budget, seed=13
-        ).localCheckpoint()
-        n6t = scrubbed.count()
+            pin(scrubbed, *stages), alpha=alpha, budget_frac=budget, seed=13
+        )
+        stages = [("after_temp_mix", None)]
 
-    n6d = None
     if args.dsir_target:
         from pdftableextractor_spark.operators.sampling import dsir_resample
 
+        # pinned: the weight model, the selection and the semi-join read it
+        scrubbed = pin(scrubbed, *stages)
         tgt = read_path(
             spark, f"{args.dsir_target}/documents.parquet"
         ).select(
@@ -470,24 +490,18 @@ def main() -> None:
             temperature=args.dsir_temperature,
             select=~F.col("__dsir_t"),
         ).select("doc_id")
-        scrubbed = scrubbed.join(
-            kept_ids, "doc_id", "left_semi"
-        ).localCheckpoint()
-        n6d = scrubbed.count()
+        scrubbed = scrubbed.join(kept_ids, "doc_id", "left_semi")
+        stages = [("after_dsir_select", None)]
 
-    annotated = (
-        scrubbed.join(token_count(scrubbed.select("doc_id", "text")), "doc_id")
-        .join(
-            fingerprint(scrubbed.select("doc_id", "text")).select(
-                "doc_id", "content_md5", "fingerprint"
-            ),
-            "doc_id",
-        )
+    annotated = scrubbed.select(
+        "*", *token_count_cols().values(), *fingerprint_cols().values()
     )
     if args.dup_span_n is not None:
+        # the census counts the surviving corpus only
         span_counts = (
             duplicate_ngram_spans(
-                scrubbed.select("doc_id", "text"), n=args.dup_span_n
+                scrubbed.filter(passing(stages)).select("doc_id", "text"),
+                n=args.dup_span_n,
             )
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_dup_spans"))
@@ -495,6 +509,9 @@ def main() -> None:
         annotated = annotated.join(span_counts, "doc_id", "left").fillna(
             {"n_dup_spans": 0}
         )
+    # pinned: pack_shards' range exchange reads it twice (the bounds
+    # sample, then the shuffle), and so do BPE training and encoding
+    annotated = pin(annotated, *stages)
     n_merges = None
     if args.tokenize is not None:
         from pdftableextractor_spark.operators.tokenize import (
@@ -502,8 +519,6 @@ def main() -> None:
             train_bpe,
         )
 
-        # annotated is re-scanned by train (agg) AND encode (map) — pin it
-        annotated = annotated.localCheckpoint()
         merges = train_bpe(
             annotated.select("doc_id", "text"), n_merges=args.tokenize
         )
@@ -521,39 +536,50 @@ def main() -> None:
         budget_tokens=args.shard_tokens,
         tokens_col="bpe_n_tokens" if args.shard_by_bpe else "ws_tokens",
     )
-    write_table(sharded, args.output + "/clean", mode="overwrite")
-    out = read_path(spark, args.output + "/clean")
-    n_shards = out.select("source", "shard_idx").distinct().count()
+    # the shard count rides the write (above pack_shards' pin, which runs
+    # the lineage below it once)
+    shards = Observation()
+    write_table(
+        sharded.observe(
+            shards,
+            F.size(F.collect_set(F.struct("source", "shard_idx"))).alias(
+                "shards"
+            ),
+        ),
+        args.output + "/clean",
+        mode="overwrite",
+    )
+    counts = {k: v for o in observed for k, v in o.get.items()}
     summary = {
         "input_docs": n0,
-        "after_exact_dedup": n1,
-        "after_near_dup": n2,
-        "after_quality": n3,
-        "after_repetition": n3r,
-        "after_lang": n4,
-        "shards": n_shards,
+        **{
+            k: counts[k]
+            for k in (
+                "after_exact_dedup",
+                "after_near_dup",
+                "after_quality",
+                "after_repetition",
+                "after_lang",
+            )
+        },
+        "shards": shards.get["shards"],
         "sec": round(time.time() - t0, 3),
     }
-    if n0h is not None:
-        summary["after_html_extract"] = n0h
-    if n_merges is not None:
-        summary["bpe_merges"] = n_merges
-    if n2s is not None:
-        summary["after_semantic_dedup"] = n2s
-    if n3p is not None:
-        summary["after_quality_pct"] = n3p
-    if n4f is not None:
-        summary["after_lm_gate"] = n4f
-    if n4m is not None:
-        summary["after_span_mask"] = n4m
-    if n5 is not None:
-        summary["after_decontaminate"] = n5
-    if n6 is not None:
-        summary["after_mix"] = n6
-    if n6t is not None:
-        summary["after_temp_mix"] = n6t
-    if n6d is not None:
-        summary["after_dsir_select"] = n6d
+    counts["bpe_merges"] = n_merges
+    for k in (
+        "after_html_extract",
+        "bpe_merges",
+        "after_semantic_dedup",
+        "after_quality_pct",
+        "after_lm_gate",
+        "after_span_mask",
+        "after_decontaminate",
+        "after_mix",
+        "after_temp_mix",
+        "after_dsir_select",
+    ):
+        if counts.get(k) is not None:
+            summary[k] = counts[k]
     print(json.dumps(summary))
     spark.stop()
 

@@ -111,6 +111,7 @@ def main() -> None:
             f"bound of {args.n_bands} bands (n_bands-1); raise --n-bands"
         )
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from pdftableextractor_spark.operators.dedup import connected_components
@@ -142,9 +143,15 @@ def main() -> None:
         for r in assets.groupBy("kind").agg(F.count("*").alias("n")).collect()
     }
 
-    feats = extract_features(assets)
-    write_table(feats, f"{args.output}/features")
-    n_feats = read_path(spark, f"{args.output}/features").count()
+    # the output counts ride the writes (one Observation each): no job
+    # re-reads an output
+    feats_obs = Observation("features")
+    write_table(
+        extract_features(assets).observe(
+            feats_obs, F.count(F.lit(1)).alias("n")
+        ),
+        f"{args.output}/features",
+    )
 
     losers = None
     pair_counts = {}
@@ -193,34 +200,36 @@ def main() -> None:
             )
         losers = drop if losers is None else losers.unionByName(drop)
 
-    kept = assets.join(losers, "asset_id", "left_anti")
+    kept_obs = Observation("kept")
     write_table(
-        kept.select("asset_id", "kind", "meta"), f"{args.output}/kept"
+        assets.join(losers, "asset_id", "left_anti")
+        .select("asset_id", "kind", "meta")
+        .observe(kept_obs, F.count(F.lit(1)).alias("n")),
+        f"{args.output}/kept",
     )
-    n_kept = read_path(spark, f"{args.output}/kept").count()
 
-    frames = sample_frames_decoded(assets, every_ms=args.frame_every_ms)
-    write_table(frames, f"{args.output}/frames")
-    fstats = read_path(spark, f"{args.output}/frames").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(F.col("decoded").cast("int")), F.lit(0)
-        ).alias("real"),
-    ).collect()[0]
-    n_frames, n_real_frames = int(fstats["n"]), int(fstats["real"])
+    frames_obs = Observation("frames")
+    write_table(
+        sample_frames_decoded(assets, every_ms=args.frame_every_ms).observe(
+            frames_obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("decoded"), 1)).alias("real"),
+        ),
+        f"{args.output}/frames",
+    )
 
     print(
         json.dumps(
             {
                 "assets": sum(by_kind.values()),
                 "by_kind": by_kind,
-                "features": n_feats,
+                "features": feats_obs.get["n"],
                 "image_pairs": pair_counts.get("image", 0),
                 "audio_pairs": pair_counts.get("audio", 0),
                 "video_pairs": pair_counts.get("video", 0),
-                "kept": n_kept,
-                "frames_sampled": n_frames,
-                "frames_decoded": n_real_frames,
+                "kept": kept_obs.get["n"],
+                "frames_sampled": frames_obs.get["n"],
+                "frames_decoded": frames_obs.get["real"],
                 "sec": round(time.time() - t0, 3),
             }
         )

@@ -93,33 +93,21 @@ def tokenize_col(col):
 
 
 def shingles_col(col, n: int):
-    """Distinct word n-grams of the token array (sorted for set semantics).
-
-    CAUTION for n ≳ 4: the gram lambda references the token array n times;
-    if ``col`` is a derived EXPRESSION (not a bound column), Catalyst
-    inlines it into every element_at — the expression tree grows n × the
-    input lineage and large n over a complex column OOMs codegen. Use
-    ``shingles_from_tokens_col`` after a projection barrier instead
-    (ngram_decontaminate does)."""
-    w = tokenize_col(col)
-    if n == 1:
-        return F.array_sort(F.array_distinct(w))
-    return shingles_from_tokens_col(w, n)
+    """Distinct word n-grams of the token array (sorted for set semantics)."""
+    return shingles_from_tokens_col(tokenize_col(col), n)
 
 
 def shingles_from_tokens_col(w, n: int):
-    """n-grams over an existing token-array column."""
+    """n-grams over an existing token-array column, built from
+    ``_gram_structs`` (each gram's tokens " "-joined): the token array is
+    referenced once per slice, never once per gram."""
     if n == 1:
         return F.array_sort(F.array_distinct(w))
     gram = F.transform(
-        F.sequence(F.lit(1), F.size(w) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(w, i + j) for j in range(n)]
-        ),
+        _gram_structs(w, n),
+        lambda g: F.concat_ws(" ", *[g.getField(str(i)) for i in range(n)]),
     )
-    return F.when(F.size(w) < n, F.array().cast("array<string>")).otherwise(
-        F.array_sort(F.array_distinct(gram))
-    )
+    return F.array_sort(F.array_distinct(gram))
 
 
 def word_hash_col(col):
@@ -710,8 +698,8 @@ def ngram_decontaminate(
     Returns the surviving documents (all input columns).
 
     Implementation note: tokenization happens in its OWN projection before
-    the gram transform (shingles_from_tokens_col) — the gram lambda
-    references the token array n times, and over a derived text column
+    the gram transform (shingles_from_tokens_col) — the gram slices
+    reference the token array n times, and over a derived text column
     (e.g. the curation funnel's redacted text) Catalyst would inline the
     whole upstream lineage into each reference: at n=13 that OOM'd codegen.
     The barrier keeps the reference a bound attribute."""

@@ -12,12 +12,13 @@ Both are SCAN-SHAPED by design at the 100 TB point:
   a token budget. The cumulative sum is windowed PER GROUP (e.g. per
   source/domain), never globally — a global running sum would force a
   single-partition window. Shard identity is (group, shard_idx); packing
-  order within a group is the deterministic id order.
+  order within a group is the deterministic id order. It is EAGER: it pins
+  its range-bucketed frame, the one frame both of its branches read.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # 10^6 resolution for the sampling hash: u = md5-60bit % 1e6 / 1e6
@@ -40,6 +41,22 @@ def _uniform_col(id_col, seed: int):
     return (h % _RES).cast("double") / F.lit(float(_RES))
 
 
+def stratified_keep_col(
+    fractions: dict[str, float],
+    stratum_col: str = "source",
+    id_col: str = "doc_id",
+    seed: int = 7,
+    default_fraction: float = 0.0,
+) -> Column:
+    """True iff the row's deterministic per-id uniform < its stratum's
+    target fraction. Strata absent from ``fractions`` fall back to
+    ``default_fraction`` (0 = drop)."""
+    frac = F.lit(float(default_fraction))
+    for k, v in sorted(fractions.items()):
+        frac = F.when(F.col(stratum_col) == k, F.lit(float(v))).otherwise(frac)
+    return _uniform_col(id_col, seed) < frac
+
+
 def stratified_sample(
     docs: DataFrame,
     fractions: dict[str, float],
@@ -48,34 +65,26 @@ def stratified_sample(
     seed: int = 7,
     default_fraction: float = 0.0,
 ) -> DataFrame:
-    """Keep each row iff its deterministic per-id uniform < the stratum's
-    target fraction — hash-based domain mixing. Strata absent from
-    ``fractions`` fall back to ``default_fraction`` (0 = drop)."""
-    frac = F.lit(float(default_fraction))
-    for k, v in sorted(fractions.items()):
-        frac = F.when(F.col(stratum_col) == k, F.lit(float(v))).otherwise(frac)
-    return docs.filter(_uniform_col(id_col, seed) < frac)
+    """Hash-based domain mixing: the rows of ``docs`` that
+    ``stratified_keep_col`` keeps."""
+    return docs.filter(
+        stratified_keep_col(
+            fractions, stratum_col, id_col, seed, default_fraction
+        )
+    )
 
 
-_ORDER_NONDET_NODES = {"GlobalLimit", "LocalLimit", "Sample", "Repartition"}
-
-
-def _has_order_nondeterministic_node(df: DataFrame) -> bool:
-    """True if the analyzed plan contains an operator whose OUTPUT ROW SET
-    or order can differ between two evaluations of the same plan even
-    though every expression is deterministic: un-ordered limit (whichever
-    tasks finish first win), sample (partition-content dependent), and
-    round-robin repartition (``Repartition`` — distinct from the
-    deterministic hash/range ``RepartitionByExpression``). The
-    expression-level ``deterministic`` flag reports True for all of
-    these, so pack_shards' two-branch evaluation needs this second,
-    node-level check."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    for line in plan.split("\n"):
-        node = line.strip().lstrip(":+- ").split(" ", 1)[0]
-        if node in _ORDER_NONDET_NODES:
-            return True
-    return False
+def _range_buckets(
+    docs: DataFrame, group_col: str, id_col: str, num_buckets: int | None
+) -> DataFrame:
+    """``docs`` range-partitioned on (group, id) into order-preserving
+    buckets, ``__bkt`` = spark_partition_id: ascending bucket id ==
+    ascending (group, id), and a bucket never splits equal keys. Lazy; the
+    explicit bucket count keeps AQE from re-coalescing them."""
+    b = num_buckets or docs.sparkSession.sparkContext.defaultParallelism
+    return docs.repartitionByRange(
+        b, F.col(group_col), F.col(id_col)
+    ).withColumn("__bkt", F.spark_partition_id())
 
 
 def pack_shards(
@@ -85,7 +94,6 @@ def pack_shards(
     id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
     num_buckets: int | None = None,
-    checkpoint: bool | None = None,
 ) -> DataFrame:
     """Assign each document a (group, shard_idx) so that every shard's token
     sum stays ≤ ``budget_tokens`` + one document (the standard greedy
@@ -93,56 +101,34 @@ def pack_shards(
     the group's id order — a document straddling the boundary starts in the
     shard its first token lands in).
 
+    EAGER: pins the range-bucketed frame (one localCheckpoint job, plus the
+    range-bounds sampling job) before it returns.
+
     The cumulative sum is a TWO-LEVEL distributed prefix sum, never one
     partition per group (a corpus with a handful of sources would otherwise
     pack each source through a single task):
 
       1. range-partition on (group, id) into ``num_buckets`` order-preserving
-         buckets (``__bkt`` = spark_partition_id — ascending bucket id ==
-         ascending (group, id), and a bucket never splits equal keys);
+         buckets (``_range_buckets``);
       2. per-(group, bucket) token totals — a |groups| × buckets frame, tiny
          at any corpus scale — then an EXCLUSIVE cumsum over bucket order
          gives each bucket's starting offset;
       3. broadcast-join the offsets back and finish with a LOCAL windowed
          cumsum inside each (group, bucket) + the bucket offset.
 
-    shard ids depend only on cumulative token sums in id order, so the
-    output is invariant to the physical bucketing. The bucketed lineage is
-    evaluated once per branch (totals + main); that is safe iff ``docs``
-    has a DETERMINISTIC lineage — the range boundaries are then identical
-    in both branches (seeded sketch sampling over the same input
-    partitions) and the explicit ``num_buckets`` keeps AQE from
-    re-coalescing them differently. If the input lineage is NOT
-    deterministic (rand()-derived columns and similar), the bucketed
-    frame is localCheckpoint-ed so both branches read ONE materialization
-    instead of re-evaluating — otherwise the branches could disagree on
-    __bkt and the inner offset join would silently mis-shard or drop
-    rows. ``checkpoint=None`` (default) AUTO-DETECTS this two ways:
-    (a) the analyzed plan's determinism flag (any nondeterministic
-    EXPRESSION — rand() and friends), and (b) a plan-node scan for the
-    ORDER-nondeterministic operators the flag does not cover (the flag
-    only tracks expressions): un-ordered limit, sample, and round-robin
-    repartition all report deterministic=True yet can re-evaluate to
-    different row sets or orders across the two branches. Both detectors
-    are conservative — a plan-seeded rand() or an orderBy().limit()
-    would in fact re-evaluate identically but still checkpoints (one
-    extra materialization, never wrong results). ``True`` forces the
-    materialization; ``False`` is an explicit caller override for inputs
-    the detectors flag conservatively — silent data loss is on the
-    caller then, which is why the override must be spelled out rather
-    than being the default. Costs one extra exchange vs the
-    serial-per-group window — the price of intra-group parallelism.
-    Output adds shard_idx int."""
-    b = num_buckets or docs.sparkSession.sparkContext.defaultParallelism
-    if checkpoint is None:
-        checkpoint = not (
-            docs._jdf.queryExecution().analyzed().deterministic()
-        ) or _has_order_nondeterministic_node(docs)
-    bucketed = docs.repartitionByRange(
-        b, F.col(group_col), F.col(id_col)
-    ).withColumn("__bkt", F.spark_partition_id())
-    if checkpoint:
-        bucketed = bucketed.localCheckpoint()
+    Steps 2 and 3 both read the bucketed frame, and they must agree on
+    ``__bkt`` row by row, or the inner offset join mis-shards or drops
+    rows. Two evaluations of the range exchange need not agree: each
+    samples its own bounds, and once the totals branch prunes a column the
+    main branch keeps, the two exchanges differ and are not reused. So the
+    bucketed frame is pinned, and both branches read that one
+    materialization, whatever the input lineage. shard ids depend only on
+    cumulative token sums in id order, so the output is invariant to the
+    physical bucketing. Output adds shard_idx int."""
+    # the one pin: the totals branch and the main branch read it
+    bucketed = _range_buckets(
+        docs, group_col, id_col, num_buckets
+    ).localCheckpoint()
     totals = bucketed.groupBy(group_col, "__bkt").agg(
         F.sum(F.col(tokens_col).cast("bigint")).alias("__tot")
     )

@@ -2,13 +2,18 @@
 scoring, token counting, document fingerprinting.
 
 Everything is built-in Spark SQL expression work (whole-stage codegen); the
-formulas are frozen, integer/6-decimal arithmetic so the DuckDB oracle can
-match value-hashes exactly.
+row-local operators are one projection of their ``*_cols`` core (named
+Columns over one text column), which the curation funnel adds to its frame
+in place of a self-join. The formulas are frozen, integer/6-decimal
+arithmetic so the DuckDB oracle can match value-hashes exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdftableextractor_spark.operators.dedup import shingles_col, tokenize_col
@@ -27,21 +32,30 @@ LANG_MARKERS = {
 STOPWORDS = LANG_MARKERS["en"]
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, ws_tokens, bpe_tokens, chars) — whitespace + BPE-ish regex
-    token counts."""
-    return docs.select(
-        "doc_id",
-        F.size(tokenize_col(F.col(text_col))).alias("ws_tokens"),
-        F.size(
-            F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_RE), F.lit(0))
-        ).alias("bpe_tokens"),
-        F.length(F.col(text_col)).alias("chars"),
+def _named(**cols: Column) -> dict[str, Column]:
+    """Each column aliased to its keyword, in keyword order."""
+    return {k: c.alias(k) for k, c in cols.items()}
+
+
+def token_count_cols(text_col: str = "text") -> dict[str, Column]:
+    """ws_tokens, bpe_tokens, chars — whitespace + BPE-ish regex token
+    counts of ``text_col``."""
+    t = F.col(text_col)
+    return _named(
+        ws_tokens=F.size(tokenize_col(t)),
+        bpe_tokens=F.size(F.regexp_extract_all(t, F.lit(TOKEN_RE), F.lit(0))),
+        chars=F.length(t),
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality features + a composite score in [0, 1]:
+def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, ws_tokens, bpe_tokens, chars) — see ``token_count_cols``."""
+    return docs.select("doc_id", *token_count_cols(text_col).values())
+
+
+def quality_score_cols(text_col: str = "text") -> dict[str, Column]:
+    """Heuristic quality features of ``text_col`` + a composite score in
+    [0, 1]:
 
       len_score   = least(chars, 2000) / 2000
       punct_ratio = punct chars / chars
@@ -86,13 +100,18 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # the single-division ratios are safe to round as doubles: with n, c
     # bounded by document size their values sit ≥ 1/(2e6·n) away from any
     # .5 tie unless exactly dyadic — and both engines agree on exact ties
-    return docs.select(
-        "doc_id",
-        F.round(len_score, 6).alias("len_score"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stop_ratio"),
-        (q6.cast("double") / F.lit(1000000.0)).alias("quality"),
+    return _named(
+        len_score=F.round(len_score, 6),
+        punct_ratio=F.round(punct_ratio, 6),
+        stop_ratio=F.round(stop_ratio, 6),
+        quality=q6.cast("double") / F.lit(1000000.0),
     )
+
+
+def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, len_score, punct_ratio, stop_ratio, quality) — see
+    ``quality_score_cols``."""
+    return docs.select("doc_id", *quality_score_cols(text_col).values())
 
 
 def eval_in_set(col, values) -> object:
@@ -107,58 +126,65 @@ def _in_set_pred(values):
     return lambda x: eval_in_set(x, values)
 
 
+def lang_id_cols(text_col: str = "text") -> dict[str, Column]:
+    """Marker-token language ID of ``text_col``: per-language stopword hit
+    counts (hits_<lang>) over the token array and lang_pred, the argmax —
+    ties broken by language code order; zero hits → 'und'. For zh (no
+    whitespace tokens) the marker hit is a substring count over the raw
+    text."""
+    t = F.col(text_col)
+    toks = tokenize_col(t)
+    hits = {
+        lang: reduce(
+            operator.add,
+            [F.length(t) - F.length(F.regexp_replace(t, m, ""))
+             for m in markers],
+        )
+        if lang == "zh"
+        else F.size(F.filter(toks, _in_set_pred(markers)))
+        for lang, markers in sorted(LANG_MARKERS.items())
+    }
+    # argmax in one pass over the hit counts: the greatest (hits, -code
+    # order) struct is the first language in code order among the best
+    best = F.array_max(
+        F.array(*[
+            F.struct(hits[lang].alias("n"), F.lit(-i).alias("o"),
+                     F.lit(lang).alias("lang"))
+            for i, lang in enumerate(hits)
+        ])
+    )
+    return _named(
+        **{f"hits_{lang}": c for lang, c in hits.items()},
+        lang_pred=F.when(best.getField("n") > 0, best.getField("lang"))
+        .otherwise(F.lit("und")),
+    )
+
+
 def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Marker-token language ID: count per-language stopword hits over the
-    token array; argmax wins, ties broken by language code order; zero hits →
-    'und'. For zh (no whitespace tokens) the marker hit is a substring count
-    over the raw text."""
-    toks = tokenize_col(F.col(text_col))
-    hit_cols = []
-    for lang, markers in sorted(LANG_MARKERS.items()):
-        if lang == "zh":
-            c = None
-            for m in markers:
-                piece = (
-                    F.length(F.col(text_col))
-                    - F.length(F.regexp_replace(F.col(text_col), m, ""))
-                )
-                c = piece if c is None else c + piece
-            hit_cols.append(c.alias(f"hits_{lang}"))
-        else:
-            hit_cols.append(
-                F.size(F.filter(toks, _in_set_pred(markers))).alias(
-                    f"hits_{lang}"
-                )
-            )
-    scored = docs.select("doc_id", *hit_cols)
-    langs = sorted(LANG_MARKERS.keys())
-    best_n = F.greatest(*[F.col(f"hits_{lang}") for lang in langs])
-    # argmax with first-in-code-order tie-break; all-zero → 'und'
-    best = F.lit("und")
-    for lang in reversed(langs):
-        best = F.when(
-            (F.col(f"hits_{lang}") == best_n) & (best_n > 0), F.lit(lang)
-        ).otherwise(best)
-    return scored.select(
-        "doc_id",
-        *[F.col(f"hits_{lang}") for lang in langs],
-        best.alias("lang_pred"),
+    """(doc_id, hits_<lang>..., lang_pred) — see ``lang_id_cols``."""
+    return docs.select("doc_id", *lang_id_cols(text_col).values())
+
+
+def fingerprint_cols(
+    text_col: str = "text", k: int = 8, n: int = 3
+) -> dict[str, Column]:
+    """Winnowing-style document fingerprint of ``text_col``: the k
+    lexicographically smallest md5 hashes of word n-gram shingles, joined —
+    a stable near-dup-robust document identity — plus the full-content
+    md5."""
+    sh = shingles_col(F.col(text_col), n)
+    hashes = F.array_sort(F.transform(sh, lambda x: F.md5(x)))
+    return _named(
+        content_md5=F.md5(F.col(text_col)),
+        fingerprint=F.concat_ws("", F.slice(hashes, 1, k)),
     )
 
 
 def fingerprint(
     docs: DataFrame, text_col: str = "text", k: int = 8, n: int = 3
 ) -> DataFrame:
-    """Winnowing-style document fingerprint: the k lexicographically smallest
-    md5 hashes of word n-gram shingles, joined — a stable near-dup-robust
-    document identity — plus the full-content md5."""
-    sh = shingles_col(F.col(text_col), n)
-    hashes = F.array_sort(F.transform(sh, lambda x: F.md5(x)))
-    return docs.select(
-        "doc_id",
-        F.md5(F.col(text_col)).alias("content_md5"),
-        F.concat_ws("", F.slice(hashes, 1, k)).alias("fingerprint"),
-    )
+    """(doc_id, content_md5, fingerprint) — see ``fingerprint_cols``."""
+    return docs.select("doc_id", *fingerprint_cols(text_col, k, n).values())
 
 
 # --- cross-doc line-frequency dedup (CCNet-style paragraph dedup) -----------
@@ -214,10 +240,10 @@ URL_RE = r"https?://[^\s]+"
 PHONE_RE = r"\+?\d[\d\-\s]{7,}\d"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, text) → (doc_id, clean_text, n_emails, n_urls, n_phones).
-    Order matters and is frozen: URLs first (emails can appear inside
-    URLs), then emails, then phone-like digit runs."""
+def redact_pii_cols(text_col: str = "text") -> dict[str, Column]:
+    """clean_text, n_urls, n_emails, n_phones of ``text_col``. Order
+    matters and is frozen: URLs first (emails can appear inside URLs),
+    then emails, then phone-like digit runs."""
     t = F.col(text_col)
     n_urls = F.size(F.regexp_extract_all(t, F.lit(URL_RE), F.lit(0)))
     after_url = F.regexp_replace(t, URL_RE, "<URL>")
@@ -228,14 +254,18 @@ def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
     n_phones = F.size(
         F.regexp_extract_all(after_email, F.lit(PHONE_RE), F.lit(0))
     )
-    clean = F.regexp_replace(after_email, PHONE_RE, "<PHONE>")
-    return docs.select(
-        "doc_id",
-        clean.alias("clean_text"),
-        n_urls.cast("bigint").alias("n_urls"),
-        n_emails.cast("bigint").alias("n_emails"),
-        n_phones.cast("bigint").alias("n_phones"),
+    return _named(
+        clean_text=F.regexp_replace(after_email, PHONE_RE, "<PHONE>"),
+        n_urls=n_urls.cast("bigint"),
+        n_emails=n_emails.cast("bigint"),
+        n_phones=n_phones.cast("bigint"),
     )
+
+
+def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, text) → (doc_id, clean_text, n_urls, n_emails, n_phones) —
+    see ``redact_pii_cols``."""
+    return docs.select("doc_id", *redact_pii_cols(text_col).values())
 
 
 def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:

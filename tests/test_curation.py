@@ -1110,10 +1110,16 @@ def test_exploded_shingles_matches_python_reference(spark):
     MULTISET of the straightforward Python shingle definition (lower, split
     on whitespace, drop empty tokens, consecutive n-grams joined by one
     space) — including the edge docs: empty text, whitespace-only, null,
-    and docs shorter than n."""
+    and docs shorter than n. ``shingles_col`` builds its gram SET from the
+    same slices and must equal its own reference (no empty-token drop:
+    '' and whitespace-only texts are the one-token list [''])."""
+    import re
     from collections import Counter
 
-    from pdftableextractor_spark.operators.dedup import exploded_shingles
+    from pdftableextractor_spark.operators.dedup import (
+        exploded_shingles,
+        shingles_col,
+    )
 
     rows = [
         ("d0", "The quick  brown fox\tjumps"),
@@ -1142,4 +1148,22 @@ def test_exploded_shingles_matches_python_reference(spark):
         want = Counter(
             (doc_id, g) for doc_id, text in rows for g in ref(text, n)
         )
+        assert got == want, f"n={n}: {got} != {want}"
+
+    def ref_set(text, n):
+        if text is None:
+            return None
+        toks = re.split(r"\s+", text.lower().strip(" "))
+        return sorted({
+            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+        })
+
+    for n in (1, 2, 3, 5):
+        got = {
+            r["doc_id"]: r["sh"]
+            for r in docs.select(
+                "doc_id", shingles_col(F.col("text"), n).alias("sh")
+            ).collect()
+        }
+        want = {doc_id: ref_set(text, n) for doc_id, text in rows}
         assert got == want, f"n={n}: {got} != {want}"

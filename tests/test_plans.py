@@ -60,17 +60,27 @@ def test_decontaminate_broadcasts_benchmark(spark):
 
 def test_pack_shards_single_group_exchange(spark):
     """Shard packing is a two-level prefix sum (round 4): an
-    order-preserving range exchange feeding a (group, __bkt) local-cumsum
-    window — never a global single-partition sort, and never a window
-    partitioned on the group column alone (one task per group)."""
-    from pdftableextractor_spark.operators.sampling import pack_shards
+    order-preserving range exchange, pinned once, feeding a (group, __bkt)
+    local-cumsum window — never a global single-partition sort, and never
+    a window partitioned on the group column alone (one task per group)."""
+    from pdftableextractor_spark.operators.sampling import (
+        _range_buckets,
+        pack_shards,
+    )
 
     docs = spark.createDataFrame(
         [(f"{i:03d}", f"g{i % 4}", 100) for i in range(100)],
         ["doc_id", "source", "n_tokens"],
     )
+    # the bucketing is the lazy helper pack_shards pins
+    bkt = _plan(_range_buckets(docs, "source", "doc_id", None)).split(
+        "== Physical Plan =="
+    )[1]
+    assert "Exchange rangepartitioning" in bkt
+    assert "__bkt" in bkt
+    assert "SinglePartition" not in bkt
     phys = _plan(pack_shards(docs, 1000)).split("== Physical Plan ==")[1]
-    assert "Exchange rangepartitioning" in phys
+    assert "ExistingRDD" in phys
     assert "__bkt" in phys
     assert "SinglePartition" not in phys
     # the big-side cumsum window partitions by (group, bucket) — the only

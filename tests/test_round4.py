@@ -88,7 +88,10 @@ def test_pack_shards_distributed_cumsum_single_group(spark):
     """ONE group of 1e5 docs: the cumulative sum must run across multiple
     buckets (two-level prefix sum), not one task per group, and still equal
     the sequential greedy packing exactly."""
-    from pdftableextractor_spark.operators.sampling import pack_shards
+    from pdftableextractor_spark.operators.sampling import (
+        _range_buckets,
+        pack_shards,
+    )
 
     docs = spark.range(100_000).select(
         F.format_string("d%07d", F.col("id")).alias("doc_id"),
@@ -99,10 +102,14 @@ def test_pack_shards_distributed_cumsum_single_group(spark):
 
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the local cumsum window partitions by (group, bucket) — >1 task even
-    # for a single group — and the order-preserving bucketing is a range
-    # exchange
+    # for a single group — and the order-preserving bucketing (the lazy
+    # helper pack_shards pins) is a range exchange
     assert "__bkt" in plan
-    assert "rangepartitioning" in plan.lower()
+    bkt_plan = (
+        _range_buckets(docs, "source", "doc_id", 8)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "rangepartitioning" in bkt_plan.lower()
 
     got = {r["doc_id"]: r["shard_idx"] for r in out.collect()}
     pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
@@ -683,13 +690,18 @@ def test_mask_duplicate_spans_hand_example(spark):
     assert out["d4"]["n_removed"] == 0
 
 
+def _assert_greedy_packing(rows, budget):
+    """Sorted by doc_id, each row starts in the shard its first token
+    lands in."""
+    cum = 0
+    for d, t, idx in sorted(rows):
+        assert idx == cum // budget, f"{d}: {idx} != {cum // budget}"
+        cum += t
+
+
 def test_pack_shards_checkpoint_with_nondeterministic_lineage(spark):
-    """Functional coverage of the checkpoint=True path: the materialized
-    bucketed frame still yields the exact sequential packing. (An unseeded
-    sample() fixes its seed at plan creation, so this cannot prove branch
-    divergence would occur without the checkpoint — true run-to-run
-    nondeterminism isn't reproducible in a unit test; the checkpoint's
-    single-materialization guarantee is what this pins.)"""
+    """An unseeded sample() input packs exactly: the pinned bucketed frame
+    is the one materialization both branches read."""
     from pdftableextractor_spark.operators.sampling import pack_shards
 
     docs = (
@@ -701,21 +713,16 @@ def test_pack_shards_checkpoint_with_nondeterministic_lineage(spark):
         )
         .sample(0.5)  # unseeded — lineage nondeterministic by design
     )
-    out = pack_shards(
-        docs, budget_tokens=9_000, num_buckets=6, checkpoint=True
-    ).collect()
-    rows = sorted((r["doc_id"], r["n_tokens"], r["shard_idx"]) for r in out)
-    cum = 0
-    for d, t, idx in rows:
-        assert idx == cum // 9_000, f"{d}: {idx} != {cum // 9000}"
-        cum += t
+    out = pack_shards(docs, budget_tokens=9_000, num_buckets=6).collect()
+    _assert_greedy_packing(
+        [(r["doc_id"], r["n_tokens"], r["shard_idx"]) for r in out], 9_000
+    )
 
 
 def test_pack_shards_auto_checkpoints_nondeterministic_lineage(spark):
-    """checkpoint=None (the default) must auto-materialize when the input
-    plan carries a nondeterministic expression — the silent mis-shard
-    failure mode needed an explicit checkpoint=True before — and must NOT
-    pay the materialization for a deterministic lineage."""
+    """Every input is pinned, whatever its lineage — a nondeterministic
+    expression (rand), an un-ordered limit, a sample, a round-robin or a
+    hash repartition — and each packs exactly."""
     from pdftableextractor_spark.operators.sampling import pack_shards
 
     base = spark.range(500).select(
@@ -723,39 +730,46 @@ def test_pack_shards_auto_checkpoints_nondeterministic_lineage(spark):
         F.lit("g").alias("source"),
         (50 + (F.col("id") * 13) % 200).cast("bigint").alias("n_tokens"),
     )
-    nd = base.withColumn("r", F.rand()).filter(F.col("r") >= -1).drop("r")
-    out = pack_shards(nd, budget_tokens=9_000, num_buckets=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan, "nondeterministic input not checkpointed"
-    rows = sorted(
-        (r["doc_id"], r["n_tokens"], r["shard_idx"]) for r in out.collect()
-    )
-    cum = 0
-    for d, t, idx in rows:
-        assert idx == cum // 9_000
-        cum += t
-    det_plan = (
-        pack_shards(base, budget_tokens=9_000, num_buckets=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ExistingRDD" not in det_plan, "deterministic input checkpointed"
-    # ORDER-nondeterministic operators report deterministic=True at the
-    # expression level yet must still checkpoint: un-ordered limit,
-    # sample, round-robin repartition. Hash repartition is deterministic.
-    for nd in (base.limit(400), base.sample(0.9), base.repartition(3)):
-        plan = (
-            pack_shards(nd, budget_tokens=9_000, num_buckets=4)
-            ._jdf.queryExecution().executedPlan().toString()
+    for inp in (
+        base.withColumn("r", F.rand()).filter(F.col("r") >= -1).drop("r"),
+        base.limit(400),
+        base.sample(0.9),
+        base.repartition(3),
+        base.repartition(3, "doc_id"),
+    ):
+        out = pack_shards(inp, budget_tokens=9_000, num_buckets=4)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" in plan, "bucketed frame not pinned"
+        _assert_greedy_packing(
+            [(r["doc_id"], r["n_tokens"], r["shard_idx"])
+             for r in out.collect()],
+            9_000,
         )
-        assert "ExistingRDD" in plan, "order-nondeterministic input missed"
-    hash_plan = (
-        pack_shards(
-            base.repartition(3, "doc_id"), budget_tokens=9_000,
-            num_buckets=4,
-        )
-        ._jdf.queryExecution().executedPlan().toString()
+
+
+def test_pack_shards_wide_input_keeps_every_row(spark):
+    """A column the totals branch prunes used to split the bucketed
+    lineage into two range exchanges with separately sampled bounds, which
+    mis-sharded or dropped rows. 100k rows in one group with a
+    non-constant payload column must equal the sequential greedy packing,
+    every row kept."""
+    from pdftableextractor_spark.operators.sampling import pack_shards
+
+    docs = spark.range(100_000).select(
+        F.format_string("d%07d", F.col("id")).alias("doc_id"),
+        F.lit("onegroup").alias("source"),
+        (100 + (F.col("id") * 37) % 400).cast("bigint").alias("n_tokens"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
     )
-    assert "ExistingRDD" not in hash_plan, "hash repartition checkpointed"
+    # collect whole rows: the main branch must carry the payload
+    got = [
+        (r["doc_id"], r["n_tokens"], r["shard_idx"])
+        for r in pack_shards(
+            docs, budget_tokens=50_000, num_buckets=8
+        ).collect()
+    ]
+    assert len(got) == 100_000
+    _assert_greedy_packing(got, 50_000)
 
 
 def test_fuzzy_decontaminate_graded_vs_exact(spark):

@@ -1168,6 +1168,8 @@ def test_curate_funnel_html_and_tokenize_end_to_end(tmp_path):
 
     rows = pq.read_table(f"{out}/clean").to_pylist()
     assert rows
+    # every doc that survives the last gate is written
+    assert len(rows) == summary["after_lang"]
     assert all("bpe_n_tokens" in r and r["bpe_n_tokens"] > 0 for r in rows)
     joined = " ".join(r["text"] for r in rows)
     # the boilerplate wrapper died in stage 0
@@ -1568,7 +1570,7 @@ def test_curate_funnel_dsir_select_end_to_end(tmp_path):
     assert summary["after_dsir_select"] == 10
 
     got = pq.read_table(f"{out}/clean").to_pylist()
-    assert len(got) == 10
+    assert len(got) == summary["after_dsir_select"] == 10
     # target rows never compete for selection
     assert not any(str(r["doc_id"]).startswith("dsir-tgt:") for r in got)
     # at T=0.25 the vocab gap is tens of nats: only alpha-vocab survives
