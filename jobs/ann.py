@@ -134,14 +134,20 @@ def main() -> None:
 
     args = p.parse_args()
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from pdftableextractor_spark.operators.similarity import (
+        append_to_ivf_index,
         build_ivf_index,
+        build_sq8_index,
+        ivf_drift_report,
         ivf_topk_indexed,
+        ivf_topk_indexed_batch,
+        sq8_topk_indexed,
     )
     from pdftableextractor_spark.session import build_session
-    from pdftableextractor_spark.sources.tables import read_path
+    from pdftableextractor_spark.sources.tables import read_path, write_table
 
     spark = build_session(app_name=f"ann-{args.cmd}", master=args.master)
     t0 = time.time()
@@ -151,11 +157,26 @@ def main() -> None:
             "vec_id", "embedding"
         )
 
-    if args.cmd == "check":
-        from pdftableextractor_spark.operators.similarity import (
-            build_ivf_index,
-            ivf_drift_report,
+    def emit(cmd, **fields):
+        print(
+            json.dumps(
+                {"cmd": cmd, **fields, "sec": round(time.time() - t0, 3)}
+            )
         )
+
+    def query_vec():
+        rows = emb.filter(F.col("vec_id") == args.query_id).collect()
+        if not rows:
+            raise SystemExit(
+                f"query id {args.query_id} not found in "
+                f"{args.input}/embeddings.parquet"
+            )
+        return rows[0]["embedding"]
+
+    def hits(df):
+        return [{"vec_id": r["vec_id"], "cos": r["cos"]} for r in df.collect()]
+
+    if args.cmd == "check":
 
         def _jsonable(rep):
             # max_over_median is inf for the collapsed-median degenerate
@@ -180,146 +201,53 @@ def main() -> None:
                     spark, args.index, max_over_median=args.max_over_median
                 ),
             }
-        print(
-            json.dumps(
-                {
-                    "cmd": "check",
-                    **_jsonable(report),
-                    "rebuilt": rebuilt,
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
-        )
-        spark.stop()
-        return
-
-    if args.cmd == "build":
-        build_ivf_index(emb, args.index, k=args.k, iters=args.iters)
-        n = read_path(spark, f"{args.index}/vectors").count()
-        print(
-            json.dumps(
-                {
-                    "cmd": "build",
-                    "vectors": n,
-                    "k": args.k,
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
-        )
+        emit("check", **_jsonable(report), rebuilt=rebuilt)
+    elif args.cmd == "build":
+        n = build_ivf_index(emb, args.index, k=args.k, iters=args.iters)
+        emit("build", vectors=n, k=args.k)
     elif args.cmd == "append":
-        from pdftableextractor_spark.operators.similarity import (
-            append_to_ivf_index,
-        )
-
-        n = append_to_ivf_index(spark, emb, args.index)
-        print(
-            json.dumps(
-                {
-                    "cmd": "append",
-                    "appended": n,
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
-        )
+        emit("append", appended=append_to_ivf_index(spark, emb, args.index))
     elif args.cmd == "sq8-build":
-        from pdftableextractor_spark.operators.similarity import (
-            build_sq8_index,
-        )
-
-        build_sq8_index(emb, args.index)
-        n = read_path(spark, f"{args.index}/codes").count()
-        print(
-            json.dumps(
-                {
-                    "cmd": "sq8-build",
-                    "codes": n,
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
-        )
+        emit("sq8-build", codes=build_sq8_index(emb, args.index))
     elif args.cmd == "sq8-query":
-        from pdftableextractor_spark.operators.similarity import (
-            sq8_topk_indexed,
+        top = sq8_topk_indexed(
+            spark, args.index, query_vec(), k=args.topk, rerank=args.rerank
         )
-
-        qrows = emb.filter(F.col("vec_id") == args.query_id).collect()
-        if not qrows:
-            raise SystemExit(
-                f"query id {args.query_id} not found in "
-                f"{args.input}/embeddings.parquet"
-            )
-        hits = sq8_topk_indexed(
-            spark,
-            args.index,
-            qrows[0]["embedding"],
-            k=args.topk,
+        emit(
+            "sq8-query",
+            query_id=args.query_id,
+            topk=args.topk,
             rerank=args.rerank,
-        ).collect()
-        print(
-            json.dumps(
-                {
-                    "cmd": "sq8-query",
-                    "query_id": args.query_id,
-                    "topk": args.topk,
-                    "rerank": args.rerank,
-                    "hits": [
-                        {"vec_id": r["vec_id"], "cos": r["cos"]}
-                        for r in hits
-                    ],
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
+            hits=hits(top),
         )
     elif args.query_table:
         if not args.output:
             raise SystemExit("--query-table requires --output")
-        from pdftableextractor_spark.operators.similarity import (
-            ivf_topk_indexed_batch,
-        )
-        from pdftableextractor_spark.sources.tables import write_table
-
         queries = read_path(spark, args.query_table).select(
             F.col("vec_id").alias("qid"), "embedding"
         )
         out = ivf_topk_indexed_batch(
             spark, queries, args.index, k=args.topk, nprobe=args.nprobe
         )
-        write_table(out, args.output, mode="overwrite")
-        n = read_path(spark, args.output).count()
-        print(
-            json.dumps(
-                {
-                    "cmd": "query",
-                    "mode": "batch",
-                    "rows_out": n,
-                    "topk": args.topk,
-                    "nprobe": args.nprobe,
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
+        # rows_out rides the write: no job re-reads the output
+        written = Observation()
+        write_table(
+            out.observe(written, F.count(F.lit(1)).alias("n")),
+            args.output,
+            mode="overwrite",
+        )
+        emit(
+            "query",
+            mode="batch",
+            rows_out=written.get["n"],
+            topk=args.topk,
+            nprobe=args.nprobe,
         )
     else:
-        qrows = emb.filter(F.col("vec_id") == args.query_id).collect()
-        if not qrows:
-            raise SystemExit(
-                f"query id {args.query_id} not found in {args.input}/embeddings.parquet"
-            )
-        qvec = qrows[0]["embedding"]
-        hits = ivf_topk_indexed(
-            spark, args.index, qvec, k=args.topk, nprobe=args.nprobe
-        ).collect()
-        print(
-            json.dumps(
-                {
-                    "cmd": "query",
-                    "query_id": args.query_id,
-                    "hits": [
-                        {"vec_id": r["vec_id"], "cos": r["cos"]} for r in hits
-                    ],
-                    "sec": round(time.time() - t0, 3),
-                }
-            )
+        top = ivf_topk_indexed(
+            spark, args.index, query_vec(), k=args.topk, nprobe=args.nprobe
         )
+        emit("query", query_id=args.query_id, hits=hits(top))
     spark.stop()
 
 

@@ -255,7 +255,6 @@ def main() -> None:
     docs = read_path(spark, f"{args.input}/documents.parquet").withColumn(
         "doc_id", F.col("doc_id").cast("string")
     )
-    n0 = docs.count()
 
     # The funnel rule. A row-local stage adds columns with one projection,
     # never a self-join. A gate is a (funnel name, condition) pair in
@@ -291,10 +290,13 @@ def main() -> None:
         )
         return pinned.drop(*[c for c in pinned.columns if c.startswith("__")])
 
-    stages = []
+    # the input count leads the first pin's stages, except where the raw
+    # input is read twice (html extraction and the join back): one count
+    n0, stages = None, [("input_docs", None)]
     if args.html_extract:
         from pdftableextractor_spark.operators.html import extract_main_text
 
+        n0 = docs.count()
         main = extract_main_text(
             docs.select("doc_id", F.col("text").alias("html")),
             html_col="html",
@@ -302,7 +304,7 @@ def main() -> None:
         # inner join: a doc whose every block classified boilerplate has
         # no main-content row and drops here (nothing left to train on)
         docs = docs.drop("text").join(main, "doc_id")
-        stages.append(("after_html_extract", None))
+        stages = [("after_html_extract", None)]
 
     # exact dedup keeps the lowest doc_id per md5(text). Pinned: the
     # near-dup stage reads it twice (signatures/verify, the anti-join)
@@ -551,7 +553,7 @@ def main() -> None:
     )
     counts = {k: v for o in observed for k, v in o.get.items()}
     summary = {
-        "input_docs": n0,
+        "input_docs": counts.get("input_docs", n0),
         **{
             k: counts[k]
             for k in (

@@ -519,19 +519,17 @@ def embedding_near_dups_unlabeled(
     n_probe rows per vector through the blocked join — still O(n²·p²/k),
     never all-pairs; duplicate candidates from shared cells dedup with one
     distinct over the (pair, cos) rows."""
-    from pdftableextractor_spark.kernels.vectors import nearest_centroids_udf
-    from pdftableextractor_spark.operators.similarity import kmeans_centroids
+    from pdftableextractor_spark.operators.similarity import (
+        _probed,
+        kmeans_centroids,
+    )
 
     cents = kmeans_centroids(
         embeddings, k=k, iters=iters,
         fit_sample_per_cell=fit_sample_per_cell,
     )
-    probed = embeddings.select(
-        "vec_id",
-        "embedding",
-        F.explode(
-            nearest_centroids_udf(cents, n_probe)(F.col("embedding"))
-        ).alias("cell"),
+    probed = _probed(
+        embeddings, cents, n_probe, "vec_id", "embedding"
     ).withColumn("cell", F.col("cell").cast("string"))
     return embedding_near_dups(
         probed, block_col="cell", threshold=threshold
@@ -1490,9 +1488,6 @@ def semantic_dedup_incremental(
     n_probe: int | None = 2,
     iters: int = 3,
     id_col: str = "vec_id",
-    index_nprobe: int = 2,
-    corpus_n_cells: int | None = None,
-    corpus_cell_salt: int = 1,
 ) -> DataFrame:
     """Incremental SemDeDup — the production cadence where embedding
     batches arrive against a standing corpus (the semantic analog of
@@ -1524,9 +1519,9 @@ def semantic_dedup_incremental(
     DataFrame old-side probe is exact too — top-1 is the true max
     cosine, so "top-1 >= τ" == "any old neighbor >= τ" (the oracle
     formulation). Exact mode is blocked brute force — O(batch²) within
-    the batch — so reserve it for oracle parity or small batches. The
-    index path approximates with ``index_nprobe`` cells — the 100 TB
-    cadence."""
+    the batch — so reserve it for oracle parity or small batches. On the
+    index path ``n_probe`` is the number of stored cells each batch
+    vector probes (None: every cell) — the 100 TB cadence."""
     from pdftableextractor_spark.operators.similarity import (
         ivf_topk_indexed_batch,
         knn_join_between,
@@ -1559,15 +1554,14 @@ def semantic_dedup_incremental(
             "keep",
         )
     if isinstance(old, str):
-        spark = new_embeddings.sparkSession
         nn_old = ivf_topk_indexed_batch(
-            spark,
+            new_embeddings.sparkSession,
             new_embeddings.select(
                 F.col(id_col).alias("qid"), F.col("embedding")
             ),
             old,
             k=1,
-            nprobe=index_nprobe,
+            nprobe=n_probe,
             exclude_self=True,
         )
     else:
@@ -1575,15 +1569,11 @@ def semantic_dedup_incremental(
             new_embeddings,
             old,
             k=1,
-            # the STANDING corpus defines this fit's cell geometry — size
-            # it for the corpus (cells that fit an executor), not for the
-            # batch; corpus_cell_salt splits fat cells (result-identical)
-            n_cells=corpus_n_cells or n_cells,
+            n_cells=n_cells,
             n_probe=n_probe,
             iters=iters,
             id_col=id_col,
             exclude_self=True,
-            cell_salt=corpus_cell_salt,
         )
     flagged = (
         nn_old.filter(F.col("cos") >= threshold)

@@ -1,15 +1,25 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search and k-NN over an embedding column (array<float>).
 
-Three paths, same result contract (vec_id, cos):
+  top-k of one query vector, contract (vec_id, cos rounded to 6):
+    cosine_topk   exact brute force — the correctness baseline;
+    lsh_topk      multi-table random-hyperplane LSH candidates;
+    ivf_topk      rank label cells by centroid cosine, probe ``nprobe``;
+    sq8_topk      SQ8 integer-dot candidates, exact rerank.
+  k-means:        centroid_mean (Arrow partial sums), kmeans_centroids /
+                  kmeans_cells (deterministic Lloyd, sampled fit).
+  k-NN join:      knn_join / knn_join_between — every query's top-k,
+                  contract (qid, vec_id, cos, rnk).
+  persisted IVF:  build_ivf_index, ivf_topk_indexed (one query),
+                  ivf_topk_indexed_batch (a frame of queries),
+                  append_to_ivf_index, ivf_cell_stats, ivf_drift_report.
+  persisted SQ8:  build_sq8_index, sq8_topk_indexed.
 
-  cosine_topk   brute-force exact top-k — the correctness baseline; one scan,
-                one ordered limit (Spark runs TakeOrderedAndProject: per-
-                partition heaps, no full sort shuffle).
-  lsh_topk      random-hyperplane LSH, multi-table: brute-force the union of
-                the query's sign buckets across n_tables hyperplane sets
-                (~n_tables/2^n_planes of a uniform corpus).
-  ivf_topk      coarse inverted-file search: rank cells by centroid cosine,
-                probe the top ``nprobe`` cells, brute-force inside.
+Shared steps are written once: ``_rank_by_cos`` (the exact ordered-limit
+tail), ``_top_cells`` (cells ranked by centroid cosine), ``_probed``
+(multi-probe cell assignment), ``_cell_knn`` (the cell-blocked cogroup and
+per-query top-k), ``_validated_index`` (opening an IVF index),
+``_probed_vectors`` (the probed partitions, stamp-checked) and
+``_fingerprint`` (the content part of a build stamp).
 
 All cosine/bucket math runs in the Arrow-batched numpy kernels
 (kernels/vectors.py): one BLAS matmul per batch instead of per-row
@@ -26,19 +36,66 @@ from pyspark.sql import functions as F
 from pdftableextractor_spark.kernels.vectors import cosine_to_query_udf
 
 
-def cosine_topk(
-    embeddings: DataFrame, query_vec, k: int = 10
+def _rank_by_cos(
+    cand: DataFrame,
+    query_vec,
+    k: int,
+    id_col: str = "vec_id",
+    emb_col: str = "embedding",
 ) -> DataFrame:
-    """Exact brute-force top-k by cosine; deterministic tie-break on vec_id."""
+    """The exact top-k of ``cand`` by cosine to ``query_vec``: (vec_id, cos
+    rounded to 6), ties on vec_id. One ordered limit — Spark runs it as
+    TakeOrderedAndProject (per-partition heaps, no full sort shuffle)."""
     cos = cosine_to_query_udf(query_vec)
     return (
-        embeddings.select(
-            "vec_id",
-            F.round(cos(F.col("embedding")), 6).alias("cos"),
+        cand.select(
+            F.col(id_col).alias("vec_id"),
+            F.round(cos(F.col(emb_col)), 6).alias("cos"),
         )
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(k)
     )
+
+
+def _top_cells(cents: DataFrame, query_vec, nprobe: int) -> DataFrame:
+    """The ``nprobe`` cells whose centroid is most cosine-similar to
+    ``query_vec`` (ties to the lower cell): one ``cell`` column."""
+    cos = cosine_to_query_udf(query_vec)
+    return (
+        cents.select("cell", cos(F.col("centroid")).alias("ccos"))
+        .orderBy(F.desc("ccos"), F.asc("cell"))
+        .limit(nprobe)
+        .select("cell")
+    )
+
+
+def _probed(
+    df: DataFrame,
+    cents: list,
+    n_probe: int | None,
+    *cols,
+    emb_col: str = "embedding",
+) -> DataFrame:
+    """``cols`` of ``df``, once per each of the row's ``n_probe``
+    cosine-nearest ``cents`` (None: every cell), with the cell index as an
+    int ``cell`` column — the multi-probe assignment: a vector near a cell
+    boundary is blocked into every cell its neighbors may sit in."""
+    from pdftableextractor_spark.kernels.vectors import nearest_centroids_udf
+
+    n = len(cents) if n_probe is None else n_probe
+    return df.select(
+        *cols,
+        F.explode(nearest_centroids_udf(cents, n)(F.col(emb_col))).alias(
+            "cell"
+        ),
+    )
+
+
+def cosine_topk(
+    embeddings: DataFrame, query_vec, k: int = 10
+) -> DataFrame:
+    """Exact brute-force top-k by cosine; deterministic tie-break on vec_id."""
+    return _rank_by_cos(embeddings, query_vec, k)
 
 
 def centroid_mean(
@@ -94,12 +151,6 @@ def _centroid_mean_explode(
             F.collect_list(F.struct("dim", "m"))
         ).getField("m").alias("centroid")
     )
-
-
-def ivf_centroids(embeddings: DataFrame, cell_col: str = "label") -> DataFrame:
-    """Per-cell mean vector: (cell, centroid array<double>) — the Arrow
-    partial-sum kernel path (see centroid_mean)."""
-    return centroid_mean(embeddings, cell_col=cell_col)
 
 
 def kmeans_cells(
@@ -231,21 +282,13 @@ def lsh_topk(
     vectors. One scan either way: the candidate predicate is an ANY-table
     match inside one stacked-matmul kernel, so candidates never duplicate
     and no union/distinct is needed."""
-    cos = cosine_to_query_udf(query_vec)
     from pdftableextractor_spark.kernels.vectors import lsh_multi_match_udf
 
     planes_list = lsh_planes(len(query_vec), n_planes, n_tables)
     cand = embeddings.filter(
         lsh_multi_match_udf(planes_list, query_vec)(F.col("embedding"))
     )
-    return (
-        cand.select(
-            "vec_id",
-            F.round(cos(F.col("embedding")), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _rank_by_cos(cand, query_vec, k)
 
 
 def ivf_topk(
@@ -257,26 +300,14 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k: rank cells by centroid cosine, brute-force only
     the best ``nprobe`` cells."""
-    cos = cosine_to_query_udf(query_vec)
-    cents = ivf_centroids(embeddings, cell_col)
-    probe_cells = (
-        cents.select("cell", cos(F.col("centroid")).alias("ccos"))
-        .orderBy(F.desc("ccos"), F.asc("cell"))
-        .limit(nprobe)
-        .select("cell")
+    probe_cells = _top_cells(
+        centroid_mean(embeddings, cell_col), query_vec, nprobe
     )
     cand = embeddings.join(
         F.broadcast(probe_cells),
         embeddings[cell_col] == probe_cells["cell"],
     )
-    return (
-        cand.select(
-            "vec_id",
-            F.round(cos(F.col("embedding")), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _rank_by_cos(cand, query_vec, k)
 
 
 def knn_join(
@@ -288,7 +319,6 @@ def knn_join(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     seed: int = 9,
-    cell_salt: int = 1,
     fit_sample_per_cell: int | None = 256,
 ) -> DataFrame:
     """Distributed k-NN JOIN: every vector's top-``k`` cosine neighbors in
@@ -306,14 +336,13 @@ def knn_join(
          only k×dim doubles ever reach the driver);
       2. DATA side: each vector assigned to its single nearest cell;
          QUERY side: each vector exploded to its ``n_probe`` nearest
-         cells (multi-probe — a query near a cell boundary still finds
+         cells (``_probed`` — a query near a cell boundary still finds
          neighbors across it);
-      3. cogroup both sides on cell → ``knn_block_kernel``: per cell one
-         (block × cell_size) BLAS matmul, per-query top-k within the
-         cell (stable-sort tie-break to smaller vec_id);
-      4. global per-query reduce over the ≤ n_probe·k candidates:
-         window-free — collect_list + array_sort + slice (no global sort,
-         no Window; the frame is n·n_probe·k rows of ids+doubles).
+      3. ``_cell_knn``: cogroup both sides on cell through
+         ``knn_block_kernel`` — per cell one (block × cell_size) BLAS
+         matmul, per-query top-k within the cell (stable-sort tie-break
+         to smaller vec_id) — then the window-free per-query reduce over
+         the ≤ n_probe·k candidates.
 
     ``n_probe=None`` (or >= n_cells) probes EVERY cell — the blocked
     brute-force EXACT mode, independent of the k-means fit quality; this
@@ -322,10 +351,8 @@ def knn_join(
     (see the recall test). At scale pick n_cells ~ corpus/target so a
     cell's (cell_size × dim) matrix fits an executor comfortably — the
     kernel's peak is O(1024·cell_size + cell_size·dim), flat in corpus
-    size; for a pathological k-means collapse or a genuinely dense
-    region, ``cell_salt`` splits fat cells into s sub-blocks with an
-    IDENTICAL final result (see knn_join_between) — raise iters/n_cells
-    to fix the fit, salt to fix the straggler.
+    size; a k-means collapse into one fat cell is fixed by raising
+    iters/n_cells.
 
     A 64-dim embedding at 10^12 docs with n_cells=10^6: cells ~10^6 rows
     × 64 × 8 B ≈ 0.5 GB per task — sized for a 4 GB executor; the only
@@ -342,7 +369,6 @@ def knn_join(
         emb_col=emb_col,
         seed=seed,
         exclude_self=True,
-        cell_salt=cell_salt,
         fit_sample_per_cell=fit_sample_per_cell,
     )
 
@@ -358,7 +384,6 @@ def knn_join_between(
     emb_col: str = "embedding",
     seed: int = 9,
     exclude_self: bool = False,
-    cell_salt: int = 1,
     fit_sample_per_cell: int | None = 256,
 ) -> DataFrame:
     """Two-frame k-NN join: each QUERY vector's top-``k`` neighbors among
@@ -368,37 +393,17 @@ def knn_join_between(
     the DATA side (the standing corpus defines the cell geometry; a
     small batch would fit degenerate cells); queries multi-probe into
     those cells. ``exclude_self`` masks qid == vec_id matches — the
-    re-sent-id rule when both frames share an id namespace.
+    re-sent-id rule when both frames share an id namespace."""
+    from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
-    ``cell_salt`` breaks FAT-CELL SKEW without losing exactness: a
-    k-means collapse (or a genuinely dense region) can concentrate a
-    large fraction of the corpus in one cell, making one cogroup task
-    the straggler. With cell_salt = s, each data vector lands in
-    sub-block (cell, xxhash64(id) % s) and each query row replicates to
-    all s sub-blocks of its probe cell — every sub-block contributes its
-    own top-k, and the global per-query reduce merges them, so the final
-    top-k is IDENTICAL to the unsalted result (the true k best of a cell
-    are the union of its sub-blocks' k best). Cost: query-side rows ×s
-    and reduce candidates ×s; per-task memory and wall-clock drop ×s on
-    the hot cell. Use when cell-size histograms (or straggler tasks)
-    say so; 1 (default) keeps the single-block layout."""
-    from pdftableextractor_spark.kernels.vectors import (
-        knn_block_kernel,
-        nearest_centroid_udf,
-        nearest_centroids_udf,
-    )
-
-    if n_probe is None:
-        n_probe = n_cells
-    n_probe = min(n_probe, n_cells)
-    idt = dict(data.dtypes)[id_col]
-    qidt = dict(queries.dtypes)[id_col]
     # bootstrap guard: an empty data side cannot seed a k-means fit
     # (the centroid kernels would crash on a zero-row init) — the
     # correct answer is simply "no neighbors". Costs one take(1) job.
     if data.isEmpty():
         return data.sparkSession.createDataFrame(
-            [], f"qid {qidt}, vec_id {idt}, cos double, rnk int"
+            [],
+            f"qid {dict(queries.dtypes)[id_col]}, "
+            f"vec_id {dict(data.dtypes)[id_col]}, cos double, rnk int",
         )
     cents = kmeans_centroids(
         data, k=n_cells, iters=iters, id_col=id_col, seed=seed,
@@ -409,50 +414,37 @@ def knn_join_between(
         F.col(id_col).alias("vec_id"),
         F.col(emb_col).alias("embedding"),
     )
-    qry = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(emb_col).alias("qemb"),
-        F.explode(
-            nearest_centroids_udf(cents, n_probe)(F.col(emb_col))
-        ).alias("cell"),
+    qry = _probed(
+        queries, cents, n_probe,
+        F.col(id_col).alias("qid"), F.col(emb_col).alias("qemb"),
+        emb_col=emb_col,
     )
-    if cell_salt > 1:
-        d = d.withColumn(
-            "cell",
-            F.col("cell") * cell_salt
-            + F.pmod(
-                F.xxhash64(F.col("vec_id").cast("string")), cell_salt
-            ).cast("int"),
-        )
-        qry = qry.select(
-            "qid",
-            "qemb",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(cell_salt - 1)),
-                    lambda s: F.col("cell") * cell_salt + s,
-                )
-            ).alias("cell"),
-        )
-    # a (qid, vec_id) pair meets in at most ONE (sub-)cell (the data side
-    # is single-assigned — salted or not; the probe cells are distinct),
-    # so no dedup is needed before the reduce
+    return _cell_knn(qry, d, k, exclude_self)
+
+
+def _cell_knn(
+    qry: DataFrame, data: DataFrame, k: int, exclude_self: bool
+) -> DataFrame:
+    """Each query's top-``k`` among the data rows of its probed cells:
+    (qid, qemb, cell) query rows cogroup with (cell, vec_id, embedding)
+    data rows on cell through ``knn_block_kernel``; then a window-free
+    per-query reduce over the ≤ n_probe·k candidates — collect_list +
+    array_sort + slice + posexplode, ranked by (cos rounded to 6 desc,
+    vec_id asc), row_number semantics, no global sort and no Window.
+    A (qid, vec_id) pair meets in at most ONE cell (the data side is
+    single-assigned, the probe cells are distinct), so no dedup is needed
+    before the reduce. Output (qid, vec_id, cos, rnk)."""
+    from pdftableextractor_spark.kernels.vectors import knn_block_kernel
+
     cand = (
         qry.groupBy("cell")
-        .cogroup(d.groupBy("cell"))
+        .cogroup(data.groupBy("cell"))
         .applyInPandas(
             knn_block_kernel(k, exclude_self=exclude_self),
-            schema=f"qid {qidt}, vec_id {idt}, cos double",
+            schema=f"qid {dict(qry.dtypes)['qid']}, "
+            f"vec_id {dict(data.dtypes)['vec_id']}, cos double",
         )
     )
-    return _knn_reduce(cand, k)
-
-
-def _knn_reduce(cand: DataFrame, k: int) -> DataFrame:
-    """Window-free per-query top-k over a (qid, vec_id, cos) candidate
-    frame (≤ n_probe·k rows per query): collect_list + array_sort +
-    slice + posexplode — ranked by (cos rounded to 6 desc, vec_id asc),
-    row_number semantics, no global sort and no Window."""
     r6 = F.round(F.col("cos"), 6)
     top = cand.groupBy("qid").agg(
         F.slice(
@@ -479,6 +471,27 @@ def _knn_reduce(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _fingerprint(embeddings: DataFrame, id_col: str) -> tuple[int, int]:
+    """(row count, content hash) of an embeddings frame in one job — the
+    deterministic part of a build stamp (no wall clock), so an idempotent
+    re-run of the SAME build converges to a consistent index. The hash
+    folds in the embedding CONTENT, not just the ids: a rebuild over
+    re-embedded vectors with identical ids must produce a DIFFERENT
+    build_id, or a crash between two writes would leave a mismatched pair
+    the query-path checks cannot see."""
+    fp = embeddings.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.expr(
+                f"bit_xor(xxhash64(cast({id_col} as string),"
+                " cast(embedding as string)))"
+            ),
+            F.lit(0),
+        ).alias("h"),
+    ).collect()[0]
+    return fp["n"], fp["h"]
+
+
 def build_ivf_index(
     embeddings: DataFrame,
     path: str,
@@ -487,7 +500,7 @@ def build_ivf_index(
     id_col: str = "vec_id",
     seed: int = 9,
     fit_sample_per_cell: int | None = 256,
-) -> None:
+) -> int:
     """Build and PERSIST an IVF index — the build-once / query-many split
     that ANN needs at corpus scale (rebuilding k-means per query, as
     ``ivf_topk`` over a raw table does, only makes sense for exploratory
@@ -499,40 +512,24 @@ def build_ivf_index(
     Partitioning the vectors by cell is the point: the query path's probe
     filter becomes a PARTITION filter, so a query reads nprobe/k of the
     index files instead of scanning the corpus. Writes go through the
-    storage-format seam (parquet here, Iceberg in production)."""
+    storage-format seam (parquet here, Iceberg in production). Returns
+    the number of indexed vectors."""
+    from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
     from pdftableextractor_spark.sources.tables import write_table
 
     cents = kmeans_centroids(
         embeddings, k=k, iters=iters, id_col=id_col, seed=seed,
         fit_sample_per_cell=fit_sample_per_cell,
     )
-    spark = embeddings.sparkSession
     # consistency stamp: a rebuild that dies between the two writes would
     # otherwise leave new centroids next to the previous run's vectors and
-    # the query path would silently probe a mismatched index. The stamp is
-    # deterministic (params + a data fingerprint — no wall clock), so an
-    # idempotent re-run of the SAME build converges to a consistent pair.
-    # the fingerprint folds in the embedding CONTENT, not just the ids: a
-    # rebuild over re-embedded vectors with identical ids must produce a
-    # DIFFERENT build_id, or a crash between the two writes would leave a
-    # mismatched pair the query-path check cannot see
-    fp = embeddings.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr(
-                f"bit_xor(xxhash64(cast({id_col} as string),"
-                " cast(embedding as string)))"
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    build_id = f"k{k}-i{iters}-s{seed}-n{fp['n']}-x{fp['h']:x}"
-    cdf = spark.createDataFrame(
+    # the query path would silently probe a mismatched index
+    n, h = _fingerprint(embeddings, id_col)
+    build_id = f"k{k}-i{iters}-s{seed}-n{n}-x{h:x}"
+    cdf = embeddings.sparkSession.createDataFrame(
         [(i, c, build_id) for i, c in enumerate(cents)],
         "cell int, centroid array<double>, build_id string",
     )
-    from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
-
     assigned = embeddings.select(
         F.col(id_col).alias("vec_id"),
         "embedding",
@@ -544,6 +541,62 @@ def build_ivf_index(
     # detected rather than silently probed
     write_table(assigned, f"{path}/vectors", partition_by=["cell"])
     write_table(cdf, f"{path}/centroids")
+    return n
+
+
+def _validated_index(spark, path: str):
+    """Open a persisted IVF index with ONE job — a collect of its k
+    centroid rows — and run the O(k) consistency checks shared by every
+    index reader: the centroids carry exactly one build stamp, and the
+    stamp's encoded k equals the centroid row count. Returns
+    (centroids_df, vectors_df, build_id, centroid vectors ordered by
+    cell); the centroids are k × dim doubles, driver-small."""
+    from pdftableextractor_spark.sources.tables import read_path
+
+    cents = read_path(spark, f"{path}/centroids")
+    rows = sorted(cents.collect(), key=lambda r: r["cell"])
+    cb = {r["build_id"] for r in rows}
+    if len(cb) != 1:
+        raise ValueError(
+            f"IVF index at {path} is inconsistent (torn rebuild?): "
+            f"centroids carry builds {sorted(cb)}"
+        )
+    stamp = next(iter(cb))
+    try:
+        stamp_k = int(stamp.split("-", 1)[0][1:])
+    except (ValueError, IndexError):
+        stamp_k = -1
+    if stamp_k != len(rows):
+        raise ValueError(
+            f"IVF index at {path} is inconsistent (torn rebuild?): "
+            f"build stamp {stamp!r} does not describe a "
+            f"{len(rows)}-centroid table"
+        )
+    cent_list = [[float(x) for x in r["centroid"]] for r in rows]
+    return cents, read_path(spark, f"{path}/vectors"), stamp, cent_list
+
+
+def _probed_vectors(
+    vecs_all: DataFrame, cells: list, stamp: str, path: str
+) -> DataFrame:
+    """The index vectors of ``cells``, applied as a LITERAL isin so the
+    scan prunes partitions at planning time, after checking that the
+    probed partitions carry the centroids' build stamp. A build that died
+    after writing vectors but before centroids leaves old centroids next
+    to new vectors; the probed partitions then carry the new build_id and
+    the check trips. The distinct scans only the probed partitions — O(
+    probed cells), never the whole index. (The one blind spot — every
+    probed cell physically empty — also yields zero candidates, so
+    nothing wrong is returned.)"""
+    vecs = vecs_all.filter(F.col("cell").isin(cells))
+    vb = {r["build_id"] for r in vecs.select("build_id").distinct().collect()}
+    if vb - {stamp}:
+        raise ValueError(
+            f"IVF index at {path} is inconsistent (torn rebuild?): "
+            f"centroids build [{stamp!r}] vs probed vectors build "
+            f"{sorted(vb)}"
+        )
+    return vecs
 
 
 def ivf_topk_indexed(
@@ -559,73 +612,15 @@ def ivf_topk_indexed(
     compiles to a static partition filter — the scan plans exactly
     nprobe/k of the index partitions, no job touches the rest (a
     broadcast-join probe would need runtime DPP; a literal filter prunes at
-    planning time and is collect-O(nprobe)-ints cheap).
-
-    Torn-rebuild checks, O(nprobe) not O(index): the O(k) stamp checks
-    run in ``_validated_index``; the vectors side is validated on the
-    POST-prune frame only — the distinct below scans exactly the nprobe
-    probed partitions, never the full index. A build that died after
-    writing vectors but before centroids leaves old centroids next to
-    new vectors; the probed partitions then carry the new build_id and
-    the comparison trips. (The one blind spot — every probed cell
-    physically empty — also yields zero candidates, so nothing wrong is
-    returned.)"""
-    cos = cosine_to_query_udf(query_vec)
-    cents, vecs_all, stamp = _validated_index(spark, path)
-    cb = {stamp}
+    planning time and is collect-O(nprobe)-ints cheap). Torn-rebuild
+    checks: the O(k) stamp checks in ``_validated_index``, the probed
+    partitions' stamp in ``_probed_vectors``."""
+    cents, vecs_all, stamp, _ = _validated_index(spark, path)
     probes = [
-        int(r["cell"])
-        for r in cents.select(
-            "cell", cos(F.col("centroid")).alias("ccos")
-        )
-        .orderBy(F.desc("ccos"), F.asc("cell"))
-        .limit(nprobe)
-        .collect()
+        int(r["cell"]) for r in _top_cells(cents, query_vec, nprobe).collect()
     ]
-    vecs = vecs_all.filter(F.col("cell").isin(probes))
-    vb = {r["build_id"] for r in vecs.select("build_id").distinct().collect()}
-    if vb - cb:
-        raise ValueError(
-            f"IVF index at {path} is inconsistent (torn rebuild?): "
-            f"centroids build {sorted(cb)} vs probed vectors build "
-            f"{sorted(vb)}"
-        )
-    return (
-        vecs.select("vec_id", F.round(cos(F.col("embedding")), 6).alias("cos"))
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def _validated_index(spark, path: str):
-    """Open a persisted IVF index and run the O(k) consistency checks
-    shared by the single-query and batch paths: centroids must carry
-    exactly one build stamp, and the stamp's encoded k must equal the
-    centroid row count (see ivf_topk_indexed for the failure modes each
-    check catches). Returns (centroids_df, vectors_df, build_id)."""
-    from pdftableextractor_spark.sources.tables import read_path
-
-    cents = read_path(spark, f"{path}/centroids")
-    vecs_all = read_path(spark, f"{path}/vectors")
-    cb = {r["build_id"] for r in cents.select("build_id").distinct().collect()}
-    if len(cb) != 1:
-        raise ValueError(
-            f"IVF index at {path} is inconsistent (torn rebuild?): "
-            f"centroids carry builds {sorted(cb)}"
-        )
-    stamp = next(iter(cb))
-    try:
-        stamp_k = int(stamp.split("-", 1)[0][1:])
-    except (ValueError, IndexError):
-        stamp_k = -1
-    n_cents = cents.count()
-    if stamp_k != n_cents:
-        raise ValueError(
-            f"IVF index at {path} is inconsistent (torn rebuild?): "
-            f"build stamp {stamp!r} does not describe a "
-            f"{n_cents}-centroid table"
-        )
-    return cents, vecs_all, stamp
+    vecs = _probed_vectors(vecs_all, probes, stamp, path)
+    return _rank_by_cos(vecs, query_vec, k)
 
 
 def ivf_topk_indexed_batch(
@@ -633,15 +628,14 @@ def ivf_topk_indexed_batch(
     queries: DataFrame,
     path: str,
     k: int = 10,
-    nprobe: int = 2,
-    qid_col: str = "qid",
-    qemb_col: str = "embedding",
+    nprobe: int | None = 2,
     exclude_self: bool = False,
 ) -> DataFrame:
-    """Batch-query the persisted IVF index: a DATAFRAME of query vectors,
-    answered in ONE distributed job — the production shape for "embed a
-    new batch, find each item's neighbors in the corpus" (the per-vector
-    ``ivf_topk_indexed`` loop would launch one job per query).
+    """Batch-query the persisted IVF index: a DATAFRAME of (qid,
+    embedding) query vectors, answered in ONE distributed job — the
+    production shape for "embed a new batch, find each item's neighbors
+    in the corpus" (the per-vector ``ivf_topk_indexed`` loop would launch
+    one job per query).
 
     Output: (qid, vec_id, cos, rnk) — same contract and tie semantics as
     ``knn_join``. ``exclude_self`` defaults to False: the query table's id
@@ -650,62 +644,32 @@ def ivf_topk_indexed_batch(
     when querying the index BY its own vectors (kNN-graph over the index).
 
     Shape (the knn_join machinery pointed at a persisted index):
-      1. open + validate the index (the O(k) stamp checks);
+      1. open + validate the index (``_validated_index``, one job);
       2. assign every query to its ``nprobe`` nearest stored centroids
-         (Arrow matmul kernel), explode, and eagerly localCheckpoint the
-         assigned frame — it is read twice (probe-set collect + cogroup)
-         and the query batch is small next to the corpus;
-      3. collect the batch's DISTINCT probed cells (≤ k ints) and apply
-         them as a LITERAL isin filter, so the vectors scan partition-
-         prunes exactly like the single-query path — a small batch reads
-         only the cells it probes, never the whole index;
-      4. validate the probed partitions' build stamp (same torn-rebuild
-         check, still O(probed partitions));
-      5. cogroup queries × probed vectors on cell through
-         ``knn_block_kernel`` (one BLAS matmul per 1024-query block),
-         then the window-free per-query top-k reduce.
+         (``_probed``; None probes every cell) and eagerly
+         localCheckpoint the assigned frame — it is read twice (probe-set
+         collect + cogroup) and the query batch is small next to the
+         corpus;
+      3. collect the batch's DISTINCT probed cells (≤ k ints) and read
+         only those partitions, stamp-checked (``_probed_vectors``) — a
+         small batch reads only the cells it probes, never the whole
+         index;
+      4. ``_cell_knn``: cogroup queries × probed vectors on cell, then
+         the window-free per-query top-k reduce.
     """
-    from pdftableextractor_spark.kernels.vectors import (
-        knn_block_kernel,
-        nearest_centroids_udf,
-    )
-
-    cents, vecs_all, stamp = _validated_index(spark, path)
-    cent_rows = cents.orderBy("cell").collect()  # k × dim, driver-small
-    cent_list = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    idt = dict(vecs_all.dtypes)["vec_id"]
-    qry = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.col(qemb_col).alias("qemb"),
-        F.explode(
-            nearest_centroids_udf(cent_list, nprobe)(F.col(qemb_col))
-        ).alias("cell"),
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-        # dedup.containment_pairs (shared by every localCheckpoint here)
+    cents, vecs_all, stamp, cent_list = _validated_index(spark, path)
+    # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
+    # dedup.containment_pairs (shared by every localCheckpoint here)
+    qry = _probed(
+        queries, cent_list, nprobe, "qid", F.col("embedding").alias("qemb")
     ).localCheckpoint(eager=True)
     probed = sorted(
         int(r["cell"]) for r in qry.select("cell").distinct().collect()
     )
-    vecs = vecs_all.filter(F.col("cell").isin(probed))
-    vb = {r["build_id"] for r in vecs.select("build_id").distinct().collect()}
-    if vb - {stamp}:
-        raise ValueError(
-            f"IVF index at {path} is inconsistent (torn rebuild?): "
-            f"centroids build [{stamp!r}] vs probed vectors build "
-            f"{sorted(vb)}"
-        )
-    cand = (
-        qry.groupBy("cell")
-        .cogroup(
-            vecs.select("cell", "vec_id", "embedding").groupBy("cell")
-        )
-        .applyInPandas(
-            knn_block_kernel(k, exclude_self=exclude_self),
-            schema=f"qid {dict(qry.dtypes)['qid']}, vec_id {idt}, "
-            "cos double",
-        )
+    vecs = _probed_vectors(vecs_all, probed, stamp, path)
+    return _cell_knn(
+        qry, vecs.select("cell", "vec_id", "embedding"), k, exclude_self
     )
-    return _knn_reduce(cand, k)
 
 
 def append_to_ivf_index(
@@ -728,8 +692,9 @@ def append_to_ivf_index(
     existing build; when drift from the original fit matters (the cell
     geometry slowly stops matching the data), rebuild with
     ``build_ivf_index``, which stamps a NEW content-sensitive build_id.
-    Returns the number of appended rows. O(batch) work; the standing
-    index is never rescanned.
+    Returns the number of appended rows, counted by an Observation on the
+    write itself — exactly the rows that landed, with no second pass over
+    the batch. O(batch) work; the standing index is never rescanned.
 
     APPEND-ONLY semantics: a vec_id already present in the index gains a
     SECOND row (parquet partitions can't replace in place without an
@@ -738,27 +703,25 @@ def append_to_ivf_index(
     of ``semantic_dedup_incremental`` (re-sent ids there are identical
     content, so the duplicate row is at worst a redundant candidate).
     For strict replace semantics, rebuild."""
+    from pyspark.sql import Observation
+
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
     from pdftableextractor_spark.sources.tables import write_table
 
-    cents, _vecs_all, stamp = _validated_index(spark, path)
-    cent_rows = cents.orderBy("cell").collect()  # k x dim, driver-small
-    cent_list = [[float(x) for x in r["centroid"]] for r in cent_rows]
-    assigned = new_embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        "embedding",
-        nearest_centroid_udf(cent_list)(F.col("embedding")).alias("cell"),
-        F.lit(stamp).alias("build_id"),
-    ).localCheckpoint(eager=True)
-    # one materialization feeds both the count and the write — without it
-    # the centroid-assignment pass (and input scan) runs twice, and a
-    # nondeterministic input lineage could make the reported count
-    # diverge from what was actually appended
-    n = assigned.count()
+    _cents, _vecs_all, stamp, cent_list = _validated_index(spark, path)
+    appended = Observation()
     write_table(
-        assigned, f"{path}/vectors", mode="append", partition_by=["cell"]
+        new_embeddings.select(
+            F.col(id_col).alias("vec_id"),
+            "embedding",
+            nearest_centroid_udf(cent_list)(F.col("embedding")).alias("cell"),
+            F.lit(stamp).alias("build_id"),
+        ).observe(appended, F.count(F.lit(1)).alias("n")),
+        f"{path}/vectors",
+        mode="append",
+        partition_by=["cell"],
     )
-    return n
+    return appended.get["n"]
 
 
 def ivf_cell_stats(spark, path: str) -> DataFrame:
@@ -771,7 +734,7 @@ def ivf_cell_stats(spark, path: str) -> DataFrame:
     the count scan projects zero data columns — at 100 TB this reads
     parquet footers/row-group metadata per partition, never embedding
     bytes. The result is k rows (driver-small by construction)."""
-    cents, vecs_all, _stamp = _validated_index(spark, path)
+    cents, vecs_all, _stamp, _ = _validated_index(spark, path)
     return _cell_stats_frame(cents, vecs_all)
 
 
@@ -815,7 +778,7 @@ def ivf_drift_report(
     centroids and stamps a new content-sensitive build_id, so the
     torn-rebuild checks stay sound across the refit. O(k) driver
     state; the counting scan is metadata-cheap (see ivf_cell_stats)."""
-    cents, vecs_all, stamp = _validated_index(spark, path)
+    cents, vecs_all, stamp, _ = _validated_index(spark, path)
     stats = _cell_stats_frame(cents, vecs_all)
     row = stats.agg(
         F.sum("n_vectors").alias("total"),
@@ -956,22 +919,14 @@ def sq8_topk(
         .orderBy(F.desc("__adot"), F.asc(id_col))
         .limit(k * rerank)
     )
-    cos = cosine_to_query_udf(query_vec)
-    return (
-        cand.select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cos(F.col(emb_col)), 6).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _rank_by_cos(cand, query_vec, k, id_col, emb_col)
 
 
 def build_sq8_index(
     embeddings: DataFrame,
     path: str,
     id_col: str = "vec_id",
-) -> None:
+) -> int:
     """Build and PERSIST an SQ8 index — the build-once / query-many split
     for the compressed-scan ANN path (``sq8_topk`` refits the scale and
     rescans float32 per query; production quantizes once):
@@ -988,7 +943,8 @@ def build_sq8_index(
     scan/fetch tables are written BEFORE meta, and the query path
     validates the stamps it actually touches (candidates + fetched
     rows, O(rerank·k)) against meta's, so a build that died between
-    writes is detected rather than silently served."""
+    writes is detected rather than silently served. Returns the number of
+    indexed vectors."""
     from pdftableextractor_spark.sources.tables import write_table
 
     spark = embeddings.sparkSession
@@ -996,22 +952,13 @@ def build_sq8_index(
     # vectors write, codes write) — round-7, ADVICE: a nondeterministic
     # input lineage could otherwise persist codes inconsistent with
     # vectors/scale under one build_id, which the torn-rebuild stamps
-    # cannot detect (the append_to_ivf_index precedent). Also saves three
+    # cannot detect. Also saves three
     # lineage recomputes. Executor-loss caveat: see the FAULT-TOLERANCE
     # TRADE note on dedup.containment_pairs.
     embeddings = embeddings.localCheckpoint(eager=True)
     scale = sq8_scale(embeddings)
-    fp = embeddings.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr(
-                f"bit_xor(xxhash64(cast({id_col} as string),"
-                " cast(embedding as string)))"
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    build_id = f"sq8-n{fp['n']}-x{fp['h']:x}"
+    n, h = _fingerprint(embeddings, id_col)
+    build_id = f"sq8-n{n}-x{h:x}"
     write_table(
         embeddings.select(
             F.col(id_col).alias("vec_id"),
@@ -1034,6 +981,7 @@ def build_sq8_index(
         ),
         f"{path}/meta",
     )
+    return n
 
 
 def sq8_topk_indexed(

@@ -173,7 +173,6 @@ def stream_semantic_ingest(
     n_cells: int = 8,
     n_probe: int | None = 2,
     iters: int = 2,
-    corpus_n_cells: int | None = None,
     available_now: bool = True,
     max_files_per_trigger: int = 1,
 ):
@@ -192,8 +191,8 @@ def stream_semantic_ingest(
          partition overwrite → replay REPLACES, never duplicates.
 
     Scale note: the DataFrame probe re-fits k-means on the standing
-    corpus each batch (size the fit with ``corpus_n_cells``) — right for
-    a corpus that fits the cluster comfortably. When the corpus outgrows
+    corpus each batch — right for a corpus that fits the cluster
+    comfortably. When the corpus outgrows
     per-batch fits, run the same cadence as batch jobs instead: maintain
     a persisted IVF index, probe with ``ivf_topk_indexed_batch``
     (O(batch) work), and grow it with ``append_to_ivf_index`` — the
@@ -232,7 +231,6 @@ def stream_semantic_ingest(
             n_cells=n_cells,
             n_probe=n_probe,
             iters=iters,
-            corpus_n_cells=corpus_n_cells,
         )
         survivors = batch.join(
             sd.filter(F.col("keep")).select("vec_id"), "vec_id", "left_semi"

@@ -329,6 +329,65 @@ def _jobs_started(spark, build):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _index_read_jobs(spark, idx):
+    """Jobs that reading an IVF index's two tables starts by itself (the
+    parquet schema inference)."""
+    return _jobs_started(
+        spark,
+        lambda: [
+            spark.read.parquet(f"{idx}/{t}") for t in ("centroids", "vectors")
+        ],
+    )[1]
+
+
+def test_ivf_index_opens_in_one_job(spark, tmp_path):
+    """Opening a persisted IVF index starts exactly one job beyond reading
+    its tables: the collect of its k centroid rows gives the stamp set,
+    the row count and the centroid vectors."""
+    from pdftableextractor_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_cell_stats,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(emb.select("vec_id", "embedding"), idx, k=4, iters=1)
+    _, jobs = _jobs_started(spark, lambda: ivf_cell_stats(spark, idx))
+    assert jobs == _index_read_jobs(spark, idx) + 1, jobs
+
+
+def test_append_to_ivf_index_pins_nothing(spark, tmp_path, monkeypatch):
+    """append_to_ivf_index pins no frame, and the count it returns is the
+    number of rows its one write appended (an Observation on the write):
+    beyond reading the index tables, opening the index and the write are
+    its only jobs."""
+    from pdftableextractor_spark.operators.similarity import (
+        append_to_ivf_index,
+        build_ivf_index,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(emb.filter(F.col("vec_id") < 400), idx, k=4, iters=1)
+
+    def no_pin(self, *args, **kwargs):
+        raise AssertionError("append_to_ivf_index pinned a frame")
+
+    monkeypatch.setattr(type(emb), "localCheckpoint", no_pin)
+    n, jobs = _jobs_started(
+        spark,
+        lambda: append_to_ivf_index(
+            spark, emb.filter(F.col("vec_id") >= 400), idx
+        ),
+    )
+    monkeypatch.undo()
+    assert n == 100, n
+    assert spark.read.parquet(f"{idx}/vectors").count() == 400 + n
+    assert jobs == _index_read_jobs(spark, idx) + 2, jobs
+
+
 def test_incremental_dedup_is_one_lazy_query(spark):
     """Building minhash_near_dups_incremental starts no Spark job, and its
     physical plan reads no pinned (checkpointed) frame."""

@@ -542,35 +542,10 @@ def test_semantic_dedup_incremental_planted(spark):
         r["vec_id"]: (r["component"], r["near_old"], r["keep"])
         for r in semantic_dedup_incremental(
             new, idx, threshold=0.9, k=2, n_cells=3, n_probe=None,
-            iters=2, index_nprobe=3,
+            iters=2,
         ).collect()
     }
     assert out_idx == out
-
-
-def test_knn_join_cell_salt_identical_results(spark):
-    """cell_salt splits fat cells into sub-blocks; the merged result must
-    be IDENTICAL to the unsalted join (each sub-block contributes its own
-    top-k; the global reduce keeps the true k best) — in both exact and
-    approximate modes, including rank order."""
-    from pdftableextractor_spark.operators.similarity import knn_join
-
-    emb = _clustered_embeddings(spark, n_clusters=5, per_cluster=30)
-    for n_probe in (None, 2):
-        base = {
-            (r["qid"], r["vec_id"], r["cos"], r["rnk"])
-            for r in knn_join(
-                emb, k=4, n_cells=5, n_probe=n_probe, iters=2
-            ).collect()
-        }
-        salted = {
-            (r["qid"], r["vec_id"], r["cos"], r["rnk"])
-            for r in knn_join(
-                emb, k=4, n_cells=5, n_probe=n_probe, iters=2,
-                cell_salt=4,
-            ).collect()
-        }
-        assert salted == base, f"salted result diverged (n_probe={n_probe})"
 
 
 def test_image_near_dups_perceptual(spark):
@@ -881,7 +856,7 @@ def test_append_to_ivf_index_cadence(spark, tmp_path):
 
     kept = semantic_dedup_incremental(
         batch, idx, threshold=0.35, k=3, n_cells=8, n_probe=None,
-        iters=2, index_nprobe=8,
+        iters=2,
     ).filter(F.col("keep"))
     keep_ids = {r["vec_id"] for r in kept.collect()}
     n = append_to_ivf_index(
