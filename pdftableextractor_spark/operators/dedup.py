@@ -21,6 +21,16 @@ Operators:
   minhash_near_dups_incremental  new batch vs standing corpus via the
                          persisted signature store (write/read_signature_store)
   embedding_near_dups    cosine near-dup pairs within a blocking key
+  duplicate_ngram_spans  n-token windows shared by >= min_docs documents
+  mask_duplicate_spans   cut the tokens those spans cover, keep the document
+  containment_pairs      |A∩B| / min(|A|, |B|) pairs via a prefix-filter join
+  ngram_decontaminate    drop docs sharing ANY n-gram with a benchmark
+  fuzzy_decontaminate    drop docs containing most of a benchmark doc
+
+Every n-gram operator builds its grams from two column primitives:
+``tokens_col`` (the token spec with empty tokens dropped; the operators
+whose oracle keeps them use ``tokenize_col``) and ``_gram_structs`` (n
+shifted slices zipped, all codegen).
 
 The near-dup operators share one shape — signature → bucket self-join →
 verify → pairs — and two private skeletons hold it:
@@ -38,6 +48,20 @@ the only shuffles are the band-bucket join (keys are uniform md5 values →
 no planted skew; AQE skew-join as backstop) and the candidate-pair spread
 of the verify, which runs only on band-collision candidates, never all-pairs.
 Blocking keys bound the quadratic term for the exact-pair variants.
+
+Pins: an eager ``localCheckpoint`` materializes a frame that several plan
+branches read under different operators, where ReuseExchange cannot
+dedupe them (here: containment_pairs' shingle arrays and the
+connected-components rounds). Unlike ``persist()`` its blocks are not
+held by the CacheManager for the session's lifetime: the ContextCleaner
+releases them when the checkpointed RDD is garbage-collected, so repeated
+calls do not pile up corpus-sized caches. FAULT-TOLERANCE TRADE (every
+``localCheckpoint`` in this repo): lineage is truncated and the blocks live
+only on executors, so losing an executor (preemption, dynamic-allocation
+decommission) fails the query instead of recomputing it. Run these
+operators on reliable executors or with ``spark.decommission.enabled``
+block migration; on preemptible fleets swap in ``persist()`` plus an
+explicit ``unpersist()`` at the call site.
 """
 
 from __future__ import annotations
@@ -92,6 +116,14 @@ def tokenize_col(col):
     return F.split(F.trim(F.lower(col)), r"\s+")
 
 
+def tokens_col(col):
+    """``tokenize_col`` with its empty tokens dropped: Spark's trim strips
+    spaces only, so text that starts or ends with a tab or newline splits
+    to a leading or trailing '' the oracles (list_filter x <> '') never
+    see. The token spec of the n-gram operators whose oracle drops them."""
+    return F.array_remove(tokenize_col(col), "")
+
+
 def shingles_col(col, n: int):
     """Distinct word n-grams of the token array (sorted for set semantics)."""
     return shingles_from_tokens_col(tokenize_col(col), n)
@@ -103,10 +135,7 @@ def shingles_from_tokens_col(w, n: int):
     referenced once per slice, never once per gram."""
     if n == 1:
         return F.array_sort(F.array_distinct(w))
-    gram = F.transform(
-        _gram_structs(w, n),
-        lambda g: F.concat_ws(" ", *[g.getField(str(i)) for i in range(n)]),
-    )
+    gram = F.transform(_gram_structs(w, n), lambda g: _gram_text(g, n))
     return F.array_sort(F.array_distinct(gram))
 
 
@@ -311,21 +340,27 @@ def minhash_signatures(
 
 
 def _tokens(docs: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, __tk) — the tokenize_col tokens with empty tokens dropped."""
-    return docs.select(
-        "doc_id",
-        F.array_remove(tokenize_col(F.col(text_col)), "").alias("__tk"),
-    )
+    """(doc_id, __tk) — the ``tokens_col`` tokens, in their own projection
+    so gram slices reference a bound attribute, not n inlined copies of
+    the tokenizer (over a derived text column that inlining OOM'd codegen
+    at n=13; see ngram_decontaminate)."""
+    return docs.select("doc_id", tokens_col(F.col(text_col)).alias("__tk"))
 
 
 def _gram_structs(tk, n: int):
-    """The n-grams of token array ``tk`` (n >= 2) as structs of n tokens:
-    n shifted slices zipped together, all codegen — constructing gram
-    arrays with higher-order-function lambdas is interpreted and was the
-    measured bottleneck of the signature scan. Tokens hold no whitespace,
-    so a gram struct and its " "-joined string determine each other."""
+    """The n-grams of token array ``tk`` as structs of n tokens (fields
+    "0".."n-1"): n shifted slices zipped together, all codegen —
+    constructing gram arrays with higher-order-function lambdas is
+    interpreted and was the measured bottleneck of the signature scan.
+    Tokens hold no whitespace, so a gram struct and its " "-joined string
+    (``_gram_text``) determine each other."""
     m = F.greatest(F.size(tk) - (n - 1), F.lit(0))
     return F.arrays_zip(*[F.slice(tk, i + 1, m) for i in range(n)])
+
+
+def _gram_text(gs, n: int):
+    """The " "-joined string of an n-token ``_gram_structs`` element."""
+    return F.concat_ws(" ", *[gs.getField(str(i)) for i in range(n)])
 
 
 def exploded_shingles(docs: DataFrame, text_col: str, n: int) -> DataFrame:
@@ -339,12 +374,7 @@ def exploded_shingles(docs: DataFrame, text_col: str, n: int) -> DataFrame:
         return toks.select("doc_id", F.explode("__tk").alias("s"))
     return toks.select(
         "doc_id", F.explode(_gram_structs(F.col("__tk"), n)).alias("__gs")
-    ).select(
-        "doc_id",
-        F.concat_ws(
-            " ", *[F.col("__gs").getField(str(i)) for i in range(n)]
-        ).alias("s"),
-    )
+    ).select("doc_id", _gram_text(F.col("__gs"), n).alias("s"))
 
 
 def minhash_near_dups(
@@ -1007,29 +1037,6 @@ def minhash_near_dups_incremental(
     return verify_jaccard_pairs(cand, corpus, text_col, n, threshold)
 
 
-def _ngram_span_frame(base: DataFrame, n: int) -> DataFrame:
-    """(doc_id, start_pos, gram) from a (doc_id, __tk token-array) frame —
-    the shared scan-side gram construction: n shifted slices zipped and
-    exploded once, concat in codegen post-explode; zero shuffles."""
-    m = F.greatest(F.size(F.col("__tk")) - (n - 1), F.lit(0))
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("__tk"), i + 1, m) for i in range(n)]
-    )
-    return (
-        base.select(
-            "doc_id", F.posexplode_outer(zipped).alias("start_pos", "__gs")
-        )
-        .filter(F.col("__gs").isNotNull())
-        .select(
-            "doc_id",
-            "start_pos",
-            F.concat_ws(
-                " ", *[F.col("__gs").getField(str(i)) for i in range(n)]
-            ).alias("gram"),
-        )
-    )
-
-
 def duplicate_ngram_spans(
     docs: DataFrame,
     n: int = 4,
@@ -1048,29 +1055,31 @@ def duplicate_ngram_spans(
     Output: (doc_id, start_pos, gram, n_docs), start_pos the 0-based index
     of the span's first token in the empty-filtered token stream.
 
-    Shape: the n-grams are built SCAN-SIDE with zero shuffles — n shifted
-    slices of the token array zipped and exploded once (no per-doc window,
-    no self-join, no interpreted HOF: the concat over struct fields runs
-    post-explode in whole-stage codegen). Tokenization sits in its own
-    projection so the slices reference a bound attribute, not n inlined
-    copies of the tokenizer (the ngram_decontaminate barrier rule). The
-    gram census is then a two-level count-distinct on the md5 gram hash
-    (uniform keys); the span join-back is an equi join on that hash. A
-    viral gram (appears in half the corpus) makes a hot join key —
-    byte-skew, which AQE's skew split handles; candidate pruning happens
-    BEFORE the join-back (the census filter), so the join only moves spans
-    that are actually duplicated."""
-    base = docs.select(
-        "doc_id",
-        F.filter(tokenize_col(F.col(text_col)), lambda x: x != "").alias(
-            "__tk"
-        ),
-    )
+    Shape: the n-grams are built SCAN-SIDE with zero shuffles — the
+    ``_gram_structs`` of the ``_tokens`` array posexploded once (no per-doc
+    window, no self-join, no interpreted HOF: the concat over struct
+    fields runs post-explode in whole-stage codegen). The gram census is
+    then a two-level count-distinct on the md5 gram hash (uniform keys);
+    the span join-back is an equi join on that hash. A viral gram (appears
+    in half the corpus) makes a hot join key — byte-skew, which AQE's skew
+    split handles; candidate pruning happens BEFORE the join-back (the
+    census filter), so the join only moves spans that are actually
+    duplicated."""
     # NOTE(round-7): a localCheckpoint here (census + join-back both read
     # the gram frame) measured NEUTRAL at sf0.1 (A/B 1.25 vs 1.26 s) and
     # the gram frame is BIGGER than the corpus — rejected
-    grams = _ngram_span_frame(base, n).withColumn(
-        "__gh", F.md5(F.col("gram"))
+    grams = (
+        _tokens(docs, text_col)
+        .select(
+            "doc_id",
+            F.posexplode(_gram_structs(F.col("__tk"), n)).alias(
+                "start_pos", "__gs"
+            ),
+        )
+        .select(
+            "doc_id", "start_pos", _gram_text(F.col("__gs"), n).alias("gram")
+        )
+        .withColumn("__gh", F.md5(F.col("gram")))
     )
     census = (
         grams.groupBy("__gh")
@@ -1112,63 +1121,33 @@ def containment_pairs(
          prefix picks rare shingles, so the join fan-out per shingle is
          small by construction (the hot common-shingle keys never enter
          the probe side);
-      5. exact |A∩B| only for candidate pairs (two bounded joins + count),
-         then the integer threshold filter.
+      5. exact |A∩B| only for candidate pairs: one array_intersect of the
+         two shingle arrays, then the integer threshold filter.
     The only corpus-sized shuffles are shingle-keyed aggregates and the
     candidate-bounded intersection joins; nothing is quadratic in the
-    corpus."""
+    corpus.
+
+    EAGER: pins one frame, each document's sorted distinct shingle array
+    (one localCheckpoint job). Every other frame is a projection of it:
+    the shingle rows (which carry the set size), the doc-frequencies, the
+    prefix, the candidate probe and both verify sides read it under
+    different operators, where ReuseExchange cannot dedupe them."""
     t_micro = int(round(float(threshold) * 1_000_000))
-    base = docs.select(
-        "doc_id",
-        # empty tokens filtered BEFORE shingling — Spark's trim strips
-        # spaces only, so a trailing newline would otherwise add a phantom
-        # ''-bearing shingle the oracle (list_filter x <> '') never sees
-        F.filter(tokenize_col(F.col(text_col)), lambda x: x != "").alias(
-            "__w"
-        ),
-    )
-    sh = (
-        base.select(
-            "doc_id",
-            F.explode_outer(
-                shingles_from_tokens_col(F.col("__w"), n)
-            ).alias("s"),
-        )
-        .filter(F.col("s").isNotNull())
-        # five plan branches (sizes, doc-frequencies, prefix, candidate
-        # probe, intersection x2) read this frame under different operators
-        # — ReuseExchange cannot dedupe them, so materialize the shingling
-        # ONCE via an eager localCheckpoint (MEMORY_AND_DISK blocks; spills
-        # rather than recomputing 5x at scale). Unlike .persist(), the
-        # blocks are NOT pinned in the CacheManager for the session
-        # lifetime: the ContextCleaner releases them when the checkpointed
-        # RDD is garbage-collected, so repeated calls (the driver's
-        # 50-query sweep, the bench loop) don't accumulate corpus-sized
-        # caches. Cost: the shingle explode runs at call time, not first
-        # action — callers always consume the result, so nothing is wasted.
-        # FAULT-TOLERANCE TRADE (applies to every localCheckpoint in this
-        # repo): lineage is truncated and blocks live only on executors,
-        # so losing an executor (preemption, dynamic-allocation
-        # decommission) fails the query instead of recomputing. Run these
-        # operators on reliable executors, or with
-        # spark.decommission.enabled block migration; for preemptible
-        # fleets swap in persist() + explicit unpersist at the call site.
-        .localCheckpoint(eager=True)
-    )
-    # sz is read three times (prefix bound, both size attaches) — one row
-    # per doc, so the checkpoint is free and saves two aggregations over
-    # the shingle frame (round-7)
-    sz = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("sz")
+    arr = _tokens(docs, text_col).select(
+        "doc_id", shingles_from_tokens_col(F.col("__tk"), n).alias("arr")
     ).localCheckpoint(eager=True)
+    sized = arr.select(
+        "doc_id", F.size("arr").cast("bigint").alias("size"), "arr"
+    )
+    sh = sized.select("doc_id", "size", F.explode("arr").alias("s"))
     dfc = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "s")
-    # integer ceil(t*|A|) = (t_micro*sz + 999_999) div 1e6 — conservative
+    # integer ceil(t*|A|) = (t_micro*size + 999_999) div 1e6 — conservative
     # prefix bound with no float in the correctness path
     prefix_len = (
-        F.col("sz")
+        F.col("size")
         - F.floor(
-            (F.lit(t_micro) * F.col("sz") + F.lit(999_999))
+            (F.lit(t_micro) * F.col("size") + F.lit(999_999))
             / F.lit(1_000_000)
         )
         + F.lit(1)
@@ -1176,7 +1155,6 @@ def containment_pairs(
     pref = (
         sh.join(dfc, "s")
         .withColumn("rn", F.row_number().over(w))
-        .join(sz, "doc_id")
         .filter(F.col("rn") <= prefix_len)
         .select(F.col("doc_id").alias("__pa"), "s")
     )
@@ -1189,21 +1167,16 @@ def containment_pairs(
         )
         .distinct()
     )
-    # exact |A∩B| per candidate pair via ONE array_intersect instead of the
-    # old (pair × shingle-of-A) explode join + (doc_b, s) equi-join +
-    # count: the exploded intermediate was strictly more rows and two more
+    # exact |A∩B| per candidate pair via ONE array_intersect instead of an
+    # (pair × shingle-of-A) explode join + (doc_b, s) equi-join + count:
+    # the exploded intermediate was strictly more rows and two more
     # shuffles than attaching each side's shingle ARRAY once (round-7,
     # interleaved A/B 6.54 → 3.38 s at sf0.1, results bit-identical). The
-    # per-doc array carries the same bound as verify_jaccard_pairs'
-    # collect_set frame: a document's distinct-shingle set must fit in one
-    # row — true wherever the verify path was already viable.
-    arr = sh.groupBy("doc_id").agg(
-        F.collect_list("s").alias("arr")
-    ).join(sz, "doc_id").select(
-        "doc_id", F.col("sz").alias("size"), "arr"
-    ).localCheckpoint(eager=True)
-    inter = F.size(F.array_intersect("arr_a", "arr_b"))
-    return _contained(cand, arr, "inter", inter, t_micro)
+    # per-doc array carries the same bound as verify_jaccard_pairs' frame:
+    # a document's distinct-shingle set must fit in one row. bigint: as an
+    # int, inter·10^6 overflows (an ANSI error) past 2,147 shared shingles
+    inter = F.size(F.array_intersect("arr_a", "arr_b")).cast("bigint")
+    return _contained(cand, sized, "inter", inter, t_micro)
 
 
 def exact_ratio_round6(numer, denom):
@@ -1250,40 +1223,28 @@ def mask_duplicate_spans(
     included); only inter-token whitespace collapses to single spaces,
     the inherent granularity of token-level masking.
 
-    Shape: spans are scan-side (duplicate_ngram_spans); covered positions
-    are an explode over each span's n offsets + distinct; the keep set is
-    one anti join on (doc, pos); reassembly is a per-doc sort_array over
-    (pos, token) structs with codegen field extraction — no interpreted
-    HOF, no window. Everything shuffles at most once per stage on
-    (doc_id)-grained keys."""
-    # ONE tokenize projection carries both views of each token stream:
-    # __tk (lowercased — the shared dedup gram spec, what the census
-    # matches on) and __tko (ORIGINAL case — what the reassembly emits, so
-    # masking never rewrites untouched text's casing or the uppercase PII
-    # tags). lower() can never add/remove whitespace, so the two arrays
-    # are position-aligned by construction.
-    # NOTE(round-7): localCheckpoints here (``both`` is read 3×, the span
-    # frame 2×) measured NEUTRAL at sf0.1 (interleaved A/B 2.30 vs 2.26 s)
-    # and both frames are corpus-sized-or-bigger — rejected
-    both = docs.select(
+    Shape: covered positions are an explode over the n offsets of each
+    ``duplicate_ngram_spans`` row + distinct; the keep set is one anti
+    join on (doc, pos); reassembly is a per-doc sort_array over (pos,
+    token) structs with codegen field extraction — no interpreted HOF, no
+    window. Everything shuffles at most once per stage on (doc_id)-grained
+    keys."""
+    # the census matches on the lowercased ``tokens_col`` spec; the
+    # reassembly emits __tko, the same split in ORIGINAL case, so masking
+    # never rewrites untouched text's casing or the uppercase PII tags.
+    # lower() can never add/remove whitespace, so the two token arrays are
+    # position-aligned and equally long by construction.
+    # NOTE(round-7): localCheckpoints here (the token frame is read 2×,
+    # the span frame 2×) measured NEUTRAL at sf0.1 (interleaved A/B 2.30
+    # vs 2.26 s) and both frames are corpus-sized-or-bigger — rejected
+    tko = docs.select(
         "doc_id",
-        F.filter(tokenize_col(F.col(text_col)), lambda x: x != "").alias(
-            "__tk"
+        F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "").alias(
+            "__tko"
         ),
-        F.filter(
-            F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
-        ).alias("__tko"),
-    )
-    spans = _ngram_span_frame(both.select("doc_id", "__tk"), n).withColumn(
-        "__gh", F.md5(F.col("gram"))
-    )
-    census = (
-        spans.groupBy("__gh")
-        .agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
     )
     covered = (
-        spans.join(census, "__gh")
+        duplicate_ngram_spans(docs, n, min_docs, text_col)
         .select(
             "doc_id",
             F.explode(
@@ -1309,9 +1270,7 @@ def mask_duplicate_spans(
             .filter(F.col("__rl") >= min_run)
             .select("doc_id", "pos")
         )
-    toks = both.select(
-        "doc_id", F.posexplode_outer(F.col("__tko")).alias("pos", "tok")
-    ).filter(F.col("tok").isNotNull())
+    toks = tko.select("doc_id", F.posexplode("__tko").alias("pos", "tok"))
     kept = toks.join(covered, ["doc_id", "pos"], "left_anti")
     re = kept.groupBy("doc_id").agg(
         F.array_join(
@@ -1322,8 +1281,8 @@ def mask_duplicate_spans(
         ).alias("clean_text"),
         F.count(F.lit(1)).alias("__kept"),
     )
-    totals = both.select(
-        "doc_id", F.size(F.col("__tk")).cast("bigint").alias("n_tokens")
+    totals = tko.select(
+        "doc_id", F.size("__tko").cast("bigint").alias("n_tokens")
     )
     return (
         totals.join(re, "doc_id", "left")
@@ -1364,18 +1323,10 @@ def fuzzy_decontaminate(
     t_micro = int(round(float(threshold) * 1_000_000))
 
     def _sh(df, id_alias):
-        base = df.select(
+        return _tokens(df, text_col).select(
             F.col("doc_id").alias(id_alias),
-            F.filter(
-                tokenize_col(F.col(text_col)), lambda x: x != ""
-            ).alias("__w"),
+            F.explode(shingles_from_tokens_col(F.col("__tk"), n)).alias("s"),
         )
-        return base.select(
-            id_alias,
-            F.explode_outer(
-                shingles_from_tokens_col(F.col("__w"), n)
-            ).alias("s"),
-        ).filter(F.col("s").isNotNull())
 
     bsh = _sh(benchmark, "bench_id")
     bsz = bsh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bsz"))

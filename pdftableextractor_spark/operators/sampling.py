@@ -309,47 +309,51 @@ def dsir_weights(
     ~1e-10 per distinct bucket, vs per-row ties that a 6-digit float
     rounding of raw sums would hit in practice.
 
-    Shape at 100 TB: the gram frame is scan-side (one explode; bigrams are
-    built from two shifted array slices zipped element-wise — no second
-    generator, no union re-scan); the model is ONE groupBy(bucket) with
-    map-side combine into exactly B rows; totals are a 1-row broadcast;
-    the score join is gram ⨝ broadcast(B-row model) followed by one
-    groupBy(doc). Nothing quadratic, one corpus-wide shuffle per
-    aggregation, and the model never grows with the corpus — that is the
-    point of hashed features.
+    Shape at 100 TB: the gram frame is scan-side (one explode of the
+    token/successor pairs, then a two-element explode per pair into its
+    unigram and bigram — no interpreted lambda, no union re-scan); the
+    model is ONE groupBy(bucket) with map-side combine into exactly B
+    rows; totals are a 1-row broadcast; the score join is gram ⨝
+    broadcast(B-row model) followed by one groupBy(doc). Nothing
+    quadratic, one corpus-wide shuffle per aggregation, and the model
+    never grows with the corpus — that is the point of hashed features.
 
-    Materialization (round-7): the gram lineage (tokenize + bigram zip +
+    Materialization (round-7): the gram lineage (tokenize + bigram pairs +
     explode + md5 per gram — the expensive scan) is referenced THREE times
     in one call (totals, the scored-model broadcast build, and the score
     join) and exchange reuse never fires across them; the B-row model is
-    referenced twice more. Both are localCheckpointed (the
-    containment_pairs pattern — blocks released by the ContextCleaner):
+    referenced twice more. Both are localCheckpointed (blocks released by
+    the ContextCleaner; see the pin note in the dedup module docstring):
     grams cost ~12 bytes/gram of executor spill-to-disk storage versus
     re-running the md5 scan of the whole corpus twice; the model is 8192
     rows.
     """
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    from pdftableextractor_spark.operators.dedup import tokenize_col
+    from pdftableextractor_spark.operators.dedup import (
+        _gram_structs,
+        tokens_col,
+    )
 
     base = docs.select(
         F.col(id_col),
         target.cast("boolean").alias("__t"),
-        F.filter(tokenize_col(F.col(text_col)), lambda x: x != "").alias(
-            "__tk"
-        ),
+        tokens_col(F.col(text_col)).alias("__tk"),
     )
-    mlen = F.greatest(F.size(F.col("__tk")) - 1, F.lit(0))
-    bigrams = F.zip_with(
-        F.slice(F.col("__tk"), 1, mlen),
-        F.slice(F.col("__tk"), 2, mlen),
-        lambda a, b: F.concat(a, F.lit("\x1f"), b),
-    )
+    # each token paired with its successor (null after the last token):
+    # the token is a unigram, the pair (when complete) a bigram
+    padded = F.concat(F.col("__tk"), F.array(F.lit(None).cast("string")))
+    w1, w2 = F.col("__p").getField("0"), F.col("__p").getField("1")
     grams = (
         base.select(
+            id_col, "__t", F.explode(_gram_structs(padded, 2)).alias("__p")
+        )
+        .select(
             id_col,
             "__t",
-            F.explode_outer(F.concat(F.col("__tk"), bigrams)).alias("g"),
+            F.explode(F.array(w1, F.concat(w1, F.lit("\x1f"), w2))).alias(
+                "g"
+            ),
         )
         .filter(F.col("g").isNotNull())
         .select(
@@ -362,8 +366,8 @@ def dsir_weights(
                 F.lit(n_buckets),
             ).alias("bucket"),
         )
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-        # dedup.containment_pairs (shared by every localCheckpoint here)
+        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note in the
+        # dedup module docstring (shared by every localCheckpoint here)
         .localCheckpoint(eager=True)
     )
     model = grams.groupBy("bucket").agg(

@@ -35,6 +35,10 @@ from pyspark.sql import functions as F
 
 from pdftableextractor_spark.kernels.vectors import cosine_to_query_udf
 
+# the schema of an IVF index's <path>/centroids table: build_ivf_index
+# writes it, _validated_index reads with it (no schema-inference job)
+_CENTROIDS_SCHEMA = "cell int, centroid array<double>, build_id string"
+
 
 def _rank_by_cos(
     cand: DataFrame,
@@ -230,8 +234,8 @@ def kmeans_centroids(
         md5_order, F.col(id_col)
     )
     if fit_sample_per_cell is not None:
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-        # dedup.containment_pairs (shared by every localCheckpoint here)
+        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note in the
+        # dedup module docstring (shared by every localCheckpoint here)
         fit = ordered.limit(
             max(k, fit_sample_per_cell * k)
         ).localCheckpoint(eager=True)
@@ -506,7 +510,8 @@ def build_ivf_index(
     ``ivf_topk`` over a raw table does, only makes sense for exploratory
     one-offs):
 
-      <path>/centroids    (cell int, centroid array<double>)   k rows
+      <path>/centroids    (cell int, centroid array<double>,
+                           build_id string)                     k rows
       <path>/vectors      (vec_id, embedding, cell) PARTITIONED BY cell
 
     Partitioning the vectors by cell is the point: the query path's probe
@@ -527,8 +532,7 @@ def build_ivf_index(
     n, h = _fingerprint(embeddings, id_col)
     build_id = f"k{k}-i{iters}-s{seed}-n{n}-x{h:x}"
     cdf = embeddings.sparkSession.createDataFrame(
-        [(i, c, build_id) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>, build_id string",
+        [(i, c, build_id) for i, c in enumerate(cents)], _CENTROIDS_SCHEMA
     )
     assigned = embeddings.select(
         F.col(id_col).alias("vec_id"),
@@ -550,10 +554,16 @@ def _validated_index(spark, path: str):
     index reader: the centroids carry exactly one build stamp, and the
     stamp's encoded k equals the centroid row count. Returns
     (centroids_df, vectors_df, build_id, centroid vectors ordered by
-    cell); the centroids are k × dim doubles, driver-small."""
-    from pdftableextractor_spark.sources.tables import read_path
+    cell); the centroids are k × dim doubles, driver-small. The centroids
+    table is read with the schema ``build_ivf_index`` writes, so the
+    vectors table's schema read is the only other job."""
+    from pdftableextractor_spark.sources.tables import FORMAT, read_path
 
-    cents = read_path(spark, f"{path}/centroids")
+    cents = (
+        spark.read.schema(_CENTROIDS_SCHEMA)
+        .format(FORMAT)
+        .load(f"{path}/centroids")
+    )
     rows = sorted(cents.collect(), key=lambda r: r["cell"])
     cb = {r["build_id"] for r in rows}
     if len(cb) != 1:
@@ -658,8 +668,8 @@ def ivf_topk_indexed_batch(
          the window-free per-query top-k reduce.
     """
     cents, vecs_all, stamp, cent_list = _validated_index(spark, path)
-    # executor-loss caveat: see the FAULT-TOLERANCE TRADE note on
-    # dedup.containment_pairs (shared by every localCheckpoint here)
+    # executor-loss caveat: see the FAULT-TOLERANCE TRADE note in the
+    # dedup module docstring (shared by every localCheckpoint here)
     qry = _probed(
         queries, cent_list, nprobe, "qid", F.col("embedding").alias("qemb")
     ).localCheckpoint(eager=True)
@@ -954,7 +964,7 @@ def build_sq8_index(
     # vectors/scale under one build_id, which the torn-rebuild stamps
     # cannot detect. Also saves three
     # lineage recomputes. Executor-loss caveat: see the FAULT-TOLERANCE
-    # TRADE note on dedup.containment_pairs.
+    # TRADE note in the dedup module docstring.
     embeddings = embeddings.localCheckpoint(eager=True)
     scale = sq8_scale(embeddings)
     n, h = _fingerprint(embeddings, id_col)

@@ -16,7 +16,12 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdftableextractor_spark.operators.dedup import shingles_col, tokenize_col
+from pdftableextractor_spark.operators.dedup import (
+    _gram_structs,
+    _tokens,
+    shingles_col,
+    tokenize_col,
+)
 
 # BPE-ish token regex: letter runs, digit runs, single other non-space chars
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -294,19 +299,10 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ).alias("dup_sent_frac"),
         tokenize_col(F.col(text_col)).alias("toks"),
     )
+    # a bigram is its (w1, w2) struct: tokens hold no space, so grouping
+    # on the struct equals grouping on the " "-joined string
     grams = base.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("toks") < 2, F.array().cast("array<string>")
-            ).otherwise(
-                F.zip_with(
-                    F.slice("toks", 1, F.size("toks") - 1),
-                    F.slice("toks", 2, F.size("toks") - 1),
-                    lambda a, b: F.concat_ws(" ", a, b),
-                )
-            )
-        ).alias("bg"),
+        "doc_id", F.explode(_gram_structs(F.col("toks"), 2)).alias("bg")
     )
     per_gram = grams.groupBy("doc_id", "bg").agg(
         F.count("*").alias("n")
@@ -478,29 +474,19 @@ def bigram_transition_score(
     rounded to 9 digits, the per-doc mean to 6 — both reproduced verbatim
     in the DuckDB oracle), because float round ties are engine-dependent.
 
-    Shape: bigrams are built SCAN-SIDE with zero shuffles (two shifted
-    slices of the token array zipped + one explode — no per-doc window;
-    the tokenizer sits in its own projection so the slices reference a
-    bound attribute), then pre-aggregated per (doc, w1, w2) so the model
+    Shape: bigrams are built SCAN-SIDE with zero shuffles (the
+    ``_gram_structs`` of the dedup ``_tokens`` array + one explode — no
+    per-doc window), then pre-aggregated per (doc, w1, w2) so the model
     join moves one row per distinct bigram per doc; B and C are two-level
     count aggregates; V is a 1-row broadcast. The (w1, w2) model join is
     the inherently token-shaped part — common bigrams are hot keys; AQE's
     skew-join split handles them (count frames are byte-heavy per key,
     unlike the CPU-skew joins that needed manual salting)."""
-    base = docs.select(
-        "doc_id",
-        F.filter(tokenize_col(F.col(text_col)), lambda x: x != "").alias(
-            "__tk"
-        ),
-    )
-    mlen = F.greatest(F.size(F.col("__tk")) - 1, F.lit(0))
-    zipped = F.arrays_zip(
-        F.slice(F.col("__tk"), 1, mlen), F.slice(F.col("__tk"), 2, mlen)
-    )
+    base = _tokens(docs, text_col)
     bg = (
-        base.select("doc_id", F.explode_outer(zipped).alias("__p"))
-        .filter(F.col("__p").isNotNull())
-        .select(
+        base.select(
+            "doc_id", F.explode(_gram_structs(F.col("__tk"), 2)).alias("__p")
+        ).select(
             "doc_id",
             F.col("__p").getField("0").alias("w1"),
             F.col("__p").getField("1").alias("w2"),

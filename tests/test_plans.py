@@ -265,9 +265,9 @@ def test_temperature_mix_broadcasts_fractions(spark):
 def test_round4_operators_plan_shapes(spark):
     """Pin the round-4 operators' physical shapes: scan-side gram
     construction means NO Window anywhere in q62/q63/q65; nothing plans a
-    cartesian/broadcast-nested-loop; containment's shingle frame is served
-    from cache (the persist is load-bearing — 5 branches read it); fuzzy
-    decontamination broadcasts the benchmark side."""
+    cartesian/broadcast-nested-loop; containment's shingle-array frame is
+    pinned by a localCheckpoint, not a session-lifetime persist (5 branches
+    read it); fuzzy decontamination broadcasts the benchmark side."""
     from pyspark.sql import functions as F
 
     from pdftableextractor_spark.operators.dedup import (
@@ -330,20 +330,16 @@ def _jobs_started(spark, build):
 
 
 def _index_read_jobs(spark, idx):
-    """Jobs that reading an IVF index's two tables starts by itself (the
-    parquet schema inference)."""
-    return _jobs_started(
-        spark,
-        lambda: [
-            spark.read.parquet(f"{idx}/{t}") for t in ("centroids", "vectors")
-        ],
-    )[1]
+    """Jobs that reading an IVF index's vectors table starts by itself
+    (the parquet schema inference); its centroids table is read with the
+    schema its build writes, which starts none."""
+    return _jobs_started(spark, lambda: spark.read.parquet(f"{idx}/vectors"))[1]
 
 
 def test_ivf_index_opens_in_one_job(spark, tmp_path):
-    """Opening a persisted IVF index starts exactly one job beyond reading
-    its tables: the collect of its k centroid rows gives the stamp set,
-    the row count and the centroid vectors."""
+    """Opening a persisted IVF index starts exactly one job beyond the
+    schema read of its vectors table: the collect of its k centroid rows
+    gives the stamp set, the row count and the centroid vectors."""
     from pdftableextractor_spark.operators.similarity import (
         build_ivf_index,
         ivf_cell_stats,
@@ -359,8 +355,8 @@ def test_ivf_index_opens_in_one_job(spark, tmp_path):
 def test_append_to_ivf_index_pins_nothing(spark, tmp_path, monkeypatch):
     """append_to_ivf_index pins no frame, and the count it returns is the
     number of rows its one write appended (an Observation on the write):
-    beyond reading the index tables, opening the index and the write are
-    its only jobs."""
+    beyond the vectors table's schema read, opening the index and the
+    write are its only jobs."""
     from pdftableextractor_spark.operators.similarity import (
         append_to_ivf_index,
         build_ivf_index,
@@ -541,3 +537,69 @@ def test_key_set_containment_pins_the_kernel_once(spark, tmp_path, monkeypatch):
         assert len(pinned) == 1, (name, pinned)
         assert pinned[0].count("MapInPandas") == 1, (name, pinned[0])
         assert df.collect(), name
+
+
+def test_containment_pairs_pins_one_shingle_frame(spark, monkeypatch):
+    """containment_pairs starts only the jobs of one eager pin, each
+    document's distinct shingle array, and every pinned scan in its final
+    plan reads that one (doc_id, arr) frame: the shingle rows, the sizes
+    and both verify sides are projections of it."""
+    import re
+
+    from pdftableextractor_spark.operators.dedup import containment_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
+        "doc_id", F.col("doc_id").cast("string")
+    )
+    frame_cls = type(docs)
+    pin = frame_cls.localCheckpoint
+    pinned = []
+
+    def recording_pin(self, *args, **kwargs):
+        pinned.append(self.columns)
+        return pin(self, *args, **kwargs)
+
+    _, pin_jobs = _jobs_started(spark, lambda: docs.localCheckpoint(eager=True))
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_pin)
+    df, jobs = _jobs_started(
+        spark, lambda: containment_pairs(docs, n=3, threshold=0.5)
+    )
+    monkeypatch.setattr(frame_cls, "localCheckpoint", pin)
+    assert pin_jobs >= 1 and jobs == pin_jobs, (jobs, pin_jobs)
+    assert pinned == [["doc_id", "arr"]], pinned
+    scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", _final_plan(df))
+    assert scans, "no pinned scan"
+    assert {re.sub(r"#\d+", "", s) for s in scans} == {"doc_id,arr"}, scans
+
+
+def test_ngram_operators_build_without_jobs(spark):
+    """Building the span, mask, decontamination and bigram-LM operators
+    starts no Spark job: none of them pins."""
+    from pdftableextractor_spark.operators.dedup import (
+        duplicate_ngram_spans,
+        fuzzy_decontaminate,
+        mask_duplicate_spans,
+        ngram_decontaminate,
+    )
+    from pdftableextractor_spark.operators.textstats import (
+        bigram_transition_score,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
+        "doc_id", F.col("doc_id").cast("string")
+    )
+    is_bench = F.col("doc_id").cast("bigint") % 20 == 0
+    corp, bench = docs.filter(~is_bench), docs.filter(is_bench)
+    cases = {
+        "duplicate_ngram_spans": lambda: duplicate_ngram_spans(docs),
+        "mask_duplicate_spans": lambda: mask_duplicate_spans(docs),
+        "mask_duplicate_spans(min_run)": lambda: mask_duplicate_spans(
+            docs, min_run=8
+        ),
+        "fuzzy_decontaminate": lambda: fuzzy_decontaminate(corp, bench),
+        "ngram_decontaminate": lambda: ngram_decontaminate(corp, bench, n=3),
+        "bigram_transition_score": lambda: bigram_transition_score(docs),
+    }
+    for name, build in cases.items():
+        _, jobs = _jobs_started(spark, build)
+        assert jobs == 0, (name, jobs)

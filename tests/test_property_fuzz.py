@@ -242,30 +242,50 @@ def test_connected_components_matches_union_find(spark, edges):
     assert got_dist == exp
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    tokens=st.lists(
-        st.lists(st.sampled_from("abcde"), min_size=0, max_size=12),
-        min_size=1,
-        max_size=8,
-    ),
-    n=st.integers(2, 4),
-)
-def test_duplicate_ngram_spans_matches_sequential(spark, tokens, n):
-    """Scan-side gram construction must equal a sequential n-gram census on
-    arbitrary token streams (empty docs, short docs, repeated grams)."""
+@st.composite
+def spaced_texts(draw):
+    """A text of upper- and lower-case tokens whose separators are runs of
+    spaces, tabs and newlines, leading and trailing runs included."""
+    toks = draw(
+        st.lists(st.sampled_from(["a", "b", "c", "A", "B", "Ab"]), max_size=12)
+    )
+    run = st.text(alphabet=" \t\n", min_size=1, max_size=2)
+    edge = st.text(alphabet=" \t\n", max_size=2)
+    text = draw(edge)
+    for i, t in enumerate(toks):
+        text += (draw(run) if i else "") + t
+    return text + draw(edge)
+
+
+def _sequential_spans(texts, n):
+    """The (doc, start, gram) windows of lowercased whitespace tokens and
+    each gram's set of documents — a sequential n-gram census."""
     from collections import defaultdict
 
-    from pdftableextractor_spark.operators.dedup import duplicate_ngram_spans
-
-    docs = [(f"d{i}", " ".join(toks)) for i, toks in enumerate(tokens)]
     by_gram: dict[str, set] = defaultdict(set)
     spans = []
-    for did, toks in ((d, t.split()) for d, t in docs):
+    for did, text in texts:
+        toks = text.lower().split()
         for i in range(len(toks) - n + 1):
             g = " ".join(toks[i : i + n])
             by_gram[g].add(did)
             spans.append((did, i, g))
+    return spans, by_gram
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    texts=st.lists(spaced_texts(), min_size=1, max_size=8),
+    n=st.integers(2, 4),
+)
+def test_duplicate_ngram_spans_matches_sequential(spark, texts, n):
+    """Scan-side gram construction must equal a sequential n-gram census on
+    arbitrary token streams (empty docs, short docs, repeated grams, mixed
+    case, tab/newline separators and edges)."""
+    from pdftableextractor_spark.operators.dedup import duplicate_ngram_spans
+
+    docs = [(f"d{i}", t) for i, t in enumerate(texts)]
+    spans, by_gram = _sequential_spans(docs, n)
     exp = {
         (d, i, g, len(by_gram[g]))
         for d, i, g in spans
@@ -275,6 +295,48 @@ def test_duplicate_ngram_spans_matches_sequential(spark, tokens, n):
     got = {
         (r["doc_id"], r["start_pos"], r["gram"], r["n_docs"])
         for r in duplicate_ngram_spans(df, n=n).collect()
+    }
+    assert got == exp
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    texts=st.lists(spaced_texts(), min_size=1, max_size=8),
+    n=st.integers(2, 4),
+    extra_run=st.sampled_from([None, 0, 1, 3]),
+)
+def test_mask_duplicate_spans_matches_sequential(spark, texts, n, extra_run):
+    """mask_duplicate_spans must equal a sequential mask: drop every token
+    a shared n-gram covers (only runs of >= min_run covered tokens when
+    min_run > n), keep the survivors in their original case."""
+    from pdftableextractor_spark.operators.dedup import mask_duplicate_spans
+
+    min_run = None if extra_run is None else n + extra_run
+    docs = [(f"d{i}", t) for i, t in enumerate(texts)]
+    spans, by_gram = _sequential_spans(docs, n)
+    covered: dict[str, set] = {d: set() for d, _ in docs}
+    for d, i, g in spans:
+        if len(by_gram[g]) >= 2:
+            covered[d].update(range(i, i + n))
+    exp = set()
+    for d, text in docs:
+        cut = set(covered[d])
+        if min_run is not None and min_run > n:
+            cut, run = set(), []
+            for p in sorted(covered[d]) + [None]:
+                if run and p != run[-1] + 1:
+                    if len(run) >= min_run:
+                        cut.update(run)
+                    run = []
+                if p is not None:
+                    run.append(p)
+        toks = text.split()
+        kept = [t for i, t in enumerate(toks) if i not in cut]
+        exp.add((d, " ".join(kept), len(toks), len(toks) - len(kept)))
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = {
+        tuple(r)
+        for r in mask_duplicate_spans(df, n=n, min_run=min_run).collect()
     }
     assert got == exp
 

@@ -630,6 +630,24 @@ def test_containment_prefix_filter_is_lossless(spark):
         assert got == exp, f"thr={thr}: {got ^ exp}"
 
 
+def test_containment_counts_past_int_range(spark):
+    """A pair sharing more than 2,147 shingles: the integer threshold
+    compare (inter·10^6) must run in bigint, not overflow an int (an ANSI
+    arithmetic error)."""
+    from pdftableextractor_spark.operators.dedup import containment_pairs
+
+    text = " ".join(f"w{i}" for i in range(2300))
+    docs = spark.createDataFrame(
+        [("a", text), ("b", text + " tail"), ("c", "other words here")],
+        ["doc_id", "text"],
+    )
+    got = [
+        tuple(r)
+        for r in containment_pairs(docs, n=3, threshold=0.9).collect()
+    ]
+    assert got == [("a", "b", 2298, 2298, 2299, 1.0)], got
+
+
 def test_containment_trailing_whitespace_and_exact_rounding(spark):
     """Round-4 review regressions: (a) a trailing newline must not create a
     phantom empty-token shingle (engine must agree with the oracle's
