@@ -28,8 +28,10 @@ Top-level layout:
                    multimodal plumbing.
 - ``plans``      — scale machinery: salted repartitioning, resumable
                    per-partition lineage/metrics.
-- ``sources``    — readers for the parquet/Iceberg tables.
-- ``streaming``  — Structured Streaming wrapper of the extraction pipeline.
+- ``sources``    — the parquet/Iceberg format seam (``read_path`` /
+                   ``write_table``).
+- ``streaming``  — Structured Streaming wrapper of the extraction pipeline
+                   and a stateful cross-batch exact dedup stream.
 - ``oracle``     — an independently-written pure-Python/pandas reference
                    implementation used only by tests to freeze golden
                    fixtures (never imported by the engine).

@@ -2,7 +2,6 @@ from pdftableextractor_spark.functions.strings import (  # noqa: F401
     FOOTNOTE_KEYWORDS,
     FOOTNOTE_MARKER_RE,
     SECTION_REF_RE,
-    is_boilerplate_col,
     is_footnote_col,
     normalize_text_col,
 )

@@ -156,10 +156,6 @@ def is_boilerplate_spark_sql(expr: str) -> str:
     )
 
 
-def is_boilerplate_col(col: str) -> Column:
-    return F.expr(is_boilerplate_spark_sql(col))
-
-
 # --- misc scalar helpers (SURVEY.md §2.7) ----------------------------------
 def match_clean_col(col: Column) -> Column:
     """Lower-case + strip $ % , for lexical matching (app.py:83-89, F4)."""

@@ -18,8 +18,8 @@ Operators:
   ngram_jaccard_pairs    exact pairwise Jaccard within a blocking key
   connected_components   pair graph -> duplicate clusters (large-star/
                          small-star contraction, O(log n) shuffle rounds)
-  minhash_near_dups_incremental  new batch vs standing corpus via the
-                         persisted signature store (write/read_signature_store)
+  minhash_near_dups_incremental  pairs involving a new batch vs a standing
+                         corpus (old-old pairs never become candidates)
   embedding_near_dups    cosine near-dup pairs within a blocking key
   duplicate_ngram_spans  n-token windows shared by >= min_docs documents
   mask_duplicate_spans   cut the tokens those spans cover, keep the document
@@ -942,47 +942,19 @@ def connected_components(
     )
 
 
-def write_signature_store(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    n: int = 1,
-    num_hashes: int = NUM_HASHES,
-) -> None:
-    """Persist the corpus's MinHash signatures (doc_id, sig) through the
-    storage-format seam — the historical half of incremental dedup. Sigs
-    are num_hashes ints per doc; bands are recomputed from them (cheap JVM
-    md5s) rather than stored."""
-    from pdftableextractor_spark.sources.tables import write_table
-
-    write_table(minhash_signatures(docs, text_col, n, num_hashes), path)
-
-
-def read_signature_store(spark, path: str) -> DataFrame:
-    from pdftableextractor_spark.sources.tables import read_path
-
-    return read_path(spark, path)
-
-
 def minhash_near_dups_incremental(
     new_docs: DataFrame,
     old_docs: DataFrame,
-    old_sigs: DataFrame | None = None,
     text_col: str = "text",
     n: int = 1,
     threshold: float = 0.5,
     num_hashes: int = NUM_HASHES,
     band_rows: int = BAND_ROWS,
-    new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs INVOLVING the new batch (new-vs-old + new-vs-new),
     for the production cadence where increments arrive against a standing
     corpus:
 
-    - With ``old_sigs`` from the signature store, the historical corpus is
-      never re-tokenized or re-signatured — per batch, signature work is
-      O(new batch), not O(corpus). Callers that also store the batch's
-      signatures pass them as ``new_sigs``.
     - Standing and batch signatures are tagged ``is_new`` and banded once;
       the band rows join their own ``is_new`` side, so old-old collisions
       never become candidates: candidate volume is O(new-batch
@@ -994,23 +966,20 @@ def minhash_near_dups_incremental(
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b; new-new pairs
     appear once. A standing pipeline then drops cluster losers among the
-    new docs (old docs always win — they are already in the corpus) and
-    appends the batch's signatures to the store.
+    new docs (old docs always win — they are already in the corpus).
     """
-    if old_sigs is None:
-        old_sigs = minhash_signatures(old_docs, text_col, n, num_hashes)
-    if new_sigs is None:
-        new_sigs = minhash_signatures(new_docs, text_col, n, num_hashes)
+    standing_sigs = minhash_signatures(old_docs, text_col, n, num_hashes)
+    batch_sigs = minhash_signatures(new_docs, text_col, n, num_hashes)
     # a doc_id re-sent in the batch REPLACES its standing entry: otherwise
     # the verify would join both texts under one doc_id, while the
     # old-vs-new self pair is invisible (da != db never fires)
     new_ids = new_docs.select("doc_id")
-    old_sigs = old_sigs.join(new_ids, "doc_id", "left_anti")
+    standing_sigs = standing_sigs.join(new_ids, "doc_id", "left_anti")
     old_docs = old_docs.join(new_ids, "doc_id", "left_anti")
     bands = band_rows_from_sigs(
-        old_sigs.select("doc_id", "sig", F.lit(False).alias("is_new"))
+        standing_sigs.select("doc_id", "sig", F.lit(False).alias("is_new"))
         .unionByName(
-            new_sigs.select("doc_id", "sig", F.lit(True).alias("is_new"))
+            batch_sigs.select("doc_id", "sig", F.lit(True).alias("is_new"))
         ),
         num_hashes,
         band_rows,
@@ -1442,7 +1411,7 @@ def semantic_dedup_incremental(
 ) -> DataFrame:
     """Incremental SemDeDup — the production cadence where embedding
     batches arrive against a standing corpus (the semantic analog of
-    ``minhash_near_dups_incremental`` + the signature store):
+    ``minhash_near_dups_incremental``):
 
       1. cluster WITHIN the new batch (``semantic_dedup``: kNN graph at
          τ → components → min-id representative);
@@ -1462,7 +1431,7 @@ def semantic_dedup_incremental(
 
     Output: (vec_id, component, near_old, keep) for every batch vector —
     ``filter(keep)`` is what enters the corpus; append those embeddings
-    to the standing index on the same cadence the signature store grows.
+    to the standing index (``append_to_ivf_index``).
 
     Exactness: the DEFAULT ``n_probe=2`` is the scale path (approximate
     within-batch graph, recall tracks the fit). Pass ``n_probe=None``

@@ -2,7 +2,7 @@
 
 The north-star asks for "HTML boilerplate strip ... via DOM tag/density
 heuristics" (the reference's span cleanup is the line-level analog in
-`functions/strings.is_boilerplate_col`). This module is the real,
+`functions/strings.is_boilerplate_spark_sql`). This module is the real,
 document-level version over RAW HTML: block segmentation on block-level
 tags, tag strip + entity decode, and the published Kohlschütter et al.
 (WSDM 2010) "densometric" NumWords/LinkDensity decision-tree classifier

@@ -971,7 +971,7 @@ def decode_stub(payload: bytes, kind: str) -> np.ndarray:
 
 
 def _decode_one(payload: bytes, kind: str) -> np.ndarray:
-    """PNG images, WAV audio, and uncompressed-DIB AVI video decode to
+    """PNG/JPEG images, WAV audio, and uncompressed-DIB AVI video decode to
     GENUINE pixels/samples/frames and featurize from them; everything
     else keeps the deterministic stub. A payload that LOOKS like a
     supported container but is unsupported (interlaced PNG, compressed
@@ -980,34 +980,17 @@ def _decode_one(payload: bytes, kind: str) -> np.ndarray:
     instead of crashing the task — one bad row must never kill a
     corpus-wide featurize job (the drop/degrade convention:
     GRID_AREA_MAX, PNG_AREA_MAX, WAV_BYTES_MAX, AVI_BYTES_MAX)."""
-    if kind == "image" and payload[:8] == PNG_SIG:
-        try:
-            return image_features(decode_png(payload))
-        except Exception:
-            # any malformed byte stream (struct/zlib/bounds/ValueError/
-            # NotImplementedError) — degrade, never crash the task
-            return decode_stub(payload, kind)
-    if kind == "image" and payload[:3] == JPEG_SIG:
-        try:
-            return image_features(decode_jpeg(payload))
-        except Exception:
-            # progressive/12-bit/arithmetic or malformed — degrade
-            return decode_stub(payload, kind)
-    if kind == "audio" and payload[:4] == WAV_SIG:
-        try:
-            return audio_features(*decode_wav(payload))
-        except Exception:
-            return decode_stub(payload, kind)
-    if (
-        kind == "video"
-        and payload[:4] == AVI_SIG
-        and payload[8:12] == b"AVI "
-    ):
-        try:
-            return video_features(*decode_avi(payload))
-        except Exception:
-            return decode_stub(payload, kind)
-    return decode_stub(payload, kind)
+    try:
+        decoded = real_decode(payload, kind)
+        if kind == "image":
+            return image_features(decoded)
+        if kind == "audio":
+            return audio_features(*decoded)
+        return video_features(*decoded)
+    except Exception:
+        # no codec (NotImplementedError) or any malformed byte stream
+        # (struct/zlib/bounds/ValueError) — degrade, never crash the task
+        return decode_stub(payload, kind)
 
 
 def _features_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

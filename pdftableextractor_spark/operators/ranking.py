@@ -97,18 +97,3 @@ def bm25_scores(
         scored.select("doc_id", score.alias("score"))
         .filter(F.col("score") > 0)
     )
-
-
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    **kwargs,
-) -> DataFrame:
-    """Top-k BM25 matches — orderBy+limit compiles to TakeOrderedAndProject
-    (per-partition heaps, no global sort)."""
-    return (
-        bm25_scores(docs, query_terms, **kwargs)
-        .orderBy(F.col("score").desc(), "doc_id")
-        .limit(k)
-    )

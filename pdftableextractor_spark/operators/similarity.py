@@ -11,7 +11,7 @@
                   contract (qid, vec_id, cos, rnk).
   persisted IVF:  build_ivf_index, ivf_topk_indexed (one query),
                   ivf_topk_indexed_batch (a frame of queries),
-                  append_to_ivf_index, ivf_cell_stats, ivf_drift_report.
+                  append_to_ivf_index, ivf_drift_report.
   persisted SQ8:  build_sq8_index, sq8_topk_indexed.
 
 Shared steps are written once: ``_rank_by_cos`` (the exact ordered-limit
@@ -690,7 +690,7 @@ def append_to_ivf_index(
 ) -> int:
     """APPEND a batch of vectors to a persisted IVF index without
     refitting — the growth side of the incremental cadence
-    (``semantic_dedup_incremental``'s keep-set, a streaming micro-batch):
+    (``semantic_dedup_incremental``'s keep-set, a newly landed batch):
     the new vectors are assigned to the EXISTING centroids (one Arrow
     matmul pass over the batch) and appended to the cell-partitioned
     vectors table carrying the index's build stamp, so every consistency
@@ -734,36 +734,6 @@ def append_to_ivf_index(
     return appended.get["n"]
 
 
-def ivf_cell_stats(spark, path: str) -> DataFrame:
-    """Per-cell occupancy of a persisted IVF index: (cell, n_vectors),
-    one row per CENTROID (empty cells surface as n_vectors = 0 — an
-    appended-into index can strand cells the data has drifted away
-    from, and those are exactly the drift signal).
-
-    Scale shape: ``cell`` is the vectors table's PARTITION column, so
-    the count scan projects zero data columns — at 100 TB this reads
-    parquet footers/row-group metadata per partition, never embedding
-    bytes. The result is k rows (driver-small by construction)."""
-    cents, vecs_all, _stamp, _ = _validated_index(spark, path)
-    return _cell_stats_frame(cents, vecs_all)
-
-
-def _cell_stats_frame(cents: DataFrame, vecs_all: DataFrame) -> DataFrame:
-    counts = vecs_all.select("cell").groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_vectors")
-    )
-    return (
-        cents.select("cell")
-        .join(counts, "cell", "left")
-        .select(
-            "cell",
-            F.coalesce(F.col("n_vectors"), F.lit(0))
-            .cast("long")
-            .alias("n_vectors"),
-        )
-    )
-
-
 def ivf_drift_report(
     spark, path: str, max_over_median: float = 4.0
 ) -> dict:
@@ -787,9 +757,18 @@ def ivf_drift_report(
     with ``build_ivf_index`` over the CURRENT corpus, which refits
     centroids and stamps a new content-sensitive build_id, so the
     torn-rebuild checks stay sound across the refit. O(k) driver
-    state; the counting scan is metadata-cheap (see ivf_cell_stats)."""
+    state. Every centroid is a cell (empty ones count 0), and ``cell`` is
+    the vectors table's PARTITION column, so the counting scan projects
+    no data column: it reads partition metadata, never embedding bytes."""
     cents, vecs_all, stamp, _ = _validated_index(spark, path)
-    stats = _cell_stats_frame(cents, vecs_all)
+    counts = vecs_all.select("cell").groupBy("cell").agg(
+        F.count(F.lit(1)).alias("n_vectors")
+    )
+    stats = cents.select("cell").join(counts, "cell", "left").select(
+        F.coalesce(F.col("n_vectors"), F.lit(0))
+        .cast("long")
+        .alias("n_vectors")
+    )
     row = stats.agg(
         F.sum("n_vectors").alias("total"),
         F.max("n_vectors").alias("mx"),

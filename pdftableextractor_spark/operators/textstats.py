@@ -195,7 +195,8 @@ def fingerprint(
 # --- cross-doc line-frequency dedup (CCNet-style paragraph dedup) -----------
 # A line appearing verbatim in many documents is boilerplate by evidence,
 # not by pattern (the distributional complement of the regex heuristics in
-# functions/strings.is_boilerplate_col). Standard web-corpus curation stage.
+# functions/strings.is_boilerplate_spark_sql). Standard web-corpus curation
+# stage.
 
 
 def line_doc_frequency(lines: DataFrame, text_col: str = "text") -> DataFrame:

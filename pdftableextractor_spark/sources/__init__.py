@@ -1,5 +1,1 @@
-from pdftableextractor_spark.sources.tables import (  # noqa: F401
-    load_table,
-    read_documents,
-    register_views,
-)
+"""The storage-format seam: ``tables.read_path`` / ``tables.write_table``."""

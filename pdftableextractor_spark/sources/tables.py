@@ -1,4 +1,4 @@
-"""Table readers (SURVEY.md §2.1).
+"""Table reads and writes through one format seam (SURVEY.md §2.1).
 
 Parquet in the sandbox; the same entry points take ``format='iceberg'`` on a
 cluster with the Iceberg runtime — the engine never assumes anything beyond
@@ -9,11 +9,6 @@ cluster with the Iceberg runtime — the engine never assumes anything beyond
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 # The ONE production-format seam: every table read/write in the engine and
 # the jobs routes through read_path/write_table below, so running against
@@ -46,23 +41,3 @@ def write_table(
         w = w.partitionBy(*partition_by)
     w.save(path)
 
-
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, fmt: str | None = None
-) -> DataFrame:
-    if (fmt or FORMAT) == "parquet":
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return spark.read.format(fmt or FORMAT).load(f"{sf_dir}/{name}")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (SQL entry point)."""
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
-def read_documents(
-    spark: SparkSession, path: str, fmt: str | None = None
-) -> DataFrame:
-    """The interleaved documents corpus (doc_id, spans)."""
-    return read_path(spark, path, fmt)

@@ -171,45 +171,6 @@ def test_documents_filter_pushdown(spark):
     assert "lang" not in scan  # unused columns pruned
 
 
-def test_bucketed_join_eliminates_exchanges(spark, tmp_path):
-    from pdftableextractor_spark.plans.bucketing import (
-        bucketed_join,
-        count_exchanges,
-        write_bucketed,
-    )
-
-    # force a shuffle-shaped join so the bucket co-location (not broadcast)
-    # is what eliminates the exchanges
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        spark.sql("DROP TABLE IF EXISTS t_docs_bkt")
-        spark.sql("DROP TABLE IF EXISTS t_stats_bkt")
-        docs = spark.range(0, 500).select(
-            F.concat(F.lit("doc-"), F.col("id")).alias("doc_id"),
-            (F.col("id") % 97).alias("x"),
-        )
-        stats = docs.select("doc_id", (F.col("x") * 2).alias("y"))
-        write_bucketed(docs, "t_docs_bkt", n_buckets=8)
-        write_bucketed(stats, "t_stats_bkt", n_buckets=8)
-        joined = bucketed_join(spark, "t_docs_bkt", "t_stats_bkt")
-        assert joined.count() == 500
-        # co-located SortMergeJoin: no shuffle on either side
-        assert count_exchanges(joined) == 0
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan and "Bucketed: true" in plan
-        # control: the same join on plain (non-bucketed) frames shuffles
-        plain = docs.join(stats.withColumnRenamed("y", "y2"), "doc_id")
-        plain.count()
-        assert count_exchanges(plain) >= 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_docs_bkt")
-        spark.sql("DROP TABLE IF EXISTS t_stats_bkt")
-
-
 def test_table_points_single_scan_no_joins(spark, tmp_path):
     """Header/label pairing must be window-based: ONE scan of the cells
     frame, no self-joins (the join formulation scanned it three times)."""
@@ -341,14 +302,14 @@ def test_ivf_index_opens_in_one_job(spark, tmp_path):
     schema read of its vectors table: the collect of its k centroid rows
     gives the stamp set, the row count and the centroid vectors."""
     from pdftableextractor_spark.operators.similarity import (
+        _validated_index,
         build_ivf_index,
-        ivf_cell_stats,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     idx = str(tmp_path / "ivf")
     build_ivf_index(emb.select("vec_id", "embedding"), idx, k=4, iters=1)
-    _, jobs = _jobs_started(spark, lambda: ivf_cell_stats(spark, idx))
+    _, jobs = _jobs_started(spark, lambda: _validated_index(spark, idx))
     assert jobs == _index_read_jobs(spark, idx) + 1, jobs
 
 

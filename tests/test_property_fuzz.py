@@ -4,13 +4,18 @@ malformed table/kv/pdf payloads, unicode)."""
 
 from __future__ import annotations
 
-from hypothesis import example, given, settings
+from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 
 from pdftableextractor_spark import oracle
 from pdftableextractor_spark.kernels.layout import layout_page
 from pdftableextractor_spark.operators.extract import extract_spans
 from pdftableextractor_spark.types import RS, US
+
+# Spark-backed properties do not shrink: each shrink step re-runs Spark
+# jobs, so a failure would take many times a passing run to report. The
+# failing example is reported as drawn; the pure-Python fuzz still shrinks.
+NO_SHRINK = tuple(p for p in Phase if p != Phase.shrink)
 
 TEXTY = st.text(
     alphabet=st.characters(
@@ -85,7 +90,7 @@ def pdf_payloads(draw):
     return RS.join(recs)
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=15, deadline=None, phases=NO_SHRINK)
 @given(docs=st.lists(documents(), min_size=1, max_size=4))
 def test_pipeline_matches_oracle_on_fuzzed_docs(spark, docs):
     for i, d in enumerate(docs):
@@ -116,7 +121,7 @@ def test_layout_kernel_matches_oracle_on_fuzzed_pages(payload):
     assert layout_page(payload) == oracle._pdf_lines(payload)
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=15, deadline=None, phases=NO_SHRINK)
 @given(docs=st.lists(documents(ties=False), min_size=1, max_size=4))
 def test_footnote_frame_matches_oracle_on_fuzzed_docs(spark, docs):
     """Raw-line numbering + footnote classification must agree with the
@@ -145,7 +150,7 @@ def test_footnote_frame_matches_oracle_on_fuzzed_docs(spark, docs):
         assert sorted(got.get(d["doc_id"], [])) == sorted(exp), d["doc_id"]
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=15, deadline=None, phases=NO_SHRINK)
 @given(docs=st.lists(documents(), min_size=1, max_size=4))
 def test_frames_match_extract_spans_on_fuzzed_docs(spark, docs):
     """``extract_frames`` and ``extract_spans`` give the same lines, kvs and
@@ -194,7 +199,7 @@ def test_frames_match_extract_spans_on_fuzzed_docs(spark, docs):
             same(d, "table", cells.get(i, []), "table_cell")
 
 
-@settings(max_examples=12, deadline=None)
+@settings(max_examples=12, deadline=None, phases=NO_SHRINK)
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 24), st.integers(0, 24)),
@@ -273,7 +278,7 @@ def _sequential_spans(texts, n):
     return spans, by_gram
 
 
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=10, deadline=None, phases=NO_SHRINK)
 @given(
     texts=st.lists(spaced_texts(), min_size=1, max_size=8),
     n=st.integers(2, 4),
@@ -299,7 +304,7 @@ def test_duplicate_ngram_spans_matches_sequential(spark, texts, n):
     assert got == exp
 
 
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=10, deadline=None, phases=NO_SHRINK)
 @given(
     texts=st.lists(spaced_texts(), min_size=1, max_size=8),
     n=st.integers(2, 4),
@@ -341,7 +346,7 @@ def test_mask_duplicate_spans_matches_sequential(spark, texts, n, extra_run):
     assert got == exp
 
 
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=10, deadline=None, phases=NO_SHRINK)
 @given(
     rows=st.lists(
         st.tuples(

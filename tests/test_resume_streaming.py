@@ -122,124 +122,3 @@ def test_streaming_matches_batch(spark, tmp_path):
     # first 20 docs, emitted once by each batch file)
     exp = _expected() + _expected(n=20)
     assert got == sorted(exp)
-
-
-def test_stream_dedup_ingest_two_batches(spark, tmp_path):
-    """Dedup-on-ingest: in-batch dups collapse keep-min, cross-batch dups
-    lose to the standing corpus (via the signature store — batch 2 never
-    re-signatures batch 1), and a drain with no new input changes nothing."""
-    from pdftableextractor_spark.streaming.ingest import stream_dedup_ingest
-
-    in_dir = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-    import os
-
-    os.makedirs(in_dir)
-
-    def drain():
-        stream_dedup_ingest(spark, in_dir, out, store, ckpt)
-
-    b1 = [
-        ("o1", "alpha beta gamma delta epsilon zeta"),
-        ("o2", "one two three four five six"),
-        ("o3", "alpha beta gamma delta epsilon zeta"),  # in-batch dup of o1
-    ]
-    import pandas as pd
-
-    pd.DataFrame(b1, columns=["doc_id", "text"]).to_parquet(f"{in_dir}/b1.parquet")
-    drain()
-    assert {
-        r["doc_id"] for r in spark.read.parquet(out).collect()
-    } == {"o1", "o2"}
-
-    b2 = [
-        ("p1", "alpha beta gamma delta epsilon zeta"),  # dup of standing o1
-        ("p2", "completely fresh content nothing alike"),
-        ("p3", "completely fresh content nothing alike"),  # in-batch dup
-    ]
-    pd.DataFrame(b2, columns=["doc_id", "text"]).to_parquet(f"{in_dir}/b2.parquet")
-    drain()
-    survivors = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert survivors == {"o1", "o2", "p2"}
-    # the store carries exactly the survivors' signatures
-    assert {
-        r["doc_id"] for r in spark.read.parquet(store).collect()
-    } == survivors
-
-    # no new input: a further drain is a no-op
-    drain()
-    assert {
-        r["doc_id"] for r in spark.read.parquet(out).collect()
-    } == {"o1", "o2", "p2"}
-
-
-def test_stream_semantic_ingest_two_batches(spark, tmp_path):
-    """Semantic dedup-on-ingest: in-batch near-identical vectors collapse
-    keep-min, cross-batch near-dups lose to the standing corpus, fresh
-    vectors land, and a drain with no new input is a no-op."""
-    import os
-
-    import numpy as np
-
-    from pdftableextractor_spark.streaming.ingest import (
-        stream_semantic_ingest,
-    )
-
-    in_dir = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-    rng = np.random.RandomState(23)
-    a, b, c = (rng.standard_normal(16) * 10 for _ in range(3))
-
-    def vec(base, noise=0.01):
-        return [float(x) for x in base + rng.standard_normal(16) * noise]
-
-    def drain():
-        stream_semantic_ingest(
-            spark, in_dir, out, ckpt, threshold=0.9, k=2, n_cells=3,
-            n_probe=None, iters=2,
-        )
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def write_batch(rows, path):
-        # the stream schema declares array<float>; pandas would write
-        # list<double> and the scan would fail on the type mismatch
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "embedding": pa.array(
-                        [r[1] for r in rows], pa.list_(pa.float32())
-                    ),
-                }
-            ),
-            path,
-        )
-
-    b1 = [(1, vec(a)), (2, vec(a)), (3, vec(b))]  # 1~2 in-batch dup
-    write_batch(b1, f"{in_dir}/b1.parquet")
-    drain()
-    assert {
-        r["vec_id"] for r in spark.read.parquet(out).collect()
-    } == {1, 3}
-
-    b2 = [
-        (10, vec(a)),   # near standing 1 -> drops
-        (11, vec(c)),   # fresh -> lands
-        (12, vec(c)),   # in-batch dup of 11 -> drops
-    ]
-    write_batch(b2, f"{in_dir}/b2.parquet")
-    drain()
-    assert {
-        r["vec_id"] for r in spark.read.parquet(out).collect()
-    } == {1, 3, 11}
-
-    drain()  # no new input: no-op
-    assert {
-        r["vec_id"] for r in spark.read.parquet(out).collect()
-    } == {1, 3, 11}

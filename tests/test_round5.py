@@ -759,12 +759,8 @@ def test_semantic_layer_defaults_are_scale_safe():
         semantic_dedup_incremental,
     )
     from pdftableextractor_spark.operators.similarity import knn_join
-    from pdftableextractor_spark.streaming.ingest import (
-        stream_semantic_ingest,
-    )
 
-    for fn in (semantic_dedup, semantic_dedup_incremental, knn_join,
-               stream_semantic_ingest):
+    for fn in (semantic_dedup, semantic_dedup_incremental, knn_join):
         default = inspect.signature(fn).parameters["n_probe"].default
         assert default == 2, (
             f"{fn.__name__} defaults n_probe={default!r}; the default "

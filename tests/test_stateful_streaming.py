@@ -48,81 +48,3 @@ def test_streaming_dedup_state_survives_restart(spark, tmp_path):
     }
     assert {d for _, d in got2} == {"d1", "d2", "d4"}
     assert len(got2) == 3
-
-
-def test_windowed_counts_watermark_semantics(spark, tmp_path):
-    """Pin the watermark contract: (1) append mode emits a window exactly
-    once, when the watermark passes its end; (2) a late event inside the
-    watermark is counted; (3) an event older than the watermark is dropped."""
-    import datetime as dt
-    import os
-
-
-    from pdftableextractor_spark.streaming.windows import (
-        stream_windowed_counts,
-    )
-
-    in_dir, out_dir, ckpt = (
-        str(tmp_path / d) for d in ("in", "out", "ck")
-    )
-    os.makedirs(in_dir)
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    m = lambda k: t0 + dt.timedelta(minutes=k)
-
-    def write_batch(name, rows):
-        # the file-stream source lists FILES in input_dir (not subdirs) —
-        # write each batch as one flat parquet file
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        pq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                    "event_type": pa.array([r[1] for r in rows], pa.string()),
-                    "ts": pa.array([r[2] for r in rows],
-                                   pa.timestamp("us")),
-                }
-            ),
-            f"{in_dir}/{name}.parquet",
-        )
-
-    def run():
-        stream_windowed_counts(spark, in_dir, out_dir, ckpt)
-        try:
-            return {
-                (r["win_start"], r["event_type"]): r["n"]
-                for r in spark.read.parquet(out_dir).collect()
-            }
-        except Exception:
-            return {}
-
-    # batch 1: one event every 5 min over [00:00, 01:00], type 'a'.
-    # availableNow runs a closing batch after the data batch, so run 1
-    # already emits with the end-of-run watermark 01:00-30m = 00:30:
-    # windows ending <= 00:30, two events each
-    write_batch("b1", [(i, "a", m(5 * i)) for i in range(13)])
-    got1 = run()
-    assert got1 == {(m(0), "a"): 2, (m(10), "a"): 2, (m(20), "a"): 2}
-
-    # batch 2: watermark at batch start is 00:30.
-    #   late-but-ok  event at 00:35 (window [00:30,00:40) still open → counted)
-    #   too-late     event at 00:10 (before watermark → DROPPED)
-    #   fresh        event at 02:00 (advances watermark to 01:30)
-    write_batch("b2", [(100, "a", m(35)), (101, "a", m(10)), (102, "a", m(120))])
-    got2 = run()
-    # late 00:35 joined batch-1's 00:30 + 00:35 events → 3
-    assert got2[(m(30), "a")] == 3
-    assert got2[(m(40), "a")] == 2 and got2[(m(50), "a")] == 2
-    assert got2[(m(60), "a")] == 1  # the 01:00 event
-    # the too-late 00:10 did NOT reopen/bump its already-emitted window
-    assert got2[(m(10), "a")] == 2
-    assert (m(120), "a") not in got2  # 02:00's window not closed yet
-
-    # batch 3: fresh event at 03:00 → watermark 02:30 closes [02:00,02:10)
-    write_batch("b3", [(200, "a", m(180))])
-    got3 = run()
-    assert got3[(m(120), "a")] == 1
-    # exactly-once: re-running with no new data emits nothing new
-    got4 = run()
-    assert got4 == got3

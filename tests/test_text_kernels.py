@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pdftableextractor_spark import oracle
 from pdftableextractor_spark.functions.strings import (
-    is_boilerplate_col,
+    is_boilerplate_spark_sql,
     is_footnote_col,
     normalize_text_col,
 )
@@ -101,7 +101,8 @@ def test_boilerplate_predicate_matches_oracle(spark):
     df = spark.createDataFrame([(l,) for l in lines], ["text"])
     got = [
         bool(r["b"])
-        for r in df.select(is_boilerplate_col("text").alias("b")).collect()
+        for r in df.selectExpr(f"{is_boilerplate_spark_sql('text')} AS b")
+        .collect()
     ]
     assert got == [oracle.is_boiler(l) for l in lines]
 
