@@ -75,10 +75,14 @@ an LLM training-data pipeline; every stage is a JVM-side operator from
 operators/dedup.py / textstats.py / sampling.py.
 
 The funnel is one lazy pass. A row-local stage (quality, language, PII,
-token counts, fingerprint) adds its columns with one projection; a gate
-is a condition on them. The frame is pinned only where one lineage feeds
-two branches, and each pin applies the gates pending since the last one,
-counting every gate's survivors with one Observation on the way.
+token counts, fingerprint) adds its columns with one projection, never a
+self-join; a gate is a (funnel name, condition) pair on them, pending
+until the next pin. The frame is pinned only where one lineage feeds two
+branches, and each pin applies the gates pending since the last one,
+counting every gate's survivors with one Observation on the way: the
+pin runs that lineage exactly once, so the counts are exact and cost no
+job. Nothing is observed where two branches read a frame, nor below
+pack_shards' range exchange, whose bounds sampling runs the lineage too.
 """
 
 from __future__ import annotations
@@ -247,6 +251,7 @@ def main() -> None:
         repetition_stats,
         token_count_cols,
     )
+    from pdftableextractor_spark.plans.pin import pin
     from pdftableextractor_spark.session import build_session
     from pdftableextractor_spark.sources.tables import read_path, write_table
 
@@ -256,16 +261,7 @@ def main() -> None:
         "doc_id", F.col("doc_id").cast("string")
     )
 
-    # The funnel rule. A row-local stage adds columns with one projection,
-    # never a self-join. A gate is a (funnel name, condition) pair in
-    # ``stages``, pending until the next pin; a None condition counts the
-    # rows as they stand, so it may only lead. A frame is pinned only where
-    # one lineage feeds two branches, and the pin applies the pending
-    # gates. One Observation on the pinned frame counts each gate's
-    # survivors: the pin's materialization runs that lineage exactly once,
-    # so the counts are exact and cost no job. Nothing is observed where
-    # two branches read a frame, nor below pack_shards' range exchange,
-    # whose bounds sampling runs the lineage too.
+    # the funnel rule of the module docstring
     observed = []
 
     def passing(stages):
@@ -275,19 +271,19 @@ def main() -> None:
                 keep = keep & cond
         return keep
 
-    def pin(df, *stages):
-        """``df`` filtered by ``stages`` and pinned (eager localCheckpoint),
-        each stage's survivors counted on the way; helper columns
-        (``__*``) are dropped."""
+    def gate(df, *stages):
+        """``df`` filtered by the gates ``stages`` and pinned, each gate's
+        survivors counted on the way (a None condition counts the rows as
+        they stand, so it may only lead); helper columns (``__*``) are
+        dropped."""
         counts = [
             F.count(F.when(passing(stages[: i + 1]), 1)).alias(name)
             for i, (name, _) in enumerate(stages)
         ]
         obs = Observation()
         observed.append(obs)
-        pinned = (
-            df.observe(obs, *counts).filter(passing(stages)).localCheckpoint()
-        )
+        df = df.observe(obs, *counts).filter(passing(stages))
+        pinned = pin(df, " > ".join(name for name, _ in stages))
         return pinned.drop(*[c for c in pinned.columns if c.startswith("__")])
 
     # the input count leads the first pin's stages, except where the raw
@@ -311,7 +307,7 @@ def main() -> None:
     first = F.row_number().over(
         Window.partitionBy(F.md5("text")).orderBy("doc_id")
     )
-    docs1 = pin(
+    docs1 = gate(
         docs.select("*", first.alias("__first")),
         *stages,
         ("after_exact_dedup", F.col("__first") == 1),
@@ -376,7 +372,7 @@ def main() -> None:
         # source, broadcast back — the corpus is filtered, never shuffled.
         # Pinned: the histogram and the filter read it
         docs3 = drop_bottom_percentile(
-            pin(docs3, *stages), args.quality_pct, "quality", "source"
+            gate(docs3, *stages), args.quality_pct, "quality", "source"
         )
         stages = [("after_quality_pct", None)]
 
@@ -399,7 +395,7 @@ def main() -> None:
 
     if args.min_lm_score is not None:
         # pinned: the LM trains on these survivors and is joined back
-        docs4 = pin(docs4, *stages)
+        docs4 = gate(docs4, *stages)
         lm = bigram_transition_score(docs4.select("doc_id", "text")).select(
             "doc_id", "lm_score"
         )
@@ -420,7 +416,7 @@ def main() -> None:
 
     if args.mask_span_n is not None:
         # pinned: the mask reads it three times
-        scrubbed = pin(scrubbed, *stages)
+        scrubbed = gate(scrubbed, *stages)
         masked = mask_duplicate_spans(
             scrubbed.select("doc_id", "text"),
             n=args.mask_span_n,
@@ -436,7 +432,7 @@ def main() -> None:
     if args.benchmark:
         bench = read_path(spark, args.benchmark)
         # pinned: its n-grams and the anti-join read it
-        scrubbed = pin(scrubbed, *stages)
+        scrubbed = gate(scrubbed, *stages)
         if args.fuzzy_decontam is not None:
             scrubbed = fuzzy_decontaminate(
                 scrubbed, bench, n=args.decontam_n,
@@ -463,7 +459,7 @@ def main() -> None:
         # min(f1, f2) instead of f1*f2 — the token budget silently doubles).
         # Pinned: the per-source fractions and the sample read it
         scrubbed = temperature_mix(
-            pin(scrubbed, *stages), alpha=alpha, budget_frac=budget, seed=13
+            gate(scrubbed, *stages), alpha=alpha, budget_frac=budget, seed=13
         )
         stages = [("after_temp_mix", None)]
 
@@ -471,7 +467,7 @@ def main() -> None:
         from pdftableextractor_spark.operators.sampling import dsir_resample
 
         # pinned: the weight model, the selection and the semi-join read it
-        scrubbed = pin(scrubbed, *stages)
+        scrubbed = gate(scrubbed, *stages)
         tgt = read_path(
             spark, f"{args.dsir_target}/documents.parquet"
         ).select(
@@ -513,7 +509,7 @@ def main() -> None:
         )
     # pinned: pack_shards' range exchange reads it twice (the bounds
     # sample, then the shuffle), and so do BPE training and encoding
-    annotated = pin(annotated, *stages)
+    annotated = gate(annotated, *stages)
     n_merges = None
     if args.tokenize is not None:
         from pdftableextractor_spark.operators.tokenize import (

@@ -123,6 +123,7 @@ def main() -> None:
         synth_assets,
         video_near_dups,
     )
+    from pdftableextractor_spark.plans.pin import pin
     from pdftableextractor_spark.session import build_session
     from pdftableextractor_spark.sources.tables import read_path, write_table
 
@@ -137,7 +138,7 @@ def main() -> None:
         assets = synth_assets(docs)
     # the asset frame feeds five branches (features, three dedup paths,
     # frame sampling) — materialize once (the curate-funnel lineage rule)
-    assets = assets.localCheckpoint()
+    assets = pin(assets, "media assets")
     by_kind = {
         r["kind"]: r["n"]
         for r in assets.groupBy("kind").agg(F.count("*").alias("n")).collect()
@@ -173,32 +174,29 @@ def main() -> None:
         threshold=args.video_containment,
         hash_every_ms=args.video_hash_every_ms,
         max_frames=args.video_max_frames,
-    ).localCheckpoint()
+    )
+    vp = pin(vp, "media video pairs")
     video_drop = vp.select(
         F.when(F.col("size_a") < F.col("size_b"), F.col("asset_a"))
         .when(F.col("size_b") < F.col("size_a"), F.col("asset_b"))
         .otherwise(F.greatest("asset_a", "asset_b"))
         .alias("asset_id")
     ).distinct()
-    for name, pairs, drop in (
-        ("image", image_near_dups(
-            assets, max_hamming=args.max_hamming, n_bands=args.n_bands
-        ), None),
-        ("audio", audio_near_dups(
-            assets, max_hamming=args.max_hamming, n_bands=args.n_bands
-        ), None),
-        ("video", vp.select("asset_a", "asset_b"), video_drop),
+    for name, near_dups in (
+        ("image", image_near_dups), ("audio", audio_near_dups)
     ):
-        pairs = pairs.localCheckpoint()
+        pairs = near_dups(
+            assets, max_hamming=args.max_hamming, n_bands=args.n_bands
+        )
+        pairs = pin(pairs, f"media {name} pairs")
         pair_counts[name] = pairs.count()
-        if drop is None:
-            cc = connected_components(
-                pairs, a_col="asset_a", b_col="asset_b"
-            )
-            drop = cc.filter(F.col("node") != F.col("component")).select(
-                F.col("node").alias("asset_id")
-            )
+        cc = connected_components(pairs, a_col="asset_a", b_col="asset_b")
+        drop = cc.filter(F.col("node") != F.col("component")).select(
+            F.col("node").alias("asset_id")
+        )
         losers = drop if losers is None else losers.unionByName(drop)
+    pair_counts["video"] = vp.count()
+    losers = losers.unionByName(video_drop)
 
     kept_obs = Observation("kept")
     write_table(

@@ -50,6 +50,7 @@ def main() -> None:
     from pdftableextractor_spark.corpus import write_corpus_parquet
     from pdftableextractor_spark.operators.extract import extract_frames
     from pdftableextractor_spark.operators.structure import (
+        pick_commentary_salt,
         unified_data_points,
     )
     from pdftableextractor_spark.session import build_session
@@ -64,15 +65,7 @@ def main() -> None:
     t0 = time.time()
     docs = read_path(spark, inp)
     frames = extract_frames(docs)
-    # commentary salting pays only on heavy-tailed corpora (quadratic
-    # per-doc pair work concentrates in a few giant docs); detect the tail
-    # from span counts — one narrow scan — and leave it off for uniform
-    # inputs where the xsalt line duplication is a measured loss
-    stats = docs.select(F.size("spans").alias("n")).agg(
-        F.max("n").alias("mx"),
-        F.expr("percentile_approx(n, 0.5)").alias("md"),
-    ).collect()[0]
-    salt = 8 if stats["mx"] > 20 * max(stats["md"] or 1, 1) else 1
+    salt = pick_commentary_salt(docs)
     # the summary counts ride the write (one Observation): no job re-reads
     # the output
     obs = Observation("structure")

@@ -49,19 +49,7 @@ no planted skew; AQE skew-join as backstop) and the candidate-pair spread
 of the verify, which runs only on band-collision candidates, never all-pairs.
 Blocking keys bound the quadratic term for the exact-pair variants.
 
-Pins: an eager ``localCheckpoint`` materializes a frame that several plan
-branches read under different operators, where ReuseExchange cannot
-dedupe them (here: containment_pairs' shingle arrays and the
-connected-components rounds). Unlike ``persist()`` its blocks are not
-held by the CacheManager for the session's lifetime: the ContextCleaner
-releases them when the checkpointed RDD is garbage-collected, so repeated
-calls do not pile up corpus-sized caches. FAULT-TOLERANCE TRADE (every
-``localCheckpoint`` in this repo): lineage is truncated and the blocks live
-only on executors, so losing an executor (preemption, dynamic-allocation
-decommission) fails the query instead of recomputing it. Run these
-operators on reliable executors or with ``spark.decommission.enabled``
-block migration; on preemptible fleets swap in ``persist()`` plus an
-explicit ``unpersist()`` at the call site.
+Pins go through ``plans.pin.pin``; its docstring states the trade.
 """
 
 from __future__ import annotations
@@ -69,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdftableextractor_spark.plans.pin import pin
 from pdftableextractor_spark.types import US
 
 NUM_HASHES = 64
@@ -252,10 +241,11 @@ def _key_set_containment(
     A key held by more than ``max_df`` distinct assets is dropped from
     every set before the sizes are counted; that bounds the self-join's
     per-key fan-out. Candidates form only through the self-join on
-    ``key`` (and ``match``). ``sigs`` is read by the df census and by the
-    capped join, so callers pass it pinned."""
+    ``key`` (and ``match``).
+    EAGER: pins ``sigs`` (read by the df census and the capped join)."""
     t_micro = int(round(float(threshold) * 1_000_000))
     keys = [key] + (match or [])
+    sigs = pin(sigs, f"key-set containment signatures ({key})")
     dfreq = sigs.groupBy(key).agg(F.count_distinct("asset_id").alias("__df"))
     capped = (
         sigs.join(dfreq, key)
@@ -548,7 +538,8 @@ def embedding_near_dups_unlabeled(
     members agree on at least one of their two nearest cells). Cost:
     n_probe rows per vector through the blocked join — still O(n²·p²/k),
     never all-pairs; duplicate candidates from shared cells dedup with one
-    distinct over the (pair, cos) rows."""
+    distinct over the (pair, cos) rows.
+    EAGER: pins the k-means fit sample (sampled fit only)."""
     from pdftableextractor_spark.operators.similarity import (
         _probed,
         kmeans_centroids,
@@ -807,10 +798,10 @@ def connected_components(
     Scale notes (100 TB): state is the edge list only — O(pairs) rows of two
     id columns, shuffled on uniform ids (no planted skew; a mega-cluster's
     star root is the one hot key, and it shrinks every round as edges
-    dedup). Lineage is truncated per round with an eager localCheckpoint
-    (the curate-funnel lesson: iterative self-referencing plans otherwise
-    double per round). Convergence is detected with one aggregate —
-    (count, xor of per-edge xxhash64) — not a full set-difference join.
+    dedup). Lineage is truncated per round with a pin (the curate-funnel
+    lesson: iterative self-referencing plans otherwise double per round).
+    Convergence is detected with one aggregate — (count, xor of per-edge
+    xxhash64) — not a full set-difference join.
 
     Node ids compare with their column ordering (string ids → lexicographic;
     both engines use codepoint order, so the DuckDB oracle agrees). Output
@@ -818,7 +809,7 @@ def connected_components(
     caller's coalesce (see q52).
 
     Adaptive cutoff: when the RAW edge list has <= ``small_graph_
-    threshold`` edges (one count over the checkpointed edges; raw >= the
+    threshold`` edges (one count over the pinned edges; raw >= the
     deduped count, so the check only ever errs toward the distributed
     path), the components are solved with a driver-side union-find
     instead of O(log n) distributed rounds — identical min-label output
@@ -832,23 +823,13 @@ def connected_components(
     Near-dup graphs are SPARSE by construction (band-collision pairs), so
     even large corpora often land under the cutoff; pass
     ``small_graph_threshold=0`` to force the distributed path.
+    EAGER: pins the raw edges (and each round's, distributed path).
     """
-    # RAW edges first (round-7): the callers' pair generators already emit
-    # each unordered pair once (doc_a < doc_b), so the defensive distinct
-    # is a pure extra shuffle on the small-graph path — the driver
-    # union-find is insensitive to duplicate edges. The cutoff check runs
-    # on the RAW count (>= the deduped count, so the driver-memory bound
-    # still holds and the decision only ever errs toward the distributed
-    # path); the distributed path dedups below as before, where the
-    # convergence signature needs set semantics.
-    e_raw = (
-        pairs.select(
-            F.col(a_col).cast("string").alias("u"),
-            F.col(b_col).cast("string").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .localCheckpoint()
-    )
+    e_raw = pairs.select(
+        F.col(a_col).cast("string").alias("u"),
+        F.col(b_col).cast("string").alias("v"),
+    ).filter(F.col("u") != F.col("v"))
+    e_raw = pin(e_raw, "connected-components edges")
 
     def _signature(edges: DataFrame) -> tuple[int, int]:
         row = edges.agg(
@@ -920,10 +901,10 @@ def connected_components(
         return pairs.sparkSession.createDataFrame(
             out, "node string, component string"
         )
-    e = e_raw.distinct().localCheckpoint()
+    e = pin(e_raw.distinct(), "connected-components distinct edges")
     sig = _signature(e)
     for _ in range(max_rounds):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        e = pin(_small_star(_large_star(e)), "connected-components round")
         new_sig = _signature(e)
         if new_sig == sig:
             break
@@ -1034,9 +1015,9 @@ def duplicate_ngram_spans(
     split handles; candidate pruning happens BEFORE the join-back (the
     census filter), so the join only moves spans that are actually
     duplicated."""
-    # NOTE(round-7): a localCheckpoint here (census + join-back both read
-    # the gram frame) measured NEUTRAL at sf0.1 (A/B 1.25 vs 1.26 s) and
-    # the gram frame is BIGGER than the corpus — rejected
+    # NOTE(round-7): a pin here (census + join-back both read the gram
+    # frame) measured NEUTRAL at sf0.1 (A/B 1.25 vs 1.26 s) and the gram
+    # frame is BIGGER than the corpus — rejected
     grams = (
         _tokens(docs, text_col)
         .select(
@@ -1097,14 +1078,15 @@ def containment_pairs(
     corpus.
 
     EAGER: pins one frame, each document's sorted distinct shingle array
-    (one localCheckpoint job). Every other frame is a projection of it:
-    the shingle rows (which carry the set size), the doc-frequencies, the
-    prefix, the candidate probe and both verify sides read it under
-    different operators, where ReuseExchange cannot dedupe them."""
+    (one pin job). Every other frame is a projection of it: the shingle
+    rows (which carry the set size), the doc-frequencies, the prefix, the
+    candidate probe and both verify sides read it under different
+    operators, where ReuseExchange cannot dedupe them."""
     t_micro = int(round(float(threshold) * 1_000_000))
     arr = _tokens(docs, text_col).select(
         "doc_id", shingles_from_tokens_col(F.col("__tk"), n).alias("arr")
-    ).localCheckpoint(eager=True)
+    )
+    arr = pin(arr, "containment shingle arrays")
     sized = arr.select(
         "doc_id", F.size("arr").cast("bigint").alias("size"), "arr"
     )
@@ -1203,9 +1185,9 @@ def mask_duplicate_spans(
     # never rewrites untouched text's casing or the uppercase PII tags.
     # lower() can never add/remove whitespace, so the two token arrays are
     # position-aligned and equally long by construction.
-    # NOTE(round-7): localCheckpoints here (the token frame is read 2×,
-    # the span frame 2×) measured NEUTRAL at sf0.1 (interleaved A/B 2.30
-    # vs 2.26 s) and both frames are corpus-sized-or-bigger — rejected
+    # NOTE(round-7): pins here (the token frame is read 2×, the span frame
+    # 2×) measured NEUTRAL at sf0.1 (interleaved A/B 2.30 vs 2.26 s) and
+    # both frames are corpus-sized-or-bigger — rejected
     tko = docs.select(
         "doc_id",
         F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "").alias(
@@ -1352,7 +1334,8 @@ def semantic_dedup(
     quadratic in the corpus; the kNN truncation bounds edges at
     corpus·k, so CC state is O(n·k) however dense the similarity graph
     gets — the reason SemDeDup scales where threshold-pair generation
-    (embedding_near_dups) can blow up on a clustered corpus."""
+    (embedding_near_dups) can blow up on a clustered corpus.
+    EAGER: pins through ``connected_components`` and ``kmeans_centroids``."""
     from pdftableextractor_spark.operators.similarity import knn_join
 
     idt = dict(embeddings.dtypes)[id_col]

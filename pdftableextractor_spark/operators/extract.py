@@ -45,6 +45,7 @@ from pdftableextractor_spark.functions.strings import (
     sql_lit,
 )
 from pdftableextractor_spark.kernels.layout import PAGES_OUT_TYPE, layout_pages
+from pdftableextractor_spark.plans.pin import pin
 from pdftableextractor_spark.types import US
 
 CELL_TAG_RE = r"^r(\d+)c(\d+):"
@@ -323,14 +324,10 @@ def extract_frames(documents: DataFrame) -> dict[str, DataFrame]:
     frames are projections of that array: no window, no exchange, and the
     layout kernel runs once per document. ``offset`` is an int.
 
-    EAGER: the call runs one Spark job, which pins the frame-row arrays
-    with ``localCheckpoint``. Consumers reference the frames up to six
-    times in one plan (cells, kvs, lines ×3, footnotes), and exchange reuse
-    does not fire across the differently-pruned subtrees, so without the
-    pin every reference would re-run the scan and the layout kernel. The
-    trade: the pinned blocks live only on the executors (released by the
-    ContextCleaner) and the lineage is cut, so losing an executor fails the
-    queries that read them instead of recomputing its blocks.
+    EAGER: pins the frame-row arrays (one Spark job). Consumers read the
+    frames up to six times in one plan (cells, kvs, lines ×3, footnotes)
+    and exchange reuse does not fire across the differently-pruned
+    subtrees: unpinned, every reference re-runs the scan and the kernel.
     """
     cell = {"row_idx": "NULL", "col_idx": "NULL"}
     grid = _grid_sql("x.h", "x.w", "x.m")
@@ -349,11 +346,10 @@ def extract_frames(documents: DataFrame) -> dict[str, DataFrame]:
         ),
     }
     rows_sql = _doc_rows_sql(branches, FRAME_T, "e.tag != 'pdf_cell'")
-    rows = (
-        _staged(documents.select("doc_id", "spans"))
-        .selectExpr("doc_id", f"{rows_sql} AS rows")
-        .localCheckpoint(eager=True)
+    rows = _staged(documents.select("doc_id", "spans")).selectExpr(
+        "doc_id", f"{rows_sql} AS rows"
     )
+    rows = pin(rows, "extract_frames rows")
     lines = rows.selectExpr(
         "doc_id",
         "posexplode(filter(rows, e -> e.tag = 'line' AND e.text != ''))"

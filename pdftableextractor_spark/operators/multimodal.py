@@ -1358,10 +1358,10 @@ def video_near_dups(
     undecodable payloads still pair exactly through their single pseudo
     -hash row unless more than MAX_FRAME_DF copies exist.
 
-    Shape: one decode per payload in the Arrow kernel, whose (asset_id,
-    fhash, real) rows are pinned (EAGER: the call runs the kernel once);
-    then the shared key-set containment path (``dedup._key_set_containment``):
-    a frame-hash document-frequency cap, candidates ONLY through the
+    EAGER: pins the (asset_id, fhash, real) rows (decode kernel runs once).
+    Shape: one decode per payload in the Arrow kernel, then the shared
+    key-set containment path (``dedup._key_set_containment``): a
+    frame-hash document-frequency cap, candidates ONLY through the
     equi-join on (fhash, real), a pure-integer threshold and exact-int
     rounding. Pseudo-hash rows never join real frame hashes.
 
@@ -1382,7 +1382,7 @@ def video_near_dups(
 
     raw = video_frame_hashes(
         assets, hash_every_ms=hash_every_ms, max_frames=max_frames
-    ).localCheckpoint(eager=True)
+    )
     return _key_set_containment(
         raw, "fhash", threshold, MAX_FRAME_DF, match=["real"]
     )
@@ -1541,26 +1541,18 @@ def binary_near_dups(
     "shared only boilerplate chunks" pairs disappear (the video suite's
     stop-frame rule, one modality over).
 
+    EAGER: pins the distinct (asset_id, chash) rows (chunk kernel runs
+    once; ~0.5% of corpus bytes at the production avg_bits).
     Shape at 100 TB: the chunk kernel is O(bytes) vectorized numpy per
-    payload, and its distinct (asset_id, chash) rows are pinned (EAGER:
-    the call runs the kernel once); candidates form ONLY through the
-    df-capped equi-join on chash (never all-pairs) of the shared key-set
-    containment path (``dedup._key_set_containment``); the threshold
-    filter is pure-integer with the shared exact-int rounding.
+    payload; candidates form ONLY through the df-capped equi-join on chash
+    (never all-pairs) of the shared key-set containment path; the
+    threshold filter is pure-integer with the shared exact-int rounding.
     Thresholds: 0 < threshold <= 1."""
     from pdftableextractor_spark.operators.dedup import _key_set_containment
 
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    sigs = (
-        cdc_chunk_hashes(
-            assets, avg_bits=avg_bits, min_size=min_size, max_size=max_size
-        )
-        .distinct()
-        # the df census AND the capped join both reference this lineage —
-        # without the checkpoint the chunk kernel re-chunks every payload
-        # twice (round-7; the signature table is ~0.5% of corpus bytes at
-        # the production avg_bits, the cheapest frame here to hold)
-        .localCheckpoint(eager=True)
-    )
+    sigs = cdc_chunk_hashes(
+        assets, avg_bits=avg_bits, min_size=min_size, max_size=max_size
+    ).distinct()
     return _key_set_containment(sigs, "chash", threshold, max_chunk_df)

@@ -12,14 +12,15 @@ Both are SCAN-SHAPED by design at the 100 TB point:
   a token budget. The cumulative sum is windowed PER GROUP (e.g. per
   source/domain), never globally — a global running sum would force a
   single-partition window. Shard identity is (group, shard_idx); packing
-  order within a group is the deterministic id order. It is EAGER: it pins
-  its range-bucketed frame, the one frame both of its branches read.
+  order within a group is the deterministic id order.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pdftableextractor_spark.plans.pin import pin
 
 # 10^6 resolution for the sampling hash: u = md5-60bit % 1e6 / 1e6
 _RES = 1_000_000
@@ -101,7 +102,7 @@ def pack_shards(
     the group's id order — a document straddling the boundary starts in the
     shard its first token lands in).
 
-    EAGER: pins the range-bucketed frame (one localCheckpoint job, plus the
+    EAGER: pins the range-bucketed frame (one pin job, plus the
     range-bounds sampling job) before it returns.
 
     The cumulative sum is a TWO-LEVEL distributed prefix sum, never one
@@ -125,10 +126,8 @@ def pack_shards(
     materialization, whatever the input lineage. shard ids depend only on
     cumulative token sums in id order, so the output is invariant to the
     physical bucketing. Output adds shard_idx int."""
-    # the one pin: the totals branch and the main branch read it
-    bucketed = _range_buckets(
-        docs, group_col, id_col, num_buckets
-    ).localCheckpoint()
+    bucketed = _range_buckets(docs, group_col, id_col, num_buckets)
+    bucketed = pin(bucketed, "pack_shards range buckets")
     totals = bucketed.groupBy(group_col, "__bkt").agg(
         F.sum(F.col(tokens_col).cast("bigint")).alias("__tot")
     )
@@ -318,15 +317,11 @@ def dsir_weights(
     quadratic, one corpus-wide shuffle per aggregation, and the model
     never grows with the corpus — that is the point of hashed features.
 
-    Materialization (round-7): the gram lineage (tokenize + bigram pairs +
-    explode + md5 per gram — the expensive scan) is referenced THREE times
-    in one call (totals, the scored-model broadcast build, and the score
-    join) and exchange reuse never fires across them; the B-row model is
-    referenced twice more. Both are localCheckpointed (blocks released by
-    the ContextCleaner; see the pin note in the dedup module docstring):
-    grams cost ~12 bytes/gram of executor spill-to-disk storage versus
-    re-running the md5 scan of the whole corpus twice; the model is 8192
-    rows.
+    EAGER: pins the gram frame and the B-row model (round-7). The gram
+    lineage (the expensive tokenize/explode/md5 scan) is read THREE times
+    (totals, the model broadcast build, the score join) with no exchange
+    reuse across them, the model twice more: ~12 bytes/gram of executor
+    storage versus two more md5 scans of the corpus.
     """
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
@@ -344,7 +339,7 @@ def dsir_weights(
     # the token is a unigram, the pair (when complete) a bigram
     padded = F.concat(F.col("__tk"), F.array(F.lit(None).cast("string")))
     w1, w2 = F.col("__p").getField("0"), F.col("__p").getField("1")
-    grams = (
+    grams = pin(
         base.select(
             id_col, "__t", F.explode(_gram_structs(padded, 2)).alias("__p")
         )
@@ -365,15 +360,14 @@ def dsir_weights(
                 ),
                 F.lit(n_buckets),
             ).alias("bucket"),
-        )
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note in the
-        # dedup module docstring (shared by every localCheckpoint here)
-        .localCheckpoint(eager=True)
+        ),
+        "dsir grams",
     )
     model = grams.groupBy("bucket").agg(
         F.sum(F.when(F.col("__t"), 1).otherwise(0)).alias("tc"),
         F.sum(F.when(~F.col("__t"), 1).otherwise(0)).alias("rc"),
-    ).localCheckpoint(eager=True)
+    )
+    model = pin(model, "dsir model")
     totals = model.agg(
         F.sum("tc").alias("tt"), F.sum("rc").alias("rt")
     )
@@ -456,6 +450,7 @@ def dsir_resample(
     model — the paper's setup, where the target corpus defines the
     distribution but only raw docs are candidates (without it, target
     rows would out-score every candidate and win their own contest).
+    EAGER: pins through ``dsir_weights`` (its gram frame and model).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdftableextractor_spark.kernels.vectors import cosine_to_query_udf
+from pdftableextractor_spark.plans.pin import pin
 
 # the schema of an IVF index's <path>/centroids table: build_ivf_index
 # writes it, _validated_index reads with it (no schema-inference job)
@@ -182,6 +183,7 @@ def kmeans_cells(
     the driver (the centroids — they must be broadcast anyway). Returns the
     input with an added int ``cell`` column (0..k-1) ready for
     ``ivf_topk(..., cell_col='cell')``.
+    EAGER: pins the fit sample (``kmeans_centroids``, sampled fit only).
     """
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
@@ -224,7 +226,8 @@ def kmeans_centroids(
     reproduces the full fit exactly (up to float summation order).
     Scale note: the md5-ordered limit is a per-partition top-N + one
     sample-sized reduce; for k ~ 10^6 cells prefilter with a hash
-    threshold on md5 before the sort instead."""
+    threshold on md5 before the sort instead.
+    EAGER: pins the fit sample (sampled fit only)."""
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
     md5_order = F.md5(
@@ -234,11 +237,8 @@ def kmeans_centroids(
         md5_order, F.col(id_col)
     )
     if fit_sample_per_cell is not None:
-        # executor-loss caveat: see the FAULT-TOLERANCE TRADE note in the
-        # dedup module docstring (shared by every localCheckpoint here)
-        fit = ordered.limit(
-            max(k, fit_sample_per_cell * k)
-        ).localCheckpoint(eager=True)
+        fit = ordered.limit(max(k, fit_sample_per_cell * k))
+        fit = pin(fit, "k-means fit sample")
         init = fit.orderBy(md5_order, F.col(id_col)).limit(k).collect()
     else:
         fit = embeddings
@@ -361,7 +361,8 @@ def knn_join(
     A 64-dim embedding at 10^12 docs with n_cells=10^6: cells ~10^6 rows
     × 64 × 8 B ≈ 0.5 GB per task — sized for a 4 GB executor; the only
     corpus-scale shuffles are the two cell-keyed cogroups (1 + n_probe
-    copies of the vectors)."""
+    copies of the vectors).
+    EAGER: pins the fit sample (``kmeans_centroids``, sampled fit only)."""
     return knn_join_between(
         embeddings,
         embeddings,
@@ -397,7 +398,8 @@ def knn_join_between(
     the DATA side (the standing corpus defines the cell geometry; a
     small batch would fit degenerate cells); queries multi-probe into
     those cells. ``exclude_self`` masks qid == vec_id matches — the
-    re-sent-id rule when both frames share an id namespace."""
+    re-sent-id rule when both frames share an id namespace.
+    EAGER: pins the fit sample (``kmeans_centroids``, sampled fit only)."""
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
     # bootstrap guard: an empty data side cannot seed a k-means fit
@@ -518,7 +520,8 @@ def build_ivf_index(
     filter becomes a PARTITION filter, so a query reads nprobe/k of the
     index files instead of scanning the corpus. Writes go through the
     storage-format seam (parquet here, Iceberg in production). Returns
-    the number of indexed vectors."""
+    the number of indexed vectors.
+    EAGER: pins the fit sample (``kmeans_centroids``, sampled fit only)."""
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
     from pdftableextractor_spark.sources.tables import write_table
 
@@ -656,23 +659,20 @@ def ivf_topk_indexed_batch(
     Shape (the knn_join machinery pointed at a persisted index):
       1. open + validate the index (``_validated_index``, one job);
       2. assign every query to its ``nprobe`` nearest stored centroids
-         (``_probed``; None probes every cell) and eagerly
-         localCheckpoint the assigned frame — it is read twice (probe-set
-         collect + cogroup) and the query batch is small next to the
-         corpus;
+         (``_probed``; None probes every cell);
       3. collect the batch's DISTINCT probed cells (≤ k ints) and read
          only those partitions, stamp-checked (``_probed_vectors``) — a
          small batch reads only the cells it probes, never the whole
          index;
       4. ``_cell_knn``: cogroup queries × probed vectors on cell, then
          the window-free per-query top-k reduce.
+    EAGER: pins the assigned query frame (small; read by steps 3 and 4).
     """
     cents, vecs_all, stamp, cent_list = _validated_index(spark, path)
-    # executor-loss caveat: see the FAULT-TOLERANCE TRADE note in the
-    # dedup module docstring (shared by every localCheckpoint here)
     qry = _probed(
         queries, cent_list, nprobe, "qid", F.col("embedding").alias("qemb")
-    ).localCheckpoint(eager=True)
+    )
+    qry = pin(qry, "ivf batch probed queries")
     probed = sorted(
         int(r["cell"]) for r in qry.select("cell").distinct().collect()
     )
@@ -933,18 +933,14 @@ def build_sq8_index(
     validates the stamps it actually touches (candidates + fetched
     rows, O(rerank·k)) against meta's, so a build that died between
     writes is detected rather than silently served. Returns the number of
-    indexed vectors."""
+    indexed vectors.
+    EAGER: pins the input for the scale fit, fingerprint and both writes:
+    a nondeterministic lineage read four times could write codes that
+    the torn-rebuild stamps cannot tell from the vectors' build."""
     from pdftableextractor_spark.sources.tables import write_table
 
     spark = embeddings.sparkSession
-    # ONE materialization for the four passes (scale fit, fingerprint,
-    # vectors write, codes write) — round-7, ADVICE: a nondeterministic
-    # input lineage could otherwise persist codes inconsistent with
-    # vectors/scale under one build_id, which the torn-rebuild stamps
-    # cannot detect. Also saves three
-    # lineage recomputes. Executor-loss caveat: see the FAULT-TOLERANCE
-    # TRADE note in the dedup module docstring.
-    embeddings = embeddings.localCheckpoint(eager=True)
+    embeddings = pin(embeddings, "sq8 index input")
     scale = sq8_scale(embeddings)
     n, h = _fingerprint(embeddings, id_col)
     build_id = f"sq8-n{n}-x{h:x}"
@@ -992,7 +988,8 @@ def sq8_topk_indexed(
     the candidate rows and the fetched rows each carry build_id and are
     checked against it post-limit — O(rerank·k) validation, never a
     full-index pass. A torn rebuild (codes from one build next to
-    vectors or meta from another) trips one of the two checks."""
+    vectors or meta from another) trips one of the two checks.
+    EAGER: pins the fetched rows (read by the stamp check and the rerank)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rerank < 1:
@@ -1038,8 +1035,8 @@ def sq8_topk_indexed(
             "build_id",
             F.round(cos(F.col("embedding")), 6).alias("cos"),
         )
-        .localCheckpoint(eager=True)
     )
+    fetched = pin(fetched, "sq8 rerank candidates")
     vb = {
         r["build_id"] for r in fetched.select("build_id").distinct().collect()
     }

@@ -269,6 +269,18 @@ def dedup_first_wins(points: DataFrame) -> DataFrame:
     )
 
 
+def pick_commentary_salt(docs: DataFrame) -> int:
+    """``unified_data_points``' commentary salt for ``docs`` (one narrow
+    scan): 8 if span counts are heavy-tailed (max > 20 × median; quadratic
+    per-doc pair work concentrates in a few giant docs), else 1 (the xsalt
+    line duplication is a measured loss); an empty input's null max is 1."""
+    stats = docs.select(F.size("spans").alias("n")).agg(
+        F.max("n").alias("mx"),
+        F.expr("percentile_approx(n, 0.5)").alias("md"),
+    ).collect()[0]
+    return 8 if (stats["mx"] or 0) > 20 * max(stats["md"] or 1, 1) else 1
+
+
 def unified_data_points(frames: dict, commentary_salt: int = 1) -> DataFrame:
     """The reference's COMPLETE df_data assembly (app.py:240-364), one
     DataFrame: 4-source union (tables, kv, text facts, footnotes) →

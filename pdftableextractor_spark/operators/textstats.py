@@ -493,11 +493,11 @@ def bigram_transition_score(
             F.col("__p").getField("1").alias("w2"),
         )
     )
-    # NOTE(round-7): a localCheckpoint here (the model branch and the
-    # score join both read bgm) was measured and REVERTED — interleaved
-    # A/B 1.55 vs 1.64 s at sf0.1: the materialization round-trip of the
-    # per-doc bigram frame costs what the duplicated agg recompute costs,
-    # and at scale the stored frame is corpus-sized
+    # NOTE(round-7): a pin here (the model branch and the score join both
+    # read bgm) was measured and REVERTED — interleaved A/B 1.55 vs 1.64 s
+    # at sf0.1: the materialization round-trip of the per-doc bigram frame
+    # costs what the duplicated agg recompute costs, and at scale the
+    # stored frame is corpus-sized
     bgm = bg.groupBy("doc_id", "w1", "w2").agg(
         F.count(F.lit(1)).alias("m")
     )

@@ -3,7 +3,10 @@
 Defaults chosen for the 100 TB design point, scaled to sandbox local mode:
 Arrow transport on (every kernel is an Arrow batch), AQE on with skew-join
 splitting (heavy-tailed doc sizes), shuffle partitions sized to cores in
-local mode (a real cluster run overrides via spark-submit --conf).
+local mode (a real cluster run overrides via spark-submit --conf), and
+a driver heap of half of physical memory, at most 32g (SPARK_DRIVER_MEM
+overrides it). ``local[*]`` (the default master) is sized from the cores
+the JVM sees.
 """
 
 from __future__ import annotations
@@ -25,14 +28,14 @@ def build_session(
     # was requested explicitly or we are a plain python launch.
     under_submit = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_submit:
-        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    if master and master.startswith("local["):
-        n: int | None = (
-            32 if master[len("local[") : -1] == "*"
-            else int(master[len("local[") : -1])
-        )
-    else:
-        n = None  # sized from defaultParallelism after session start
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    n = None  # local[*] and cluster masters: defaultParallelism, below
+    if master and master.startswith("local[") and master != "local[*]":
+        n = int(master[len("local[") : -1])
+    # local mode runs everything in the driver JVM; a small heap turns
+    # string/regex work on every core into GC thrash (measured 5x)
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 21
+    heap = os.environ.get("SPARK_DRIVER_MEM", f"{min(half_mb, 32 << 10)}m")
     b = SparkSession.builder.appName(app_name)
     if master:
         b = b.master(master)
@@ -50,11 +53,7 @@ def build_session(
         # 128m would hand a whole file to one task. Harmless at cluster
         # scale (real inputs have many files); override via extra_conf.
         .config("spark.sql.files.maxPartitionBytes", "8m")
-        # local mode runs everything in the driver JVM; a small heap turns
-        # 32 threads of string/regex work into GC thrash (measured 5x)
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g")
-        )
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config(

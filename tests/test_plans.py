@@ -195,6 +195,26 @@ def test_build_session_honors_master_and_sizes_shuffle(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == "16"
 
 
+def _mb(size: str) -> float:
+    """A JVM memory size ("8046m", "32g", "512k") in MB."""
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    unit = size[-1].lower()
+    return float(size[:-1]) * scale[unit] if unit in scale else int(size) / 2**20
+
+
+def test_default_driver_heap_fits_physical_memory(spark):
+    """Without SPARK_DRIVER_MEM the session's driver heap is sized from
+    the host: at most half of physical memory, and never above 32g."""
+    import os
+
+    heap = spark.sparkContext.getConf().get("spark.driver.memory")
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        assert heap == os.environ["SPARK_DRIVER_MEM"]
+        return
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**20
+    assert _mb(heap) <= min(phys_mb / 2, 32 * 1024), (heap, phys_mb)
+
+
 def test_bm25_no_explode_two_exchanges(spark):
     """BM25 must stay shuffle-free for tf: no Generate anywhere; the only
     Exchanges are the one-row stats reduce and its broadcast."""
@@ -288,6 +308,43 @@ def _jobs_started(spark, build):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pin_materializes_once_outside_the_cache_manager(spark, monkeypatch):
+    """pin runs its materialization job(s) during the call, under the
+    description ``pin: <reason>`` and the caller's job group; the result
+    reads one Scan ExistingRDD and no exchange; the CacheManager stays
+    empty (not a persist); the caller's job group and description read the
+    same after the call."""
+    from pdftableextractor_spark.plans.pin import pin
+
+    sc = spark.sparkContext
+    agg = spark.read.parquet(f"{SF}/documents.parquet").groupBy("source").count()
+    frame_cls = type(agg)
+    checkpoint = frame_cls.localCheckpoint
+    seen = []
+
+    def recording(self, *args, **kwargs):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    pinned, jobs = _jobs_started(spark, lambda: pin(agg, "unit test"))
+    assert jobs >= 1, jobs
+    assert seen == ["pin: unit test"], seen
+    phys = _plan(pinned).split("== Physical Plan ==")[1]
+    assert phys.count("Scan ExistingRDD") == 1 and "Exchange" not in phys, phys
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    for desc in ("the caller's description", None):
+        sc.setJobGroup("pin-caller", desc)
+        try:
+            pin(agg, "unit test")
+            assert sc.getLocalProperty("spark.jobGroup.id") == "pin-caller"
+            assert sc.getLocalProperty("spark.job.description") == desc
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
 
 def _index_read_jobs(spark, idx):

@@ -402,3 +402,28 @@ def test_all_data_points_five_source_ranks(spark):
     f = [r for r in out.collect() if r["src_rank"] == 3][0]
     assert f["field"] == "Footnote (1)"
     assert f["type"] == "Footnote"
+
+
+def test_commentary_salt_on_empty_and_skewed_inputs(spark, tmp_path):
+    """The structure job's salt decision: 1 on a zero-row corpus (its
+    span-count max is null) and on uniform span counts, 8 on a heavy
+    tail."""
+    from pyspark.sql import functions as F
+
+    from pdftableextractor_spark import corpus
+    from pdftableextractor_spark.operators.structure import (
+        pick_commentary_salt,
+    )
+
+    p = str(tmp_path / "c.parquet")
+    corpus.write_corpus_parquet(p, 5, seed=3)
+    assert pick_commentary_salt(spark.read.parquet(p).limit(0)) == 1
+
+    def spans(fat):
+        n = F.when(F.col("id") == 0, fat).otherwise(2).cast("int")
+        return spark.range(30).select(
+            F.array_repeat(F.lit("s"), n).alias("spans")
+        )
+
+    assert pick_commentary_salt(spans(2)) == 1
+    assert pick_commentary_salt(spans(500)) == 8
