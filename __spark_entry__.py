@@ -91,7 +91,7 @@ from pdftableextractor_spark.operators.multimodal import (
     binary_near_dups,
     extract_features,
     resize_assets,
-    sample_frames,
+    sample_frames_decoded,
     synth_assets,
 )
 from pdftableextractor_spark.operators.textstats import (
@@ -508,9 +508,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_a", "doc_b", F.col("hamming").cast("bigint").alias("hamming")
     )
 
-    # multi-band SimHash (full-recall variant, exact for hamming < n_bands)
+    # multi-band SimHash (full-recall variant, exact for hamming < 5 bands)
     q["q47_simhash_multiband"] = lambda s, d: simhash_near_dups_multiband(
-        _docs_str(s, d), max_hamming=30, n_bands=5
+        _docs_str(s, d), max_hamming=30
     ).select(
         "doc_a", "doc_b", F.col("hamming").cast("bigint").alias("hamming")
     )
@@ -527,7 +527,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     q["q22_ngram_jaccard"] = lambda s, d: ngram_jaccard_pairs(
-        _docs_str(s, d), block_col="source", n=1, threshold=0.4
+        _docs_str(s, d), block_col="source", threshold=0.4
     )
 
     # near-dup CLUSTERS: transitive closure of the q22 pair graph via
@@ -536,7 +536,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q52(s, d):
         docs = _docs_str(s, d)
         cc = connected_components(
-            ngram_jaccard_pairs(docs, block_col="source", n=1, threshold=0.4)
+            ngram_jaccard_pairs(docs, block_col="source", threshold=0.4)
         )
         return docs.join(
             cc.withColumnRenamed("node", "doc_id"), "doc_id", "left"
@@ -627,10 +627,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _t(s, d, "embeddings"), _qvec(s, d), k=10
     )
     q["q25_ivf_topk"] = lambda s, d: ivf_topk(
-        _t(s, d, "embeddings"), _qvec(s, d), k=10, nprobe=2
+        _t(s, d, "embeddings"), _qvec(s, d), nprobe=2
     )
     q["q35_lsh_topk"] = lambda s, d: lsh_topk(
-        _t(s, d, "embeddings"), _qvec(s, d), k=10
+        _t(s, d, "embeddings"), _qvec(s, d)
     )
 
     # kmeans cell assignment (IVF without labels): deterministic Lloyd
@@ -683,7 +683,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         right = ev.filter(F.col("event_type") == "click").select(
             "user_id", F.col("event_id").alias("click_id"), "ts"
         )
-        j = asof_join(left, right, on="user_id", ts_col="ts", seq_col="click_id")
+        j = asof_join(left, right, on="user_id", seq_col="click_id")
         return j.select(
             "event_id",
             "user_id",
@@ -746,7 +746,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
 
     q["q44_drop_common_lines"] = lambda s, d: drop_common_lines(
-        _raw_text_lines(s, d), min_df=5
+        _raw_text_lines(s, d)
     ).select("doc_id", F.col("offset").cast("bigint").alias("offset"), "text")
 
     # PII redaction: append a deterministic PII tail per doc so every row
@@ -790,7 +790,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         F.lower(F.hex(F.col("payload"))).alias("resized_sha"),
     )
 
-    q["q41_frame_sample"] = lambda s, d: sample_frames(
+    q["q41_frame_sample"] = lambda s, d: sample_frames_decoded(
         synth_assets(_docs_str(s, d)), every_ms=5000
     ).select(
         "asset_id",
@@ -803,10 +803,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q42(s, d):
         from pdftableextractor_spark.operators.export import flatten_nested
 
-        return flatten_nested(
-            interleave_flat_documents(_t(s, d, "documents")),
-            id_cols=("doc_id",),
-        )
+        return flatten_nested(interleave_flat_documents(_t(s, d, "documents")))
 
     q["q42_flatten_nested"] = q42
 
@@ -957,15 +954,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         scored = quality_score(docs).join(
             docs.select("doc_id", "source"), "doc_id"
         )
-        return drop_bottom_percentile(
-            scored, 0.2, "quality", "source"
-        ).select("doc_id", "source", "quality")
+        return drop_bottom_percentile(scored, 0.2).select(
+            "doc_id", "source", "quality"
+        )
 
     q["q61_quality_gate"] = q61
 
     # cross-document repeated 4-gram spans (substring-dedup primitive)
     q["q62_dup_spans"] = lambda s, d: duplicate_ngram_spans(
-        _docs_str(s, d), n=4, min_docs=2
+        _docs_str(s, d), n=4
     ).select(
         "doc_id",
         F.col("start_pos").cast("bigint").alias("start_pos"),
@@ -981,20 +978,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # asymmetric containment pairs: the dup class Jaccard misses (a small
     # doc quoted whole inside a large one); prefix-filter candidates
     q["q64_containment"] = lambda s, d: containment_pairs(
-        _docs_str(s, d), n=3, threshold=0.5
+        _docs_str(s, d), threshold=0.5
     ).select("doc_a", "doc_b", "inter", "size_a", "size_b", "containment")
 
     # substring-dedup consume side: cut every duplicated 4-gram window,
     # keep the document (fully-duplicated docs come back empty, not dropped)
     q["q65_mask_spans"] = lambda s, d: mask_duplicate_spans(
-        _docs_str(s, d), n=4, min_docs=2
+        _docs_str(s, d), n=4
     ).select("doc_id", "clean_text", "n_tokens", "n_removed")
 
     # q68: the Lee-et-al run-length floor on the same masking — adjacent
     # covered positions merge into runs and only runs >= 8 tokens are cut
     # (a short shared idiom survives; long boilerplate templates die)
     q["q68_mask_spans_minrun"] = lambda s, d: mask_duplicate_spans(
-        _docs_str(s, d), n=4, min_docs=2, min_run=8
+        _docs_str(s, d), n=4, min_run=8
     ).select("doc_id", "clean_text", "n_tokens", "n_removed")
 
     # containment-based decontamination: same bench/corpus split as q49,
@@ -1508,7 +1505,7 @@ FROM best b LEFT JOIN acc a USING (doc_id, point_id)
     # literals — embedded verbatim so DuckDB reproduces the sign buckets.
     # MULTI-TABLE (4 tables × 4 planes): a candidate matches the query's
     # bucket in ANY table, mirroring lsh_topk's stacked-matmul predicate.
-    _tables = lsh_planes(64, n_planes=4, n_tables=4)
+    _tables = lsh_planes(64, n_tables=4)
     _bucket_exprs = []
     for _tp in _tables:
         _lits = [

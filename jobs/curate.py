@@ -293,10 +293,7 @@ def main() -> None:
         from pdftableextractor_spark.operators.html import extract_main_text
 
         n0 = docs.count()
-        main = extract_main_text(
-            docs.select("doc_id", F.col("text").alias("html")),
-            html_col="html",
-        )
+        main = extract_main_text(docs.select("doc_id", F.col("text").alias("html")))
         # inner join: a doc whose every block classified boilerplate has
         # no main-content row and drops here (nothing left to train on)
         docs = docs.drop("text").join(main, "doc_id")
@@ -371,9 +368,7 @@ def main() -> None:
         # relative gate on top of the absolute one: histogram threshold per
         # source, broadcast back — the corpus is filtered, never shuffled.
         # Pinned: the histogram and the filter read it
-        docs3 = drop_bottom_percentile(
-            gate(docs3, *stages), args.quality_pct, "quality", "source"
-        )
+        docs3 = drop_bottom_percentile(gate(docs3, *stages), args.quality_pct)
         stages = [("after_quality_pct", None)]
 
     # per-doc stats joined 1:1, so the pending gates still count every row

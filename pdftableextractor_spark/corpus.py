@@ -77,8 +77,8 @@ def _rng(seed: int, doc_id: str) -> random.Random:
     return random.Random(int.from_bytes(h[:8], "big"))
 
 
-def _sentence(rng: random.Random, n_lo: int = 6, n_hi: int = 14) -> str:
-    n = rng.randint(n_lo, n_hi)
+def _sentence(rng: random.Random) -> str:
+    n = rng.randint(6, 14)
     ws = [rng.choice(WORDS) for _ in range(n)]
     ws[0] = ws[0].capitalize()
     return " ".join(ws) + rng.choice([".", ".", ".", "!", "?", ":"])

@@ -21,7 +21,7 @@ Operators:
   minhash_near_dups_incremental  pairs involving a new batch vs a standing
                          corpus (old-old pairs never become candidates)
   embedding_near_dups    cosine near-dup pairs within a blocking key
-  duplicate_ngram_spans  n-token windows shared by >= min_docs documents
+  duplicate_ngram_spans  n-token windows shared by >= 2 documents
   mask_duplicate_spans   cut the tokens those spans cover, keep the document
   containment_pairs      |A∩B| / min(|A|, |B|) pairs via a prefix-filter join
   ngram_decontaminate    drop docs sharing ANY n-gram with a benchmark
@@ -225,6 +225,15 @@ def _contained(
     )
 
 
+def _t_micro(threshold: float) -> int:
+    """A containment threshold in (0, 1] as integer millionths. At 0 the
+    prefix filter of ``containment_pairs`` admits every shingle (its join
+    fans out on the hottest ones), and above 1 no pair can pass."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    return int(round(float(threshold) * 1_000_000))
+
+
 def _key_set_containment(
     sigs: DataFrame,
     key: str,
@@ -243,7 +252,7 @@ def _key_set_containment(
     per-key fan-out. Candidates form only through the self-join on
     ``key`` (and ``match``).
     EAGER: pins ``sigs`` (read by the df census and the capped join)."""
-    t_micro = int(round(float(threshold) * 1_000_000))
+    t_micro = _t_micro(threshold)
     keys = [key] + (match or [])
     sigs = pin(sigs, f"key-set containment signatures ({key})")
     dfreq = sigs.groupBy(key).agg(F.count_distinct("asset_id").alias("__df"))
@@ -264,12 +273,10 @@ def _key_set_containment(
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate grouping: one representative (lowest doc_id) per
     md5(text); returns (doc_id, content_hash, group_size)."""
-    h = docs.select(
-        F.col("doc_id"), F.md5(F.col(text_col)).alias("content_hash")
-    )
+    h = docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("content_hash"))
     w = Window.partitionBy("content_hash").orderBy("doc_id")
     return (
         h.withColumn("rn", F.row_number().over(w))
@@ -368,20 +375,13 @@ def exploded_shingles(docs: DataFrame, text_col: str, n: int) -> DataFrame:
 
 
 def minhash_near_dups(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 1,
-    threshold: float = 0.5,
-    num_hashes: int = NUM_HASHES,
-    band_rows: int = BAND_ROWS,
+    docs: DataFrame, n: int = 1, threshold: float = 0.5
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs: band-bucket join → exact Jaccard
     verify → (doc_a, doc_b, jaccard). Only band-collision candidates are
     verified; the band join is the lone shuffle, and both of its sides
     read one exchange of the band rows, so the signature pass runs once."""
-    bands = band_rows_from_sigs(
-        minhash_signatures(docs, text_col, n, num_hashes), num_hashes, band_rows
-    )
+    bands = band_rows_from_sigs(minhash_signatures(docs, n=n))
     # NOTE(round-7): a salted band join (the ngram_jaccard_pairs fix) was
     # measured here and REVERTED — unlike the block-pair join, band rows
     # are slim and the verify dominates, so the salt's extra exchange +
@@ -389,7 +389,7 @@ def minhash_near_dups(
     cand = _self_join(
         bands, "doc_id", ["band_idx", "band_hash"], "doc_a", "doc_b"
     )
-    return verify_jaccard_pairs(cand, docs, text_col, n, threshold)
+    return verify_jaccard_pairs(cand, docs, n=n, threshold=threshold)
 
 
 def band_rows_from_sigs(
@@ -463,9 +463,7 @@ def verify_jaccard_pairs(
     return _jaccard_verified(pairs, threshold)
 
 
-def simhash_signatures(
-    docs: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """60-bit SimHash: per-token 60-bit hash; each bit votes ±1 weighted by
     term frequency; sign of the vote sets the output bit. Explode + groupBy
     keeps everything in codegen; one shuffle on doc_id.
@@ -478,7 +476,7 @@ def simhash_signatures(
 
     docs = spread_underparallel_scan(docs, "doc_id")
     toks = docs.select(
-        "doc_id", F.explode(tokenize_col(F.col(text_col))).alias("w")
+        "doc_id", F.explode(tokenize_col(F.col("text"))).alias("w")
     ).filter(F.col("w") != "")
     hashed = toks.select("doc_id", word_hash_col(F.col("w")).alias("h"))
     votes = [
@@ -486,27 +484,23 @@ def simhash_signatures(
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1)
             .otherwise(-1)
         ).alias(f"v{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     agg = hashed.groupBy("doc_id").agg(*votes)
     sim = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return agg.select("doc_id", sim.cast("bigint").alias("simhash"))
 
 
-def simhash_near_dups(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = 8,
-) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming. Blocking on the
     top ``SIMHASH_BLOCK_BITS`` bits bounds the join (at 100 TB the block
     prefix is the shuffle key; rotate prefixes for full recall — here one
     rotation). Both join sides read one exchange of the (doc_id, simhash,
     block) rows, so the signature scan (tokenize + 60 votes) runs once."""
-    blocked = simhash_signatures(docs, text_col).withColumn(
+    blocked = simhash_signatures(docs).withColumn(
         "block",
         F.shiftright(F.col("simhash"), SIMHASH_BITS - SIMHASH_BLOCK_BITS),
     )
@@ -627,42 +621,31 @@ def hamming_near_dup_pairs(
 
 
 def simhash_near_dups_multiband(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = 8,
-    n_bands: int = 5,
+    docs: DataFrame, max_hamming: int = 8
 ) -> DataFrame:
     """Multi-band SimHash near-dup pairs — the rotated-prefix variant
     promised by ``simhash_near_dups``'s single-rotation caveat.
 
-    The 60-bit signature splits into ``n_bands`` disjoint bands; a
+    The 60-bit signature splits into 5 disjoint 12-bit bands; a
     candidate pair is any pair agreeing on at least one full band.
-    Pigeonhole guarantee: recall is EXACT for hamming <= n_bands - 1 and
+    Pigeonhole guarantee: recall is EXACT for hamming <= 4 and
     probabilistically high above it (the single-prefix variant misses any
     pair whose diff bits land in the one blocked prefix). The blocking
     join itself is ``hamming_near_dup_pairs`` — the one multiband shape
-    shared with the perceptual image/audio dedup paths. Cost: n_bands
+    shared with the perceptual image/audio dedup paths. Cost: 5
     band rows per doc, join per (band_idx, band_value), distinct pair
     dedup before the hamming verify — same shape as MinHash-LSH banding,
     linear in corpus size for uniform signatures.
     """
     return hamming_near_dup_pairs(
-        simhash_signatures(docs, text_col),
-        "simhash",
-        SIMHASH_BITS,
-        max_hamming,
-        n_bands,
+        simhash_signatures(docs), "simhash", SIMHASH_BITS, max_hamming, 5
     )
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    block_col: str,
-    text_col: str = "text",
-    n: int = 1,
-    threshold: float = 0.5,
+    docs: DataFrame, block_col: str, threshold: float = 0.5
 ) -> DataFrame:
-    """Exact pairwise n-gram Jaccard within a blocking key (the baseline the
+    """Exact pairwise word Jaccard within a blocking key (the baseline the
     sketches approximate). Quadratic only within blocks.
 
     Parallelism note (round-7): the quadratic blow-up happens INSIDE the
@@ -684,7 +667,7 @@ def ngram_jaccard_pairs(
     sh = docs.select(
         F.col("doc_id"),
         F.col(block_col).alias("block"),
-        shingles_col(F.col(text_col), n).alias("sh"),
+        shingles_col(F.col("text"), 1).alias("sh"),
     ).filter(F.size("sh") > 0)
     a = sh.select(
         F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"), "block",
@@ -699,10 +682,7 @@ def ngram_jaccard_pairs(
 
 
 def ngram_decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
+    docs: DataFrame, benchmark: DataFrame, n: int = 13
 ) -> DataFrame:
     """Benchmark decontamination (the GPT-3 appendix-C rule made a batch
     operator): drop every training document sharing ANY word n-gram with a
@@ -725,7 +705,7 @@ def ngram_decontaminate(
 
     def _grams(df, *keep):
         toks = df.select(
-            *keep, tokenize_col(F.col(text_col)).alias("__w")
+            *keep, tokenize_col(F.col("text")).alias("__w")
         )
         return toks.select(
             *keep,
@@ -771,7 +751,6 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_rounds: int = 25,
     small_graph_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Transitive closure over near-dup pairs → ``(node, component)`` where
@@ -903,7 +882,7 @@ def connected_components(
         )
     e = pin(e_raw.distinct(), "connected-components distinct edges")
     sig = _signature(e)
-    for _ in range(max_rounds):
+    for _ in range(25):
         e = pin(_small_star(_large_star(e)), "connected-components round")
         new_sig = _signature(e)
         if new_sig == sig:
@@ -912,7 +891,7 @@ def connected_components(
 
     # converged star graph: each non-root points at its root; roots map to
     # themselves. The groupBy-min keeps the result well-defined even if
-    # max_rounds cut the loop short of a fixpoint.
+    # the 25-round cap cut the loop short of a fixpoint.
     return (
         e.select(F.col("u").alias("node"), F.col("v").alias("component"))
         .unionByName(
@@ -987,17 +966,12 @@ def minhash_near_dups_incremental(
     return verify_jaccard_pairs(cand, corpus, text_col, n, threshold)
 
 
-def duplicate_ngram_spans(
-    docs: DataFrame,
-    n: int = 4,
-    min_docs: int = 2,
-    text_col: str = "text",
-) -> DataFrame:
+def duplicate_ngram_spans(docs: DataFrame, n: int = 4) -> DataFrame:
     """Cross-document repeated n-gram SPANS — the fixed-n distributed
     approximation of suffix-array substring dedup (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): every
     position where a document shares an exact n-token window with
-    >= ``min_docs`` distinct documents. Downstream consumers mask or cut
+    >= 2 distinct documents. Downstream consumers mask or cut
     these spans instead of dropping whole documents — the right granularity
     for boilerplate, licenses, and templated headers that infect otherwise
     unique documents.
@@ -1019,7 +993,7 @@ def duplicate_ngram_spans(
     # frame) measured NEUTRAL at sf0.1 (A/B 1.25 vs 1.26 s) and the gram
     # frame is BIGGER than the corpus — rejected
     grams = (
-        _tokens(docs, text_col)
+        _tokens(docs, "text")
         .select(
             "doc_id",
             F.posexplode(_gram_structs(F.col("__tk"), n)).alias(
@@ -1034,19 +1008,14 @@ def duplicate_ngram_spans(
     census = (
         grams.groupBy("__gh")
         .agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
     )
     return grams.join(census, "__gh").select(
         "doc_id", "start_pos", "gram", F.col("n_docs").cast("bigint").alias("n_docs")
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    text_col: str = "text",
-) -> DataFrame:
+def containment_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """ASYMMETRIC near-duplicate detection: pairs where the smaller
     document's shingle set is mostly CONTAINED in the larger one's —
     containment = |A∩B| / min(|A|, |B|) >= threshold. This is the dup
@@ -1061,7 +1030,7 @@ def containment_pairs(
     DuckDB oracle matches bit-for-bit.
 
     Shape — a PPJoin-style prefix-filter join, never all-pairs:
-      1. per-doc DISTINCT word n-gram shingles (scan-side arrays);
+      1. per-doc DISTINCT word 3-gram shingles (scan-side arrays);
       2. global shingle doc-frequencies (two-level count agg);
       3. each doc's PREFIX = its (|A| - ceil(t·|A|) + 1) globally RAREST
          shingles (per-doc window over df order — pigeonhole: a doc
@@ -1081,10 +1050,11 @@ def containment_pairs(
     (one pin job). Every other frame is a projection of it: the shingle
     rows (which carry the set size), the doc-frequencies, the prefix, the
     candidate probe and both verify sides read it under different
-    operators, where ReuseExchange cannot dedupe them."""
-    t_micro = int(round(float(threshold) * 1_000_000))
-    arr = _tokens(docs, text_col).select(
-        "doc_id", shingles_from_tokens_col(F.col("__tk"), n).alias("arr")
+    operators, where ReuseExchange cannot dedupe them. A threshold
+    outside (0, 1] raises ValueError before any job starts."""
+    t_micro = _t_micro(threshold)
+    arr = _tokens(docs, "text").select(
+        "doc_id", shingles_from_tokens_col(F.col("__tk"), 3).alias("arr")
     )
     arr = pin(arr, "containment shingle arrays")
     sized = arr.select(
@@ -1143,16 +1113,12 @@ def exact_ratio_round6(numer, denom):
 
 
 def mask_duplicate_spans(
-    docs: DataFrame,
-    n: int = 4,
-    min_docs: int = 2,
-    text_col: str = "text",
-    min_run: int | None = None,
+    docs: DataFrame, n: int = 4, min_run: int | None = None
 ) -> DataFrame:
     """REMOVE cross-document duplicated n-gram spans from each document —
     the consume side of ``duplicate_ngram_spans`` (Lee et al. 2022 cut the
     duplicated substring, keep the document): every token covered by ANY
-    span shared with >= ``min_docs`` documents is dropped; the survivors
+    span shared with >= 2 documents is dropped; the survivors
     are re-joined in order.
 
     ``min_run`` is the Lee-et-al length floor: adjacent covered positions
@@ -1190,12 +1156,12 @@ def mask_duplicate_spans(
     # both frames are corpus-sized-or-bigger — rejected
     tko = docs.select(
         "doc_id",
-        F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "").alias(
+        F.array_remove(F.split(F.trim(F.col("text")), r"\s+"), "").alias(
             "__tko"
         ),
     )
     covered = (
-        duplicate_ngram_spans(docs, n, min_docs, text_col)
+        duplicate_ngram_spans(docs, n)
         .select(
             "doc_id",
             F.explode(
@@ -1253,7 +1219,6 @@ def fuzzy_decontaminate(
     benchmark: DataFrame,
     n: int = 3,
     threshold: float = 0.8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Containment-based benchmark decontamination — the precision-oriented
     complement to ``ngram_decontaminate``: a training doc is dropped only
@@ -1274,7 +1239,7 @@ def fuzzy_decontaminate(
     t_micro = int(round(float(threshold) * 1_000_000))
 
     def _sh(df, id_alias):
-        return _tokens(df, text_col).select(
+        return _tokens(df, "text").select(
             F.col("doc_id").alias(id_alias),
             F.explode(shingles_from_tokens_col(F.col("__tk"), n)).alias("s"),
         )

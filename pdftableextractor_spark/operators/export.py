@@ -18,11 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def union_keys(df: DataFrame, map_col: str = "data") -> list[str]:
-    """Union of map keys across all rows, reference ordering: 'Category'
-    first, then 'Value N' by N, then the rest alphabetically."""
+def union_keys(df: DataFrame) -> list[str]:
+    """Union of ``data`` map keys across all rows, reference ordering:
+    'Category' first, then 'Value N' by N, then the rest alphabetically."""
     rows = (
-        df.select(F.explode(F.map_keys(F.col(map_col))).alias("k"))
+        df.select(F.explode(F.map_keys(F.col("data"))).alias("k"))
         .distinct()
         .collect()
     )
@@ -39,24 +39,24 @@ def union_keys(df: DataFrame, map_col: str = "data") -> list[str]:
     return sorted(keys, key=sort_key)
 
 
-def key_union_pivot(df: DataFrame, map_col: str = "data") -> DataFrame:
-    """map<string,string> rows → one column per union key (missing → '')."""
-    keys = union_keys(df, map_col)
+def key_union_pivot(df: DataFrame) -> DataFrame:
+    """map<string,string> ``data`` rows → one column per union key
+    (missing → '')."""
+    keys = union_keys(df)
     return df.select(
         *[
             F.coalesce(
-                F.try_element_at(F.col(map_col), F.lit(k)), F.lit("")
+                F.try_element_at(F.col("data"), F.lit(k)), F.lit("")
             ).alias(k)
             for k in keys
         ]
     )
 
 
-def write_csv(df: DataFrame, path: str, map_col: str | None = "data") -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """Header-union CSV with full quoting (script.js:987-1020 semantics)."""
-    out = key_union_pivot(df, map_col) if map_col else df
     (
-        out.write.mode("overwrite")
+        key_union_pivot(df).write.mode("overwrite")
         .option("header", "true")
         .option("quoteAll", "true")
         # RFC-4180 doubled quotes, matching the reference's '"'→'""'
@@ -69,8 +69,8 @@ def write_csv(df: DataFrame, path: str, map_col: str | None = "data") -> None:
 # --- P9: recursive nested flatten (static/script.js:668-783) ----------------
 
 
-def flatten_nested(df: DataFrame, id_cols=("doc_id",)) -> DataFrame:
-    """Arbitrary nested columns → long-skinny (ids..., path, value) rows
+def flatten_nested(df: DataFrame) -> DataFrame:
+    """Arbitrary nested columns → long-skinny (doc_id, path, value) rows
     with JS-style paths ('spans[3].kind') — the reference's recursive JSON
     flatten (script.js:668-783), re-expressed schema-driven: the expansion
     plan is built ONCE from the static schema (posexplode per array level,
@@ -80,7 +80,7 @@ def flatten_nested(df: DataFrame, id_cols=("doc_id",)) -> DataFrame:
     context unioned by name; scans scale with schema depth, not data."""
     from pyspark.sql.types import ArrayType, StructType
 
-    ids = list(id_cols)
+    ids = ["doc_id"]
     frames: list[DataFrame] = []
 
     def emit(ctx_df: DataFrame, leaves) -> None:
@@ -163,13 +163,13 @@ def _pdf_escape(s: str) -> str:
     return out.encode("latin-1", "replace").decode("latin-1")
 
 
-def render_pdf_table(header: list[str], rows, rows_per_page: int = 40) -> bytes:
+def render_pdf_table(header: list[str], rows) -> bytes:
     """A dependency-free single-font PDF renderer: the 'Extracted
     Information' title (export_utils.py:31) followed by the table, one text
-    line per row, paginated. No reportlab in this environment, so the page
-    objects are written by hand — the layout is plain but the file is a
-    spec-valid PDF 1.4."""
-    pages = [rows[i : i + rows_per_page] for i in range(0, len(rows), rows_per_page)]
+    line per row, 40 rows per page. No reportlab in this environment, so
+    the page objects are written by hand — the layout is plain but the file
+    is a spec-valid PDF 1.4."""
+    pages = [rows[i : i + 40] for i in range(0, len(rows), 40)]
     if not pages:
         pages = [[]]
 
@@ -232,7 +232,7 @@ def render_pdf_table(header: list[str], rows, rows_per_page: int = 40) -> bytes:
     return bytes(buf)
 
 
-def write_pdf(df: DataFrame, path: str, map_col: str | None = "data") -> bytes:
+def write_pdf(df: DataFrame, path: str) -> bytes:
     """S9: render the header-union table to a PDF file at ``path``.
 
     Driver-side by design — the reference's PDF export is a download of the
@@ -240,7 +240,7 @@ def write_pdf(df: DataFrame, path: str, map_col: str | None = "data") -> bytes:
     display artifact, not a data sink; big tables belong in the distributed
     CSV/JSON sinks. Returns the PDF bytes (the reference returns bytes to
     the Flask response)."""
-    out = key_union_pivot(df, map_col) if map_col else df
+    out = key_union_pivot(df)
     cols = pdf_column_order(out.columns)
     # the reference exporter reads row.get(col, "") (export_utils.py:44) —
     # a table with no 'Category' column renders an empty Category column,

@@ -85,13 +85,12 @@ def _word_count(stripped: Column) -> Column:
     return F.size(F.filter(F.split(stripped, " "), lambda x: x != ""))
 
 
-def html_blocks(
-    docs: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, block_no, text, n_words, chars, link_chars) — one row
-    per non-empty text block. ``link_chars`` sums the stripped lengths
-    of the block's anchor texts (each normalized by the SAME pipeline
-    as the block, so the density ratio is apples-to-apples)."""
+def html_blocks(docs: DataFrame) -> DataFrame:
+    """(doc_id, html) → (doc_id, block_no, text, n_words, chars,
+    link_chars) — one row per non-empty text block. ``link_chars`` sums
+    the stripped lengths of the block's anchor texts (each normalized by
+    the SAME pipeline as the block, so the density ratio is
+    apples-to-apples)."""
     seg = F.col("__seg")
     stripped = strip_html_col(seg)
     link_chars = F.aggregate(
@@ -102,19 +101,19 @@ def html_blocks(
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    w = Window.partitionBy(id_col).orderBy("__pos")
+    w = Window.partitionBy("doc_id").orderBy("__pos")
     return (
         docs.select(
-            id_col,
+            "doc_id",
             F.posexplode(
                 F.split(
-                    F.regexp_replace(F.col(html_col), NOISE_RE, " "),
+                    F.regexp_replace(F.col("html"), NOISE_RE, " "),
                     BLOCK_SPLIT_RE,
                 )
             ).alias("__pos", "__seg"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("__pos"),
             stripped.alias("text"),
             _word_count(stripped).alias("n_words"),
@@ -123,7 +122,7 @@ def html_blocks(
         )
         .filter(F.col("text") != "")
         .select(
-            id_col,
+            "doc_id",
             (F.row_number().over(w) - 1).cast("int").alias("block_no"),
             "text",
             F.col("n_words").cast("int").alias("n_words"),
@@ -133,9 +132,7 @@ def html_blocks(
     )
 
 
-def html_main_content(
-    docs: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def html_main_content(docs: DataFrame) -> DataFrame:
     """html_blocks + ``keep`` — Kohlschütter et al.'s NumWords /
     LinkDensity classifier (the boilerpipe DefaultExtractor rule set),
     verbatim:
@@ -157,8 +154,8 @@ def html_main_content(
     compare in exact integers; cite Kohlschütter/Fankhauser/Nejdl,
     "Boilerplate Detection using Shallow Text Features", WSDM 2010,
     table 2 (the densometric subset)."""
-    b = html_blocks(docs, html_col=html_col, id_col=id_col)
-    w = Window.partitionBy(id_col).orderBy("block_no")
+    b = html_blocks(docs)
+    w = Window.partitionBy("doc_id").orderBy("block_no")
     prev_w = F.coalesce(F.lag("n_words").over(w), F.lit(0))
     next_w = F.coalesce(F.lead("n_words").over(w), F.lit(0))
     prev_lc = F.coalesce(F.lag("link_chars").over(w), F.lit(0))
@@ -174,7 +171,7 @@ def html_main_content(
         ).otherwise((F.col("n_words") > 40) | (next_w > 17))
     )
     return b.select(
-        id_col,
+        "doc_id",
         "block_no",
         "text",
         "n_words",
@@ -184,16 +181,12 @@ def html_main_content(
     )
 
 
-def extract_main_text(
-    docs: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_main_text(docs: DataFrame) -> DataFrame:
     """(doc_id, text) — kept blocks rejoined in order with single
     spaces: the 'main content' a curation pipeline feeds downstream
     (dedup, quality, tokenization)."""
-    kept = html_main_content(docs, html_col=html_col, id_col=id_col).filter(
-        "keep"
-    )
-    return kept.groupBy(id_col).agg(
+    kept = html_main_content(docs).filter("keep")
+    return kept.groupBy("doc_id").agg(
         F.array_join(
             F.array_sort(
                 F.collect_list(F.struct("block_no", "text"))

@@ -37,7 +37,7 @@ FEATURES_SCHEMA = (
 )
 
 
-def synth_assets(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def synth_assets(docs: DataFrame) -> DataFrame:
     """Derive a deterministic binary assets table from a text corpus (no
     external data): payload = utf-8 bytes, kind round-robins image/audio/video,
     metadata derived from doc_id."""
@@ -53,12 +53,12 @@ def synth_assets(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "asset_id"
         ),
         kind.alias("kind"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
+        F.encode(F.col("text"), "utf-8").alias("payload"),
         F.struct(
             F.lit("application/octet-stream").alias("mime"),
             (h % 1024).cast("int").alias("width"),
             (
-                F.conv(F.substring(F.md5(F.col(text_col)), 1, 8), 16, 10)
+                F.conv(F.substring(F.md5(F.col("text")), 1, 8), 16, 10)
                 .cast("bigint")
                 % 768
             ).cast("int").alias("height"),
@@ -93,47 +93,6 @@ def resize_assets(assets: DataFrame, width: int, height: int) -> DataFrame:
     )
 
 
-def sample_frames(assets: DataFrame, every_ms: int = 5000) -> DataFrame:
-    """Frame sampling for video assets: one row per sampled timestamp
-    (0, every_ms, 2·every_ms, … ≤ duration_ms). Pure JVM: sequence+explode
-    fan-out, deterministic fake frame bytes (unhex(sha2(payload || ts))).
-    The fan-out happens BEFORE any shuffle, so a 2-hour video is
-    duration/every_ms parallel rows, not one task — the same skew posture
-    as the pdf layout kernel."""
-    v = assets.filter(F.col("kind") == "video")
-    # NULL handling mirrors _frame_sample_kernel exactly: a NULL
-    # duration coalesces to 0 (one ts=0 row, not sequence(0, NULL)
-    # exploding the video away) and a NULL payload falls back to empty
-    # bytes as the sha basis (a concrete fake frame, not a NULL frame)
-    expanded = v.select(
-        "asset_id",
-        "payload",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.coalesce(F.col("meta.duration_ms"), F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("ts_ms"),
-    )
-    return expanded.select(
-        "asset_id",
-        (F.col("ts_ms") / every_ms).cast("int").alias("frame_idx"),
-        F.col("ts_ms").cast("int").alias("ts_ms"),
-        F.unhex(
-            F.sha2(
-                F.concat(
-                    F.coalesce(
-                        F.col("payload"), F.lit(b"").cast("binary")
-                    ),
-                    F.encode(F.col("ts_ms").cast("string"), "utf-8"),
-                ),
-                256,
-            )
-        ).alias("frame"),
-    )
-
-
 FRAME_SAMPLE_SCHEMA = (
     "asset_id string, frame_idx int, ts_ms int, width int, height int, "
     "decoded boolean, frame binary"
@@ -145,9 +104,8 @@ def _frame_sample_kernel(every_ms: int):
     decode the AVI once, then emit the temporally-nearest REAL frame (raw
     RGB bytes) for each sampled timestamp; payloads decode_avi cannot
     handle (compressed codec, non-AVI container, hostile header) degrade
-    to the deterministic sha-derived fake frame with decoded=false — the
-    same bytes the pure-JVM sample_frames emits, so the two paths agree
-    on the fallback."""
+    to the deterministic fake frame sha256(payload || str(ts)) with
+    decoded=false."""
 
     def k(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -160,9 +118,8 @@ def _frame_sample_kernel(every_ms: int):
                 pdf["payload"].values,
                 pdf["duration_ms"].values,
             ):
-                # a NULL payload must not kill the task (the JVM
-                # sample_frames path emits NULL frames for it) — treat it
-                # as undecodable with an empty-bytes fallback basis
+                # a NULL payload must not kill the task — treat it as
+                # undecodable with an empty-bytes fallback basis
                 pb = bytes(payload) if payload is not None else b""
                 frames = None
                 try:
@@ -202,15 +159,14 @@ def sample_frames_decoded(
 ) -> DataFrame:
     """REAL frame sampling: decode each uncompressed-AVI video payload
     once per task and emit the nearest genuine RGB frame at every sampled
-    timestamp (0, every_ms, … ≤ duration_ms); undecodable payloads keep
-    the deterministic sha fallback (decoded=false) so one bad row never
-    kills the job. Output rows carry raw RGB24 bytes + (width, height) —
-    downstream featurizers reshape with np.frombuffer(...).reshape(h, w,
-    3). The decode happens scan-side inside the Arrow kernel (one decode
-    per video regardless of how many timestamps it yields), and the
-    per-row fan-out stays inside the partition — same skew posture as
-    ``sample_frames``, which remains the zero-decode JVM path for
-    metadata-only pipelines."""
+    timestamp (0, every_ms, … ≤ duration_ms; a NULL duration samples
+    ts=0 only); undecodable payloads keep the deterministic sha fallback
+    (decoded=false) so one bad row never kills the job. Output rows carry
+    raw RGB24 bytes + (width, height) — downstream featurizers reshape
+    with np.frombuffer(...).reshape(h, w, 3). The decode happens scan-side
+    inside the Arrow kernel (one decode per video regardless of how many
+    timestamps it yields), and the per-row fan-out stays inside the
+    partition."""
     v = assets.filter(F.col("kind") == "video").select(
         "asset_id",
         "payload",
@@ -1363,7 +1319,8 @@ def video_near_dups(
     key-set containment path (``dedup._key_set_containment``): a
     frame-hash document-frequency cap, candidates ONLY through the
     equi-join on (fhash, real), a pure-integer threshold and exact-int
-    rounding. Pseudo-hash rows never join real frame hashes.
+    rounding. Pseudo-hash rows never join real frame hashes. A threshold
+    outside (0, 1] raises ValueError before any job starts.
 
     SAMPLING KNOBS (``hash_every_ms``, ``max_frames``): real video runs
     hours at 24-60 fps — hashing every frame makes the signature kernel
@@ -1547,11 +1504,9 @@ def binary_near_dups(
     payload; candidates form ONLY through the df-capped equi-join on chash
     (never all-pairs) of the shared key-set containment path; the
     threshold filter is pure-integer with the shared exact-int rounding.
-    Thresholds: 0 < threshold <= 1."""
+    A threshold outside (0, 1] raises ValueError before any job starts."""
     from pdftableextractor_spark.operators.dedup import _key_set_containment
 
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sigs = cdc_chunk_hashes(
         assets, avg_bits=avg_bits, min_size=min_size, max_size=max_size
     ).distinct()

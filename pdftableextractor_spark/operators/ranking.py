@@ -28,16 +28,9 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """(doc_id, score) for every document matching >= 1 query term, scored
-    with Lucene-style BM25:
+    with Lucene-style BM25 (k1 = ``BM25_K1``, b = ``BM25_B``):
 
         idf(t)  = ln(1 + (N - df + 0.5) / (df + 0.5))
         s(d, t) = idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
@@ -50,7 +43,7 @@ def bm25_scores(
     terms = sorted(set(query_terms))
     if not terms:
         raise ValueError("bm25_scores needs at least one query term")
-    arr = tokenize_col(F.col(text_col))
+    arr = tokenize_col(F.col("text"))
     # tf WITHOUT an explode or a shuffle: occurrences of t in the token
     # array = size(arr) - size(array_remove(arr, t)) — codegen array ops,
     # so per-doc (dl, tf...) is a pure scan-side projection. dl discounts
@@ -58,7 +51,7 @@ def bm25_scores(
     # excluded entirely (dl = 0), matching the exploded formulation.
     per_doc = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.size(F.array_remove(arr, "")).cast("bigint").alias("dl"),
             *[
                 (F.size(arr) - F.size(F.array_remove(arr, t)))
@@ -78,10 +71,8 @@ def bm25_scores(
         ],
     )
     scored = per_doc.crossJoin(F.broadcast(stats))
-    norm = F.lit(float(k1)) * (
-        F.lit(1.0)
-        - F.lit(float(b))
-        + F.lit(float(b)) * F.col("dl") / F.col("avgdl")
+    norm = F.lit(BM25_K1) * (
+        F.lit(1.0) - F.lit(BM25_B) + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")
     )
     score = None
     for i in range(len(terms)):
@@ -91,7 +82,7 @@ def bm25_scores(
             + (F.col("n_docs") - F.col(f"df{i}") + F.lit(0.5))
             / (F.col(f"df{i}") + F.lit(0.5))
         )
-        part = idf * tf * F.lit(float(k1) + 1.0) / (tf + norm)
+        part = idf * tf * F.lit(BM25_K1 + 1.0) / (tf + norm)
         score = part if score is None else score + part
     return (
         scored.select("doc_id", score.alias("score"))

@@ -9,10 +9,10 @@ Both are SCAN-SHAPED by design at the 100 TB point:
   ``df.sample``, whose output depends on partition layout), and Catalyst
   pushes it like any other predicate. No shuffle.
 - ``pack_shards`` assigns documents to contiguous training shards bounded by
-  a token budget. The cumulative sum is windowed PER GROUP (e.g. per
-  source/domain), never globally — a global running sum would force a
-  single-partition window. Shard identity is (group, shard_idx); packing
-  order within a group is the deterministic id order.
+  a token budget. The cumulative sum is windowed PER ``source``, never
+  globally — a global running sum would force a single-partition window.
+  Shard identity is (source, shard_idx); packing order within a source is
+  the deterministic doc_id order.
 """
 
 from __future__ import annotations
@@ -26,81 +26,64 @@ from pdftableextractor_spark.plans.pin import pin
 _RES = 1_000_000
 
 
-def _uniform_col(id_col, seed: int):
-    """Deterministic uniform in [0, 1): the shared portable md5 hash
-    (conv(substr(md5, 1, 15), 16, 10), same primitive as the dedup suite)
-    reduced to 6 decimal digits — reproducible bit-for-bit in DuckDB."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(f"samp:{seed}:"), F.col(id_col).cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    return (h % _RES).cast("double") / F.lit(float(_RES))
+def _id_hash(seed: int):
+    """Deterministic per-``doc_id`` hash: the shared portable md5 primitive
+    (conv(substr(md5, 1, 15), 16, 10), as in the dedup suite) of
+    ``samp:<seed>:<doc_id>`` — reproducible bit-for-bit in DuckDB."""
+    key = F.concat(F.lit(f"samp:{seed}:"), F.col("doc_id").cast("string"))
+    return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
+
+
+def _uniform_col(seed: int):
+    """Deterministic per-``doc_id`` uniform in [0, 1): ``_id_hash`` reduced
+    to 6 decimal digits."""
+    return (_id_hash(seed) % _RES).cast("double") / F.lit(float(_RES))
 
 
 def stratified_keep_col(
-    fractions: dict[str, float],
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    seed: int = 7,
-    default_fraction: float = 0.0,
+    fractions: dict[str, float], default_fraction: float = 0.0
 ) -> Column:
-    """True iff the row's deterministic per-id uniform < its stratum's
-    target fraction. Strata absent from ``fractions`` fall back to
-    ``default_fraction`` (0 = drop)."""
+    """True iff the row's deterministic per-id uniform (seed 7) < its
+    ``source`` stratum's target fraction. Strata absent from ``fractions``
+    fall back to ``default_fraction`` (0 = drop)."""
     frac = F.lit(float(default_fraction))
     for k, v in sorted(fractions.items()):
-        frac = F.when(F.col(stratum_col) == k, F.lit(float(v))).otherwise(frac)
-    return _uniform_col(id_col, seed) < frac
+        frac = F.when(F.col("source") == k, F.lit(float(v))).otherwise(frac)
+    return _uniform_col(7) < frac
 
 
 def stratified_sample(
     docs: DataFrame,
     fractions: dict[str, float],
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    seed: int = 7,
     default_fraction: float = 0.0,
 ) -> DataFrame:
     """Hash-based domain mixing: the rows of ``docs`` that
     ``stratified_keep_col`` keeps."""
-    return docs.filter(
-        stratified_keep_col(
-            fractions, stratum_col, id_col, seed, default_fraction
-        )
-    )
+    return docs.filter(stratified_keep_col(fractions, default_fraction))
 
 
-def _range_buckets(
-    docs: DataFrame, group_col: str, id_col: str, num_buckets: int | None
-) -> DataFrame:
-    """``docs`` range-partitioned on (group, id) into order-preserving
+def _range_buckets(docs: DataFrame, num_buckets: int | None) -> DataFrame:
+    """``docs`` range-partitioned on (source, doc_id) into order-preserving
     buckets, ``__bkt`` = spark_partition_id: ascending bucket id ==
-    ascending (group, id), and a bucket never splits equal keys. Lazy; the
-    explicit bucket count keeps AQE from re-coalescing them."""
+    ascending (source, doc_id), and a bucket never splits equal keys. Lazy;
+    the explicit bucket count keeps AQE from re-coalescing them."""
     b = num_buckets or docs.sparkSession.sparkContext.defaultParallelism
     return docs.repartitionByRange(
-        b, F.col(group_col), F.col(id_col)
+        b, F.col("source"), F.col("doc_id")
     ).withColumn("__bkt", F.spark_partition_id())
 
 
 def pack_shards(
     docs: DataFrame,
     budget_tokens: int,
-    group_col: str = "source",
-    id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
     num_buckets: int | None = None,
 ) -> DataFrame:
-    """Assign each document a (group, shard_idx) so that every shard's token
-    sum stays ≤ ``budget_tokens`` + one document (the standard greedy
+    """Assign each document a (source, shard_idx) so that every shard's
+    token sum stays ≤ ``budget_tokens`` + one document (the standard greedy
     contiguous packing: shard_idx = floor((cum_tokens - own) / budget) over
-    the group's id order — a document straddling the boundary starts in the
-    shard its first token lands in).
+    the source's doc_id order — a document straddling the boundary starts
+    in the shard its first token lands in).
 
     EAGER: pins the range-bucketed frame (one pin job, plus the
     range-bounds sampling job) before it returns.
@@ -109,7 +92,7 @@ def pack_shards(
     partition per group (a corpus with a handful of sources would otherwise
     pack each source through a single task):
 
-      1. range-partition on (group, id) into ``num_buckets`` order-preserving
+      1. range-partition on (source, doc_id) into ``num_buckets`` order-preserving
          buckets (``_range_buckets``);
       2. per-(group, bucket) token totals — a |groups| × buckets frame, tiny
          at any corpus scale — then an EXCLUSIVE cumsum over bucket order
@@ -126,29 +109,29 @@ def pack_shards(
     materialization, whatever the input lineage. shard ids depend only on
     cumulative token sums in id order, so the output is invariant to the
     physical bucketing. Output adds shard_idx int."""
-    bucketed = _range_buckets(docs, group_col, id_col, num_buckets)
+    bucketed = _range_buckets(docs, num_buckets)
     bucketed = pin(bucketed, "pack_shards range buckets")
-    totals = bucketed.groupBy(group_col, "__bkt").agg(
+    totals = bucketed.groupBy("source", "__bkt").agg(
         F.sum(F.col(tokens_col).cast("bigint")).alias("__tot")
     )
     w_off = (
-        Window.partitionBy(group_col)
+        Window.partitionBy("source")
         .orderBy("__bkt")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = totals.select(
-        group_col,
+        "source",
         "__bkt",
         F.coalesce(F.sum("__tot").over(w_off), F.lit(0)).alias("__off"),
     )
     w_loc = (
-        Window.partitionBy(group_col, "__bkt")
-        .orderBy(id_col)
+        Window.partitionBy("source", "__bkt")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = F.sum(F.col(tokens_col).cast("bigint")).over(w_loc) + F.col("__off")
     return (
-        bucketed.join(F.broadcast(offsets), [group_col, "__bkt"])
+        bucketed.join(F.broadcast(offsets), ["source", "__bkt"])
         .withColumn(
             "shard_idx",
             F.floor((cum - F.col(tokens_col)) / F.lit(budget_tokens)).cast(
@@ -160,12 +143,9 @@ def pack_shards(
 
 
 def temperature_fractions(
-    docs: DataFrame,
-    alpha: float = 0.5,
-    budget_frac: float = 0.5,
-    stratum_col: str = "source",
+    docs: DataFrame, alpha: float = 0.5, budget_frac: float = 0.5
 ) -> DataFrame:
-    """Per-stratum keep fractions for temperature-based mixture sampling
+    """Per-``source`` keep fractions for temperature-based mixture sampling
     (the multinomial-smoothing rule used by multilingual/LLM corpus mixes):
 
         p_s       = n_s^alpha / sum_t n_t^alpha     -- draw probability
@@ -177,7 +157,7 @@ def temperature_fractions(
     Returns (stratum, n_docs, frac) — one row per stratum, computed with a
     groupBy + a single-row broadcast cross-join; nothing touches the driver.
     """
-    per = docs.groupBy(F.col(stratum_col).alias("stratum")).agg(
+    per = docs.groupBy(F.col("source").alias("stratum")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     pw = per.withColumn(
@@ -207,8 +187,6 @@ def temperature_mix(
     docs: DataFrame,
     alpha: float = 0.5,
     budget_frac: float = 0.5,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
     seed: int = 7,
 ) -> DataFrame:
     """Sample the corpus to a temperature-alpha mixture: compute per-stratum
@@ -216,13 +194,13 @@ def temperature_mix(
     them back (one row per stratum — always broadcastable), and keep rows by
     the same deterministic per-id hash as ``stratified_sample``. Exactly
     reproducible across runs, partitionings, and cluster sizes."""
-    fr = temperature_fractions(docs, alpha, budget_frac, stratum_col)
+    fr = temperature_fractions(docs, alpha, budget_frac)
     return (
         docs.join(
-            F.broadcast(fr.select(F.col("stratum").alias(stratum_col), "frac")),
-            stratum_col,
+            F.broadcast(fr.select(F.col("stratum").alias("source"), "frac")),
+            "source",
         )
-        .filter(_uniform_col(id_col, seed) < F.col("frac"))
+        .filter(_uniform_col(seed) < F.col("frac"))
         .drop("frac")
     )
 
@@ -232,7 +210,6 @@ def weighted_sample(
     weight_col: str,
     k: int,
     stratum_col: str | None = None,
-    id_col: str = "doc_id",
     seed: int = 7,
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement, k rows (per stratum if
@@ -249,7 +226,7 @@ def weighted_sample(
     Rows with non-positive weight are never sampled. Ties (u^0-style
     degenerate keys) break on id for determinism."""
     w = F.col(weight_col).cast("double")
-    u = _uniform_col(id_col, seed)
+    u = _uniform_col(seed)
     key = F.when(w > 0, F.pow(u, F.lit(1.0) / w)).otherwise(F.lit(-1.0))
     # non-positive-weight rows are dropped BEFORE ranking: with desc order
     # every kept key (>= 0) outranks the -1 sentinel, so pre-filtering is
@@ -257,12 +234,12 @@ def weighted_sample(
     keyed = docs.withColumn("__wkey", key).filter(F.col("__wkey") >= 0)
     if stratum_col is None:
         return (
-            keyed.orderBy(F.desc("__wkey"), F.asc(id_col))
+            keyed.orderBy(F.desc("__wkey"), F.asc("doc_id"))
             .limit(k)
             .drop("__wkey")
         )
     win = Window.partitionBy(stratum_col).orderBy(
-        F.desc("__wkey"), F.asc(id_col)
+        F.desc("__wkey"), F.asc("doc_id")
     )
     return (
         keyed.withColumn("__wrank", F.row_number().over(win))
@@ -271,13 +248,7 @@ def weighted_sample(
     )
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target,
-    text_col: str = "text",
-    n_buckets: int = 8192,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, target, n_buckets: int = 8192) -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"): score
     every document by the log-likelihood ratio of its hashed n-gram features
@@ -295,7 +266,7 @@ def dsir_weights(
     the weights through ``weighted_sample`` (optionally exp(w/temperature))
     to perform the resampling step.
 
-    Output: one row per input doc — (id_col, n_grams bigint, dsir_weight
+    Output: one row per input doc — (doc_id, n_grams bigint, dsir_weight
     double). Docs with no grams get weight 0.0. Every doc is scored,
     target rows included (callers filter if they want raw-only selection).
 
@@ -331,9 +302,9 @@ def dsir_weights(
     )
 
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         target.cast("boolean").alias("__t"),
-        tokens_col(F.col(text_col)).alias("__tk"),
+        tokens_col(F.col("text")).alias("__tk"),
     )
     # each token paired with its successor (null after the last token):
     # the token is a unigram, the pair (when complete) a bigram
@@ -341,10 +312,10 @@ def dsir_weights(
     w1, w2 = F.col("__p").getField("0"), F.col("__p").getField("1")
     grams = pin(
         base.select(
-            id_col, "__t", F.explode(_gram_structs(padded, 2)).alias("__p")
+            "doc_id", "__t", F.explode(_gram_structs(padded, 2)).alias("__p")
         )
         .select(
-            id_col,
+            "doc_id",
             "__t",
             F.explode(F.array(w1, F.concat(w1, F.lit("\x1f"), w2))).alias(
                 "g"
@@ -352,7 +323,7 @@ def dsir_weights(
         )
         .filter(F.col("g").isNotNull())
         .select(
-            id_col,
+            "doc_id",
             "__t",
             F.pmod(
                 F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast(
@@ -390,17 +361,17 @@ def dsir_weights(
     )
     per_doc = (
         grams.join(F.broadcast(scored_model), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum("__llr4").alias("__s4"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(per_doc, id_col, "left")
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_grams"), F.lit(0))
             .cast("bigint")
             .alias("n_grams"),
@@ -417,10 +388,7 @@ def dsir_resample(
     target,
     k: int,
     temperature: float = 1.0,
-    text_col: str = "text",
     n_buckets: int = 8192,
-    id_col: str = "doc_id",
-    seed: int = 7,
     select=None,
 ) -> DataFrame:
     """The resampling step of DSIR: draw ``k`` docs without replacement
@@ -432,7 +400,7 @@ def dsir_resample(
     Implemented as Gumbel-top-k, the log-space form of the
     Efraimidis-Spirakis keys ``weighted_sample`` uses: key =
     weight/temperature - ln(-ln(u)) with u the shared deterministic
-    per-id uniform, shifted onto the OPEN interval (0,1) via
+    per-id uniform (seed 7), shifted onto the OPEN interval (0,1) via
     (h%RES + 0.5)/RES so neither ln is ever evaluated at 0. Taking the
     top-k keys is exactly exp-weighted sampling without replacement, and
     staying in log space means a weight of ±1000 is an ADDITION to the
@@ -456,30 +424,17 @@ def dsir_resample(
         raise ValueError(f"k must be >= 1, got {k}")
     if temperature <= 0:
         raise ValueError(f"temperature must be > 0, got {temperature}")
-    w = dsir_weights(
-        docs, target, text_col=text_col, n_buckets=n_buckets, id_col=id_col
-    )
+    w = dsir_weights(docs, target, n_buckets=n_buckets)
     if select is not None:
         docs = docs.filter(select)
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(f"samp:{seed}:"), F.col(id_col).cast("string"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    u_open = ((h % _RES).cast("double") + F.lit(0.5)) / F.lit(float(_RES))
+    u_open = ((_id_hash(7) % _RES).cast("double") + F.lit(0.5)) / F.lit(float(_RES))
     key = F.col("dsir_weight") / F.lit(float(temperature)) - F.ln(
         -F.ln(u_open)
     )
     return (
-        docs.join(w.select(id_col, "dsir_weight"), id_col)
+        docs.join(w.select("doc_id", "dsir_weight"), "doc_id")
         .withColumn("__gkey", key)
-        .orderBy(F.desc("__gkey"), F.asc(id_col))
+        .orderBy(F.desc("__gkey"), F.asc("doc_id"))
         .limit(k)
         .drop("__gkey")
     )

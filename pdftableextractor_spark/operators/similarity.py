@@ -41,21 +41,15 @@ from pdftableextractor_spark.plans.pin import pin
 _CENTROIDS_SCHEMA = "cell int, centroid array<double>, build_id string"
 
 
-def _rank_by_cos(
-    cand: DataFrame,
-    query_vec,
-    k: int,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
+def _rank_by_cos(cand: DataFrame, query_vec, k: int) -> DataFrame:
     """The exact top-k of ``cand`` by cosine to ``query_vec``: (vec_id, cos
     rounded to 6), ties on vec_id. One ordered limit — Spark runs it as
     TakeOrderedAndProject (per-partition heaps, no full sort shuffle)."""
     cos = cosine_to_query_udf(query_vec)
     return (
         cand.select(
-            F.col(id_col).alias("vec_id"),
-            F.round(cos(F.col(emb_col)), 6).alias("cos"),
+            "vec_id",
+            F.round(cos(F.col("embedding")), 6).alias("cos"),
         )
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(k)
@@ -103,9 +97,7 @@ def cosine_topk(
     return _rank_by_cos(embeddings, query_vec, k)
 
 
-def centroid_mean(
-    df: DataFrame, cell_col: str = "cell", emb_col: str = "embedding"
-) -> DataFrame:
+def centroid_mean(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Per-cell element-wise mean vector: (cell, centroid array<double>).
 
     Shape (the round-2 verdict's ×dim fix): a per-partition mapInPandas
@@ -123,9 +115,7 @@ def centroid_mean(
     )
 
     cell_type = dict(df.dtypes)[cell_col]
-    src = df.select(
-        F.col(cell_col).alias("cell"), F.col(emb_col).alias("embedding")
-    )
+    src = df.select(F.col(cell_col).alias("cell"), "embedding")
     partials = src.mapInPandas(
         centroid_partial_kernel,
         schema=f"cell {cell_type}, sum_vec array<double>, n bigint",
@@ -136,9 +126,7 @@ def centroid_mean(
     )
 
 
-def _centroid_mean_explode(
-    df: DataFrame, cell_col: str = "cell", emb_col: str = "embedding"
-) -> DataFrame:
+def _centroid_mean_explode(df: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Pure-JVM per-dim formulation: posexplode + groupBy(cell, dim) +
     array_agg reassembly. Map-side combine keeps the SHUFFLE tiny, but the
     scan-side generator emits rows×dim rows — linear-in-dim row inflation
@@ -146,7 +134,7 @@ def _centroid_mean_explode(
     the bench.py --centroids comparator."""
     dims = df.select(
         F.col(cell_col).alias("cell"),
-        F.posexplode(emb_col).alias("dim", "v"),
+        F.posexplode("embedding").alias("dim", "v"),
     )
     per_dim = dims.groupBy("cell", "dim").agg(
         F.avg(F.col("v").cast("double")).alias("m")
@@ -162,8 +150,6 @@ def kmeans_cells(
     embeddings: DataFrame,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    seed: int = 9,
     fit_sample_per_cell: int | None = 256,
 ) -> DataFrame:
     """Lloyd k-means cell assignment for IVF over an UNLABELED corpus
@@ -188,8 +174,7 @@ def kmeans_cells(
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
     cents = kmeans_centroids(
-        embeddings, k=k, iters=iters, id_col=id_col, seed=seed,
-        fit_sample_per_cell=fit_sample_per_cell,
+        embeddings, k=k, iters=iters, fit_sample_per_cell=fit_sample_per_cell
     )
     return embeddings.withColumn(
         "cell", nearest_centroid_udf(cents)(F.col("embedding"))
@@ -265,45 +250,39 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7):
     return rng.standard_normal((n_planes, dim))
 
 
-def lsh_planes(dim: int, n_planes: int = 4, n_tables: int = 4) -> list:
-    """The n_tables independent hyperplane sets (table t seeded 7+t; table 0
-    is the historical single-table set)."""
-    return [_hyperplanes(dim, n_planes, seed=7 + t) for t in range(n_tables)]
+def lsh_planes(dim: int, n_tables: int = 4) -> list:
+    """The n_tables independent 4-hyperplane sets (table t seeded 7+t;
+    table 0 is the historical single-table set)."""
+    return [_hyperplanes(dim, 4, seed=7 + t) for t in range(n_tables)]
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    query_vec,
-    k: int = 10,
-    n_planes: int = 4,
-    n_tables: int = 4,
-) -> DataFrame:
-    """Random-hyperplane LSH ANN, MULTI-TABLE: brute-force the union of the
-    query's sign buckets across ``n_tables`` independently-seeded hyperplane
+def lsh_topk(embeddings: DataFrame, query_vec, n_tables: int = 4) -> DataFrame:
+    """Random-hyperplane LSH ANN top-10, MULTI-TABLE: brute-force the union
+    of the query's sign buckets across ``n_tables`` independently-seeded
+    4-hyperplane
     sets (round-2 verdict fix: a single table misses any neighbor whose dot
     products straddle one plane — P[miss] ≈ 1-(1-miss₁)… falls geometrically
-    with tables). A uniform corpus scans ~n_tables/2^n_planes of the
+    with tables). A uniform corpus scans ~n_tables/16 of the
     vectors. One scan either way: the candidate predicate is an ANY-table
     match inside one stacked-matmul kernel, so candidates never duplicate
     and no union/distinct is needed."""
     from pdftableextractor_spark.kernels.vectors import lsh_multi_match_udf
 
-    planes_list = lsh_planes(len(query_vec), n_planes, n_tables)
+    planes_list = lsh_planes(len(query_vec), n_tables)
     cand = embeddings.filter(
         lsh_multi_match_udf(planes_list, query_vec)(F.col("embedding"))
     )
-    return _rank_by_cos(cand, query_vec, k)
+    return _rank_by_cos(cand, query_vec, 10)
 
 
 def ivf_topk(
     embeddings: DataFrame,
     query_vec,
-    k: int = 10,
     nprobe: int = 2,
     cell_col: str = "label",
 ) -> DataFrame:
-    """IVF approximate top-k: rank cells by centroid cosine, brute-force only
-    the best ``nprobe`` cells."""
+    """IVF approximate top-10: rank cells by centroid cosine, brute-force
+    only the best ``nprobe`` cells."""
     probe_cells = _top_cells(
         centroid_mean(embeddings, cell_col), query_vec, nprobe
     )
@@ -311,7 +290,7 @@ def ivf_topk(
         F.broadcast(probe_cells),
         embeddings[cell_col] == probe_cells["cell"],
     )
-    return _rank_by_cos(cand, query_vec, k)
+    return _rank_by_cos(cand, query_vec, 10)
 
 
 def knn_join(
@@ -477,7 +456,7 @@ def _cell_knn(
     )
 
 
-def _fingerprint(embeddings: DataFrame, id_col: str) -> tuple[int, int]:
+def _fingerprint(embeddings: DataFrame) -> tuple[int, int]:
     """(row count, content hash) of an embeddings frame in one job — the
     deterministic part of a build stamp (no wall clock), so an idempotent
     re-run of the SAME build converges to a consistent index. The hash
@@ -489,7 +468,7 @@ def _fingerprint(embeddings: DataFrame, id_col: str) -> tuple[int, int]:
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
             F.expr(
-                f"bit_xor(xxhash64(cast({id_col} as string),"
+                "bit_xor(xxhash64(cast(vec_id as string),"
                 " cast(embedding as string)))"
             ),
             F.lit(0),
@@ -503,9 +482,6 @@ def build_ivf_index(
     path: str,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    seed: int = 9,
-    fit_sample_per_cell: int | None = 256,
 ) -> int:
     """Build and PERSIST an IVF index — the build-once / query-many split
     that ANN needs at corpus scale (rebuilding k-means per query, as
@@ -525,20 +501,17 @@ def build_ivf_index(
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
     from pdftableextractor_spark.sources.tables import write_table
 
-    cents = kmeans_centroids(
-        embeddings, k=k, iters=iters, id_col=id_col, seed=seed,
-        fit_sample_per_cell=fit_sample_per_cell,
-    )
+    cents = kmeans_centroids(embeddings, k=k, iters=iters)
     # consistency stamp: a rebuild that dies between the two writes would
     # otherwise leave new centroids next to the previous run's vectors and
     # the query path would silently probe a mismatched index
-    n, h = _fingerprint(embeddings, id_col)
-    build_id = f"k{k}-i{iters}-s{seed}-n{n}-x{h:x}"
+    n, h = _fingerprint(embeddings)
+    build_id = f"k{k}-i{iters}-s9-n{n}-x{h:x}"
     cdf = embeddings.sparkSession.createDataFrame(
         [(i, c, build_id) for i, c in enumerate(cents)], _CENTROIDS_SCHEMA
     )
     assigned = embeddings.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         "embedding",
         nearest_centroid_udf(cents)(F.col("embedding")).alias("cell"),
         F.lit(build_id).alias("build_id"),
@@ -686,7 +659,6 @@ def append_to_ivf_index(
     spark,
     new_embeddings: DataFrame,
     path: str,
-    id_col: str = "vec_id",
 ) -> int:
     """APPEND a batch of vectors to a persisted IVF index without
     refitting — the growth side of the incremental cadence
@@ -722,7 +694,7 @@ def append_to_ivf_index(
     appended = Observation()
     write_table(
         new_embeddings.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             "embedding",
             nearest_centroid_udf(cent_list)(F.col("embedding")).alias("cell"),
             F.lit(stamp).alias("build_id"),
@@ -799,7 +771,7 @@ def ivf_drift_report(
 # ---------------------------------------------------------------------------
 
 
-def sq8_scale(embeddings: DataFrame, emb_col: str = "embedding") -> float:
+def sq8_scale(embeddings: DataFrame) -> float:
     """The global SQ8 quantization scale: max |v| over the row-normalized
     embedding values of the corpus.
 
@@ -812,7 +784,7 @@ def sq8_scale(embeddings: DataFrame, emb_col: str = "embedding") -> float:
     from pdftableextractor_spark.kernels.vectors import sq8_absmax_partials
 
     rows = (
-        embeddings.select(emb_col)
+        embeddings.select("embedding")
         .mapInPandas(sq8_absmax_partials, schema="mx double")
         .collect()
     )
@@ -824,13 +796,8 @@ def sq8_scale(embeddings: DataFrame, emb_col: str = "embedding") -> float:
     return mx
 
 
-def sq8_quantize(
-    embeddings: DataFrame,
-    scale: float,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Quantize an embedding column to symmetric SQ8 codes: (id_col, code
+def sq8_quantize(embeddings: DataFrame, scale: float) -> DataFrame:
+    """Quantize an embedding column to symmetric SQ8 codes: (vec_id, code
     array<int> of −128..127) of the row-normalized vectors under a fixed
     global ``scale`` (from ``sq8_scale``) — the storage form of the
     compressed ANN scan. Parquet bit-packs the small ints to about a byte
@@ -845,9 +812,7 @@ def sq8_quantize(
     from pdftableextractor_spark.kernels.vectors import sq8_code_udf
 
     code = sq8_code_udf(scale)
-    return embeddings.select(
-        F.col(id_col), code(F.col(emb_col)).alias("code")
-    )
+    return embeddings.select("vec_id", code(F.col("embedding")).alias("code"))
 
 
 def sq8_topk(
@@ -855,8 +820,6 @@ def sq8_topk(
     query_vec,
     k: int = 10,
     rerank: int = 4,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k by cosine via symmetric SQ8 quantization with
     exact rerank — the compressed-scan ANN path (the scalar-quantization
@@ -895,27 +858,21 @@ def sq8_topk(
         sq8_adot_to_query_udf,
     )
 
-    scale = sq8_scale(embeddings, emb_col=emb_col)
+    scale = sq8_scale(embeddings)
     q = np.asarray(list(query_vec), dtype=np.float64)
     qcode = _sq8_codes(q.reshape(1, -1), scale)[0]
     adot = sq8_adot_to_query_udf(scale, qcode.tolist())
     cand = (
         embeddings.select(
-            F.col(id_col),
-            F.col(emb_col),
-            adot(F.col(emb_col)).alias("__adot"),
+            "vec_id", "embedding", adot(F.col("embedding")).alias("__adot")
         )
-        .orderBy(F.desc("__adot"), F.asc(id_col))
+        .orderBy(F.desc("__adot"), F.asc("vec_id"))
         .limit(k * rerank)
     )
-    return _rank_by_cos(cand, query_vec, k, id_col, emb_col)
+    return _rank_by_cos(cand, query_vec, k)
 
 
-def build_sq8_index(
-    embeddings: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-) -> int:
+def build_sq8_index(embeddings: DataFrame, path: str) -> int:
     """Build and PERSIST an SQ8 index — the build-once / query-many split
     for the compressed-scan ANN path (``sq8_topk`` refits the scale and
     rescans float32 per query; production quantizes once):
@@ -942,19 +899,19 @@ def build_sq8_index(
     spark = embeddings.sparkSession
     embeddings = pin(embeddings, "sq8 index input")
     scale = sq8_scale(embeddings)
-    n, h = _fingerprint(embeddings, id_col)
+    n, h = _fingerprint(embeddings)
     build_id = f"sq8-n{n}-x{h:x}"
     write_table(
         embeddings.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             "embedding",
             F.lit(build_id).alias("build_id"),
         ),
         f"{path}/vectors",
     )
     write_table(
-        sq8_quantize(embeddings, scale, id_col=id_col).select(
-            F.col(id_col).alias("vec_id"),
+        sq8_quantize(embeddings, scale).select(
+            "vec_id",
             "code",
             F.lit(build_id).alias("build_id"),
         ),

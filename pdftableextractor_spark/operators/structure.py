@@ -428,10 +428,7 @@ def _clean_markers_col(col):
 
 
 def lexical_commentary(
-    points: DataFrame,
-    lines: DataFrame,
-    threshold: int = 7,
-    salt: int = 1,
+    points: DataFrame, lines: DataFrame, salt: int = 1
 ) -> DataFrame:
     """Score every (data point × same-doc line) pair and keep the argmax
     context per point (app.py:81-156):
@@ -528,7 +525,7 @@ def lexical_commentary(
             F.filter("field_words", lambda w: F.col("line_lower").contains(w))
         )
     )
-    scored = j.withColumn("score", score).filter(F.col("score") >= threshold)
+    scored = j.withColumn("score", score).filter(F.col("score") >= 7)
     order_key = F.struct(
         F.col("score").alias("s"), (-F.col("line_no")).alias("neg")
     )
@@ -619,17 +616,11 @@ def _truncate_sentences_col(col, trigger: int, budget: int):
 # ---------------------------------------------------------------------------
 
 
-def unmatched_paragraphs(
-    lines: DataFrame,
-    used_lines: DataFrame,
-    min_line_len: int = 15,
-    min_para_len: int = 50,
-    max_paras: int = 3,
-) -> DataFrame:
+def unmatched_paragraphs(lines: DataFrame, used_lines: DataFrame) -> DataFrame:
     """Lines not consumed by commentary (±1 context, app.py:186-190) are
-    sessionized into paragraphs: consecutive substantial unused lines form
-    an island; islands are kept when the joined text exceeds min_para_len,
-    capped at max_paras per doc (app.py:192-238).
+    sessionized into paragraphs: consecutive unused lines longer than 15
+    characters (trimmed) form an island; islands are kept when the joined
+    text exceeds 50 characters, at most 3 per doc (app.py:192-238).
 
     used_lines: (doc_id, line_no) — the anti-join side; context expansion to
     ±1 happens here via sequence+explode (W3)."""
@@ -648,7 +639,7 @@ def unmatched_paragraphs(
         "left",
     ).withColumn(
         "usable",
-        (F.col("ok") == 1) & (F.length(F.trim("text")) > min_line_len),
+        (F.col("ok") == 1) & (F.length(F.trim("text")) > 15),
     )
     islands = (
         flagged.withColumn(
@@ -668,12 +659,12 @@ def unmatched_paragraphs(
             ).alias("paragraph"),
             F.min("line_no").alias("first_line"),
         )
-        .filter(F.length("paragraph") > min_para_len)
+        .filter(F.length("paragraph") > 50)
     )
     w_rank = Window.partitionBy("doc_id").orderBy("first_line")
     return (
         paras.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= max_paras)
+        .filter(F.col("rank") <= 3)
         .select(
             "doc_id",
             (F.col("rank") - 1).cast("int").alias("para_no"),

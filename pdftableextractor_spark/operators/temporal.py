@@ -42,15 +42,13 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    ts_col: str = "ts",
     seq_col: str | None = None,
-    right_prefix: str = "r_",
     salt: int = 1,
 ) -> DataFrame:
     """Backward as-of LEFT join: every ``left`` row, enriched with the
-    ``right`` row of the same ``on`` key having the greatest ``ts_col`` <=
+    ``right`` row of the same ``on`` key having the greatest ``ts`` <=
     the left row's (nulls when no such row exists). Right payload columns
-    come back prefixed with ``right_prefix``. ``salt > 1`` spreads a hot
+    come back prefixed with ``r_``. ``salt > 1`` spreads a hot
     key over ``salt`` window partitions (see module docstring)."""
     rcols = [c for c in right.columns if c != on]
     lcols = left.columns
@@ -61,10 +59,10 @@ def asof_join(
     # (l.ts >= r.ts) is never true for a null ts, so drop them (DuckDB
     # ASOF semantics). Null-ts LEFT rows keep flowing and get no match:
     # after this filter nothing sorts before them.
-    right = right.filter(F.col(ts_col).isNotNull())
+    right = right.filter(F.col("ts").isNotNull())
     r = right.select(
         F.col(on),
-        F.col(ts_col).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(0).alias("__side"),
         seq.alias("__seq"),
         F.struct(*[F.col(c) for c in rcols]).alias("__payload"),
@@ -73,7 +71,7 @@ def asof_join(
     )
     l = left.select(
         F.col(on),
-        F.col(ts_col).alias("__ts"),
+        F.col("ts").alias("__ts"),
         F.lit(1).alias("__side"),
         F.lit(0).alias("__seq"),
         F.lit(None)
@@ -115,7 +113,7 @@ def asof_join(
     out = matched.filter(F.col("__side") == 1).select(
         F.col(on),
         *[F.col(f"__l_{c}").alias(c) for c in lcols if c != on],
-        *[F.col("__match")[c].alias(f"{right_prefix}{c}") for c in rcols],
+        *[F.col("__match")[c].alias(f"r_{c}") for c in rcols],
     )
     return out
 

@@ -42,10 +42,10 @@ def _named(**cols: Column) -> dict[str, Column]:
     return {k: c.alias(k) for k, c in cols.items()}
 
 
-def token_count_cols(text_col: str = "text") -> dict[str, Column]:
+def token_count_cols() -> dict[str, Column]:
     """ws_tokens, bpe_tokens, chars — whitespace + BPE-ish regex token
-    counts of ``text_col``."""
-    t = F.col(text_col)
+    counts of ``text``."""
+    t = F.col("text")
     return _named(
         ws_tokens=F.size(tokenize_col(t)),
         bpe_tokens=F.size(F.regexp_extract_all(t, F.lit(TOKEN_RE), F.lit(0))),
@@ -53,13 +53,13 @@ def token_count_cols(text_col: str = "text") -> dict[str, Column]:
     )
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """(doc_id, ws_tokens, bpe_tokens, chars) — see ``token_count_cols``."""
-    return docs.select("doc_id", *token_count_cols(text_col).values())
+    return docs.select("doc_id", *token_count_cols().values())
 
 
-def quality_score_cols(text_col: str = "text") -> dict[str, Column]:
-    """Heuristic quality features of ``text_col`` + a composite score in
+def quality_score_cols() -> dict[str, Column]:
+    """Heuristic quality features of ``text`` + a composite score in
     [0, 1]:
 
       len_score   = least(chars, 2000) / 2000
@@ -68,7 +68,7 @@ def quality_score_cols(text_col: str = "text") -> dict[str, Column]:
       score       = round(0.4*len_score + 0.3*least(stop_ratio*3, 1)
                           + 0.3*(1 - least(punct_ratio*5, 1)), 6)
     """
-    t = F.col(text_col)
+    t = F.col("text")
     toks = tokenize_col(t)
     chars = F.length(t)
     punct = F.length(t) - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
@@ -113,10 +113,10 @@ def quality_score_cols(text_col: str = "text") -> dict[str, Column]:
     )
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """(doc_id, len_score, punct_ratio, stop_ratio, quality) — see
     ``quality_score_cols``."""
-    return docs.select("doc_id", *quality_score_cols(text_col).values())
+    return docs.select("doc_id", *quality_score_cols().values())
 
 
 def eval_in_set(col, values) -> object:
@@ -131,13 +131,13 @@ def _in_set_pred(values):
     return lambda x: eval_in_set(x, values)
 
 
-def lang_id_cols(text_col: str = "text") -> dict[str, Column]:
-    """Marker-token language ID of ``text_col``: per-language stopword hit
+def lang_id_cols() -> dict[str, Column]:
+    """Marker-token language ID of ``text``: per-language stopword hit
     counts (hits_<lang>) over the token array and lang_pred, the argmax —
     ties broken by language code order; zero hits → 'und'. For zh (no
     whitespace tokens) the marker hit is a substring count over the raw
     text."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = tokenize_col(t)
     hits = {
         lang: reduce(
@@ -165,31 +165,27 @@ def lang_id_cols(text_col: str = "text") -> dict[str, Column]:
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(doc_id, hits_<lang>..., lang_pred) — see ``lang_id_cols``."""
-    return docs.select("doc_id", *lang_id_cols(text_col).values())
+    return docs.select("doc_id", *lang_id_cols().values())
 
 
-def fingerprint_cols(
-    text_col: str = "text", k: int = 8, n: int = 3
-) -> dict[str, Column]:
-    """Winnowing-style document fingerprint of ``text_col``: the k
-    lexicographically smallest md5 hashes of word n-gram shingles, joined —
+def fingerprint_cols() -> dict[str, Column]:
+    """Winnowing-style document fingerprint of ``text``: the 8
+    lexicographically smallest md5 hashes of word 3-gram shingles, joined —
     a stable near-dup-robust document identity — plus the full-content
     md5."""
-    sh = shingles_col(F.col(text_col), n)
+    sh = shingles_col(F.col("text"), 3)
     hashes = F.array_sort(F.transform(sh, lambda x: F.md5(x)))
     return _named(
-        content_md5=F.md5(F.col(text_col)),
-        fingerprint=F.concat_ws("", F.slice(hashes, 1, k)),
+        content_md5=F.md5(F.col("text")),
+        fingerprint=F.concat_ws("", F.slice(hashes, 1, 8)),
     )
 
 
-def fingerprint(
-    docs: DataFrame, text_col: str = "text", k: int = 8, n: int = 3
-) -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """(doc_id, content_md5, fingerprint) — see ``fingerprint_cols``."""
-    return docs.select("doc_id", *fingerprint_cols(text_col, k, n).values())
+    return docs.select("doc_id", *fingerprint_cols().values())
 
 
 # --- cross-doc line-frequency dedup (CCNet-style paragraph dedup) -----------
@@ -199,12 +195,12 @@ def fingerprint(
 # stage.
 
 
-def line_doc_frequency(lines: DataFrame, text_col: str = "text") -> DataFrame:
+def line_doc_frequency(lines: DataFrame) -> DataFrame:
     """Per distinct normalized line: the number of DISTINCT documents it
-    appears in. (doc_id, <text_col>) → (line_hash, text, doc_freq). The
+    appears in. (doc_id, text) → (line_hash, text, doc_freq). The
     md5 groupBy key keeps the shuffle rows narrow; one map-side-combined
     aggregation."""
-    t = F.trim(F.lower(F.col(text_col)))
+    t = F.trim(F.lower(F.col("text")))
     return (
         lines.select("doc_id", t.alias("norm"))
         .filter(F.col("norm") != "")
@@ -216,17 +212,15 @@ def line_doc_frequency(lines: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def drop_common_lines(
-    lines: DataFrame, min_df: int = 5, text_col: str = "text"
-) -> DataFrame:
-    """Remove lines whose verbatim (lowercased) text appears in >= min_df
+def drop_common_lines(lines: DataFrame) -> DataFrame:
+    """Remove lines whose verbatim (lowercased) text appears in >= 5
     distinct documents — evidence-based boilerplate removal. The frequency
     side is aggregated first (one row per distinct line), so the exclusion
     join is a hash/broadcast semi-anti join, never all-pairs."""
-    t = F.trim(F.lower(F.col(text_col)))
+    t = F.trim(F.lower(F.col("text")))
     common = (
-        line_doc_frequency(lines, text_col)
-        .filter(F.col("doc_freq") >= min_df)
+        line_doc_frequency(lines)
+        .filter(F.col("doc_freq") >= 5)
         .select("line_hash")
     )
     return (
@@ -246,11 +240,11 @@ URL_RE = r"https?://[^\s]+"
 PHONE_RE = r"\+?\d[\d\-\s]{7,}\d"
 
 
-def redact_pii_cols(text_col: str = "text") -> dict[str, Column]:
-    """clean_text, n_urls, n_emails, n_phones of ``text_col``. Order
+def redact_pii_cols() -> dict[str, Column]:
+    """clean_text, n_urls, n_emails, n_phones of ``text``. Order
     matters and is frozen: URLs first (emails can appear inside URLs),
     then emails, then phone-like digit runs."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_urls = F.size(F.regexp_extract_all(t, F.lit(URL_RE), F.lit(0)))
     after_url = F.regexp_replace(t, URL_RE, "<URL>")
     n_emails = F.size(
@@ -268,13 +262,13 @@ def redact_pii_cols(text_col: str = "text") -> dict[str, Column]:
     )
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, clean_text, n_urls, n_emails, n_phones) —
     see ``redact_pii_cols``."""
-    return docs.select("doc_id", *redact_pii_cols(text_col).values())
+    return docs.select("doc_id", *redact_pii_cols().values())
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (public Rae et al. 2021 filter
     family), deterministic and SQL-twinnable:
 
@@ -288,7 +282,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     bigrams report 0.0.
     """
     sents = F.split(
-        F.regexp_replace(F.col(text_col), r"([.!?]) ", "$1\x1e"), "\x1e"
+        F.regexp_replace(F.col("text"), r"([.!?]) ", "$1\x1e"), "\x1e"
     )
     base = docs.select(
         "doc_id",
@@ -298,7 +292,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
             - F.size(F.array_distinct(sents))
             / F.greatest(F.size(sents), F.lit(1))
         ).alias("dup_sent_frac"),
-        tokenize_col(F.col(text_col)).alias("toks"),
+        tokenize_col(F.col("text")).alias("toks"),
     )
     # a bigram is its (w1, w2) struct: tokens hold no space, so grouping
     # on the struct equals grouping on the " "-joined string
@@ -331,10 +325,8 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def corpus_length_stats(
-    docs: DataFrame, stratum_col: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """Per-stratum corpus shape summary: (stratum, n_docs, mean_tokens,
+def corpus_length_stats(docs: DataFrame) -> DataFrame:
+    """Per-``source`` corpus shape summary: (stratum, n_docs, mean_tokens,
     p50_tokens, p95_tokens) with EXACT interpolated percentiles.
 
     Exact ``percentile`` sorts per group — fine because cardinality here is
@@ -343,8 +335,8 @@ def corpus_length_stats(
     mergeable) and accept the approximation — the oracle-able exact variant
     is what the driver compares."""
     toks = docs.select(
-        F.col(stratum_col).alias("stratum"),
-        F.size(tokenize_col(F.col(text_col))).cast("bigint").alias("t"),
+        F.col("source").alias("stratum"),
+        F.size(tokenize_col(F.col("text"))).cast("bigint").alias("t"),
     )
     return toks.groupBy("stratum").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -354,12 +346,7 @@ def corpus_length_stats(
     )
 
 
-def vocab_topk(
-    docs: DataFrame,
-    k: int = 1000,
-    text_col: str = "text",
-    min_count: int = 1,
-) -> DataFrame:
+def vocab_topk(docs: DataFrame, k: int = 1000) -> DataFrame:
     """Corpus vocabulary induction: the k most frequent whitespace tokens
     with their counts — (term, n), ordered by (n desc, term) with a
     deterministic tiebreak. The seed step for stopword lists, wordpiece
@@ -370,24 +357,18 @@ def vocab_topk(
     TakeOrderedAndProject for the top-k (per-partition heaps; the full
     vocabulary is never sorted or collected)."""
     toks = docs.select(
-        F.explode(tokenize_col(F.col(text_col))).alias("term")
+        F.explode(tokenize_col(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
     counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
     return (
-        counts.filter(F.col("n") >= min_count)
-        .orderBy(F.desc("n"), F.asc("term"))
+        counts.orderBy(F.desc("n"), F.asc("term"))
         .limit(k)
     )
 
 
-def drop_bottom_percentile(
-    docs: DataFrame,
-    frac: float,
-    score_col: str = "quality",
-    stratum_col: str = "source",
-) -> DataFrame:
-    """Per-stratum quality gate: drop (about) the bottom ``frac`` of each
-    stratum by ``score_col`` — the CCNet/Gopher-style "keep the best X%"
+def drop_bottom_percentile(docs: DataFrame, frac: float) -> DataFrame:
+    """Per-``source`` quality gate: drop (about) the bottom ``frac`` of each
+    stratum by ``quality`` — the CCNet/Gopher-style "keep the best X%"
     filter, done as a threshold rule so it stays scan-shaped at corpus
     scale.
 
@@ -418,7 +399,7 @@ def drop_bottom_percentile(
 
     frac_micro = int(round(float(frac) * 1_000_000))
     hist = docs.groupBy(
-        F.col(stratum_col).alias("__st"), F.col(score_col).alias("__sc")
+        F.col("source").alias("__st"), F.col("quality").alias("__sc")
     ).agg(F.count(F.lit(1)).alias("__c"))
     w_cum = (
         Window.partitionBy("__st")
@@ -443,19 +424,17 @@ def drop_bottom_percentile(
     return (
         docs.join(
             F.broadcast(thr),
-            docs[stratum_col].eqNullSafe(thr["__st"]),
+            docs["source"].eqNullSafe(thr["__st"]),
             "left",
         )
         .filter(
-            F.col("__thr").isNull() | (F.col(score_col) >= F.col("__thr"))
+            F.col("__thr").isNull() | (F.col("quality") >= F.col("__thr"))
         )
         .select(*docs.columns)
     )
 
 
-def bigram_transition_score(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bigram_transition_score(docs: DataFrame) -> DataFrame:
     """Corpus-LM fluency scoring — the deterministic, oracle-exact analog of
     CCNet's KenLM perplexity filter: train an add-one-smoothed bigram model
     on the corpus itself and score each document by its mean transition
@@ -483,7 +462,7 @@ def bigram_transition_score(
     the inherently token-shaped part — common bigrams are hot keys; AQE's
     skew-join split handles them (count frames are byte-heavy per key,
     unlike the CPU-skew joins that needed manual salting)."""
-    base = _tokens(docs, text_col)
+    base = _tokens(docs, "text")
     bg = (
         base.select(
             "doc_id", F.explode(_gram_structs(F.col("__tk"), 2)).alias("__p")

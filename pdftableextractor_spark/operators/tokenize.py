@@ -106,7 +106,6 @@ def train_bpe_from_counts(
 def train_bpe(
     docs: DataFrame,
     n_merges: int = 1000,
-    text_col: str = "text",
     max_word_types: int = 50_000,
 ) -> list[tuple[str, str]]:
     """Learn a BPE merge table from a corpus: ONE distributed
@@ -120,7 +119,7 @@ def train_bpe(
             F.explode(
                 F.regexp_extract_all(
                     # reserved-sentinel normalization (see EOW)
-                    F.replace(F.col(text_col), F.lit(EOW), F.lit(" ")),
+                    F.replace(F.col("text"), F.lit(EOW), F.lit(" ")),
                     F.lit(TOKEN_RE),
                     F.lit(0),
                 )
@@ -145,7 +144,7 @@ def encode_word(word: str, merges: list[tuple[str, str]]) -> list[str]:
     return list(sym)
 
 
-def _encode_kernel(merges: list[tuple[str, str]], text_col: str):
+def _encode_kernel(merges: list[tuple[str, str]]):
     import re
 
     tok_re = re.compile(TOKEN_RE)
@@ -160,7 +159,7 @@ def _encode_kernel(merges: list[tuple[str, str]], text_col: str):
         cache_cap = 1 << 18
         for pdf in batches:
             ids, toks, counts = [], [], []
-            for did, text in zip(pdf["doc_id"].values, pdf[text_col].values):
+            for did, text in zip(pdf["doc_id"].values, pdf["text"].values):
                 if text is None:
                     text = ""
                 out: list[str] = []
@@ -190,17 +189,13 @@ def _encode_kernel(merges: list[tuple[str, str]], text_col: str):
     return kern
 
 
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """(doc_id, tokens, n_tokens) — encode every document with a trained
     merge table. Narrow Arrow-batched map, no shuffle; decoding is
     ``''.join(tokens).replace(EOW, ' ')``-lossless on the word stream
     because every word ends in the EOW sentinel."""
-    return docs.select("doc_id", text_col).mapInPandas(
-        _encode_kernel(list(map(tuple, merges)), text_col),
+    return docs.select("doc_id", "text").mapInPandas(
+        _encode_kernel(list(map(tuple, merges))),
         schema=ENCODE_SCHEMA,
     )
 

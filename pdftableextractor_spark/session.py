@@ -19,7 +19,6 @@ from pyspark.sql import SparkSession
 def build_session(
     app_name: str = "pdftableextractor-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     # under spark-submit a gateway JVM already carries the CLI --master;
@@ -72,8 +71,5 @@ def build_session(
     # Set post-start (runtime-settable) so the submit-provided master's
     # parallelism is what gets sized.
     cores = n if n is not None else spark.sparkContext.defaultParallelism
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(shuffle_partitions or 4 * cores),
-    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * cores))
     return spark

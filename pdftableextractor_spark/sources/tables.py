@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 FORMAT = "parquet"
 
 
-def read_path(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
+def read_path(spark: SparkSession, path: str) -> DataFrame:
     """Format-seam table read (see FORMAT)."""
-    return spark.read.format(fmt or FORMAT).load(path)
+    return spark.read.format(FORMAT).load(path)
 
 
 def write_table(
@@ -29,12 +29,11 @@ def write_table(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    fmt: str | None = None,
     **options: str,
 ) -> None:
     """Format-seam table write (see FORMAT). ``options`` pass through to the
     DataFrameWriter (e.g. partitionOverwriteMode='dynamic')."""
-    w = df.write.mode(mode).format(fmt or FORMAT)
+    w = df.write.mode(mode).format(FORMAT)
     for k, v in options.items():
         w = w.option(k, v)
     if partition_by:

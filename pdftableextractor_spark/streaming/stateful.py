@@ -51,10 +51,11 @@ def stream_exact_dedup(
     checkpoint_dir: str,
     schema: str = "doc_id string, text string",
     content_col: str = "text",
-    available_now: bool = True,
 ):
     """Streaming first-wins exact dedup: emits (content_hash, doc_id) once
-    per distinct content across the whole stream lifetime.
+    per distinct content across the whole stream lifetime. Runs to
+    completion (``availableNow``) and returns the finished
+    StreamingQuery.
 
     ``schema``/``content_col`` must match the actual input files — reading a
     nested documents(doc_id, spans) directory requires the spans schema and
@@ -75,15 +76,13 @@ def stream_exact_dedup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
+    q = (
         deduped.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    q.awaitTermination()
     return q

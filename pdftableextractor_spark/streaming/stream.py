@@ -29,11 +29,10 @@ def stream_extract(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Start (and with available_now=True, run to completion) the streaming
-    extraction: parquet file source → extract_spans per micro-batch →
-    parquet append. Returns the StreamingQuery."""
+    """Run the streaming extraction to completion (``availableNow``):
+    parquet file source → extract_spans per micro-batch → parquet append.
+    Returns the finished StreamingQuery."""
     from pyspark.sql import functions as F
 
     from pdftableextractor_spark.operators.extract import extract_spans
@@ -63,13 +62,11 @@ def stream_extract(
             partitionOverwriteMode="dynamic",
         )
 
-    writer = (
+    q = (
         src.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
+    q.awaitTermination()
     return q

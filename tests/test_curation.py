@@ -44,7 +44,7 @@ def test_minhash_lsh_recall_vs_exact(spark):
     exact = {
         (r["doc_a"], r["doc_b"])
         for r in ngram_jaccard_pairs(
-            docs.withColumn("block", F.lit(1)), "block", n=1, threshold=0.8
+            docs.withColumn("block", F.lit(1)), "block", threshold=0.8
         ).collect()
     }
     lsh = {
@@ -72,7 +72,7 @@ def test_ivf_topk_recall_vs_brute_force(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
     exact = [r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()]
-    approx = [r["vec_id"] for r in ivf_topk(emb, q, k=10, nprobe=3).collect()]
+    approx = [r["vec_id"] for r in ivf_topk(emb, q, nprobe=3).collect()]
     # the query's own cell is always probed → recall well above chance
     overlap = len(set(exact) & set(approx))
     assert exact[0] == 0  # the query vector itself is its own top-1
@@ -222,7 +222,7 @@ def test_lsh_topk_contains_query_and_subsets_bruteforce(spark):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    got = [(r["vec_id"], r["cos"]) for r in lsh_topk(emb, q, k=10).collect()]
+    got = [(r["vec_id"], r["cos"]) for r in lsh_topk(emb, q).collect()]
     assert got, "query's own bucket must not be empty"
     assert got[0][0] == 0 and abs(got[0][1] - 1.0) < 1e-6  # self is top-1
     exact = {
@@ -264,7 +264,7 @@ def test_lsh_multi_table_recall_beats_single_table(spark):
     def recall(n_tables):
         got = {
             r["vec_id"]
-            for r in lsh_topk(emb, q, k=10, n_tables=n_tables).collect()
+            for r in lsh_topk(emb, q, n_tables=n_tables).collect()
         }
         return len(exact & got)
 
@@ -311,7 +311,7 @@ def test_kmeans_ivf_on_unlabeled_corpus(spark):
     exact = [r["vec_id"] for r in cosine_topk(emb, q, k=10).collect()]
     approx = [
         r["vec_id"]
-        for r in ivf_topk(assigned, q, k=10, nprobe=2, cell_col="cell").collect()
+        for r in ivf_topk(assigned, q, nprobe=2, cell_col="cell").collect()
     ]
     overlap = len(set(exact) & set(approx))
     assert exact[0] == 0
@@ -341,7 +341,7 @@ def test_simhash_multiband_recovers_prefix_misses(spark):
     multi = {
         (r["doc_a"], r["doc_b"])
         for r in simhash_near_dups_multiband(
-            docs, max_hamming=8, n_bands=5
+            docs, max_hamming=8
         ).collect()
     }
     assert ("a", "b") not in single  # the documented single-rotation gap
@@ -376,7 +376,7 @@ def test_simhash_multiband_exact_recall_vs_quadratic(spark):
     banded = {
         (r["doc_a"], r["doc_b"])
         for r in simhash_near_dups_multiband(
-            docs, max_hamming=4, n_bands=5
+            docs, max_hamming=4
         ).collect()
     }
     assert exact, "test corpus produced no close pairs — vacuous"
@@ -385,11 +385,11 @@ def test_simhash_multiband_exact_recall_vs_quadratic(spark):
 
 def test_resize_and_frame_sample_plumbing(spark):
     """Resize keeps one row per asset with updated dims; frame sampling
-    fans a video out to duration//every+1 rows BEFORE any shuffle, with
-    deterministic per-timestamp frame bytes."""
+    fans a video out to duration//every+1 rows, with deterministic
+    per-timestamp frame bytes (text payloads take the sha fallback)."""
     from pdftableextractor_spark.operators.multimodal import (
         resize_assets,
-        sample_frames,
+        sample_frames_decoded,
         synth_assets,
     )
 
@@ -407,7 +407,7 @@ def test_resize_and_frame_sample_plumbing(spark):
     vids = {r["asset_id"]: r["meta"]["duration_ms"]
             for r in assets.filter(F.col("kind") == "video").collect()}
     assert vids, "corpus planted no video assets — vacuous"
-    frames = sample_frames(assets, every_ms=5000).collect()
+    frames = sample_frames_decoded(assets, every_ms=5000).collect()
     got = {}
     for r in frames:
         got.setdefault(r["asset_id"], []).append((r["frame_idx"], r["ts_ms"]))
@@ -417,7 +417,7 @@ def test_resize_and_frame_sample_plumbing(spark):
         assert idx == [(i, i * 5000) for i in range(dur // 5000 + 1)]
     # deterministic: same frame bytes on recompute
     again = {(r["asset_id"], r["ts_ms"]): bytes(r["frame"])
-             for r in sample_frames(assets, every_ms=5000).collect()}
+             for r in sample_frames_decoded(assets, every_ms=5000).collect()}
     first = {(r["asset_id"], r["ts_ms"]): bytes(r["frame"]) for r in frames}
     assert first == again
 
@@ -586,7 +586,7 @@ def test_line_frequency_dedup_and_pii_redaction(spark):
     lines = spark.createDataFrame(rows, ["doc_id", "offset", "text"])
     freq = {r["text"]: r["doc_freq"] for r in line_doc_frequency(lines).collect()}
     assert freq["© 2024 example corp. all rights reserved."] == 8
-    kept = [r["text"] for r in drop_common_lines(lines, min_df=5).collect()]
+    kept = [r["text"] for r in drop_common_lines(lines).collect()]
     assert all("Unique sentence" in t for t in kept) and len(kept) == 8
 
     docs = spark.createDataFrame(
@@ -755,7 +755,7 @@ def test_ivf_index_persist_and_partition_pruned_query(spark, tmp_path):
 
     got = ivf_topk_indexed(spark, idx, q, k=10, nprobe=2)
     exp = ivf_topk(
-        kmeans_cells(emb, k=8, iters=2), q, k=10, nprobe=2, cell_col="cell"
+        kmeans_cells(emb, k=8, iters=2), q, nprobe=2, cell_col="cell"
     )
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in exp.collect()]
 
@@ -886,7 +886,7 @@ def test_asof_join_edges(spark):
     out = {
         r["tag"]: (r["r_label"], r["r_seq"])
         for r in asof_join(
-            left, right, on="user_id", ts_col="ts", seq_col="seq"
+            left, right, on="user_id", seq_col="seq"
         ).collect()
     }
     assert out["L0"] == (None, None)          # nothing at-or-before ts=50
@@ -894,7 +894,7 @@ def test_asof_join_edges(spark):
     assert out["L2"] == ("mid", 1)            # latest at-or-before 200
     assert out["M0"] == (None, None)          # key never matches u3
 
-    plan = asof_join(left, right, on="user_id", ts_col="ts")._jdf.queryExecution(
+    plan = asof_join(left, right, on="user_id")._jdf.queryExecution(
     ).executedPlan().toString()
     assert plan.count("Exchange") == 1
 
@@ -976,7 +976,7 @@ def test_sampling_stages_compose_independently(spark):
     docs = spark.createDataFrame(
         [(f"{i:05d}", "s") for i in range(4000)], ["doc_id", "source"]
     )
-    stage1 = stratified_sample(docs, {"s": 0.5}, seed=7)
+    stage1 = stratified_sample(docs, {"s": 0.5})
     n1 = stage1.count()
     correlated = temperature_mix(stage1, alpha=1.0, budget_frac=0.5, seed=7).count()
     independent = temperature_mix(stage1, alpha=1.0, budget_frac=0.5, seed=13).count()
@@ -995,7 +995,7 @@ def test_asof_join_ignores_null_ts_rights(spark):
         [("u", None, "phantom"), ("u", 9, "future")],
         "k string, ts int, label string",
     )
-    rows = asof_join(left, right, on="k", ts_col="ts").collect()
+    rows = asof_join(left, right, on="k").collect()
     assert rows[0]["r_label"] is None
 
 

@@ -120,8 +120,7 @@ def test_write_pdf_paginates(spark, tmp_path):
     )
 
     pdf = render_pdf_table(["Category", "Value 1"],
-                           [[f"c{i}", str(i)] for i in range(95)],
-                           rows_per_page=40)
+                           [[f"c{i}", str(i)] for i in range(95)])
     assert pdf.count(b"/Type /Page ") == 3  # 95 rows @ 40/page
     assert b"/Count 3" in pdf
 

@@ -73,7 +73,7 @@ def test_pack_shards_single_group_exchange(spark):
         ["doc_id", "source", "n_tokens"],
     )
     # the bucketing is the lazy helper pack_shards pins
-    bkt = _plan(_range_buckets(docs, "source", "doc_id", None)).split(
+    bkt = _plan(_range_buckets(docs, None)).split(
         "== Physical Plan =="
     )[1]
     assert "Exchange rangepartitioning" in bkt
@@ -278,7 +278,7 @@ def test_round4_operators_plan_shapes(spark):
         assert "CartesianProduct" not in p
 
     spark.catalog.clearCache()  # known-clean baseline for the leak assert
-    p = phys(containment_pairs(docs, n=3, threshold=0.5))
+    p = phys(containment_pairs(docs, threshold=0.5))
     assert "ExistingRDD" in p, "shingle localCheckpoint not in effect"
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
@@ -308,6 +308,43 @@ def _jobs_started(spark, build):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_containment_threshold_outside_unit_interval_raises_before_any_job(
+    spark,
+):
+    """containment_pairs, video_near_dups and binary_near_dups reject a
+    threshold of 0 (containment_pairs' prefix filter would admit every
+    shingle) or above 1 (no pair could pass) with ValueError, before the
+    pin or any other Spark job."""
+    import pytest
+
+    from pdftableextractor_spark.operators.dedup import containment_pairs
+    from pdftableextractor_spark.operators.multimodal import (
+        binary_near_dups,
+        video_near_dups,
+    )
+
+    docs = spark.createDataFrame(
+        [("a", "one two three four"), ("b", "one two three five")],
+        "doc_id string, text string",
+    )
+    assets = spark.createDataFrame(
+        [("v", "video", bytearray(b"payload"))],
+        "asset_id string, kind string, payload binary",
+    )
+    for op, df in (
+        (containment_pairs, docs),
+        (video_near_dups, assets),
+        (binary_near_dups, assets),
+    ):
+        for threshold in (0, 1.5):
+            def build():
+                with pytest.raises(ValueError, match="threshold"):
+                    op(df, threshold=threshold)
+
+            _, jobs = _jobs_started(spark, build)
+            assert jobs == 0, (op.__name__, threshold, jobs)
 
 
 def test_pin_materializes_once_outside_the_cache_manager(spark, monkeypatch):
@@ -580,7 +617,7 @@ def test_containment_pairs_pins_one_shingle_frame(spark, monkeypatch):
     _, pin_jobs = _jobs_started(spark, lambda: docs.localCheckpoint(eager=True))
     monkeypatch.setattr(frame_cls, "localCheckpoint", recording_pin)
     df, jobs = _jobs_started(
-        spark, lambda: containment_pairs(docs, n=3, threshold=0.5)
+        spark, lambda: containment_pairs(docs, threshold=0.5)
     )
     monkeypatch.setattr(frame_cls, "localCheckpoint", pin)
     assert pin_jobs >= 1 and jobs == pin_jobs, (jobs, pin_jobs)

@@ -375,7 +375,7 @@ def test_sampling_ops_fuzz(spark, rows, frac_pct, buckets):
         [(f"d{i:03d}", s, float(v)) for i, (s, v) in enumerate(rows)],
         ["doc_id", "source", "quality"],
     )
-    kept = drop_bottom_percentile(docs, frac, "quality", "source").collect()
+    kept = drop_bottom_percentile(docs, frac).collect()
     per_in: dict[str, list] = defaultdict(list)
     for i, (s, v) in enumerate(rows):
         per_in[s].append((float(v), f"d{i:03d}"))

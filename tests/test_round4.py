@@ -106,7 +106,7 @@ def test_pack_shards_distributed_cumsum_single_group(spark):
     # helper pack_shards pins) is a range exchange
     assert "__bkt" in plan
     bkt_plan = (
-        _range_buckets(docs, "source", "doc_id", 8)
+        _range_buckets(docs, 8)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "rangepartitioning" in bkt_plan.lower()
@@ -390,7 +390,7 @@ def test_drop_bottom_percentile_threshold_and_ties(spark):
         + [(f"c{i}", "s2", float(5 + i)) for i in range(6)]
     )
     docs = spark.createDataFrame(rows, ["doc_id", "source", "quality"])
-    out = drop_bottom_percentile(docs, 0.3, "quality", "source")
+    out = drop_bottom_percentile(docs, 0.3)
     got = {r["doc_id"] for r in out.collect()}
     # s1: drop scores 0,1,2 (30% of 10) -> keep 3..9
     assert {f"a{i}" for i in range(10)} & got == {f"a{i}" for i in range(3, 10)}
@@ -421,9 +421,7 @@ def test_drop_bottom_percentile_null_stratum_and_absence(spark):
     )
     got = {
         r["doc_id"]
-        for r in drop_bottom_percentile(
-            docs, 0.3, "quality", "source"
-        ).collect()
+        for r in drop_bottom_percentile(docs, 0.3).collect()
     }
     # NULL stratum gates like any other: drop scores 0,1,2 of its 10
     assert {f"n{i}" for i in range(10)} & got == {
@@ -437,9 +435,7 @@ def test_drop_bottom_percentile_null_stratum_and_absence(spark):
     all_ids = {r["doc_id"] for r in docs.collect()}
     kept = {
         r["doc_id"]
-        for r in drop_bottom_percentile(
-            docs, 1.0, "quality", "source"
-        ).collect()
+        for r in drop_bottom_percentile(docs, 1.0).collect()
     }
     assert kept == all_ids
 
@@ -458,7 +454,7 @@ def test_duplicate_ngram_spans_hand_example(spark):
         ],
         ["doc_id", "text"],
     )
-    out = duplicate_ngram_spans(docs, n=3, min_docs=2).collect()
+    out = duplicate_ngram_spans(docs, n=3).collect()
     spans = {(r["doc_id"], r["start_pos"], r["gram"]) for r in out}
     assert spans == {
         ("d1", 0, "all rights reserved"),
@@ -583,7 +579,7 @@ def test_containment_pairs_finds_what_jaccard_misses(spark):
     )
     got = {
         (r["doc_a"], r["doc_b"]): r
-        for r in containment_pairs(docs, n=3, threshold=0.8).collect()
+        for r in containment_pairs(docs, threshold=0.8).collect()
     }
     assert ("d1", "d2") in got
     r = got[("d1", "d2")]
@@ -625,7 +621,7 @@ def test_containment_prefix_filter_is_lossless(spark):
                 exp.add((a, b, inter))
         got = {
             (r["doc_a"], r["doc_b"], r["inter"])
-            for r in containment_pairs(docs, n=3, threshold=thr).collect()
+            for r in containment_pairs(docs, threshold=thr).collect()
         }
         assert got == exp, f"thr={thr}: {got ^ exp}"
 
@@ -643,7 +639,7 @@ def test_containment_counts_past_int_range(spark):
     )
     got = [
         tuple(r)
-        for r in containment_pairs(docs, n=3, threshold=0.9).collect()
+        for r in containment_pairs(docs, threshold=0.9).collect()
     ]
     assert got == [("a", "b", 2298, 2298, 2299, 1.0)], got
 
@@ -665,7 +661,7 @@ def test_containment_trailing_whitespace_and_exact_rounding(spark):
         ],
         ["doc_id", "text"],
     )
-    r = containment_pairs(docs, n=3, threshold=0.5).collect()
+    r = containment_pairs(docs, threshold=0.5).collect()
     assert len(r) == 1
     row = r[0]
     # 'foo bar baz\n' = exactly one trigram -> size_a 1, containment 1.0
@@ -698,7 +694,7 @@ def test_mask_duplicate_spans_hand_example(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in mask_duplicate_spans(docs, n=3, min_docs=2).collect()
+        for r in mask_duplicate_spans(docs, n=3).collect()
     }
     assert out["d1"]["clean_text"] == "Keep1 KEEP2 <EMAIL>"
     assert out["d1"]["n_removed"] == 3

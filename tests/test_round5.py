@@ -273,16 +273,14 @@ def test_mask_spans_min_run_floor(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     got = {
         r["doc_id"]: (r["clean_text"], r["n_removed"])
-        for r in mask_duplicate_spans(
-            docs, n=4, min_docs=2, min_run=8
-        ).collect()
+        for r in mask_duplicate_spans(docs, n=4, min_run=8).collect()
     }
     assert got["a"] == ("unique tail here", 13)
     assert got["b"] == ("alpha beta gamma delta other words end", 9)
     # without the floor both shared regions die everywhere
     base = {
         r["doc_id"]: r["n_removed"]
-        for r in mask_duplicate_spans(docs, n=4, min_docs=2).collect()
+        for r in mask_duplicate_spans(docs, n=4).collect()
     }
     assert base["a"] == 13 and base["b"] == 13
 
@@ -412,7 +410,7 @@ def test_sample_frames_decoded_real_and_fallback(spark):
     """sample_frames_decoded returns GENUINE RGB frames at each sampled
     timestamp for a real AVI (bytes round-trip to the encoder's pixels,
     nearest-frame indexing) and the deterministic sha fallback for an
-    undecodable video payload — matching the JVM sample_frames bytes."""
+    undecodable video payload: sha256(payload || str(ts))."""
     import hashlib
 
     from pdftableextractor_spark.operators.multimodal import (
