@@ -8,13 +8,14 @@ One pass over assets(asset_id, kind, payload, meta):
   1. featurize      Arrow-batched decode-or-degrade features for every
                     payload (real PNG/WAV/AVI decodes, deterministic stub
                     for everything else) -> <output>/features
-  2. image dedup    perceptual dhash pairs -> connected components ->
-                    keep the min-id representative per visual cluster
+  2. image dedup    perceptual dhash pairs (Hamming <= 4) -> connected
+                    components -> keep the min-id representative per
+                    visual cluster
   3. audio dedup    energy-profile fingerprint pairs, same clustering
-  3b. video dedup   frame-hash containment pairs (re-encodes AND clips
-                    cut from longer videos); containment is asymmetric
-                    and non-transitive, so NO clustering — each pair
-                    drops only its contained side
+  3b. video dedup   frame-hash containment pairs at 0.8, every frame
+                    hashed (re-encodes AND clips cut from longer videos);
+                    containment is asymmetric and non-transitive, so NO
+                    clustering — each pair drops only its contained side
   4. frame sample   REAL frames for decodable videos (sha fallback rows
                     for the rest) -> <output>/frames
   5. keep list      assets minus non-representative image/audio/video
@@ -47,69 +48,13 @@ def main() -> None:
         "default: synthesize deterministically from the input documents",
     )
     p.add_argument("--output", required=True)
-    p.add_argument("--max-hamming", type=int, default=4)
-    p.add_argument(
-        "--n-bands",
-        type=int,
-        default=None,
-        help="multiband blocking bands (must divide 60); default: the "
-        "smallest divisor of 60 above --max-hamming, so the pigeonhole "
-        "recall guarantee (exact <= n_bands-1) always covers the "
-        "requested threshold",
-    )
-    p.add_argument(
-        "--video-containment",
-        type=float,
-        default=0.8,
-        help="frame-hash containment threshold for video near-dup pairs",
-    )
     p.add_argument("--frame-every-ms", type=int, default=5000)
-    p.add_argument(
-        "--video-hash-every-ms",
-        type=int,
-        default=None,
-        help="hash one frame per this many ms for video dedup signatures "
-        "(default: every frame; see video_near_dups for the clip-recall "
-        "trade)",
-    )
-    p.add_argument(
-        "--video-max-frames",
-        type=int,
-        default=None,
-        help="cap on hashed frames per video (evenly spaced)",
-    )
     p.add_argument("--master", default=None)
     args = p.parse_args()
     if not args.input and not args.assets:
         p.error("one of --input (synthesize assets) or --assets is required")
     if args.frame_every_ms < 1:
         p.error("--frame-every-ms must be >= 1")
-    if args.video_hash_every_ms is not None and args.video_hash_every_ms < 1:
-        p.error("--video-hash-every-ms must be >= 1")
-    if args.video_max_frames is not None and args.video_max_frames < 1:
-        p.error("--video-max-frames must be >= 1")
-    if not (0.0 < args.video_containment <= 1.0):
-        p.error(
-            f"--video-containment must be in (0, 1], got "
-            f"{args.video_containment} (it is a containment FRACTION, "
-            "not a percentage)"
-        )
-    if args.n_bands is None:
-        # keep the exact-recall guarantee at the requested threshold
-        args.n_bands = next(
-            (b for b in (5, 6, 10, 12, 15, 20, 30, 60)
-             if b > args.max_hamming),
-            None,
-        )
-        if args.n_bands is None:
-            p.error("--max-hamming must be < 60")
-    if 60 % args.n_bands:
-        p.error(f"--n-bands {args.n_bands} must divide 60")
-    if args.max_hamming > args.n_bands - 1:
-        p.error(
-            f"--max-hamming {args.max_hamming} exceeds the exact-recall "
-            f"bound of {args.n_bands} bands (n_bands-1); raise --n-bands"
-        )
 
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -169,13 +114,7 @@ def main() -> None:
     # pair — a strict superset is never dropped on a clip's account.
     # (Equal-size chains A~B, B~C without an A~C pair drop B and C and
     # keep A — same single-representative outcome CC would pick.)
-    vp = video_near_dups(
-        assets,
-        threshold=args.video_containment,
-        hash_every_ms=args.video_hash_every_ms,
-        max_frames=args.video_max_frames,
-    )
-    vp = pin(vp, "media video pairs")
+    vp = pin(video_near_dups(assets), "media video pairs")
     video_drop = vp.select(
         F.when(F.col("size_a") < F.col("size_b"), F.col("asset_a"))
         .when(F.col("size_b") < F.col("size_a"), F.col("asset_b"))
@@ -185,10 +124,7 @@ def main() -> None:
     for name, near_dups in (
         ("image", image_near_dups), ("audio", audio_near_dups)
     ):
-        pairs = near_dups(
-            assets, max_hamming=args.max_hamming, n_bands=args.n_bands
-        )
-        pairs = pin(pairs, f"media {name} pairs")
+        pairs = pin(near_dups(assets), f"media {name} pairs")
         pair_counts[name] = pairs.count()
         cc = connected_components(pairs, a_col="asset_a", b_col="asset_b")
         drop = cc.filter(F.col("node") != F.col("component")).select(

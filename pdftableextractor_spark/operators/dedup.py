@@ -1235,8 +1235,9 @@ def fuzzy_decontaminate(
     scan-shaped — per-doc-distinct shingles (array_distinct inside the
     shingle array, no shuffle) probe the broadcast, the only aggregation is
     over actual hits (doc, bench_id), and survivors come from one anti
-    join on doc_id. The corpus is never shuffled wholesale."""
-    t_micro = int(round(float(threshold) * 1_000_000))
+    join on doc_id. The corpus is never shuffled wholesale. A threshold
+    outside (0, 1] raises ValueError before any job starts."""
+    t_micro = _t_micro(threshold)
 
     def _sh(df, id_alias):
         return _tokens(df, "text").select(
@@ -1271,7 +1272,6 @@ def semantic_dedup(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup-style SEMANTIC deduplication (Abbas et al. 2023): cluster
     the corpus by embedding similarity and keep one representative per
@@ -1303,20 +1303,9 @@ def semantic_dedup(
     EAGER: pins through ``connected_components`` and ``kmeans_centroids``."""
     from pdftableextractor_spark.operators.similarity import knn_join
 
-    idt = dict(embeddings.dtypes)[id_col]
-    # bootstrap guard: an empty corpus has nothing to cluster and would
-    # crash the k-means init — the correct output is simply empty
-    if embeddings.isEmpty():
-        return embeddings.sparkSession.createDataFrame(
-            [], f"vec_id {idt}, component {idt}, keep boolean"
-        )
+    idt = dict(embeddings.dtypes)["vec_id"]
     nn = knn_join(
-        embeddings,
-        k=k,
-        n_cells=n_cells,
-        n_probe=n_probe,
-        iters=iters,
-        id_col=id_col,
+        embeddings, k=k, n_cells=n_cells, n_probe=n_probe, iters=iters
     )
     edges = (
         nn.filter(F.col("cos") >= threshold)
@@ -1337,7 +1326,7 @@ def semantic_dedup(
     rep = comp.groupBy("__c").agg(F.min("__n").alias("__rep"))
     cmap = comp.join(rep, "__c").select("__n", "__rep")
     return (
-        embeddings.select(F.col(id_col).alias("vec_id"))
+        embeddings.select("vec_id")
         .join(cmap, F.col("vec_id") == cmap["__n"], "left")
         .select(
             "vec_id",
@@ -1355,7 +1344,6 @@ def semantic_dedup_incremental(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Incremental SemDeDup — the production cadence where embedding
     batches arrive against a standing corpus (the semantic analog of
@@ -1389,22 +1377,17 @@ def semantic_dedup_incremental(
     formulation). Exact mode is blocked brute force — O(batch²) within
     the batch — so reserve it for oracle parity or small batches. On the
     index path ``n_probe`` is the number of stored cells each batch
-    vector probes (None: every cell) — the 100 TB cadence."""
+    vector probes (None: every cell) — the 100 TB cadence.
+
+    Empty inputs need no check of their own: an empty batch gives no
+    rows, and an empty standing corpus (the FIRST batch of the cadence)
+    has no k-means cells, so no batch vector is near_old and the
+    within-batch dedup alone decides."""
     from pdftableextractor_spark.operators.similarity import (
         ivf_topk_indexed_batch,
         knn_join_between,
     )
 
-    idt = dict(new_embeddings.dtypes)[id_col]
-    # bootstrap guards: an empty batch returns empty; an empty standing
-    # corpus (the FIRST batch of the cadence) means nothing can be "near
-    # old" — the within-batch dedup alone decides, with near_old=false
-    if new_embeddings.isEmpty():
-        return new_embeddings.sparkSession.createDataFrame(
-            [],
-            f"vec_id {idt}, component {idt}, near_old boolean, "
-            "keep boolean",
-        )
     sd = semantic_dedup(
         new_embeddings,
         threshold,
@@ -1412,21 +1395,11 @@ def semantic_dedup_incremental(
         n_cells=n_cells,
         n_probe=n_probe,
         iters=iters,
-        id_col=id_col,
     )
-    if not isinstance(old, str) and old.isEmpty():
-        return sd.select(
-            "vec_id",
-            "component",
-            F.lit(False).alias("near_old"),
-            "keep",
-        )
     if isinstance(old, str):
         nn_old = ivf_topk_indexed_batch(
             new_embeddings.sparkSession,
-            new_embeddings.select(
-                F.col(id_col).alias("qid"), F.col("embedding")
-            ),
+            new_embeddings.select(F.col("vec_id").alias("qid"), "embedding"),
             old,
             k=1,
             nprobe=n_probe,
@@ -1440,7 +1413,6 @@ def semantic_dedup_incremental(
             n_cells=n_cells,
             n_probe=n_probe,
             iters=iters,
-            id_col=id_col,
             exclude_self=True,
         )
     flagged = (

@@ -1,25 +1,41 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata.
 
-PNG and baseline-JPEG images decode to GENUINE pixels with pure-stdlib
-codecs (``decode_png``: zlib inflate + scanline unfilter; ``decode_jpeg``:
-Huffman entropy decode + batched matrix IDCT — no PIL needed), RIFF/WAVE PCM audio
-decodes to GENUINE samples (``decode_wav``: the stdlib ``wave`` module —
-no soundfile needed), and uncompressed-DIB RIFF/AVI video decodes to
-GENUINE frames (``decode_avi``: a RIFF chunk walk, the WAV container
-machinery generalized). Compressed video codecs and other formats remain
-STUBBED (deterministic fake features behind ``decode_stub``; a real
-deployment swaps the ``NotImplementedError``-guarded branches of
-``real_decode`` for ffmpeg). Everything Spark-side is real and
-tested either way: the binary schema, Arrow batch shape through
-``mapInPandas``, partition-size control for fat binary rows, and the
-metadata join-back.
+Decoders (pure stdlib + numpy, each checks its own signature and bounds its
+own allocation): ``decode_png`` (zlib inflate + scanline unfilter),
+``decode_jpeg`` (baseline Huffman decode + batched matrix IDCT),
+``decode_wav`` (the ``wave`` module) and ``decode_avi`` (uncompressed-DIB
+RIFF chunk walk). Compressed codecs and other formats stay STUBBED:
+``decode_stub`` gives deterministic fake features, and a real deployment
+swaps the ``NotImplementedError`` branch of ``real_decode`` for ffmpeg.
+
+The Spark-facing operators stand on two pieces:
+
+- ``real_decode(payload, kind)`` is the one container dispatch: which
+  decoder reads a payload is decided there and nowhere else.
+- ``_per_payload`` is the one Arrow loop (``mapInPandas``): it reads
+  (asset_id, payload, ...) rows, maps a NULL payload to ``b""``, calls a
+  row function per asset and builds the batch from the declared schema.
+
+Row functions over those two pieces:
+
+- ``extract_features``: decode-or-stub features per asset;
+- ``image_phashes``, ``audio_fingerprints``, ``video_frame_hashes``: the
+  perceptual signature scans, with one degrade rule (``_signatures``: a
+  decode or hash failure falls back to ``_pseudo_hash`` with real=false);
+  ``image_near_dups``/``audio_near_dups`` share one Hamming-pair body and
+  ``video_near_dups`` runs frame-hash containment;
+- ``sample_frames_decoded``: the nearest real frame per sampled timestamp;
+- ``cdc_chunk_hashes``: content-defined chunk hashes (no decode), behind
+  ``binary_near_dups``.
 
 Contract:
   assets(asset_id string, kind string, payload binary,
          meta struct<mime string, width int, height int, duration_ms int>)
-  extract_features(assets) → (asset_id, kind, n_bytes, sha, feat array<float>)
+  extract_features(assets) -> (asset_id, kind, n_bytes, sha,
+                               feat array<float>)
 """
+
 
 from __future__ import annotations
 
@@ -90,92 +106,6 @@ def resize_assets(assets: DataFrame, width: int, height: int) -> DataFrame:
             F.lit(height).cast("int").alias("height"),
             F.col("meta.duration_ms").alias("duration_ms"),
         ).alias("meta"),
-    )
-
-
-FRAME_SAMPLE_SCHEMA = (
-    "asset_id string, frame_idx int, ts_ms int, width int, height int, "
-    "decoded boolean, frame binary"
-)
-
-
-def _frame_sample_kernel(every_ms: int):
-    """mapInPandas kernel behind sample_frames_decoded: per video payload,
-    decode the AVI once, then emit the temporally-nearest REAL frame (raw
-    RGB bytes) for each sampled timestamp; payloads decode_avi cannot
-    handle (compressed codec, non-AVI container, hostile header) degrade
-    to the deterministic fake frame sha256(payload || str(ts)) with
-    decoded=false."""
-
-    def k(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c: [] for c in (
-                "asset_id", "frame_idx", "ts_ms", "width", "height",
-                "decoded", "frame",
-            )}
-            for aid, payload, dur in zip(
-                pdf["asset_id"].values,
-                pdf["payload"].values,
-                pdf["duration_ms"].values,
-            ):
-                # a NULL payload must not kill the task — treat it as
-                # undecodable with an empty-bytes fallback basis
-                pb = bytes(payload) if payload is not None else b""
-                frames = None
-                try:
-                    frames, fps = decode_avi(pb)
-                    if frames.shape[0] == 0 or not fps:
-                        frames = None
-                except Exception:
-                    frames = None
-                for i, ts in enumerate(range(0, int(dur) + 1, every_ms)):
-                    out["asset_id"].append(aid)
-                    out["frame_idx"].append(i)
-                    out["ts_ms"].append(ts)
-                    if frames is not None:
-                        fi = min(
-                            int(ts / 1000.0 * fps), frames.shape[0] - 1
-                        )
-                        out["width"].append(frames.shape[2])
-                        out["height"].append(frames.shape[1])
-                        out["decoded"].append(True)
-                        out["frame"].append(frames[fi].tobytes())
-                    else:
-                        out["width"].append(0)
-                        out["height"].append(0)
-                        out["decoded"].append(False)
-                        out["frame"].append(
-                            hashlib.sha256(
-                                pb + str(ts).encode()
-                            ).digest()
-                        )
-            yield pd.DataFrame(out)
-
-    return k
-
-
-def sample_frames_decoded(
-    assets: DataFrame, every_ms: int = 5000
-) -> DataFrame:
-    """REAL frame sampling: decode each uncompressed-AVI video payload
-    once per task and emit the nearest genuine RGB frame at every sampled
-    timestamp (0, every_ms, … ≤ duration_ms; a NULL duration samples
-    ts=0 only); undecodable payloads keep the deterministic sha fallback
-    (decoded=false) so one bad row never kills the job. Output rows carry
-    raw RGB24 bytes + (width, height) — downstream featurizers reshape
-    with np.frombuffer(...).reshape(h, w, 3). The decode happens scan-side
-    inside the Arrow kernel (one decode per video regardless of how many
-    timestamps it yields), and the per-row fan-out stays inside the
-    partition."""
-    v = assets.filter(F.col("kind") == "video").select(
-        "asset_id",
-        "payload",
-        F.coalesce(F.col("meta.duration_ms"), F.lit(0)).alias(
-            "duration_ms"
-        ),
-    )
-    return v.mapInPandas(
-        _frame_sample_kernel(every_ms), schema=FRAME_SAMPLE_SCHEMA
     )
 
 
@@ -653,7 +583,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     ).astype(np.uint8)
 
 
-WAV_SIG = b"RIFF"
+RIFF_SIG = b"RIFF"  # the WAV and AVI container
 # decode cap: 64 MiB of raw PCM (~6 min of 16-bit stereo at 44.1 kHz)
 WAV_BYTES_MAX = 1 << 26
 
@@ -668,7 +598,7 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     import io
     import wave
 
-    if payload[:4] != WAV_SIG or payload[8:12] != b"WAVE":
+    if payload[:4] != RIFF_SIG or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     with wave.open(io.BytesIO(payload)) as w:
         nch, sw, fr, nf = (
@@ -708,7 +638,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return sig.reshape(-1, nch), fr
 
 
-AVI_SIG = b"RIFF"
 # decode cap: 64 MiB of decoded RGB frames (~90 frames of 480p)
 AVI_BYTES_MAX = 1 << 26
 
@@ -731,7 +660,7 @@ def decode_avi(payload: bytes) -> tuple[np.ndarray, float]:
     count or dimension can never allocate past the cap."""
     import struct
 
-    if payload[:4] != AVI_SIG or payload[8:12] != b"AVI ":
+    if payload[:4] != RIFF_SIG or payload[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI payload")
 
     def chunks(buf, pos, end):
@@ -899,18 +828,16 @@ def real_decode(payload: bytes, kind: str):
     (frames uint8 (n, h, w, 3), fps float) tuple — callers dispatch on
     the kind they passed. Compressed video codecs (and other
     image/audio formats) remain NotImplementedError-guarded — the
-    container has no ffmpeg; swap those branches in production."""
+    container has no ffmpeg; swap those branches in production. This is
+    the one container dispatch: no operator tests a signature itself."""
     if kind == "image" and payload[:8] == PNG_SIG:
         return decode_png(payload)
     if kind == "image" and payload[:3] == JPEG_SIG:
         return decode_jpeg(payload)
-    if kind == "audio" and payload[:4] == WAV_SIG:
+    riff = payload[:4] == RIFF_SIG
+    if kind == "audio" and riff:
         return decode_wav(payload)
-    if (
-        kind == "video"
-        and payload[:4] == AVI_SIG
-        and payload[8:12] == b"AVI "
-    ):
+    if kind == "video" and riff and payload[8:12] == b"AVI ":
         return decode_avi(payload)
     raise NotImplementedError(
         "media codecs unavailable in this environment; use decode_stub"
@@ -949,29 +876,43 @@ def _decode_one(payload: bytes, kind: str) -> np.ndarray:
         return decode_stub(payload, kind)
 
 
-def _features_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        feats = [
-            _decode_one(p, k)
-            for p, k in zip(pdf["payload"].values, pdf["kind"].values)
-        ]
-        yield pd.DataFrame(
-            {
-                "asset_id": pdf["asset_id"].astype("string"),
-                "kind": pdf["kind"].astype("string"),
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "sha": [hashlib.sha256(p).hexdigest() for p in pdf["payload"]],
-                "feat": [f.tolist() for f in feats],
-            }
-        )
+def _per_payload(rows: DataFrame, row_fn, schema: str) -> DataFrame:
+    """The one Arrow loop of the media operators: ``rows`` are
+    (asset_id, payload, ...) rows; ``row_fn(asset_id, payload, ...)``
+    returns that asset's output tuples in ``schema`` order. A NULL
+    payload reaches ``row_fn`` as ``b""`` — the one NULL rule, so a
+    NULL row degrades like any other undecodable payload instead of
+    killing the task."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for aid, payload, *rest in zip(*(pdf[c].values for c in pdf)):
+                pb = b"" if payload is None else bytes(payload)
+                out.extend(row_fn(aid, pb, *rest))
+            cols = list(zip(*out)) or [()] * len(names)
+            yield pd.DataFrame({n: list(c) for n, c in zip(names, cols)})
+
+    return rows.mapInPandas(kern, schema=schema)
+
+
+def _features_row(aid, pb: bytes, kind: str) -> list[tuple]:
+    feat = _decode_one(pb, kind).tolist()
+    return [(aid, kind, len(pb), hashlib.sha256(pb).hexdigest(), feat)]
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads. Repartitioning
-    by asset_id upstream keeps batches balanced when payload sizes are
-    heavy-tailed (same skew story as the pdf layout kernel)."""
-    return assets.select("asset_id", "kind", "payload").mapInPandas(
-        _features_kernel, schema=FEATURES_SCHEMA
+    """Arrow-batched feature extraction over binary payloads: one
+    (asset_id, kind, n_bytes, sha, feat) row per asset; a NULL payload
+    reads as empty (n_bytes 0, the sha256 of b"", stub features).
+    Repartitioning by asset_id upstream keeps batches balanced when
+    payload sizes are heavy-tailed (same skew story as the pdf layout
+    kernel)."""
+    return _per_payload(
+        assets.select("asset_id", "payload", "kind"),
+        _features_row,
+        FEATURES_SCHEMA,
     )
 
 
@@ -981,62 +922,41 @@ PHASH_BITS = 60  # 6x11 grid -> 6 rows x 10 horizontal comparisons;
 
 
 def _pseudo_hash(pb: bytes) -> int:
-    """The sha256-derived 60-bit pseudo-hash for undecodable payloads —
-    ONE definition shared by every signature kernel so the degrade
-    semantics can never fork between modalities."""
+    """The sha256-derived 60-bit pseudo-hash for undecodable payloads."""
     return (
         int.from_bytes(hashlib.sha256(pb).digest()[:8], "big")
         >> (64 - PHASH_BITS)
     )
 
 
-def _sig_kernel(routes, out_col: str):
-    """mapInPandas kernel FACTORY shared by the image and audio signature
-    scans. ``routes`` is a sequence of (sig_prefix, decode_hash) pairs
-    tried in order — a payload matching a prefix hashes through that
-    route's ``decode_hash`` (real=true). Anything else — no matching
-    container signature, hostile header, NULL, or a ``decode_hash``
-    that raises or returns None (an unsupported shape, e.g. progressive
-    JPEG, or a decodable payload whose signature is DEGENERATE, e.g.
-    flat-energy audio) — degrades to a sha256-derived pseudo-hash
-    (real=false): byte-identical payloads still pair as exact dups, but
-    no perceptual similarity is ever claimed for them. One factory
-    means the degrade semantics can never fork between modalities, and
-    multi-route hashing means DIFFERENT containers of the same pixels
-    (a PNG and a baseline JPEG of one photo) land in the SAME hash
-    space and pair perceptually."""
+def _signatures(assets: DataFrame, kind: str, col: str, hashes) -> DataFrame:
+    """(asset_id, ``col``, real) rows of the ``kind`` assets — the one
+    degrade rule of the perceptual signature scans: ``hashes`` maps a
+    payload's ``real_decode`` to its set of hashes (real=true, one row
+    each). A payload that does not decode (no codec, hostile header,
+    NULL), a hash that raises, or an EMPTY set (a decodable payload whose
+    signature is degenerate, e.g. flat-energy audio or a zero-frame
+    video) degrades to one ``_pseudo_hash`` row (real=false):
+    byte-identical payloads still pair as exact dups, but no perceptual
+    similarity is ever claimed for them. Because the dispatch is
+    ``real_decode``, DIFFERENT containers of the same pixels (a PNG and
+    a baseline JPEG of one photo) land in the SAME hash space and pair
+    perceptually."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, real = [], [], []
-            for aid, payload in zip(
-                pdf["asset_id"].values, pdf["payload"].values
-            ):
-                pb = bytes(payload) if payload is not None else b""
-                ids.append(aid)
-                h = None
-                for sig_prefix, decode_hash in routes:
-                    if pb[: len(sig_prefix)] == sig_prefix:
-                        try:
-                            h = decode_hash(pb)
-                        except Exception:
-                            h = None
-                        break  # prefixes are disjoint: one route only
-                if h is not None:
-                    hashes.append(h)
-                    real.append(True)
-                else:
-                    hashes.append(_pseudo_hash(pb))
-                    real.append(False)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    out_col: pd.Series(hashes, dtype="int64"),
-                    "real": real,
-                }
-            )
+    def row(aid, pb: bytes) -> list[tuple]:
+        try:
+            hs = sorted(hashes(real_decode(pb, kind)))
+        except Exception:
+            hs = []
+        if not hs:
+            return [(aid, _pseudo_hash(pb), False)]
+        return [(aid, h, True) for h in hs]
 
-    return kern
+    return _per_payload(
+        assets.filter(F.col("kind") == kind).select("asset_id", "payload"),
+        row,
+        f"asset_id string, {col} long, real boolean",
+    )
 
 
 def image_dhash(px: np.ndarray) -> int:
@@ -1074,54 +994,10 @@ def image_dhash(px: np.ndarray) -> int:
     return h
 
 
-_phash_kernel = _sig_kernel(
-    (
-        (PNG_SIG, lambda pb: image_dhash(decode_png(pb))),
-        (JPEG_SIG, lambda pb: image_dhash(decode_jpeg(pb))),
-    ),
-    "phash",
-)
-
-
 def image_phashes(assets: DataFrame) -> DataFrame:
     """(asset_id, phash, real) for every image asset — the signature scan
     of image-content dedup; Arrow-batched, one decode per payload."""
-    return assets.filter(F.col("kind") == "image").select(
-        "asset_id", "payload"
-    ).mapInPandas(
-        _phash_kernel, schema="asset_id string, phash long, real boolean"
-    )
-
-
-def image_near_dups(
-    assets: DataFrame,
-    max_hamming: int = 4,
-    n_bands: int = 5,
-) -> DataFrame:
-    """Perceptual IMAGE near-duplicate pairs — the content-dedup class
-    the text suite can't see (the same photo re-encoded, resized a
-    little, or slightly edited): (asset_a, asset_b, hamming) with
-    asset_a < asset_b and Hamming(phash) <= ``max_hamming``. The decode
-    happens once per payload in the Arrow kernel; candidate generation
-    and verify are the shared multiband pigeonhole join
-    (``dedup.hamming_near_dup_pairs``); pseudo-hashed undecodables only
-    pair exactly and never against real hashes (the ``real`` rule
-    documented there)."""
-    from pdftableextractor_spark.operators.dedup import (
-        hamming_near_dup_pairs,
-    )
-
-    return hamming_near_dup_pairs(
-        image_phashes(assets),
-        "phash",
-        PHASH_BITS,
-        max_hamming,
-        n_bands,
-        id_col="asset_id",
-        a_col="asset_a",
-        b_col="asset_b",
-        real_col="real",
-    )
+    return _signatures(assets, "image", "phash", lambda px: {image_dhash(px)})
 
 
 def audio_fingerprint(sig: np.ndarray, framerate: int) -> int | None:
@@ -1161,107 +1037,45 @@ def audio_fingerprint(sig: np.ndarray, framerate: int) -> int | None:
     return h
 
 
-_afp_kernel = _sig_kernel(
-    ((WAV_SIG, lambda pb: audio_fingerprint(*decode_wav(pb))),), "afp"
-)
-
-
 def audio_fingerprints(assets: DataFrame) -> DataFrame:
     """(asset_id, afp, real) for every audio asset — the signature scan of
     audio-content dedup; Arrow-batched, one decode per payload."""
-    return assets.filter(F.col("kind") == "audio").select(
-        "asset_id", "payload"
-    ).mapInPandas(
-        _afp_kernel, schema="asset_id string, afp long, real boolean"
+    return _signatures(
+        assets, "audio", "afp", lambda d: {audio_fingerprint(*d)} - {None}
     )
 
 
-def audio_near_dups(
-    assets: DataFrame,
-    max_hamming: int = 4,
-    n_bands: int = 5,
-) -> DataFrame:
-    """Perceptual AUDIO near-duplicate pairs: same shape as
-    ``image_near_dups`` over the energy-profile fingerprint — the same
-    recording re-encoded at a different volume or with a short edit
-    pairs up; text/byte dedup can't see either. Pseudo-hashed
-    undecodables pair exactly only (the shared ``real`` rule)."""
+def _hamming_pairs(sigs: DataFrame, col: str) -> DataFrame:
+    """(asset_a, asset_b, hamming) pairs of the perceptual signatures
+    ``sigs`` within Hamming distance 4: the shared multiband pigeonhole
+    join (``dedup.hamming_near_dup_pairs``, 5 bands of 12 bits, so recall
+    is exact at that distance); pseudo-hashed undecodables only pair
+    exactly and never against real hashes (the ``real`` rule documented
+    there)."""
     from pdftableextractor_spark.operators.dedup import (
         hamming_near_dup_pairs,
     )
 
     return hamming_near_dup_pairs(
-        audio_fingerprints(assets),
-        "afp",
-        PHASH_BITS,
-        max_hamming,
-        n_bands,
-        id_col="asset_id",
-        a_col="asset_a",
-        b_col="asset_b",
-        real_col="real",
+        sigs, col, PHASH_BITS, 4, 5,
+        id_col="asset_id", a_col="asset_a", b_col="asset_b", real_col="real",
     )
 
 
-def _video_frame_hash_kernel(
-    hash_every_ms: int | None = None, max_frames: int | None = None
-):
-    """mapInPandas kernel FACTORY behind video_near_dups: one row per
-    DISTINCT per-frame dhash of each decodable video (decode once);
-    undecodable payloads emit a single sha pseudo-hash row (real=false)
-    — byte-identical videos still pair exactly, nothing perceptual is
-    claimed.
+def image_near_dups(assets: DataFrame) -> DataFrame:
+    """Perceptual IMAGE near-duplicate pairs — the content-dedup class
+    the text suite can't see (the same photo re-encoded, resized a
+    little, or slightly edited): (asset_a, asset_b, hamming) with
+    asset_a < asset_b and Hamming(phash) <= 4."""
+    return _hamming_pairs(image_phashes(assets), "phash")
 
-    ``hash_every_ms`` hashes only time-sampled frames (stride
-    round(fps·ms/1000), matching _frame_sample_kernel's timestamp math)
-    and ``max_frames`` caps the hashed count per video with evenly
-    spaced indices — both bound the decode+hash kernel cost to O(1) per
-    video instead of O(frames). Default (None/None) hashes every frame."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, real = [], [], []
-            for aid, payload in zip(
-                pdf["asset_id"].values, pdf["payload"].values
-            ):
-                pb = bytes(payload) if payload is not None else b""
-                if pb[:4] == AVI_SIG and pb[8:12] == b"AVI ":
-                    try:
-                        frames, fps = decode_avi(pb)
-                        n = frames.shape[0]
-                        if n:
-                            idx = np.arange(n)
-                            if hash_every_ms is not None and fps:
-                                step = max(
-                                    1,
-                                    int(round(fps * hash_every_ms / 1000.0)),
-                                )
-                                idx = idx[::step]
-                            if max_frames is not None and len(idx) > max_frames:
-                                idx = idx[
-                                    np.linspace(
-                                        0, len(idx) - 1, max_frames
-                                    ).astype(int)
-                                ]
-                            seen = {image_dhash(frames[i]) for i in idx}
-                            ids.extend([aid] * len(seen))
-                            hashes.extend(sorted(seen))
-                            real.extend([True] * len(seen))
-                            continue
-                    except Exception:
-                        pass
-                ids.append(aid)
-                hashes.append(_pseudo_hash(pb))
-                real.append(False)
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "fhash": pd.Series(hashes, dtype="int64"),
-                    "real": real,
-                }
-            )
-
-    return kern
+def audio_near_dups(assets: DataFrame) -> DataFrame:
+    """Perceptual AUDIO near-duplicate pairs: same shape as
+    ``image_near_dups`` over the energy-profile fingerprint — the same
+    recording re-encoded at a different volume or with a short edit
+    pairs up; text/byte dedup can't see either."""
+    return _hamming_pairs(audio_fingerprints(assets), "afp")
 
 
 def video_frame_hashes(
@@ -1269,15 +1083,25 @@ def video_frame_hashes(
     hash_every_ms: int | None = None,
     max_frames: int | None = None,
 ) -> DataFrame:
-    """(asset_id, fhash, real) — one row per distinct per-frame dhash of
-    each video asset; the signature scan of video-content dedup. See
-    ``video_near_dups`` for the sampling knobs' recall trade."""
-    return assets.filter(F.col("kind") == "video").select(
-        "asset_id", "payload"
-    ).mapInPandas(
-        _video_frame_hash_kernel(hash_every_ms, max_frames),
-        schema="asset_id string, fhash long, real boolean",
-    )
+    """(asset_id, fhash, real) — one row per DISTINCT per-frame dhash of
+    each decodable video asset (decode once); the signature scan of
+    video-content dedup. ``hash_every_ms`` hashes only time-sampled
+    frames (stride round(fps·ms/1000), the ``sample_frames_decoded``
+    timestamp math) and ``max_frames`` caps the hashed count per video
+    with evenly spaced indices — both bound the decode+hash cost to O(1)
+    per video instead of O(frames). Default (None/None) hashes every
+    frame. See ``video_near_dups`` for the sampling recall trade."""
+
+    def hashes(decoded) -> set[int]:
+        frames, fps = decoded
+        idx = np.arange(frames.shape[0])
+        if hash_every_ms is not None and fps:
+            idx = idx[::max(1, int(round(fps * hash_every_ms / 1000.0)))]
+        if max_frames is not None and len(idx) > max_frames:
+            idx = idx[np.linspace(0, len(idx) - 1, max_frames).astype(int)]
+        return {image_dhash(frames[i]) for i in idx}
+
+    return _signatures(assets, "video", "fhash", hashes)
 
 
 # STOP-FRAME cap of video_near_dups: frame hashes held by more videos drop
@@ -1288,7 +1112,6 @@ def video_near_dups(
     assets: DataFrame,
     threshold: float = 0.8,
     hash_every_ms: int | None = None,
-    max_frames: int | None = None,
 ) -> DataFrame:
     """Perceptual VIDEO near-duplicate pairs by frame-hash CONTAINMENT:
     (asset_a, asset_b, shared, size_a, size_b, containment) where
@@ -1322,11 +1145,10 @@ def video_near_dups(
     rounding. Pseudo-hash rows never join real frame hashes. A threshold
     outside (0, 1] raises ValueError before any job starts.
 
-    SAMPLING KNOBS (``hash_every_ms``, ``max_frames``): real video runs
-    hours at 24-60 fps — hashing every frame makes the signature kernel
-    O(frames) per video while the containment math tolerates sampling.
-    With ``hash_every_ms`` only one frame per time bucket is hashed and
-    ``max_frames`` caps a video's signature outright. RECALL TRADE: a
+    SAMPLING (``hash_every_ms``): real video runs hours at 24-60 fps —
+    hashing every frame makes the signature kernel O(frames) per video
+    while the containment math tolerates sampling. With ``hash_every_ms``
+    only one frame per time bucket is hashed. RECALL TRADE: a
     re-encode still pairs at 1.0 (same frames, same fps → the same
     stride picks the same frames), but a CLIP whose cut point is not
     stride-aligned samples a phase-shifted frame set — containment can
@@ -1337,11 +1159,59 @@ def video_near_dups(
     kernel cost."""
     from pdftableextractor_spark.operators.dedup import _key_set_containment
 
-    raw = video_frame_hashes(
-        assets, hash_every_ms=hash_every_ms, max_frames=max_frames
-    )
+    raw = video_frame_hashes(assets, hash_every_ms=hash_every_ms)
     return _key_set_containment(
         raw, "fhash", threshold, MAX_FRAME_DF, match=["real"]
+    )
+
+
+FRAME_SAMPLE_SCHEMA = (
+    "asset_id string, frame_idx int, ts_ms int, width int, height int, "
+    "decoded boolean, frame binary"
+)
+
+
+def sample_frames_decoded(
+    assets: DataFrame, every_ms: int = 5000
+) -> DataFrame:
+    """REAL frame sampling: decode each uncompressed-AVI video payload
+    once and emit the nearest genuine RGB frame at every sampled
+    timestamp (0, every_ms, … ≤ duration_ms; a NULL duration samples
+    ts=0 only). Payloads ``real_decode`` cannot handle (compressed codec,
+    non-AVI container, hostile header, NULL) or that hold no frames
+    degrade to the deterministic fake frame sha256(payload || str(ts))
+    with decoded=false, so one bad row never kills the job. Output rows
+    carry raw RGB24 bytes + (width, height) — downstream featurizers
+    reshape with np.frombuffer(...).reshape(h, w, 3). The decode happens
+    scan-side inside the Arrow loop (one decode per video regardless of
+    how many timestamps it yields), and the per-row fan-out stays inside
+    the partition."""
+
+    def row(aid, pb: bytes, dur) -> list[tuple]:
+        try:
+            frames, fps = real_decode(pb, "video")
+            ok = frames.shape[0] > 0 and bool(fps)
+        except Exception:
+            ok = False
+        out = []
+        for i, ts in enumerate(range(0, int(dur) + 1, every_ms)):
+            if ok:
+                f = frames[min(int(ts / 1000.0 * fps), frames.shape[0] - 1)]
+                out.append((aid, i, ts, f.shape[1], f.shape[0], True,
+                            f.tobytes()))
+            else:
+                fake = hashlib.sha256(pb + str(ts).encode()).digest()
+                out.append((aid, i, ts, 0, 0, False, fake))
+        return out
+
+    return _per_payload(
+        assets.filter(F.col("kind") == "video").select(
+            "asset_id",
+            "payload",
+            F.coalesce(F.col("meta.duration_ms"), F.lit(0)).alias("dur"),
+        ),
+        row,
+        FRAME_SAMPLE_SCHEMA,
     )
 
 
@@ -1415,38 +1285,6 @@ def cdc_boundaries(
     return ends
 
 
-def _cdc_kernel(avg_bits: int, min_size: int | None, max_size: int | None):
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for aid, payload in zip(
-                pdf["asset_id"].values, pdf["payload"].values
-            ):
-                # NULL = empty, matching the perceptual suites' degrade
-                # rule; an empty payload emits the single empty-chunk
-                # signature so byte-identical empties still pair exactly
-                pb = b"" if payload is None else bytes(payload)
-                ends = cdc_boundaries(
-                    pb, avg_bits=avg_bits, min_size=min_size,
-                    max_size=max_size,
-                ) or [0]
-                start = 0
-                for end in ends:
-                    ids.append(aid)
-                    hashes.append(
-                        hashlib.sha256(pb[start:end]).hexdigest()[:32]
-                    )
-                    start = end
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="string"),
-                    "chash": pd.Series(hashes, dtype="string"),
-                }
-            )
-
-    return kern
-
-
 def cdc_chunk_hashes(
     assets: DataFrame,
     avg_bits: int = 13,
@@ -1468,9 +1306,20 @@ def cdc_chunk_hashes(
     toy corpora) should pass a small ``avg_bits`` explicitly; at the
     old default of 6 the signature table is ~50% of the corpus, which
     only makes sense below a few KB per asset."""
-    return assets.select("asset_id", "payload").mapInPandas(
-        _cdc_kernel(avg_bits, min_size, max_size),
-        schema="asset_id string, chash string",
+
+    def row(aid, pb: bytes) -> list[tuple]:
+        ends = cdc_boundaries(
+            pb, avg_bits=avg_bits, min_size=min_size, max_size=max_size
+        ) or [0]
+        return [
+            (aid, hashlib.sha256(pb[a:b]).hexdigest()[:32])
+            for a, b in zip([0, *ends], ends)
+        ]
+
+    return _per_payload(
+        assets.select("asset_id", "payload"),
+        row,
+        "asset_id string, chash string",
     )
 
 

@@ -69,11 +69,7 @@ def _top_cells(cents: DataFrame, query_vec, nprobe: int) -> DataFrame:
 
 
 def _probed(
-    df: DataFrame,
-    cents: list,
-    n_probe: int | None,
-    *cols,
-    emb_col: str = "embedding",
+    df: DataFrame, cents: list, n_probe: int | None, *cols
 ) -> DataFrame:
     """``cols`` of ``df``, once per each of the row's ``n_probe``
     cosine-nearest ``cents`` (None: every cell), with the cell index as an
@@ -84,7 +80,7 @@ def _probed(
     n = len(cents) if n_probe is None else n_probe
     return df.select(
         *cols,
-        F.explode(nearest_centroids_udf(cents, n)(F.col(emb_col))).alias(
+        F.explode(nearest_centroids_udf(cents, n)(F.col("embedding"))).alias(
             "cell"
         ),
     )
@@ -185,8 +181,6 @@ def kmeans_centroids(
     embeddings: DataFrame,
     k: int = 16,
     iters: int = 3,
-    id_col: str = "vec_id",
-    seed: int = 9,
     fit_sample_per_cell: int | None = 256,
 ) -> list:
     """The Lloyd loop itself: returns the final k centroids as a Python
@@ -211,24 +205,27 @@ def kmeans_centroids(
     reproduces the full fit exactly (up to float summation order).
     Scale note: the md5-ordered limit is a per-partition top-N + one
     sample-sized reduce; for k ~ 10^6 cells prefilter with a hash
-    threshold on md5 before the sort instead.
+    threshold on md5 before the sort instead. An empty corpus has no
+    centroids: the init collect comes back empty and the result is [].
     EAGER: pins the fit sample (sampled fit only)."""
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
     md5_order = F.md5(
-        F.concat(F.lit(f"km:{seed}:"), F.col(id_col).cast("string"))
+        F.concat(F.lit("km:9:"), F.col("vec_id").cast("string"))
     )
-    ordered = embeddings.select(id_col, "embedding").orderBy(
-        md5_order, F.col(id_col)
+    ordered = embeddings.select("vec_id", "embedding").orderBy(
+        md5_order, F.col("vec_id")
     )
     if fit_sample_per_cell is not None:
         fit = ordered.limit(max(k, fit_sample_per_cell * k))
         fit = pin(fit, "k-means fit sample")
-        init = fit.orderBy(md5_order, F.col(id_col)).limit(k).collect()
+        init = fit.orderBy(md5_order, F.col("vec_id")).limit(k).collect()
     else:
         fit = embeddings
         init = ordered.limit(k).collect()
     cents = [[float(x) for x in r["embedding"]] for r in init]
+    if not cents:
+        return []
     for _ in range(iters):
         assigned = fit.withColumn(
             "cell", nearest_centroid_udf(cents)(F.col("embedding"))
@@ -299,9 +296,6 @@ def knn_join(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    seed: int = 9,
     fit_sample_per_cell: int | None = 256,
 ) -> DataFrame:
     """Distributed k-NN JOIN: every vector's top-``k`` cosine neighbors in
@@ -349,9 +343,6 @@ def knn_join(
         n_cells=n_cells,
         n_probe=n_probe,
         iters=iters,
-        id_col=id_col,
-        emb_col=emb_col,
-        seed=seed,
         exclude_self=True,
         fit_sample_per_cell=fit_sample_per_cell,
     )
@@ -364,9 +355,6 @@ def knn_join_between(
     n_cells: int = 16,
     n_probe: int | None = 2,
     iters: int = 3,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    seed: int = 9,
     exclude_self: bool = False,
     fit_sample_per_cell: int | None = 256,
 ) -> DataFrame:
@@ -377,32 +365,29 @@ def knn_join_between(
     the DATA side (the standing corpus defines the cell geometry; a
     small batch would fit degenerate cells); queries multi-probe into
     those cells. ``exclude_self`` masks qid == vec_id matches — the
-    re-sent-id rule when both frames share an id namespace.
+    re-sent-id rule when both frames share an id namespace. An empty
+    DATA side fits no cells, and the result is the empty
+    (qid, vec_id, cos, rnk) frame.
     EAGER: pins the fit sample (``kmeans_centroids``, sampled fit only)."""
     from pdftableextractor_spark.kernels.vectors import nearest_centroid_udf
 
-    # bootstrap guard: an empty data side cannot seed a k-means fit
-    # (the centroid kernels would crash on a zero-row init) — the
-    # correct answer is simply "no neighbors". Costs one take(1) job.
-    if data.isEmpty():
+    cents = kmeans_centroids(
+        data, k=n_cells, iters=iters, fit_sample_per_cell=fit_sample_per_cell
+    )
+    if not cents:
         return data.sparkSession.createDataFrame(
             [],
-            f"qid {dict(queries.dtypes)[id_col]}, "
-            f"vec_id {dict(data.dtypes)[id_col]}, cos double, rnk int",
+            f"qid {dict(queries.dtypes)['vec_id']}, "
+            f"vec_id {dict(data.dtypes)['vec_id']}, cos double, rnk int",
         )
-    cents = kmeans_centroids(
-        data, k=n_cells, iters=iters, id_col=id_col, seed=seed,
-        fit_sample_per_cell=fit_sample_per_cell,
-    )
     d = data.select(
-        nearest_centroid_udf(cents)(F.col(emb_col)).alias("cell"),
-        F.col(id_col).alias("vec_id"),
-        F.col(emb_col).alias("embedding"),
+        nearest_centroid_udf(cents)(F.col("embedding")).alias("cell"),
+        "vec_id",
+        "embedding",
     )
     qry = _probed(
         queries, cents, n_probe,
-        F.col(id_col).alias("qid"), F.col(emb_col).alias("qemb"),
-        emb_col=emb_col,
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qemb"),
     )
     return _cell_knn(qry, d, k, exclude_self)
 

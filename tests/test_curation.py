@@ -204,17 +204,27 @@ def test_png_decode_real_pixels(spark):
 
     # through the Arrow kernel: the feat column equals image_features(pixels)
     assets = spark.createDataFrame(
-        [("a1", "image", bytearray(png)), ("a2", "audio", bytearray(b"abc"))],
+        [
+            ("a1", "image", bytearray(png)),
+            ("a2", "audio", bytearray(b"abc")),
+            ("a3", "video", None),
+        ],
         "asset_id string, kind string, payload binary",
     )
-    feats = {
-        r["asset_id"]: r["feat"] for r in extract_features(assets).collect()
-    }
+    rows = {r["asset_id"]: r for r in extract_features(assets).collect()}
+    feats = {aid: r["feat"] for aid, r in rows.items()}
     exp = image_features(px)
     assert np.allclose(feats["a1"], exp, atol=1e-6)
+    import hashlib
+
     from pdftableextractor_spark.operators.multimodal import decode_stub
 
     assert np.allclose(feats["a2"], decode_stub(b"abc", "audio"), atol=1e-6)
+    # a NULL payload is one row read as b"", not a failed task
+    assert sorted(rows) == ["a1", "a2", "a3"]
+    assert rows["a3"]["n_bytes"] == 0
+    assert rows["a3"]["sha"] == hashlib.sha256(b"").hexdigest()
+    assert np.allclose(feats["a3"], decode_stub(b"", "video"), atol=1e-6)
 
 
 def test_lsh_topk_contains_query_and_subsets_bruteforce(spark):

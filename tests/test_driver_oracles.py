@@ -30,7 +30,6 @@ QUERIES = entrymod.queries()
 # job named "parquet at ..." per table). Under AQE an action runs one job
 # per shuffle stage it waits on, so one action can be several entries.
 _QUERY_VEC = "_qvec: query-vector collect"
-_EMPTY = "empty-input check (isEmpty)"
 _KM_INIT = "kmeans_centroids: init collect"
 _KM_ITER = "kmeans_centroids: centroid_mean collect"
 _CC = ["connected_components: edge count"] * 2 + [
@@ -44,11 +43,10 @@ CONSTRUCTION_JOBS = {
     "q39_kmeans_cells": [_KM_INIT, *[_KM_ITER] * 6],
     "q48_embed_dups_unlabeled": [_KM_INIT, *[_KM_ITER] * 6],
     "q52_dup_clusters": _CC,
-    "q67_knn_join": [_EMPTY, _KM_INIT, *[_KM_ITER] * 4],
-    "q69_semantic_dedup": [_EMPTY] * 2 + [_KM_INIT, *[_KM_ITER] * 4] + _CC,
+    "q67_knn_join": [_KM_INIT, *[_KM_ITER] * 4],
+    "q69_semantic_dedup": [_KM_INIT, *[_KM_ITER] * 4] + _CC,
     "q70_semantic_incremental": (
-        [_EMPTY] * 3 + [_KM_INIT, *[_KM_ITER] * 4] + _CC
-        + [_EMPTY] * 2 + [_KM_INIT, *[_KM_ITER] * 4]
+        [_KM_INIT, *[_KM_ITER] * 4] + _CC + [_KM_INIT, *[_KM_ITER] * 4]
     ),
     "q75_sq8_topk": [_QUERY_VEC, "sq8_scale: partial-max collect"],
 }

@@ -313,13 +313,17 @@ def _jobs_started(spark, build):
 def test_containment_threshold_outside_unit_interval_raises_before_any_job(
     spark,
 ):
-    """containment_pairs, video_near_dups and binary_near_dups reject a
-    threshold of 0 (containment_pairs' prefix filter would admit every
-    shingle) or above 1 (no pair could pass) with ValueError, before the
-    pin or any other Spark job."""
+    """containment_pairs, fuzzy_decontaminate, video_near_dups and
+    binary_near_dups reject a threshold of 0 (containment_pairs' prefix
+    filter would admit every shingle, fuzzy_decontaminate would drop every
+    document sharing one shingle with the benchmark) or above 1 (no pair
+    could pass) with ValueError, before the pin or any other Spark job."""
     import pytest
 
-    from pdftableextractor_spark.operators.dedup import containment_pairs
+    from pdftableextractor_spark.operators.dedup import (
+        containment_pairs,
+        fuzzy_decontaminate,
+    )
     from pdftableextractor_spark.operators.multimodal import (
         binary_near_dups,
         video_near_dups,
@@ -333,18 +337,22 @@ def test_containment_threshold_outside_unit_interval_raises_before_any_job(
         [("v", "video", bytearray(b"payload"))],
         "asset_id string, kind string, payload binary",
     )
-    for op, df in (
-        (containment_pairs, docs),
-        (video_near_dups, assets),
-        (binary_near_dups, assets),
-    ):
+    ops = {
+        "containment_pairs": lambda t: containment_pairs(docs, threshold=t),
+        "fuzzy_decontaminate": lambda t: fuzzy_decontaminate(
+            docs, docs, threshold=t
+        ),
+        "video_near_dups": lambda t: video_near_dups(assets, threshold=t),
+        "binary_near_dups": lambda t: binary_near_dups(assets, threshold=t),
+    }
+    for name, op in ops.items():
         for threshold in (0, 1.5):
             def build():
                 with pytest.raises(ValueError, match="threshold"):
-                    op(df, threshold=threshold)
+                    op(threshold)
 
             _, jobs = _jobs_started(spark, build)
-            assert jobs == 0, (op.__name__, threshold, jobs)
+            assert jobs == 0, (name, threshold, jobs)
 
 
 def test_pin_materializes_once_outside_the_cache_manager(spark, monkeypatch):

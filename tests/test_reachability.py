@@ -21,8 +21,10 @@ value other than its default expression. Three refinements:
 - a parameter passed straight through to another library call (``f(x=x)``
   inside a library function whose own defaulted ``x`` is never reassigned)
   is set only when the enclosing parameter is set;
-- a ``*``/``**`` argument, or a function referenced as a value (a loop
-  over operators, ``inspect.signature(fn)``), sets all of its parameters;
+- a ``*``/``**`` argument, or a function referenced as a value outside
+  ``tests/`` (a loop over operators in a job), sets all of its
+  parameters; under ``tests/`` a value reference sets none (a test that
+  reads ``inspect.signature(fn)`` sets no value);
 - in the frozen files (``bench.py`` and ``perfbench/``) passing a parameter
   at any value sets it, because removing it would break that call.
 
@@ -46,7 +48,8 @@ ENTRIES = [
     *sorted((ROOT / "perfbench").glob("*.py")),
 ]
 FROZEN = {ROOT / "bench.py", *(ROOT / "perfbench").glob("*.py")}
-CALLERS = [*ENTRIES, *sorted(LIB.rglob("*.py")), *sorted((ROOT / "tests").glob("*.py"))]
+TESTS = ROOT / "tests"
+CALLERS = [*ENTRIES, *sorted(LIB.rglob("*.py")), *sorted(TESTS.glob("*.py"))]
 KEPT = {"operators/export.py", "plans/resume.py"}
 _IDENT = re.compile(r"[A-Za-z_]\w*")
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
@@ -167,6 +170,8 @@ def _unset_params() -> list[str]:
                             through.setdefault((lib_rel, owner[0], v.id), set()).add(key)
                         else:
                             is_set.add(key)
+        if f.is_relative_to(TESTS):
+            continue
         imported = {
             a.asname or a.name.split(".")[0]
             for n in ast.walk(tree)

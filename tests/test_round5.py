@@ -605,7 +605,7 @@ def test_image_near_dups_perceptual(spark):
 
     pairs = {
         (r["asset_a"], r["asset_b"]): r["hamming"]
-        for r in image_near_dups(assets, max_hamming=4).collect()
+        for r in image_near_dups(assets).collect()
     }
     assert pairs[("a", "b")] == 0
     assert ("j1", "j2") in pairs and pairs[("j1", "j2")] == 0
@@ -676,7 +676,7 @@ def test_audio_near_dups_volume_invariant(spark):
     assert "x" not in sigs
     pairs = {
         (r["asset_a"], r["asset_b"]): r["hamming"]
-        for r in audio_near_dups(assets, max_hamming=4).collect()
+        for r in audio_near_dups(assets).collect()
     }
     assert pairs[("l", "q")] == 0
     assert ("j1", "j2") in pairs and pairs[("j1", "j2")] == 0
@@ -738,7 +738,7 @@ def test_audio_flat_energy_degrades_to_pseudo_hash(spark):
     assert all(not v[1] for v in sigs.values()), sigs  # all degraded
     pairs = {
         (r["asset_a"], r["asset_b"])
-        for r in audio_near_dups(assets, max_hamming=4).collect()
+        for r in audio_near_dups(assets).collect()
     }
     assert pairs == {("t1", "t1b")}, pairs  # exact-only pairing survives
 

@@ -537,7 +537,7 @@ def test_jpeg_phash_cross_format_perceptual_pairing(spark):
 
     pairs = {
         (r["asset_a"], r["asset_b"])
-        for r in image_near_dups(assets, max_hamming=4).collect()
+        for r in image_near_dups(assets).collect()
     }
     same = {"png_a", "jpg_a90", "jpg_a75_420"}
     expected = {
