@@ -26,8 +26,9 @@ Top-level layout:
                    dedup suite (exact, MinHash-LSH, SimHash, n-gram Jaccard,
                    embedding near-dup), similarity search, text analysis,
                    multimodal plumbing.
-- ``plans``      — scale machinery: salted repartitioning, resumable
-                   per-partition lineage/metrics.
+- ``plans``      — scale machinery: the one pin primitive (``pin``),
+                   salted repartitioning, resumable per-partition
+                   lineage/metrics.
 - ``sources``    — the parquet/Iceberg format seam (``read_path`` /
                    ``write_table``).
 - ``streaming``  — Structured Streaming wrapper of the extraction pipeline
@@ -35,6 +36,38 @@ Top-level layout:
 - ``oracle``     — an independently-written pure-Python/pandas reference
                    implementation used only by tests to freeze golden
                    fixtures (never imported by the engine).
+
+Importing the package on CPython < 3.13 gives ``zipimport`` 3.13's lazy
+directory reads (gh-103200): a PySpark worker calls
+``importlib.invalidate_caches()`` before every task, which otherwise makes
+each of its ~16 zipimporters re-read all of ``pyspark.zip``. Every library
+UDF unpickles through this package, so a reused worker re-reads an archive
+at most once after a task, and only when a lookup needs it.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+if sys.version_info < (3, 13):
+    import zipimport
+
+    def _zip_files(self) -> dict:
+        """The archive's directory, read once per invalidation."""
+        try:
+            return zipimport._zip_directory_cache[self.archive]
+        except KeyError:
+            try:
+                files = zipimport._read_directory(self.archive)
+            except zipimport.ZipImportError:
+                return {}
+            zipimport._zip_directory_cache[self.archive] = files
+            return files
+
+    def _forget_zip_files(self) -> None:
+        zipimport._zip_directory_cache.pop(self.archive, None)
+
+    # __init__ has cached the directory before it assigns _files: the
+    # setter has nothing left to do
+    zipimport.zipimporter._files = property(_zip_files, lambda self, files: None)
+    zipimport.zipimporter.invalidate_caches = _forget_zip_files

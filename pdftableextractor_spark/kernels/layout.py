@@ -1,4 +1,4 @@
-"""PDF word-box layout kernel (Arrow-batched, pandas/numpy inside).
+"""PDF word-box layout kernel (columnar over a whole Arrow batch).
 
 Replaces the reference's Textract block parsing (textract_processor.py:
 186-301) with geometry-driven layout analysis, per north_star:
@@ -9,20 +9,36 @@ Replaces the reference's Textract block parsing (textract_processor.py:
 - row/column grid reconstruction via x-interval merging
 - dense grid emission row-major with '' fill — textract_processor.py:285-297
 
-``layout_page`` handles one serialized page. ``layout_pages`` is the
-scalar Arrow UDF the extraction operators call: once per document on all
-its pages, in ``extract_spans`` and ``extract_frames``.
-``pdf_layout_kernel`` is a ``mapInPandas``-shaped wrapper over exploded
-``kind='pdf'`` span rows (one row = one page); no operator calls it, and
-perfbench's single-threaded kernel probe still does.
+Entry points:
+
+- ``layout_pages`` is the scalar Arrow UDF the extraction operators call
+  (``extract_spans`` and ``extract_frames``): per document, its list of
+  page payloads (null for non-pdf spans) → per page, the ordered
+  (kind, text) lines. It lays out every page of the batch in one pass.
+- ``pdf_layout_kernel`` is a ``mapInPandas``-shaped wrapper over the same
+  pass for exploded ``kind='pdf'`` span rows (one row = one page); no
+  operator calls it, and perfbench's single-threaded kernel probe does.
+- The one-page form is ``layout_pages`` on a one-page document; the
+  tests' ``layout_page`` is exactly that call.
+
+The pass (``_layout``) parses all pages into flat word/top/left/width/height
+arrays with page ids, sorts them once by (page, top, left, input index),
+finds line and segment breaks with vector arithmetic and joins segment
+and line texts from offsets. Only the per-page table-region state machine
+is a Python loop, and it runs over lines, not words.
 
 Frozen constants (the corpus generator and golden fixtures depend on them):
-  LINE_EPS      new text line when top gap > 0.01 (page fraction)
+  LINE_EPS      a word joins the current line while top - anchor <= 0.01,
+                where anchor is the line's first top (page fraction)
   GAP_MIN       segment break when horizontal gap >= 0.05
   COL_MERGE_EPS x-intervals merging into one column when within 0.02
   MIN_TABLE_ROWS a run of >= 2 consecutive multi-segment lines is a table
   RULE_MIN_W / RULE_MAX_H a box at least 0.3 wide and at most 0.004 tall is
                 a horizontal ruled line, not a word
+
+A record is 'word\\x1ftop\\x1fleft\\x1fwidth\\x1fheight'; records are joined
+by \\x1e. A record with another field count, or a geometry field that
+``float()`` rejects or reads as NaN or ±inf, is skipped.
 
 Table-region detection combines BOTH north_star signals:
   ruled lines   lines enclosed between two consecutive rules form a table
@@ -39,6 +55,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from pdftableextractor_spark.types import RS, US
@@ -50,39 +67,28 @@ MIN_TABLE_ROWS = 2
 RULE_MIN_W = 0.3
 RULE_MAX_H = 0.004
 
-def parse_boxes(payload: str) -> list[tuple[str, float, float, float, float]]:
-    """'word\\x1ftop\\x1fleft\\x1fwidth\\x1fheight' records joined by \\x1e."""
-    boxes = []
-    if not payload:
-        return boxes
-    for rec in payload.split(RS):
-        parts = rec.split(US)
-        if len(parts) != 5:
-            continue
-        w, t, l, wd, h = parts
-        try:
-            boxes.append((w, float(t), float(l), float(wd), float(h)))
-        except ValueError:
-            continue  # unparseable geometry → skip the record
-    return boxes
+
+def _float_or_nan(s: str) -> float:
+    try:
+        return float(s)
+    except ValueError:
+        return np.nan
 
 
-def _merge_columns(seg_lines: list[list[dict]]) -> list[tuple[float, float]]:
-    """x-interval union over all segments of a table region → column spans."""
-    ivals = sorted(
-        (s["start"], s["end"]) for segs in seg_lines for s in segs
-    )
-    cols: list[list[float]] = []
-    for st, en in ivals:
-        if cols and st <= cols[-1][1] + COL_MERGE_EPS:
-            cols[-1][1] = max(cols[-1][1], en)
-        else:
-            cols.append([st, en])
-    return [(c[0], c[1]) for c in cols]
+def _floats(fields: pa.Array) -> np.ndarray:
+    """``float()`` of each string; NaN where ``float()`` raises. Arrow's
+    cast accepts a subset of ``float()``'s spellings and reads them to the
+    same correctly rounded values; a batch holding any other spelling
+    (padding, underscores, non-ASCII digits, junk) goes through
+    ``float()``."""
+    try:
+        return pc.cast(fields, pa.float64()).to_numpy(zero_copy_only=False)
+    except pa.ArrowInvalid:
+        objs = fields.to_numpy(zero_copy_only=False)
+        return np.array([_float_or_nan(s) for s in objs], np.float64)
 
 
-def _assign_col(seg: dict, cols: list[tuple[float, float]]) -> int:
-    center = (seg["start"] + seg["end"]) / 2.0
+def _assign_col(center: float, cols: list[list[float]]) -> int:
     for j, (st, en) in enumerate(cols):
         if st - COL_MERGE_EPS <= center <= en + COL_MERGE_EPS:
             return j
@@ -93,164 +99,152 @@ def _assign_col(seg: dict, cols: list[tuple[float, float]]) -> int:
     )
 
 
-def _parse_fast(payload: str):
-    """Vectorized parse: one split + numpy float casts instead of
-    per-record splits and per-field float() (the measured hot spot of the
-    kernel). Falls back to the record-at-a-time parser on malformed input.
-    Returns (words list, top, left, width, height float arrays) or None."""
-    # validate per-record shape first (C-speed): a 6-field and a 4-field
-    # record can sum to %5==0 and silently misalign the strided slices
-    recs = np.array(payload.split(RS))
-    if not (np.char.count(recs, US) == 4).all():
-        return None
-    fields = payload.replace(RS, US).split(US)
-    if len(fields) % 5 != 0:
-        return None
-    try:
-        words = fields[0::5]
-        top = np.asarray(fields[1::5], dtype=np.float64)
-        left = np.asarray(fields[2::5], dtype=np.float64)
-        width = np.asarray(fields[3::5], dtype=np.float64)
-        height = np.asarray(fields[4::5], dtype=np.float64)
-    except ValueError:
-        return None
-    return words, top, left, width, height
+def _join(words: pa.Array, starts: np.ndarray) -> list[str]:
+    """' '.join of each run words[starts[i]:starts[i + 1]]."""
+    runs = pa.ListArray.from_arrays(pa.array(starts, pa.int32()), words)
+    return pc.binary_join(runs, " ").to_numpy(zero_copy_only=False).tolist()
 
 
-def layout_page(payload: str) -> list[tuple[str, str]]:
-    """One serialized page → ordered [(kind, text)] with kind in
-    ('text', 'table_cell'). Text lines are RAW (normalization/footnote/
-    boilerplate filtering happens in the shared Spark-side SQL path so the
-    string semantics live in exactly one place)."""
-    if not payload:
-        return []
-    parsed = _parse_fast(payload)
-    if parsed is not None:
-        words, top, left, width, height = parsed
-    else:
-        boxes = parse_boxes(payload)
-        if not boxes:
-            return []
-        words = [b[0] for b in boxes]
-        top = np.array([b[1] for b in boxes])
-        left = np.array([b[2] for b in boxes])
-        width = np.array([b[3] for b in boxes])
-        height = np.array([b[4] for b in boxes])
-    if len(words) == 0:
-        return []
+def _regions(line_pg, anchor, rule_pg, rule_top, n_pages) -> list[int]:
+    """Per line, bisect_right of its anchor among its page's sorted rule
+    tops: the ruled region it lies in, or -1 when it is not strictly
+    between two rules."""
+    n_rules = np.bincount(rule_pg, minlength=n_pages)
+    earlier = np.cumsum(n_rules) - n_rules
+    is_line = np.r_[np.zeros(len(rule_pg), bool), np.ones(len(line_pg), bool)]
+    # rules sort before lines at an equal top: bisect_right counts them
+    order = np.lexsort((is_line, np.r_[rule_top, anchor], np.r_[rule_pg, line_pg]))
+    upto = np.empty(len(order), np.int64)
+    upto[order] = np.cumsum(~is_line[order])
+    k = upto[len(rule_pg):] - earlier[line_pg]
+    return np.where((k > 0) & (k < n_rules[line_pg]), k, -1).tolist()
 
-    # horizontal ruled lines: wide, flat boxes — they partition the page
-    # vertically and never contribute text
-    is_rule = (width >= RULE_MIN_W) & (height <= RULE_MAX_H)
-    rule_tops = np.sort(top[is_rule])
-    keep = ~is_rule
-    words = [w for w, k in zip(words, keep) if k]
-    top, left, width = top[keep], left[keep], width[keep]
-    n = len(words)
+
+def _parse(pages: pa.Array):
+    """All pages → (page id, word, top, left, width, height) of every
+    well-formed record, in input order."""
+    recs = pc.split_pattern(pages, RS)
+    n_recs = pc.list_value_length(recs).fill_null(0).to_numpy()
+    rec_pg = np.repeat(np.arange(len(pages)), n_recs)
+    fields = pc.split_pattern(pc.list_flatten(recs), US)
+    ok = pc.list_value_length(fields).to_numpy() == 5
+    first = fields.offsets.to_numpy()[:-1][ok]
+    flat = fields.values
+    geo = _floats(flat.take((first[:, None] + np.arange(1, 5)).ravel()))
+    geo = geo.reshape(-1, 4)
+    fin = np.isfinite(geo).all(axis=1)
+    first, geo = first[fin], geo[fin]
+    return (rec_pg[ok][fin], flat.take(first), *geo.T)
+
+
+def _layout(pages: pa.Array) -> tuple[np.ndarray, list[str], list[str]]:
+    """Page payloads (nulls allowed) → (per-page offsets into the output
+    lines, kinds, texts): page p's lines are [offs[p], offs[p + 1])."""
+    n_pages = len(pages)
+    page, words, top, left, width, height = _parse(pages)
+    rule = (width >= RULE_MIN_W) & (height <= RULE_MAX_H)
+    rule_pg, rule_top = page[rule], top[rule]
+    keep = np.flatnonzero(~rule)
+    page, top, left, width = page[keep], top[keep], left[keep], width[keep]
+    n = len(keep)
     if n == 0:
-        return []
-    # reading order: stable (top, left, input-idx)
-    order = np.lexsort((np.arange(n), left, top))
-    lines: list[list[int]] = []
-    line_anchor: list[float] = []
-    anchor = None
-    for i in order:
-        t = top[i]
-        if anchor is not None and t - anchor <= LINE_EPS:
-            lines[-1].append(i)
-        else:
-            lines.append([i])
-            line_anchor.append(t)
-            anchor = t
-    seg_lines = []
-    for idxs in lines:
-        a = np.asarray(idxs)
-        pos = np.arange(len(a))
-        within = a[np.lexsort((pos, top[a], left[a]))]
-        l = left[within]
-        r = l + width[within]
-        segs = []
-        start_k = 0
-        for k in range(1, len(within)):
-            if l[k] - r[k - 1] >= GAP_MIN:
-                seg = within[start_k:k]
-                segs.append(
-                    {
-                        "text": " ".join(words[j] for j in seg),
-                        "start": l[start_k],
-                        "end": r[k - 1],
-                    }
-                )
-                start_k = k
-        seg = within[start_k:]
-        segs.append(
-            {
-                "text": " ".join(words[j] for j in seg),
-                "start": l[start_k],
-                "end": r[len(within) - 1],
-            }
-        )
-        seg_lines.append(segs)
-    tabular = [len(s) >= 2 for s in seg_lines]
-    # ruled-region id: index of the rule interval a line falls in;
-    # None when not strictly between two rules (bisect_right semantics)
-    region: list[int | None] = []
-    for t in line_anchor:
-        k = int(np.searchsorted(rule_tops, t, side="right"))
-        region.append(k if 0 < k < len(rule_tops) else None)
+        return np.zeros(n_pages + 1, np.int32), [], []
 
-    def _emit_table(group: list[list[dict]], out) -> None:
-        cols = _merge_columns(group)
-        for segs in group:
+    # reading order (page, top, left, input index); a line starts at a
+    # page change or where top - anchor > LINE_EPS. A consecutive gap over
+    # LINE_EPS always starts a line; only a run of small gaps spanning
+    # more than LINE_EPS needs the anchor walk.
+    o = np.lexsort((left, top, page))
+    pg, t = page[o], top[o]
+    new = np.ones(n, bool)
+    new[1:] = (pg[1:] != pg[:-1]) | (t[1:] - t[:-1] > LINE_EPS)
+    starts = np.flatnonzero(new)
+    ends = np.r_[starts[1:], n] - 1
+    for s in np.flatnonzero(t[ends] - t[starts] > LINE_EPS).tolist():
+        a = t[starts[s]]
+        for i in range(starts[s] + 1, ends[s] + 1):
+            if t[i] - a > LINE_EPS:
+                new[i], a = True, t[i]
+    line = np.cumsum(new) - 1
+    line_first = np.flatnonzero(new)
+    line_pg, anchor = pg[line_first], t[line_first]
+
+    # within a line, left to right (stable: ties keep reading order)
+    o = o[np.lexsort((left[o], line))]
+    l = left[o]
+    r = l + width[o]
+    seg_new = new.copy()
+    seg_new[1:] |= l[1:] - r[:-1] >= GAP_MIN
+    seg_first = np.flatnonzero(seg_new)
+    seg_last = np.r_[seg_first[1:], n] - 1
+    seg_off = np.r_[seg_first, n].astype(np.int32)
+    line_off = np.r_[line_first, n].astype(np.int32)
+    words = words.take(keep[o])
+    seg_text = _join(words, seg_off)
+    seg_start, seg_end = l[seg_first].tolist(), r[seg_last].tolist()
+    line_segs = np.searchsorted(seg_first, line_off).tolist()
+    line_text = _join(words, line_off)
+    region = _regions(line_pg, anchor, rule_pg, rule_top, n_pages)
+
+    def columns(a: int, b: int) -> list[list[float]]:
+        """x-interval union over the segments of lines a..b-1."""
+        lo, hi = line_segs[a], line_segs[b]
+        cols: list[list[float]] = []
+        for st, en in sorted(zip(seg_start[lo:hi], seg_end[lo:hi])):
+            if cols and st <= cols[-1][1] + COL_MERGE_EPS:
+                cols[-1][1] = max(cols[-1][1], en)
+            else:
+                cols.append([st, en])
+        return cols
+
+    def emit_table(a: int, b: int, cols: list[list[float]]) -> None:
+        for k in range(a, b):
             cells = [""] * len(cols)
-            for s in segs:
-                c = _assign_col(s, cols)
-                cells[c] = (cells[c] + " " + s["text"]).strip()
-            for cell in cells:
-                out.append(("table_cell", cell))
+            for s in range(line_segs[k], line_segs[k + 1]):
+                c = _assign_col((seg_start[s] + seg_end[s]) / 2.0, cols)
+                cells[c] = (cells[c] + " " + seg_text[s]).strip()
+            kinds.extend(["table_cell"] * len(cells))
+            texts.extend(cells)
 
-    def _emit_text(k: int, out) -> None:
-        out.append(("text", " ".join(s["text"] for s in seg_lines[k])))
+    def emit_text(a: int, b: int) -> None:
+        kinds.extend(["text"] * (b - a))
+        texts.extend(line_text[a:b])
 
-    out: list[tuple[str, str]] = []
-    i = 0
-    n = len(lines)
-    while i < n:
-        if region[i] is not None:
-            # ruled region: table whenever the merged intervals give >= 2
-            # columns, even for a single enclosed row
-            j = i
-            while j < n and region[j] == region[i]:
-                j += 1
-            group = seg_lines[i:j]
-            if len(_merge_columns(group)) >= 2:
-                _emit_table(group, out)
-            else:
-                for k in range(i, j):
-                    _emit_text(k, out)
-            i = j
-            continue
-        # unruled: whitespace-gap runs need >= MIN_TABLE_ROWS lines
-        j = i
-        while j < n and region[j] is None:
-            j += 1
-        k = i
-        while k < j:
-            if tabular[k]:
-                m = k
-                while m < j and tabular[m]:
-                    m += 1
-                if m - k >= MIN_TABLE_ROWS:
-                    _emit_table(seg_lines[k:m], out)
+    kinds: list[str] = []
+    texts: list[str] = []
+    n_out = np.zeros(n_pages, np.int64)
+    page_lines = np.searchsorted(line_pg, np.arange(n_pages + 1)).tolist()
+    for p in np.unique(line_pg).tolist():
+        i, b, before = page_lines[p], page_lines[p + 1], len(texts)
+        while i < b:
+            j, rg = i + 1, region[i]
+            if rg >= 0:
+                # ruled region: a table whenever the merged intervals give
+                # >= 2 columns, even for a single enclosed row
+                while j < b and region[j] == rg:
+                    j += 1
+                cols = columns(i, j)
+                if len(cols) >= 2:
+                    emit_table(i, j, cols)
                 else:
-                    for kk in range(k, m):
-                        _emit_text(kk, out)
-                k = m
+                    emit_text(i, j)
             else:
-                _emit_text(k, out)
-                k += 1
-        i = j
-    return out
+                # unruled: a run of multi-segment lines needs
+                # >= MIN_TABLE_ROWS lines
+                tab = line_segs[i + 1] - line_segs[i] >= 2
+                while (
+                    j < b
+                    and region[j] < 0
+                    and (line_segs[j + 1] - line_segs[j] >= 2) == tab
+                ):
+                    j += 1
+                if tab and j - i >= MIN_TABLE_ROWS:
+                    emit_table(i, j, columns(i, j))
+                else:
+                    emit_text(i, j)
+            i = j
+        n_out[p] = len(texts) - before
+    return np.r_[0, np.cumsum(n_out)].astype(np.int32), kinds, texts
 
 
 PAGES_OUT_TYPE = ArrayType(
@@ -264,25 +258,19 @@ PAGES_OUT_TYPE = ArrayType(
 
 def layout_pages(docs: pa.Array) -> pa.Array:
     """Scalar Arrow kernel: per document, a list of page payloads (null
-    for non-pdf spans) → per page, the ``layout_page`` lines as
-    (kind, text) structs (``PAGES_OUT_TYPE``). A null document stays null.
-    Builds the nested output from flat offsets, without pandas."""
-    doc_offs, page_offs, kinds, texts, nulls = [0], [0], [], [], []
-    for pages in docs.to_pylist():
-        nulls.append(pages is None)
-        for payload in pages or ():
-            for kind, text in layout_page(payload):
-                kinds.append(kind)
-                texts.append(text)
-            page_offs.append(len(kinds))
-        doc_offs.append(len(page_offs) - 1)
+    for non-pdf spans) → per page, its lines as (kind, text) structs
+    (``PAGES_OUT_TYPE``). A null document stays null; a null or empty
+    page has no lines. Every page of the batch is laid out in one pass."""
+    n_pages = pc.list_value_length(docs).fill_null(0).to_numpy()
+    page_offs, kinds, texts = _layout(pc.list_flatten(docs))
     lines = pa.StructArray.from_arrays(
         [pa.array(kinds, pa.string()), pa.array(texts, pa.string())],
         names=["kind", "text"],
     )
-    pages = pa.ListArray.from_arrays(pa.array(page_offs, pa.int32()), lines)
+    pages = pa.ListArray.from_arrays(pa.array(page_offs), lines)
+    doc_offs = np.r_[0, np.cumsum(n_pages)].astype(np.int32)
     return pa.ListArray.from_arrays(
-        pa.array(doc_offs, pa.int32()), pages, mask=pa.array(nulls)
+        pa.array(doc_offs), pages, mask=docs.is_null()
     )
 
 
@@ -290,23 +278,24 @@ def pdf_layout_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     """mapInPandas kernel: (doc_id, offset, text) pdf-span rows →
     (doc_id, offset, sub_idx, kind, text, media_ref) expansion rows."""
     for pdf in batches:
-        doc_ids, offsets, subs, kinds, texts = [], [], [], [], []
-        for doc_id, offset, payload in zip(
-            pdf["doc_id"].values, pdf["offset"].values, pdf["text"].values
-        ):
-            for sub, (kind, text) in enumerate(layout_page(payload)):
-                doc_ids.append(doc_id)
-                offsets.append(offset)
-                subs.append(sub)
-                kinds.append(kind)
-                texts.append(text)
+        offs, kinds, texts = _layout(
+            pa.array(pdf["text"].values, pa.string(), from_pandas=True)
+        )
+        per_page = np.diff(offs)
         yield pd.DataFrame(
             {
-                "doc_id": pd.Series(doc_ids, dtype="string"),
-                "offset": pd.Series(offsets, dtype="int32"),
-                "sub_idx": pd.Series(subs, dtype="int32"),
+                "doc_id": pd.Series(
+                    np.repeat(pdf["doc_id"].values, per_page), dtype="string"
+                ),
+                "offset": pd.Series(
+                    np.repeat(pdf["offset"].values, per_page), dtype="int32"
+                ),
+                "sub_idx": pd.Series(
+                    np.arange(offs[-1]) - np.repeat(offs[:-1], per_page),
+                    dtype="int32",
+                ),
                 "kind": pd.Series(kinds, dtype="string"),
                 "text": pd.Series(texts, dtype="string"),
-                "media_ref": pd.Series([""] * len(doc_ids), dtype="string"),
+                "media_ref": pd.Series([""] * len(texts), dtype="string"),
             }
         )

@@ -788,9 +788,10 @@ def connected_components(
     caller's coalesce (see q52).
 
     Adaptive cutoff: when the RAW edge list has <= ``small_graph_
-    threshold`` edges (one count over the pinned edges; raw >= the
-    deduped count, so the check only ever errs toward the distributed
-    path), the components are solved with a driver-side union-find
+    threshold`` edges (one collect of at most threshold + 1 pinned edges
+    decides and, on this path, is the edge list; raw >= the deduped
+    count, so the check only ever errs toward the distributed path), the
+    components are solved with a driver-side union-find
     instead of O(log n) distributed rounds — identical min-label output
     (union-find is insensitive to duplicate edges, and the callers' pair
     generators emit each unordered pair once anyway), bounded driver
@@ -798,7 +799,9 @@ def connected_components(
     bound independent of corpus size), an order of magnitude less
     scheduler overhead, and NO distinct shuffle or signature aggregate on
     this path (round-7). The distributed path dedups and takes the
-    convergence signature exactly as before.
+    convergence signature exactly as before; there the bounded collect is
+    spent work: each partition ships at most threshold + 1 edges to one
+    reducer, and threshold + 1 of them reach the driver.
     Near-dup graphs are SPARSE by construction (band-collision pairs), so
     even large corpora often land under the cutoff; pass
     ``small_graph_threshold=0`` to force the distributed path.
@@ -853,7 +856,10 @@ def connected_components(
             .distinct()
         )
 
-    if e_raw.count() <= small_graph_threshold:
+    # one Arrow collect (far cheaper than py4j rows) decides the path and
+    # fetches the edges
+    pdf = e_raw.limit(small_graph_threshold + 1).toPandas()
+    if len(pdf) <= small_graph_threshold:
         parent: dict[str, str] = {}
 
         def _find(x: str) -> str:
@@ -863,7 +869,6 @@ def connected_components(
                 x = parent[x]
             return x
 
-        pdf = e_raw.toPandas()  # Arrow collect — far cheaper than py4j rows
         for u_, v_ in zip(pdf["u"].values, pdf["v"].values):
             ra, rb = _find(u_), _find(v_)
             if ra != rb:

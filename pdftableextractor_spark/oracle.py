@@ -12,6 +12,7 @@ kernels.layout exactly; the layout constants are restated here on purpose
 
 from __future__ import annotations
 
+import math
 import re
 
 US, RS = "\x1f", "\x1e"
@@ -115,6 +116,8 @@ def _pdf_lines(payload: str) -> list[tuple[str, str]]:
                 )
             except ValueError:
                 continue  # unparseable geometry → skip the record
+            if not all(math.isfinite(v) for v in (top, left, width, height)):
+                continue  # NaN/inf geometry is unparseable too
             if width >= RULE_MIN_W and height <= RULE_MAX_H:
                 rule_tops.append(top)
             else:

@@ -32,9 +32,7 @@ QUERIES = entrymod.queries()
 _QUERY_VEC = "_qvec: query-vector collect"
 _KM_INIT = "kmeans_centroids: init collect"
 _KM_ITER = "kmeans_centroids: centroid_mean collect"
-_CC = ["connected_components: edge count"] * 2 + [
-    "connected_components: small-graph edge collect"
-]
+_CC = ["connected_components: bounded edge collect"]
 CONSTRUCTION_JOBS = {
     "q24_cosine_topk": [_QUERY_VEC],
     "q25_ivf_topk": [_QUERY_VEC],

@@ -4,9 +4,17 @@ hand-computed expectations (FIXTURES.md §3)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 from pdftableextractor_spark import corpus, oracle
-from pdftableextractor_spark.kernels.layout import layout_page
+from pdftableextractor_spark.kernels.layout import layout_pages
 from pdftableextractor_spark.types import RS, US
+
+
+def layout_page(payload):
+    """One page through the batch kernel: [(kind, text)] per line."""
+    (lines,) = layout_pages(pa.array([[payload]], pa.list_(pa.string())))[0]
+    return [(ln["kind"], ln["text"]) for ln in lines.as_py()]
 
 
 def _page(recs):
@@ -140,13 +148,21 @@ def test_kernel_matches_oracle_on_generated_pages():
     assert n_pages > 10  # generator actually produced pdf pages
 
 
-def test_layout_pages_nests_layout_page_per_document():
-    """The per-document Arrow kernel returns layout_page's lines per page,
-    keeps a null document null and an empty or null page empty."""
-    import pyarrow as pa
+def test_line_anchor_is_the_first_top():
+    """A word joins a line while top - (the line's first top) <= LINE_EPS:
+    0.100/0.108/0.116 is two lines, though each step is under LINE_EPS."""
+    recs = [
+        ("a", 0.100, 0.10, 0.02, 0.01),
+        ("b", 0.108, 0.20, 0.02, 0.01),
+        ("c", 0.116, 0.30, 0.02, 0.01),
+    ]
+    assert layout_page(_page(recs)) == [("text", "a b"), ("text", "c")]
+    assert oracle._pdf_lines(_page(recs)) == layout_page(_page(recs))
 
-    from pdftableextractor_spark.kernels.layout import layout_pages
 
+def test_layout_pages_lays_out_each_page_of_each_document():
+    """The batch kernel returns the oracle's lines per page, keeps a null
+    document null and an empty or null page empty."""
     pages = [
         s["text"]
         for d in corpus.gen_documents(20, seed=7)
@@ -157,7 +173,8 @@ def test_layout_pages_nests_layout_page_per_document():
     got = layout_pages(pa.array(docs, pa.list_(pa.string()))).to_pylist()
     exp = [
         None if doc is None else [
-            [{"kind": k, "text": t} for k, t in layout_page(p)] for p in doc
+            [{"kind": k, "text": t} for k, t in oracle._pdf_lines(p or "")]
+            for p in doc
         ]
         for doc in docs
     ]

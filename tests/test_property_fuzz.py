@@ -4,13 +4,15 @@ malformed table/kv/pdf payloads, unicode)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 
 from pdftableextractor_spark import oracle
-from pdftableextractor_spark.kernels.layout import layout_page
+from pdftableextractor_spark.kernels.layout import layout_pages
 from pdftableextractor_spark.operators.extract import extract_spans
 from pdftableextractor_spark.types import RS, US
+from tests.test_layout import layout_page
 
 # Spark-backed properties do not shrink: each shrink step re-runs Spark
 # jobs, so a failure would take many times a passing run to report. The
@@ -77,14 +79,33 @@ def documents(draw, ties=True, pdf=True):
     return {"doc_id": "fuzz-0", "spans": spans}
 
 
+# geometry spellings: plain; others float() reads (padding, underscores);
+# and the non-finite ones, which the kernel skips like junk
+GEOMETRY = st.one_of(
+    st.floats(0, 1, allow_nan=False).map("{:.4f}".format),
+    st.floats(0, 1, allow_nan=False).map(" {:.4f}\t".format),
+    st.integers(0, 9).map("0.0_{}".format),
+    st.sampled_from(["nan", "NaN", "inf", "-inf", "Infinity", "0_5"]),
+)
+RULE = st.floats(0, 1, allow_nan=False).map(
+    lambda t: US.join(["<hr>", f"{t:.4f}", "0.0500", "0.8500", "0.0020"])
+)
+
+
 @st.composite
 def pdf_payloads(draw):
     recs = []
     for _ in range(draw(st.integers(0, 12))):
-        if draw(st.booleans()):
+        shape = draw(st.sampled_from(["plain", "plain", "spelled", "rule", "bad"]))
+        if shape == "plain":
             w = draw(WORDISH)
             vals = [draw(st.floats(0, 1, allow_nan=False)) for _ in range(4)]
             recs.append(US.join([w] + [f"{v:.4f}" for v in vals]))
+        elif shape == "spelled":
+            vals = [draw(GEOMETRY) for _ in range(4)]
+            recs.append(US.join([draw(WORDISH)] + vals))
+        elif shape == "rule":
+            recs.append(draw(RULE))
         else:  # malformed record: wrong field count
             recs.append(US.join(draw(st.lists(WORDISH, min_size=1, max_size=7))))
     return RS.join(recs)
@@ -117,8 +138,51 @@ def test_pipeline_matches_oracle_on_fuzzed_docs(spark, docs):
 # kernel (hypothesis-discovered in round 1; kept as @example so a fresh
 # checkout replays it without the local example DB)
 @example(payload="0\x1f0\x1f0\x1f0\x1f:")
+# a NaN top: the record is skipped (np.lexsort would put it last, Python's
+# sorted would keep it in input order)
+@example(
+    payload=RS.join(
+        US.join([w, t, "0.1", "0.02", "0.01"])
+        for w, t in [("a", "0.5"), ("b", "nan"), ("c", "0.2")]
+    )
+)
 def test_layout_kernel_matches_oracle_on_fuzzed_pages(payload):
     assert layout_page(payload) == oracle._pdf_lines(payload)
+
+
+PAGE = st.one_of(st.none(), st.just(""), pdf_payloads(), TEXTY)
+ALL_RULES = RS.join(US.join(["<hr>", t, "0.05", "0.85", "0.002"]) for t in "0.1 0.2 0.3".split())
+GOOD = US.join(["word", "0.5", "0.1", "0.02", "0.01"])
+NEAR = US.join(["next", "0.505", "0.5", "0.02", "0.01"])
+
+
+@settings(max_examples=60, deadline=None)
+@given(docs=st.lists(st.one_of(st.none(), st.lists(PAGE, max_size=5)), max_size=6))
+# a malformed page between good ones, null/empty pages and documents, an
+# all-rule page, a document with no pdf span, and two pages whose words
+# would share a line if they were one page
+@example(
+    docs=[
+        [GOOD, "x\x1fnot-a-number", GOOD],
+        None,
+        [],
+        [None, "", ALL_RULES],
+        [None, None],
+        [GOOD, NEAR],
+    ]
+)
+def test_layout_pages_matches_oracle_on_fuzzed_page_lists(docs):
+    """The batch kernel lays out each page of each document like the
+    one-page oracle: no line crosses a page or a document."""
+    got = layout_pages(pa.array(docs, pa.list_(pa.string()))).to_pylist()
+    exp = [
+        None if doc is None else [
+            [{"kind": k, "text": t} for k, t in oracle._pdf_lines(p or "")]
+            for p in doc
+        ]
+        for doc in docs
+    ]
+    assert got == exp
 
 
 @settings(max_examples=15, deadline=None, phases=NO_SHRINK)
