@@ -17,6 +17,17 @@ def layout_page(payload):
     return [(ln["kind"], ln["text"]) for ln in lines.as_py()]
 
 
+def oracle_pages(docs):
+    """``layout_pages``' expected output: the oracle's lines per page."""
+    return [
+        None if doc is None else [
+            [{"kind": k, "text": t} for k, t in oracle._pdf_lines(p or "")]
+            for p in doc
+        ]
+        for doc in docs
+    ]
+
+
 def _page(recs):
     return RS.join(US.join(str(x) for x in r) for r in recs)
 
@@ -171,12 +182,5 @@ def test_layout_pages_lays_out_each_page_of_each_document():
     ][:3]
     docs = [pages, None, [None, "", pages[0]], []]
     got = layout_pages(pa.array(docs, pa.list_(pa.string()))).to_pylist()
-    exp = [
-        None if doc is None else [
-            [{"kind": k, "text": t} for k, t in oracle._pdf_lines(p or "")]
-            for p in doc
-        ]
-        for doc in docs
-    ]
-    assert got == exp
+    assert got == oracle_pages(docs)
     assert got[2][:2] == [[], []] and got[0][0]

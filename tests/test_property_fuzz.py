@@ -12,7 +12,7 @@ from pdftableextractor_spark import oracle
 from pdftableextractor_spark.kernels.layout import layout_pages
 from pdftableextractor_spark.operators.extract import extract_spans
 from pdftableextractor_spark.types import RS, US
-from tests.test_layout import layout_page
+from tests.test_layout import layout_page, oracle_pages
 
 # Spark-backed properties do not shrink: each shrink step re-runs Spark
 # jobs, so a failure would take many times a passing run to report. The
@@ -175,14 +175,7 @@ def test_layout_pages_matches_oracle_on_fuzzed_page_lists(docs):
     """The batch kernel lays out each page of each document like the
     one-page oracle: no line crosses a page or a document."""
     got = layout_pages(pa.array(docs, pa.list_(pa.string()))).to_pylist()
-    exp = [
-        None if doc is None else [
-            [{"kind": k, "text": t} for k, t in oracle._pdf_lines(p or "")]
-            for p in doc
-        ]
-        for doc in docs
-    ]
-    assert got == exp
+    assert got == oracle_pages(docs)
 
 
 @settings(max_examples=15, deadline=None, phases=NO_SHRINK)
